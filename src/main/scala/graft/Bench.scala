@@ -689,7 +689,7 @@ object Bench {
     // across rounds
     import java.nio.file.{Files, Path}
     import java.util.Comparator
-    Files.walk(Path.of(tmp)).sorted(Comparator.reverseOrder[Path]())
-      .forEach(p => Files.deleteIfExists(p))
+    scala.util.Using.resource(Files.walk(Path.of(tmp)))(
+      _.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p)))
   }
 }

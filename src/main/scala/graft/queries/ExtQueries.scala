@@ -1091,11 +1091,40 @@ object ExtQueries {
     * racing a bench run) sharing a key would wipe each other's
     * in-flight stream state mid-run. Same-JVM reuse across warm-up +
     * timed runs keeps the wipe idempotent; the registry is
-    * driver-single-threaded.
+    * driver-single-threaded. Dirs that dead JVMs left under the same
+    * key are removed on first use ([[pruneDeadWorkDirs]]).
     */
-  private def streamWorkDir(prefix: String, dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/${prefix}_" +
-      pathDigest(dir) + "_" + ProcessHandle.current().pid()
+  private def streamWorkDir(prefix: String, dir: String): String = {
+    val tmp = System.getProperty("java.io.tmpdir")
+    val key = s"${prefix}_${pathDigest(dir)}_"
+    if (prunedWorkKeys.add(s"$tmp/$key"))
+      pruneDeadWorkDirs(java.nio.file.Path.of(tmp), key)
+    s"$tmp/$key${ProcessHandle.current().pid()}"
+  }
+
+  private val prunedWorkKeys = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Delete the `<key><pid>` dirs under `tmp` whose pid is dead: the
+    * scratch a killed or finished JVM left for the same bridge and
+    * source. A live pid's dir, this JVM's included, is never touched;
+    * nor is a dir whose name only starts with `key` (a longer prefix or
+    * another digest). Runs once per key per JVM, on the first
+    * [[streamWorkDir]] call.
+    */
+  private[graft] def pruneDeadWorkDirs(tmp: java.nio.file.Path, key: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    val owned = (java.util.regex.Pattern.quote(key) + "(\\d+)").r
+    val dirs =
+      try scala.util.Using.resource(java.nio.file.Files.list(tmp))(_.iterator.asScala.toList)
+      catch { case _: java.io.IOException => Nil }
+    dirs.foreach { p =>
+      p.getFileName.toString match {
+        case owned(pid) if pid.toLongOption.exists(!graft.streaming.EventStreams.pidAlive(_)) =>
+          graft.streaming.EventStreams.deleteTree(p)
+        case _ =>
+      }
+    }
+  }
 
   /** Collision-resistant key for a dataset directory (String.hashCode
     * collides trivially; two dirs sharing a key would silently serve

@@ -671,6 +671,21 @@ object EventStreams {
     published
   }
 
+  /** Whether `pid` names a running process: the liveness rule for the
+    * pid-keyed scratch dirs this engine leaves under the temp dir. */
+  private[graft] def pidAlive(pid: Long): Boolean =
+    ProcessHandle.of(pid).map[Boolean](_.isAlive).orElse(false)
+
+  /** Best-effort recursive delete: a concurrent pruner may remove files
+    * first, which just means they are already gone. */
+  private[graft] def deleteTree(p: java.nio.file.Path): Unit = {
+    import java.nio.file.{Files, Path}
+    try scala.util.Using.resource(Files.walk(p))(
+      _.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(q => Files.deleteIfExists(q)))
+    catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
+  }
+
   /** Delete orphaned stage dirs for `srcKey` other than the live
     * `stageRoot`: published stages whose digest no longer matches (the
     * digest covers source mtimes, so a regenerated fixture keys a fresh
@@ -686,7 +701,6 @@ object EventStreams {
   private[streaming] def pruneStaleStages(
       stageRoot: java.nio.file.Path, srcKey: String): Unit = {
     import java.nio.file.{Files, Path}
-    import java.util.Comparator
     val tmp = stageRoot.getParent
     if (tmp == null || !Files.isDirectory(tmp)) return
     // Two-phase prune (r14, ADVICE r13): a published-but-stale stage is
@@ -710,18 +724,11 @@ object EventStreams {
         val f = dir.resolve("_SOURCE")
         if (Files.isRegularFile(f)) Some(Files.readString(f)) else None
       } catch { case _: java.io.IOException => None }
-    def pidAlive(name: String): Boolean =
+    def buildPidAlive(name: String): Boolean =
       name.split("\\.build_", 2) match {
-        case Array(_, pid) =>
-          pid.toLongOption.exists(p =>
-            ProcessHandle.of(p).map[Boolean](_.isAlive).orElse(false))
+        case Array(_, pid) => pid.toLongOption.exists(pidAlive)
         case _ => false
       }
-    def reap(p: Path): Unit =
-      try scala.util.Using.resource(Files.walk(p))(
-        _.sorted(Comparator.reverseOrder[Path]())
-          .forEach(q => Files.deleteIfExists(q)))
-      catch { case _: java.io.IOException => () }
     try scala.util.Using.resource(Files.list(tmp))(_
       .filter(p => p.getFileName.toString.startsWith("graft_replay_stage_"))
       .filter(p => p != stageRoot && !p.startsWith(stageRoot))
@@ -730,13 +737,13 @@ object EventStreams {
         val name = p.getFileName.toString
         val isBuild = name.contains(".build_")
         if (isBuild) {
-          if (!pidAlive(name) && sourceOf(p).forall(_ == srcKey)) reap(p)
+          if (!buildPidAlive(name) && sourceOf(p).forall(_ == srcKey)) deleteTree(p)
         } else if (sourceOf(p).contains(srcKey)) {
           val mark = p.resolve("_STALE")
           try {
             if (!Files.exists(mark)) Files.createFile(mark)
             else if (System.currentTimeMillis() -
-              Files.getLastModifiedTime(mark).toMillis > graceMs) reap(p)
+              Files.getLastModifiedTime(mark).toMillis > graceMs) deleteTree(p)
           } catch { case _: java.io.IOException => () }
         }
       })

@@ -78,16 +78,26 @@ object Sessions {
       // tune() below re-registers through the public experimental hook.
       .withExtensions(_.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy))
     sqlConfs.foreach { case (k, v) => b.config(k, v) }
+    LocalFs.hadoopConfs.foreach { case (k, v) => b.config(s"spark.hadoop.$k", v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     tune(spark)
   }
 
-  /** Apply graft's runtime-settable confs to an existing session. */
+  /** Apply graft's runtime-settable confs to an existing session, and
+    * select the fork-free local filesystem ([[LocalFs]]) on its Hadoop
+    * configuration. `FileContext` filesystems are built per use, so
+    * streaming checkpoints started after this call get it; Hadoop's
+    * `FileSystem` cache keeps any `file:` instance created before it.
+    */
   def tune(spark: SparkSession): SparkSession = {
     sqlConfs.foreach { case (k, v) =>
       try spark.conf.set(k, v)
       catch { case _: org.apache.spark.sql.AnalysisException => () }
+    }
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    LocalFs.hadoopConfs.foreach { case (k, v) =>
+      if (hadoopConf.get(k) != v) hadoopConf.set(k, v)
     }
     graft.plans.AsOfJoinPlan.register(spark)
     graft.functions.SqlFunctions.register(spark)

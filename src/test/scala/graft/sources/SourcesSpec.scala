@@ -89,6 +89,39 @@ class SourcesSpec extends SparkTestBase {
     assert(rawBack.count() == 100)
   }
 
+  test("partitioned writes and a stream's checkpoints fork no process") {
+    // without libhadoop, Hadoop's stock local filesystem runs `chmod`
+    // for every file, .crc and directory it creates and `readlink` for
+    // every FileContext rename (each checkpoint, WAL and state commit)
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.functions.{col, window}
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.start()
+    try {
+      Tables.events(spark, Sf0001).write.mode("overwrite")
+        .partitionBy("event_type").parquet(tmpDir("fork_free_write"))
+      graft.streaming.EventStreams.replayEventsDirToParquet(
+        spark, Sf0001, tmpDir("fork_free_stream"),
+        _.withWatermark("ts", "0 seconds").groupBy(window(col("ts"), "6 hours")).count(),
+        interruptAfterBatches = Some(2))
+    } finally rec.stop()
+    val jfr = java.nio.file.Files.createTempFile("graft_forks", ".jfr")
+    try rec.dump(jfr) finally rec.close()
+    val starts = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala.toSeq
+    java.nio.file.Files.delete(jfr)
+    val fromShell = starts.filter(e => Option(e.getStackTrace).exists(
+      _.getFrames.asScala.exists(_.getMethod.getType.getName.startsWith("org.apache.hadoop.util.Shell"))))
+    assert(fromShell.isEmpty,
+      s"${fromShell.size} Hadoop Shell forks, e.g. ${fromShell.take(3).map(_.getString("command"))}")
+    val local = new java.net.URI("file:///")
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val fs = org.apache.hadoop.fs.FileSystem.get(local, hadoopConf)
+    assert(fs.isInstanceOf[graft.util.ForkFreeLocalFileSystem], fs.getClass.getName)
+    assert(org.apache.hadoop.fs.AbstractFileSystem.get(local, hadoopConf)
+      .isInstanceOf[graft.util.ForkFreeLocalFs])
+  }
+
   test("events reader normalizes nanos timestamps to TimestampType") {
     val ev = Tables.events(spark, Sf0001)
     assert(ev.schema("ts").dataType.typeName == "timestamp")

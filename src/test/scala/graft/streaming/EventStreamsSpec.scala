@@ -417,6 +417,27 @@ class EventStreamsSpec extends SparkTestBase {
     assert(Files.exists(foreign) && Files.exists(live))
   }
 
+  test("bridge scratch dirs of dead JVMs are pruned, live pids' dirs survive") {
+    import java.nio.file.Files
+    val tmp = Files.createTempDirectory("graft_workdir_prune")
+    def mk(name: String) = {
+      val d = Files.createDirectories(tmp.resolve(name).resolve("ckpt"))
+      Files.writeString(d.resolve("0"), "x")
+      d.getParent
+    }
+    val key = "graft_attr_stream_0123456789abcdef_"
+    val dead = mk(key + "999999999")
+    val live = mk(key + ProcessHandle.current().pid())
+    val otherDigest = mk("graft_attr_stream_fedcba9876543210_999999999")
+    val longerPrefix = mk("graft_attr_stream_outer_0123456789abcdef_999999999")
+    val notAPid = mk(key + "999999999.old")
+    graft.queries.ExtQueries.pruneDeadWorkDirs(tmp, key)
+    assert(!Files.exists(dead), "a dead pid's dir must be pruned")
+    assert(Files.exists(live.resolve("ckpt/0")), "a live pid's dir must survive")
+    assert(Seq(otherDigest, longerPrefix, notAPid).forall(Files.exists(_)),
+      "dirs of another digest or bridge are never touched")
+  }
+
   test("stream-static join enriches each micro-batch from the broadcast lookup") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
