@@ -2,15 +2,17 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.queries.{AnalyticsQueries, CorpusQueries, DriftQueries, EvalQueries, ExtQueries, MiningQueries, PrepQueries, RefQueries, ScaleQueries, SelectionQueries, SignalQueries, SqlSurfaceQueries, StructuralQueries, TpchDeepQueries}
+import graft.queries.{AnalyticsQueries, CorpusQueries, DriftQueries, EvalQueries, ExtQueries, Gate, IterOracle, MiningQueries, PrepQueries, RefQueries, ScaleQueries, SelectionQueries, SignalQueries, SqlSurfaceQueries, StructuralQueries, TpchDeepQueries}
 import graft.util.Sessions
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * `queries` maps operator-inventory entries (SURVEY.md §2) to runnable
-  * DataFrame builders over a testdata dir; `oracleSql` holds the DuckDB
-  * equivalent for hash-checked queries (absent key ⇒ rows-only check,
-  * reserved for RNG/ML ops per SURVEY.md §5.3).
+  * Every operator-inventory entry (SURVEY.md §2) is a [[Gate]]: a
+  * DataFrame builder over a testdata dir plus the DuckDB statement it
+  * is hash-checked against. Adding a gate means adding one `Gate` entry
+  * to the `gates` registry of its `*Queries` object; this object merges
+  * the 14 registries and derives [[queries]], [[oracleSql]] and
+  * [[iterativeOracles]] from them.
   */
 object SparkEntry {
 
@@ -22,33 +24,34 @@ object SparkEntry {
     RefQueries.qE2e(spark, "/root/testdata/sf0.001")
   }
 
+  /** The per-object registries as one map; a name registered by two
+    * objects throws instead of one silently shadowing the other. */
+  private[graft] def merge(objects: Map[String, Gate]*): Map[String, Gate] =
+    Gate.registry(objects.flatMap(_.toSeq): _*)
+
+  private lazy val gates: Map[String, Gate] = merge(
+    RefQueries.gates, ExtQueries.gates, SqlSurfaceQueries.gates,
+    PrepQueries.gates, CorpusQueries.gates, AnalyticsQueries.gates,
+    ScaleQueries.gates, SelectionQueries.gates, TpchDeepQueries.gates,
+    DriftQueries.gates, MiningQueries.gates, EvalQueries.gates,
+    StructuralQueries.gates, SignalQueries.gates)
+
   /** One per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    (RefQueries.queries ++ ExtQueries.queries ++ SqlSurfaceQueries.queries ++
-      PrepQueries.queries ++ CorpusQueries.queries ++ AnalyticsQueries.queries ++
-      ScaleQueries.queries ++ SelectionQueries.queries ++ TpchDeepQueries.queries ++
-      DriftQueries.queries ++ MiningQueries.queries ++ EvalQueries.queries ++
-      StructuralQueries.queries ++ SignalQueries.queries)
-      .map { case (k, f) =>
-      k -> { (s: SparkSession, dir: String) => f(Sessions.tune(s), dir) }
+    gates.map { case (k, g) =>
+      k -> { (s: SparkSession, dir: String) => g.build(Sessions.tune(s), dir) }
     }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops →
-    * driver records a weaker rows-only check.
+    * the same parquet tables.
     */
-  def oracleSql: Map[String, String] =
-    RefQueries.oracleSql ++ ExtQueries.oracleSql ++ SqlSurfaceQueries.oracleSql ++
-      PrepQueries.oracleSql ++ CorpusQueries.oracleSql ++ AnalyticsQueries.oracleSql ++
-      ScaleQueries.oracleSql ++ SelectionQueries.oracleSql ++ TpchDeepQueries.oracleSql ++
-      DriftQueries.oracleSql ++ MiningQueries.oracleSql ++ EvalQueries.oracleSql ++
-      StructuralQueries.oracleSql ++ SignalQueries.oracleSql
+  def oracleSql: Map[String, String] = gates.map { case (k, g) => k -> g.oracleSql }
 
   /** Iterative (scripted) oracle spellings for gates whose
     * single-statement oracle cannot run at sweep scale — dumped by
     * Verify as `oracle_iter.json` for tools/check.py; the driver's own
     * compare keeps using [[oracleSql]]. See [[graft.queries.IterOracle]].
     */
-  def iterativeOracles: Map[String, graft.queries.IterOracle] =
-    MiningQueries.iterativeOracles
+  def iterativeOracles: Map[String, IterOracle] =
+    gates.collect { case (k, Gate(_, _, Some(it))) => k -> it }
 }

@@ -125,30 +125,14 @@ object AnalyticsQueries {
         Tables.events(s, dir), "event_type", "value", pLo = 0.05, pHi = 0.95)
       .orderBy("event_type")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_retention" -> (qRetention _),
-    "q_funnel" -> (qFunnel _),
-    "q_islands" -> (qIslands _),
-    "q_resample" -> (qResample _),
-    "q_scd2" -> (qScd2 _),
-    "q_histogram" -> (qHistogram _),
-    "q_anomaly" -> (qAnomaly _),
-    "q_triangles" -> (qTriangles _),
-    "q_decay" -> (qDecay _),
-    "q_pagerank" -> (qPageRank _),
-    "q_skew_audit" -> (qSkewAudit _),
-    "q_target_enc" -> (qTargetEnc _),
-    "q_winsorize" -> (qWinsorize _),
-  )
-
   private def coPurchaseEdgesSql: String =
     "SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v " +
       "FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey " +
       "AND a.l_partkey < b.l_partkey"
 
-  val oracleSql: Map[String, String] = Map(
-    "q_skew_audit" ->
-      ("WITH l AS (SELECT l_orderkey, CAST(count(*) AS BIGINT) AS n_left " +
+  val gates: Map[String, Gate] = Gate.registry(
+    "q_skew_audit" -> Gate(qSkewAudit _,
+      "WITH l AS (SELECT l_orderkey, CAST(count(*) AS BIGINT) AS n_left " +
         "FROM lineitem GROUP BY 1), " +
         "r AS (SELECT l_orderkey, CAST(count(*) AS BIGINT) AS n_right " +
         "FROM lineitem GROUP BY 1), " +
@@ -160,8 +144,8 @@ object AnalyticsQueries {
         "ORDER BY fanout DESC, l_orderkey LIMIT 20"),
     // decimal numerators subtracted exactly, ONE double division, r6 —
     // the same chain Features.targetEncodeLoo spells
-    "q_target_enc" ->
-      ("WITH c AS (SELECT event_type, " +
+    "q_target_enc" -> Gate(qTargetEnc _,
+      "WITH c AS (SELECT event_type, " +
         "sum(CAST(value AS DECIMAL(25,6))) AS csum, " +
         "CAST(count(*) AS BIGINT) AS cn FROM events GROUP BY 1), " +
         "g AS (SELECT sum(CAST(value AS DECIMAL(25,6))) AS gsum, " +
@@ -177,8 +161,8 @@ object AnalyticsQueries {
         "FROM events JOIN c USING (event_type), g ORDER BY event_id"),
     // percentile_disc spelled as its SQL-standard cume_dist definition
     // (the q_ppl_band discipline); cut values are data, not arithmetic
-    "q_winsorize" ->
-      ("WITH cd AS (SELECT event_type, value AS v, " +
+    "q_winsorize" -> Gate(qWinsorize _,
+      "WITH cd AS (SELECT event_type, value AS v, " +
         "cume_dist() OVER (PARTITION BY event_type ORDER BY value) AS cd " +
         "FROM events), " +
         "lo AS (SELECT event_type, min(v) AS cut_lo FROM cd " +
@@ -197,8 +181,8 @@ object AnalyticsQueries {
           "WHEN value > cut_hi THEN cut_hi ELSE value END " +
           "AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE)") + " AS sum_winsorized " +
         "FROM j GROUP BY 1 ORDER BY event_type"),
-    "q_decay" ->
-      ("WITH m AS (SELECT date_trunc('day', max(ts)) AS max_day FROM events), " +
+    "q_decay" -> Gate(qDecay _,
+      "WITH m AS (SELECT date_trunc('day', max(ts)) AS max_day FROM events), " +
         "e AS (SELECT user_id, value, pow(0.5, (date_diff('day', " +
         "date_trunc('day', ts), max_day) // 7)::INT) AS w FROM events, m), " +
         "g AS (SELECT user_id, count(*) AS n_events, " +
@@ -209,8 +193,8 @@ object AnalyticsQueries {
         "FROM g ORDER BY user_id"),
     // date_trunc returns DATE in DuckDB, TIMESTAMP in Spark → ::TIMESTAMP;
     // int division spelled // (DuckDB / on ints is float division)
-    "q_retention" ->
-      ("WITH wk AS (SELECT DISTINCT user_id AS u, " +
+    "q_retention" -> Gate(qRetention _,
+      "WITH wk AS (SELECT DISTINCT user_id AS u, " +
         "date_trunc('day', ts::TIMESTAMP)::TIMESTAMP AS period FROM events), " +
         "ch AS (SELECT u, min(period) AS cohort FROM wk GROUP BY u), " +
         "off AS (SELECT wk.u, cohort, " +
@@ -222,8 +206,8 @@ object AnalyticsQueries {
         "first(n_users) OVER (PARTITION BY cohort ORDER BY periods_since) AS retention " +
         "FROM c ORDER BY cohort, periods_since"),
     // nested min-ts CTE per step mirrors the operator's join chain
-    "q_funnel" ->
-      ("WITH e AS (SELECT user_id AS u, event_type AS ty, ts::TIMESTAMP AS t FROM events), " +
+    "q_funnel" -> Gate(qFunnel _,
+      "WITH e AS (SELECT user_id AS u, event_type AS ty, ts::TIMESTAMP AS t FROM events), " +
         "s1 AS (SELECT u, min(t) AS t1 FROM e WHERE ty = 'view' GROUP BY u), " +
         "s2 AS (SELECT s1.u, t1, min(e.t) AS t2 FROM s1 JOIN e ON e.u = s1.u " +
         "AND e.ty = 'click' AND e.t > s1.t1 " +
@@ -239,8 +223,8 @@ object AnalyticsQueries {
         "FROM c ORDER BY step_idx"),
     // second-granularity gap compare: Spark ts.cast(long) truncates to
     // seconds == DuckDB floor(epoch()) for post-epoch data
-    "q_islands" ->
-      ("WITH e AS (SELECT user_id, event_id, ts::TIMESTAMP AS t, value, " +
+    "q_islands" -> Gate(qIslands _,
+      "WITH e AS (SELECT user_id, event_id, ts::TIMESTAMP AS t, value, " +
         "floor(epoch(ts::TIMESTAMP))::BIGINT AS sec FROM events), " +
         "f AS (SELECT *, CASE WHEN sec - lag(sec) OVER w > 7200 " +
         "OR lag(sec) OVER w IS NULL THEN 1 ELSE 0 END AS nw FROM e " +
@@ -253,8 +237,8 @@ object AnalyticsQueries {
     // Spark sequence(lo, hi, 1 hour) == DuckDB unnest(generate_series);
     // last_value IGNORE NULLS == Spark last(ignoreNulls) (default frames
     // agree: unbounded preceding → current row, bucket unique per key)
-    "q_resample" ->
-      ("WITH h AS (SELECT user_id, date_trunc('hour', ts::TIMESTAMP)::TIMESTAMP AS bucket, " +
+    "q_resample" -> Gate(qResample _,
+      "WITH h AS (SELECT user_id, date_trunc('hour', ts::TIMESTAMP)::TIMESTAMP AS bucket, " +
         "count(*)::BIGINT AS n_events, " + Oracle.dsum("value") + " AS sum_value " +
         "FROM events GROUP BY 1, 2), " +
         "sp AS (SELECT user_id, unnest(generate_series(min(bucket), max(bucket), " +
@@ -264,8 +248,8 @@ object AnalyticsQueries {
         "SELECT user_id, bucket, n_events, sum_value, " +
         "last_value(sum_value IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY bucket) " +
         "AS filled_value FROM j ORDER BY user_id, bucket"),
-    "q_scd2" ->
-      ("WITH e AS (SELECT user_id, event_id, event_type, ts::TIMESTAMP AS t FROM events), " +
+    "q_scd2" -> Gate(qScd2 _,
+      "WITH e AS (SELECT user_id, event_id, event_type, ts::TIMESTAMP AS t FROM events), " +
         "c AS (SELECT *, lag(event_type) OVER " +
         "(PARTITION BY user_id ORDER BY t, event_id) AS prev FROM e), " +
         "ch AS (SELECT * FROM c WHERE prev IS NULL OR prev <> event_type) " +
@@ -276,8 +260,8 @@ object AnalyticsQueries {
     // bin arithmetic spelled identically on both engines (no
     // width_bucket in DuckDB); doubles are IEEE-identical given the
     // same expression tree
-    "q_histogram" ->
-      ("WITH b AS (SELECT min(value) AS lo, max(value) AS hi FROM events), " +
+    "q_histogram" -> Gate(qHistogram _,
+      "WITH b AS (SELECT min(value) AS lo, max(value) AS hi FROM events), " +
         "g AS (SELECT least(floor((e.value - b.lo) / ((b.hi - b.lo) / 20)), 19.0)::INT AS bin, " +
         "e.value AS v, b.lo, b.hi FROM events e CROSS JOIN b) " +
         "SELECT bin, first(lo + bin * ((hi - lo) / 20)) AS bin_lo, " +
@@ -285,8 +269,8 @@ object AnalyticsQueries {
         "FROM g GROUP BY bin ORDER BY bin"),
     // integer moment sums are exact in BIGINT; the z expression is the
     // same double tree on both engines
-    "q_anomaly" ->
-      ("WITH d AS (SELECT user_id, date_trunc('day', ts::TIMESTAMP)::TIMESTAMP AS day, " +
+    "q_anomaly" -> Gate(qAnomaly _,
+      "WITH d AS (SELECT user_id, date_trunc('day', ts::TIMESTAMP)::TIMESTAMP AS day, " +
         "count(*)::BIGINT AS cnt FROM events GROUP BY 1, 2), " +
         "s AS (SELECT user_id, count(*)::BIGINT AS n, sum(cnt)::BIGINT AS sm, " +
         "sum(cnt*cnt)::BIGINT AS sq FROM d GROUP BY user_id HAVING count(*) > 1), " +
@@ -312,8 +296,8 @@ object AnalyticsQueries {
     // big stream (unnested triangles) flows straight into the final
     // aggregate with no join or build after it. Same per-vertex
     // multiset as the engine's wedge formulation.
-    "q_triangles" ->
-      ("WITH e AS (SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v " +
+    "q_triangles" -> Gate(qTriangles _,
+      "WITH e AS (SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v " +
         "FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey " +
         "AND a.l_partkey < b.l_partkey), " +
         "deg AS (SELECT x, count(*) AS d FROM " +
@@ -328,9 +312,9 @@ object AnalyticsQueries {
         "SELECT vertex, count(*)::BIGINT AS n_triangles FROM " +
         "(SELECT unnest([a, b, c]) AS vertex FROM tri) " +
         "GROUP BY vertex ORDER BY vertex"),
-    "q_pagerank" -> Graphs.pageRankOracleSql(
+    "q_pagerank" -> Gate(qPageRank _, Graphs.pageRankOracleSql(
       coPurchaseEdgesSql, damping = 0.85, iters = 3,
       finalSelect = "SELECT x AS vertex, " + Oracle.r6("r * 1000.0") +
-        " AS rank_k FROM r3 ORDER BY vertex"),
+        " AS rank_k FROM r3 ORDER BY vertex")),
   )
 }

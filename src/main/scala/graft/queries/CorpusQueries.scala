@@ -192,40 +192,20 @@ object CorpusQueries {
       .orderBy("src_a", "src_b")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_overlap" -> (qOverlap _),
-    "q_overlap_sketch" -> (qOverlapSketch _),
-    "q_neg_sample" -> (qNegSample _),
-    "q_token_budget" -> (qTokenBudget _),
-    "q_shards" -> (qShards _),
-    "q_split_hash" -> (qSplitHash _),
-    "q_pipeline" -> (qPipeline _),
-    "q_sample_strat" -> (qSampleStrat _),
-    "q_mix" -> (qMix _),
-    "q_pack" -> (qPack _),
-    "q_inverted" -> (qInverted _),
-    "q_sample_k" -> (qSampleK _),
-    "q_profile" -> (qProfile _),
-    "q_source_quota" -> (qSourceQuota _),
-    "q_sample_weighted" -> (qSampleWeighted _),
-    "q_split_group" -> (qSplitGroup _),
-    "q_embed_quant" -> (qEmbedQuant _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
+  val gates: Map[String, Gate] = Gate.registry(
     // same shingle construction as the dedup family's oracles: distinct
     // (source, 3-gram) pairs, then a shingle-keyed pair join (< keeps
     // each pair once) and exact set algebra; jaccard is one IEEE
     // division of exact BIGINTs, r6'd like every cross-engine double
-    "q_overlap" ->
-      (s"WITH $overlapCtes " +
+    "q_overlap" -> Gate(qOverlap _,
+      s"WITH $overlapCtes " +
         "SELECT src_a, src_b, n_inter, n_a, n_b, jaccard FROM ex " +
         "ORDER BY src_a, src_b"),
     // sketch next to exact: the same md5 permutation family as the
     // per-doc minhash oracle, min over each source's whole shingle set;
     // within_band is LITERAL true — sketch drift hash-fails the gate
-    "q_overlap_sketch" ->
-      (s"WITH $overlapCtes, " +
+    "q_overlap_sketch" -> Gate(qOverlapSketch _,
+      s"WITH $overlapCtes, " +
         "sig AS (SELECT src, CAST(t.i AS INT) AS i, " +
         "min(md5(shingle || '#' || t.i)) AS h " +
         "FROM g, range(0, 64) AS t(i) GROUP BY 1, 2), " +
@@ -237,16 +217,16 @@ object CorpusQueries {
         "GROUP BY 1, 2) " +
         "SELECT src_a, src_b, jaccard, est_jaccard, true AS within_band " +
         "FROM ex JOIN est USING (src_a, src_b) ORDER BY src_a, src_b"),
-    "q_token_budget" ->
-      ("WITH base AS (SELECT doc_id, " +
+    "q_token_budget" -> Gate(qTokenBudget _,
+      "WITH base AS (SELECT doc_id, " +
         "CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok FROM documents), " +
         "t AS (SELECT doc_id, n_tok, CAST(sum(n_tok) OVER " +
         "(ORDER BY md5('budget' || doc_id::VARCHAR), doc_id) AS BIGINT) AS cum_tokens " +
         "FROM base) " +
         "SELECT doc_id, n_tok, cum_tokens FROM t WHERE cum_tokens <= 15000 " +
         "ORDER BY doc_id"),
-    "q_neg_sample" ->
-      ("WITH pool AS (SELECT doc_id AS neg_id, source AS _ng FROM documents " +
+    "q_neg_sample" -> Gate(qNegSample _,
+      "WITH pool AS (SELECT doc_id AS neg_id, source AS _ng FROM documents " +
         "ORDER BY md5('negs_pool' || doc_id::VARCHAR) LIMIT 64), " +
         "r AS (SELECT d.doc_id, neg_id, " +
         "md5('negs' || d.doc_id::VARCHAR || '_' || neg_id::VARCHAR) AS _r " +
@@ -255,8 +235,8 @@ object CorpusQueries {
         "(PARTITION BY doc_id ORDER BY _r, neg_id)::INT AS neg_rank FROM r) " +
         "SELECT doc_id, neg_id, neg_rank FROM k WHERE neg_rank <= 5 " +
         "ORDER BY doc_id, neg_rank"),
-    "q_shards" ->
-      ("WITH h AS (SELECT doc_id, md5('shard' || doc_id::VARCHAR) AS ord " +
+    "q_shards" -> Gate(qShards _,
+      "WITH h AS (SELECT doc_id, md5('shard' || doc_id::VARCHAR) AS ord " +
         "FROM documents), " +
         "s AS (SELECT doc_id, ord, " +
         "(('0x' || substr(ord, 1, 8))::BIGINT % 8)::INT AS shard FROM h) " +
@@ -266,8 +246,8 @@ object CorpusQueries {
     // the composed pipeline: each stage reuses the fragment its
     // standalone gate query is checked with (repetition metrics,
     // lang-ID argmax, word-set dedup key, hash-split thresholds)
-    "q_pipeline" ->
-      (s"WITH rep AS (${PrepQueries.repetitionSelect}), " +
+    "q_pipeline" -> Gate(qPipeline _,
+      s"WITH rep AS (${PrepQueries.repetitionSelect}), " +
         s"lang AS (SELECT doc_id, ${ExtQueries.langPredSql} AS lang_pred FROM documents), " +
         "ky AS (SELECT doc_id, md5(array_to_string(list_sort(list_distinct(" +
         "string_split(text, ' '))), ' ')) AS k FROM documents), " +
@@ -281,24 +261,24 @@ object CorpusQueries {
         "SELECT doc_id, n_tokens, CASE WHEN b < 8000 THEN 'train' " +
         "WHEN b < 9000 THEN 'val' ELSE 'test' END AS split " +
         "FROM b ORDER BY doc_id"),
-    "q_split_hash" ->
-      (s"WITH b AS (SELECT doc_id, n_chars, ${bucketSql("split", "doc_id")} AS b " +
+    "q_split_hash" -> Gate(qSplitHash _,
+      s"WITH b AS (SELECT doc_id, n_chars, ${bucketSql("split", "doc_id")} AS b " +
         "FROM documents), " +
         "s AS (SELECT doc_id, n_chars, CASE WHEN b < 8000 THEN 'train' " +
         "WHEN b < 9000 THEN 'val' ELSE 'test' END AS split FROM b) " +
         "SELECT split, count(*) AS n, min(doc_id) AS min_id, " +
         "max(doc_id) AS max_id, sum(n_chars)::BIGINT AS sum_chars " +
         "FROM s GROUP BY 1 ORDER BY 1"),
-    "q_sample_strat" ->
-      (s"WITH b AS (SELECT lang, doc_id, n_chars, ${bucketSql("strat", "doc_id")} AS b " +
+    "q_sample_strat" -> Gate(qSampleStrat _,
+      s"WITH b AS (SELECT lang, doc_id, n_chars, ${bucketSql("strat", "doc_id")} AS b " +
         "FROM documents), " +
         "k AS (SELECT * FROM b WHERE b < (CASE lang WHEN 'en' THEN 2500 " +
         "WHEN 'zh' THEN 10000 ELSE 7500 END)) " +
         "SELECT lang, count(*) AS n, min(doc_id) AS min_id, " +
         "max(doc_id) AS max_id, sum(n_chars)::BIGINT AS sum_chars " +
         "FROM k GROUP BY 1 ORDER BY 1"),
-    "q_mix" ->
-      (s"WITH c AS (SELECT source, doc_id, w, ${bucketSql("mix", "doc_id")} AS b " +
+    "q_mix" -> Gate(qMix _,
+      s"WITH c AS (SELECT source, doc_id, w, ${bucketSql("mix", "doc_id")} AS b " +
         "FROM (SELECT source, doc_id, CASE source WHEN 'src0' THEN 2.5 " +
         "WHEN 'src1' THEN 0.5 WHEN 'src2' THEN 0.0 ELSE 1.0 END AS w " +
         "FROM documents)), " +
@@ -309,49 +289,49 @@ object CorpusQueries {
         "unnest(range(n.copies)) AS u(i)) " +
         "SELECT source, count(*) AS n_rows, count(DISTINCT doc_id) AS n_docs, " +
         "sum(copy_idx)::BIGINT AS sum_copy_idx FROM e GROUP BY 1 ORDER BY 1"),
-    "q_pack" ->
-      ("WITH t AS (SELECT doc_id, len(string_split(text, ' '))::INT AS n_tokens " +
+    "q_pack" -> Gate(qPack _,
+      "WITH t AS (SELECT doc_id, len(string_split(text, ' '))::INT AS n_tokens " +
         "FROM documents), " +
         "c AS (SELECT doc_id, n_tokens, coalesce(sum(n_tokens) OVER " +
         "(ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), " +
         "0)::BIGINT AS cb FROM t) " +
         "SELECT doc_id, n_tokens, cb // 128 AS pack_id, " +
         "(cb % 128)::INT AS begin_offset FROM c ORDER BY doc_id"),
-    "q_sample_k" ->
-      ("SELECT doc_id, lang, source, n_chars FROM " +
+    "q_sample_k" -> Gate(qSampleK _,
+      "SELECT doc_id, lang, source, n_chars FROM " +
         "(SELECT * FROM documents ORDER BY md5('samplek' || doc_id::VARCHAR) " +
         "LIMIT 100) ORDER BY doc_id"),
-    "q_sample_weighted" ->
-      (s"WITH b AS (SELECT *, ${bucketSql("wsample", "doc_id", 1 << 20)} AS b " +
+    "q_sample_weighted" -> Gate(qSampleWeighted _,
+      s"WITH b AS (SELECT *, ${bucketSql("wsample", "doc_id", 1 << 20)} AS b " +
         "FROM documents), " +
         "k AS (SELECT *, floor((-ln((b + 1.0) / 1048577.0) / n_chars::DOUBLE) " +
         "* 1e6 + 0.5) / 1e6 AS wk FROM b WHERE n_chars::DOUBLE > 0) " +
         "SELECT doc_id, lang, source, n_chars FROM " +
         "(SELECT * FROM k ORDER BY wk, doc_id LIMIT 100) ORDER BY doc_id"),
-    "q_profile" ->
+    "q_profile" -> Gate(qProfile _,
       Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax").map { c =>
         s"SELECT '$c' AS \"column\", count($c) AS n_nonnull, " +
           s"count(DISTINCT $c) AS n_distinct, min($c)::DOUBLE AS mn, " +
           s"max($c)::DOUBLE AS mx, quantile_disc($c, 0.25)::DOUBLE AS q1, " +
           s"quantile_disc($c, 0.5)::DOUBLE AS median, " +
           s"quantile_disc($c, 0.75)::DOUBLE AS q3 FROM lineitem"
-      }.mkString("SELECT * FROM (", " UNION ALL ", ") ORDER BY \"column\""),
-    "q_source_quota" ->
-      ("WITH r AS (SELECT source, doc_id, n_chars, row_number() OVER " +
+      }.mkString("SELECT * FROM (", " UNION ALL ", ") ORDER BY \"column\"")),
+    "q_source_quota" -> Gate(qSourceQuota _,
+      "WITH r AS (SELECT source, doc_id, n_chars, row_number() OVER " +
         "(PARTITION BY source ORDER BY n_chars DESC, doc_id) AS rank " +
         "FROM documents) " +
         "SELECT source, doc_id, n_chars, rank FROM r WHERE rank <= 15 " +
         "ORDER BY source, rank"),
-    "q_split_group" ->
-      (s"WITH b AS (SELECT source, doc_id, ${bucketSql("gsplit", "source")} AS b " +
+    "q_split_group" -> Gate(qSplitGroup _,
+      s"WITH b AS (SELECT source, doc_id, ${bucketSql("gsplit", "source")} AS b " +
         "FROM documents), " +
         "s AS (SELECT doc_id, source, CASE WHEN b < 8000 THEN 'train' " +
         "WHEN b < 9000 THEN 'val' ELSE 'test' END AS split FROM b) " +
         "SELECT split, count(*) AS n, count(DISTINCT source) AS n_sources, " +
         "min(doc_id) AS min_id, max(doc_id) AS max_id " +
         "FROM s GROUP BY 1 ORDER BY 1"),
-    "q_embed_quant" ->
-      ("WITH b AS (SELECT vec_id, embedding AS v, " +
+    "q_embed_quant" -> Gate(qEmbedQuant _,
+      "WITH b AS (SELECT vec_id, embedding AS v, " +
         "list_min(embedding)::DOUBLE AS mn, list_max(embedding)::DOUBLE AS mx " +
         "FROM embeddings), " +
         "s AS (SELECT *, (mx - mn) / 255.0 AS sc FROM b), " +
@@ -363,8 +343,8 @@ object CorpusQueries {
         "floor(list_max(list_transform(range(1, len(v) + 1), i -> " +
         "abs(mn + codes[i]::DOUBLE * sc - v[i]::DOUBLE))) * 1e6 + 0.5) / 1e6 " +
         "AS max_err FROM c ORDER BY vec_id"),
-    "q_inverted" ->
-      ("WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents), " +
+    "q_inverted" -> Gate(qInverted _,
+      "WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents), " +
         "t AS (SELECT DISTINCT doc_id, u.t AS token FROM w, unnest(w.w) AS u(t) " +
         "WHERE length(u.t) > 0), " +
         "g AS (SELECT token, count(*) AS df, " +

@@ -107,27 +107,14 @@ object DriftQueries {
     graft.ops.Stats.bootstrapMeanCI(
       Tables.events(s, dir), "event_id", "value", b = 64)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_bootstrap" -> (qBootstrap _),
-    "q_kl_drift" -> (qKlDrift _),
-    "q_chi2" -> (qChi2 _),
-    "q_editsim" -> (qEditsim _),
-    "q_bm25" -> (qBm25 _),
-    "q_containment" -> (qContainment _),
-    "q_pmi" -> (qPmi _),
-    "q_entropy" -> (qEntropy _),
-    "q_ks_drift" -> (qKsDrift _),
-    "q_mi" -> (qMi _),
-  )
-
   private val ln2 = "0.6931471805599453"
 
   private def dsumT(x: String): String =
     s"CAST(CAST(sum(CAST($x AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE)"
 
-  val oracleSql: Map[String, String] = Map(
-    "q_kl_drift" ->
-      ("WITH tok AS (SELECT source AS g, unnest(string_split(text, ' ')) AS w " +
+  val gates: Map[String, Gate] = Gate.registry(
+    "q_kl_drift" -> Gate(qKlDrift _,
+      "WITH tok AS (SELECT source AS g, unnest(string_split(text, ' ')) AS w " +
         "FROM documents), " +
         "gw AS (SELECT g, w, count(*) AS c_gw FROM tok GROUP BY 1, 2), " +
         "gt AS (SELECT g, CAST(sum(c_gw) AS BIGINT) AS t_g FROM gw GROUP BY 1), " +
@@ -146,8 +133,8 @@ object DriftQueries {
         O.r6(s"(${dsumT("a_t")} + ${dsumT("b_t")} + " +
           s"$ln2 * (1.0 - ${dsumT("q_t")})) / 2.0") + " AS js " +
         "FROM terms GROUP BY 1 ORDER BY source"),
-    "q_chi2" ->
-      ("WITH cells AS (SELECT lang, source, count(*) AS obs " +
+    "q_chi2" -> Gate(qChi2 _,
+      "WITH cells AS (SELECT lang, source, count(*) AS obs " +
         "FROM documents GROUP BY 1, 2), " +
         "ra AS (SELECT lang, CAST(sum(obs) AS BIGINT) AS _ra " +
         "FROM cells GROUP BY 1), " +
@@ -162,8 +149,8 @@ object DriftQueries {
         "ORDER BY lang, source"),
     // bigram stream via list_zip of the shifted token list — the same
     // adjacent pairing as Spark's zip_with(slice, slice)
-    "q_pmi" ->
-      ("WITH toks AS (SELECT string_split(text, ' ') AS t FROM documents), " +
+    "q_pmi" -> Gate(qPmi _,
+      "WITH toks AS (SELECT string_split(text, ' ') AS t FROM documents), " +
         "uni AS (SELECT unnest(t) AS w FROM toks), " +
         "uc AS (SELECT w, count(*) AS c_w FROM uni GROUP BY 1), " +
         "ut AS (SELECT CAST(count(*) AS BIGINT) AS n_uni FROM uni), " +
@@ -180,8 +167,8 @@ object DriftQueries {
         "WHERE c_ab >= 5) " +
         "SELECT w1, w2, c_ab, pmi FROM scored " +
         "ORDER BY pmi DESC, w1, w2 LIMIT 50"),
-    "q_entropy" ->
-      ("WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w " +
+    "q_entropy" -> Gate(qEntropy _,
+      "WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w " +
         "FROM documents), " +
         "wc AS (SELECT doc_id, w, count(*) AS c FROM tok GROUP BY 1, 2), " +
         "dn AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n, " +
@@ -195,8 +182,8 @@ object DriftQueries {
         "FROM terms GROUP BY 1 ORDER BY doc_id"),
     // ECDF over the distinct-value grid; gaps r6-rounded before the
     // max, at_value = min value among r6-equal maxima (total order)
-    "q_ks_drift" ->
-      ("WITH ab AS (SELECT value AS v, " +
+    "q_ks_drift" -> Gate(qKsDrift _,
+      "WITH ab AS (SELECT value AS v, " +
         "CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS ia, " +
         "CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS ib " +
         "FROM events WHERE event_type IN ('click', 'purchase')), " +
@@ -214,22 +201,22 @@ object DriftQueries {
         "mx AS (SELECT max(d) AS mxd FROM dv) " +
         "SELECT max(na) AS n_a, max(nb) AS n_b, max(d) AS ks, " +
         "min(CASE WHEN d = mxd THEN v END) AS at_value FROM dv, mx"),
-    "q_bootstrap" -> graft.ops.Stats.bootstrapMeanCIOracleSql(
-      "SELECT event_id AS id, value AS x FROM events", b = 64),
-    "q_mi" -> graft.ops.Stats.mutualInformationOracleSql(
-      "SELECT event_type AS x, (dayofweek(ts) + 1)::INT AS y FROM events"),
-    "q_editsim" -> // brute force: proves the deletion-key join's recall.
+    "q_bootstrap" -> Gate(qBootstrap _, graft.ops.Stats.bootstrapMeanCIOracleSql(
+      "SELECT event_id AS id, value AS x FROM events", b = 64)),
+    "q_mi" -> Gate(qMi _, graft.ops.Stats.mutualInformationOracleSql(
+      "SELECT event_type AS x, (dayofweek(ts) + 1)::INT AS y FROM events")),
+    "q_editsim" -> Gate(qEditsim _, // brute force: proves the deletion-key join's recall.
       // DISTINCT first — the operator's contract is pairs of distinct
       // VALUES; the raw row×row spelling coincided with it only while
       // every name was unique (on the 10× replica, 10 copies of each
       // name made the row join emit each value-pair 100 times)
-      ("WITH w AS (SELECT DISTINCT c_name FROM customer " +
+      "WITH w AS (SELECT DISTINCT c_name FROM customer " +
         "WHERE c_name IS NOT NULL) " +
         "SELECT a.c_name AS w1, b.c_name AS w2 FROM w a, w b " +
         "WHERE a.c_name < b.c_name AND levenshtein(a.c_name, b.c_name) <= 1 " +
         "ORDER BY w1, w2"),
-    "q_bm25" ->
-      ("WITH dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) " +
+    "q_bm25" -> Gate(qBm25 _,
+      "WITH dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) " +
         "AS DOUBLE) AS dl FROM documents), " +
         "stats AS (SELECT count(*) AS _N, " +
         s"${dsumT("dl")} / count(*) AS avgdl FROM dl), " +
@@ -251,8 +238,8 @@ object DriftQueries {
     // |a ∩ b| (shingle lists are list_distinct), and the candidate set
     // is bounded by Σ df² — the engine's own index shape — instead of
     // n². Ordered pairs (<>) and cont = inter / |a| are unchanged.
-    "q_containment" ->
-      ("WITH w AS (SELECT doc_id, string_split(text, ' ') AS w " +
+    "q_containment" -> Gate(qContainment _,
+      "WITH w AS (SELECT doc_id, string_split(text, ' ') AS w " +
         "FROM documents), " +
         "s AS (SELECT doc_id, list_distinct(list_transform(" +
         "range(greatest(len(w) - 2, 0)), " +

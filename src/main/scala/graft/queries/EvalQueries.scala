@@ -153,19 +153,6 @@ object EvalQueries {
       Seq("o_custkey") -> "o_orderpriority",
       Seq("o_orderstatus", "o_orderpriority") -> "o_custkey"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_auc" -> (qAuc _),
-    "q_calibration" -> (qCalibration _),
-    "q_rrf" -> (qRrf _),
-    "q_ndcg" -> (qNdcg _),
-    "q_ips" -> (qIps _),
-    "q_attribution" -> (qAttribution _),
-    "q_prf" -> (qPrf _),
-    "q_ap" -> (qAp _),
-    "q_kcore" -> (qKcore _),
-    "q_fd" -> (qFd _),
-  )
-
   private val posCase = "CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END"
 
   /** DuckDB spelling of [[Corpus.hashBucket]] (the CorpusQueries
@@ -189,12 +176,12 @@ object EvalQueries {
   private def dsumT(x: String): String =
     s"CAST(CAST(sum(CAST($x AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE)"
 
-  val oracleSql: Map[String, String] = Map(
+  val gates: Map[String, Gate] = Gate.registry(
     // pair-counting AUC over the distinct-score grid; the oracle's
     // prefix sum is the plain global window (single-threaded SQL may),
     // the engine's is the order-preserving bucket decomposition
-    "q_auc" ->
-      (s"WITH b AS (SELECT value AS s, $posCase AS p FROM events " +
+    "q_auc" -> Gate(qAuc _,
+      s"WITH b AS (SELECT value AS s, $posCase AS p FROM events " +
         "WHERE value IS NOT NULL), " +
         "g AS (SELECT s, CAST(sum(p) AS BIGINT) AS npos, " +
         "CAST(sum(1 - p) AS BIGINT) AS nneg FROM b GROUP BY 1), " +
@@ -208,8 +195,8 @@ object EvalQueries {
         O.r6("CAST(sum(npos * 2 * negbelow + npos * nneg) AS DOUBLE) / " +
           "(2.0 * CAST(sum(npos) AS BIGINT) * CAST(sum(nneg) AS BIGINT))") +
         " END AS auc FROM c"),
-    "q_calibration" ->
-      (s"WITH r AS (SELECT ($calU + " +
+    "q_calibration" -> Gate(qCalibration _,
+      s"WITH r AS (SELECT ($calU + " +
         s"CASE WHEN event_type = 'purchase' THEN 1.0 ELSE 0.0 END) / 2.0 " +
         s"AS p, $posCase AS y FROM events), " +
         "g AS (SELECT least(floor(p * 10)::BIGINT, 9) AS bin, " +
@@ -226,8 +213,8 @@ object EvalQueries {
     // both scorers replayed, both rank windows, the full-outer merge,
     // and the reciprocal fold — the q_bm25 CTE chain at LIMIT 50 plus
     // the density ranking
-    "q_rrf" ->
-      ("WITH dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) " +
+    "q_rrf" -> Gate(qRrf _,
+      "WITH dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) " +
         "AS DOUBLE) AS dl FROM documents), " +
         "stats AS (SELECT count(*) AS _N, " +
         s"${dsumT("dl")} / count(*) AS avgdl FROM dl), " +
@@ -256,8 +243,8 @@ object EvalQueries {
           "coalesce(1.0 / (60 + rank_dens), 0.0)") + " AS rrf " +
         "FROM ra FULL JOIN rb USING (doc_id) " +
         "ORDER BY rrf DESC, doc_id LIMIT 20"),
-    "q_ndcg" ->
-      ("SELECT qid AS user_id, n_ranked, n_rel, dcg, ndcg, mrr FROM (" +
+    "q_ndcg" -> Gate(qNdcg _,
+      "SELECT qid AS user_id, n_ranked, n_rel, dcg, ndcg, mrr FROM (" +
         Ranking.rankEvalOracleSql(
           "SELECT user_id AS qid, row_number() OVER (PARTITION BY user_id " +
             "ORDER BY value DESC, event_id ASC) AS rank, " +
@@ -265,27 +252,27 @@ object EvalQueries {
             "WHEN 'click' THEN 1 ELSE 0 END AS rel FROM events",
           k = 10) +
         ") ORDER BY user_id"),
-    "q_prf" -> ModelEval.classificationReportOracleSql(
-      "events", "value", posCase, threshold = 50.0),
-    "q_ap" -> ModelEval.averagePrecisionOracleSql(
-      "events", "value", posCase),
-    "q_ips" -> ModelEval.ipsOracleSql(
+    "q_prf" -> Gate(qPrf _, ModelEval.classificationReportOracleSql(
+      "events", "value", posCase, threshold = 50.0)),
+    "q_ap" -> Gate(qAp _, ModelEval.averagePrecisionOracleSql(
+      "events", "value", posCase)),
+    "q_ips" -> Gate(qIps _, ModelEval.ipsOracleSql(
       "SELECT event_type AS a, value AS r, " +
         "CASE WHEN user_id % 2 = 0 THEN 'purchase' ELSE 'click' END AS pi " +
-        "FROM events"),
-    "q_attribution" -> graft.ops.Behavior.attributionOracleSql(
+        "FROM events")),
+    "q_attribution" -> Gate(qAttribution _, graft.ops.Behavior.attributionOracleSql(
       "SELECT user_id AS u, ts, event_id AS id, event_type AS t FROM events",
-      convType = "purchase"),
-    "q_kcore" ->
-      ("SELECT x AS vertex, in_core, core_degree FROM (" +
+      convType = "purchase")),
+    "q_kcore" -> Gate(qKcore _,
+      "SELECT x AS vertex, in_core, core_degree FROM (" +
         Graphs.kCoreOracleSql(
           "SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v " +
             "FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey " +
             "AND a.l_partkey < b.l_partkey",
           k = 75, rounds = 12) +
         ") ORDER BY vertex"),
-    "q_fd" ->
-      (Seq(
+    "q_fd" -> Gate(qFd _,
+      Seq(
         fdSql(Seq("o_orderkey"), "o_custkey"),
         fdSql(Seq("o_custkey"), "o_orderpriority"),
         fdSql(Seq("o_orderstatus", "o_orderpriority"), "o_custkey"),

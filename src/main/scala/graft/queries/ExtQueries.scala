@@ -1358,91 +1358,7 @@ object ExtQueries {
     Multimodal.extractFeatures(blobs).toDF().orderBy("doc_id")
   }
 
-  // ---- registry -------------------------------------------------------
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_dedup_exact" -> (qDedupExact _),
-    "q_dup_spans" -> (qDupSpans _),
-    "q_dedup_minhash" -> (qDedupMinhash _),
-    "q_dedup_lsh" -> (qDedupLsh _),
-    "q_dedup_near" -> (qDedupNear _),
-    "q_dedup_ngram" -> (qDedupNgram _),
-    "q_dedup_incremental" -> (qDedupIncremental _),
-    "q_dedup_inc_stream" -> (qDedupIncStream _),
-    "q_dedup_simhash" -> (qDedupSimhash _),
-    "q_dedup_simhash_pairs" -> (qDedupSimhashPairs _),
-    "q_dedup_embed" -> (qDedupEmbed _),
-    "q_dedup_clusters" -> (qDedupClusters _),
-    "q_dedup_clusters_fast" -> (qDedupClustersFast _),
-    "q_dedup_canonical" -> (qDedupCanonical _),
-    "q_dedup_best" -> (qDedupBest _),
-    "q_sim_topk" -> (qSimTopk _),
-    "q_sim_lsh" -> (qSimLsh _),
-    "q_rand_proj" -> (qRandProj _),
-    "q_ann_recall" -> (qAnnRecall _),
-    "q_ann_recall_ivf" -> (qAnnRecallIvf _),
-    "q_ann_recall_trunc" -> (qAnnRecallTrunc _),
-    "q_sim_ivf" -> (qSimIvf _),
-    "q_sim_topk_agg" -> (qSimTopkAgg _),
-    "q_embed_binary" -> (qEmbedBinary _),
-    "q_sim_hamming" -> (qSimHamming _),
-    "q_twostage" -> (qTwoStage _),
-    "q_sim_lsh_multi" -> (qSimLshMulti _),
-    "q_kmeans" -> (qKmeans _),
-    "q_text_stats" -> (qTextStats _),
-    "q_lang_id" -> (qLangId _),
-    "q_quality" -> (qQuality _),
-    "q_fingerprint" -> (qFingerprint _),
-    "q_fingerprint_roll" -> (qFingerprintRoll _),
-    "q_sql_funcs" -> (qSqlFuncs _),
-    "q_top_tokens" -> (qTopTokens _),
-    "q_heavy" -> (qHeavy _),
-    "q_text_embed" -> (qTextEmbed _),
-    "q_text_knn" -> (qTextKnn _),
-    "q_sessions" -> (qSessions _),
-    "q_sessions_stream" -> (qSessionsStream _),
-    "q_sessions_fmgs" -> (qSessionsFmgs _),
-    "q_dedup_stream_wm" -> (qDedupStreamWm _),
-    "q_cms_stream" -> (qCmsStream _),
-    "q_attr_stream" -> (qAttrStream _),
-    "q_attr_stream_outer" -> (qAttrStreamOuter _),
-    "q_window_hop" -> (qWindowHop _),
-    "q_tfidf" -> (qTfidf _),
-    "q_window" -> (qWindow _),
-    "q_setops" -> (qSetOps _),
-    "q_stats" -> (qStats _),
-    "q_percentile" -> (qPercentile _),
-    "q_vocab_sketch" -> (qVocabSketch _),
-    "q_vocab_exact" -> (qVocabExact _),
-    "q_asof" -> (qAsof _),
-    "q_asof_big" -> (qAsofBig _),
-    "q_asof_native" -> (qAsofNative _),
-    "q_asof_fwd" -> (qAsofFwd _),
-    "q_asof_tol" -> (qAsofTol _),
-    "q_range" -> (qRange _),
-    "q_pivot" -> (qPivot _),
-    "q_semi_anti" -> (qSemiAnti _),
-    "q_upsert" -> (qUpsert _),
-    "q_table_diff" -> (qTableDiff _),
-    "q_cdc_apply" -> (qCdcApply _),
-    "q_zorder" -> (qZorder _),
-    "q_contamination" -> (qContamination _),
-    "q_novelty" -> (qNovelty _),
-    "q_kmv" -> (qKmv _),
-    "q_kmv_union" -> (qKmvUnion _),
-    "q_rollup" -> (qRollup _),
-    "q_grouping_sets" -> (qGroupingSets _),
-    "q_arrays" -> (qArrays _),
-    "q_maps" -> (qMaps _),
-    "q_cube" -> (qCube _),
-    "q_strings" -> (qStrings _),
-    "q_multimodal" -> (qMultimodal _),
-    "q_agg_salted" -> (qAggSalted _),
-    "q_join_salted" -> (qJoinSalted _),
-    "q_bucket_join" -> (qBucketJoin _),
-  )
-
-  // ---- oracle SQL -----------------------------------------------------
+  // ---- oracle SQL fragments and the gate registry ---------------------
 
   /** SimHash rebuilt bit-by-bit from md5(token): bit b of the 64-bit
     * md5-prefix hash lives in hex char 16-(b//4) at nibble bit b%4;
@@ -1522,6 +1438,24 @@ object ExtQueries {
       "WHERE len(list_intersect(tb.td, tc.td)) / len(list_distinct(list_concat(tb.td, tc.td))) >= 0.8 " +
       "ORDER BY batch_id, corpus_id"
 
+  /** Verified near-dup pairs closed transitively by a recursive
+    * reachability CTE, each doc labeled with its component's min id:
+    * q_dedup_clusters and q_dedup_clusters_fast are two traversals
+    * checked against this one closure.
+    */
+  private val dedupClustersOracleSql: String =
+    s"WITH RECURSIVE $wCte, $shCte, $sigCte, $bandsCte, $pairsCte, " +
+      "vp AS (SELECT doc_a, doc_b FROM p, " +
+      "(SELECT doc_id, list_distinct(string_split(text, ' ')) AS td FROM documents) ta, " +
+      "(SELECT doc_id, list_distinct(string_split(text, ' ')) AS td FROM documents) tb " +
+      "WHERE ta.doc_id = p.doc_a AND tb.doc_id = p.doc_b " +
+      "AND len(list_intersect(ta.td, tb.td)) / len(list_distinct(list_concat(ta.td, tb.td))) >= 0.8), " +
+      "e AS (SELECT doc_a AS src, doc_b AS dst FROM vp " +
+      "UNION ALL SELECT doc_b, doc_a FROM vp), " +
+      "reach(id, r) AS (SELECT src, src FROM e " +
+      "UNION SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.id) " +
+      "SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id ORDER BY doc_id"
+
   private val stopList =
     "['the', 'and', 'of', 'to', 'a', 'in', 'is', 'it', 'for', 'on']"
   private def hitsSql(words: Seq[String]): String =
@@ -1549,7 +1483,7 @@ object ExtQueries {
     * order as Spark's `aggregate`).
     */
   /** Hashing-trick embedding oracle body (no ORDER BY) — shared by
-    * q_text_embed and q_text_knn. A def: referenced during oracleSql
+    * q_text_embed and q_text_knn. A def: referenced during `gates`
     * init (see PrepQueries.repetitionSelect for the val-order hazard).
     */
   private def textEmbedSelect: String =
@@ -1581,11 +1515,11 @@ object ExtQueries {
         s"THEN ${1 << j} ELSE 0 END)"
     }.mkString("(", " + ", ")")
 
-  val oracleSql: Map[String, String] = Map(
+  val gates: Map[String, Gate] = Gate.registry(
     // same md5-sign matrix, same sequential signed fold (list_sum is
     // the cosSql-proven in-order sum), same √k scale, r6 both sides
-    "q_rand_proj" ->
-      ("WITH pr AS (SELECT vec_id, j, " +
+    "q_rand_proj" -> Gate(qRandProj _,
+      "WITH pr AS (SELECT vec_id, j, " +
         "list_sum(list_transform(range(len(embedding)), i -> " +
         "CASE WHEN substring(md5(j::VARCHAR || '_' || i::VARCHAR), 1, 1) < '8' " +
         "THEN embedding[i+1]::DOUBLE ELSE -embedding[i+1]::DOUBLE END)) AS raw " +
@@ -1593,34 +1527,34 @@ object ExtQueries {
         "SELECT vec_id, j::INT AS dim, " +
         O.r6("raw / sqrt(8.0::DOUBLE)") + " AS proj " +
         "FROM pr ORDER BY vec_id, dim"),
-    "q_agg_salted" ->
-      ("SELECT l_returnflag, l_linestatus, count(*) AS n, " +
+    "q_agg_salted" -> Gate(qAggSalted _,
+      "SELECT l_returnflag, l_linestatus, count(*) AS n, " +
         O.r6("CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) / count(*)") +
         " AS avg_price FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2"),
     // both compute the plain join — the salt/bucket transforms must be
     // invisible in the result
-    "q_join_salted" ->
-      ("SELECT o_orderpriority, count(*) AS n, " +
+    "q_join_salted" -> Gate(qJoinSalted _,
+      "SELECT o_orderpriority, count(*) AS n, " +
         O.dsum("l_extendedprice * (1.0 - l_discount)") + " AS revenue " +
         "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
         "GROUP BY o_orderpriority ORDER BY o_orderpriority"),
-    "q_bucket_join" ->
-      ("SELECT o_orderstatus, count(*) AS n, " +
+    "q_bucket_join" -> Gate(qBucketJoin _,
+      "SELECT o_orderstatus, count(*) AS n, " +
         O.dsum("l_extendedprice * (1.0 - l_discount)") + " AS revenue " +
         "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
         "GROUP BY o_orderstatus ORDER BY o_orderstatus"),
-    "q_dedup_exact" ->
-      ("SELECT md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) " +
+    "q_dedup_exact" -> Gate(qDedupExact _,
+      "SELECT md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) " +
         "AS content_key, min(doc_id) AS keep_id, count(*) AS copies " +
         "FROM documents GROUP BY 1 ORDER BY keep_id"),
-    "q_dedup_minhash" ->
-      (s"WITH $wCte, $shCte, $sigCte " +
+    "q_dedup_minhash" -> Gate(qDedupMinhash _,
+      s"WITH $wCte, $shCte, $sigCte " +
         "SELECT doc_id, list_aggregate(sig, 'string_agg', ',') AS sig " +
         "FROM g ORDER BY doc_id"),
     // winnowed w-gram span dedup: same trailing-min selection, verbatim
     // gram join, and island merge as Dedup.duplicatedSpans (w=8, s=4)
-    "q_dup_spans" ->
-      ("WITH d AS (SELECT doc_id, list_filter(string_split(text, ' '), t -> t != '') AS toks FROM documents), " +
+    "q_dup_spans" -> Gate(qDupSpans _,
+      "WITH d AS (SELECT doc_id, list_filter(string_split(text, ' '), t -> t != '') AS toks FROM documents), " +
         "g0 AS (SELECT doc_id, len(toks) AS n, toks FROM d WHERE len(toks) >= 8), " +
         "g AS (SELECT doc_id, CAST(u.i AS INT) AS p, " +
         "array_to_string(toks[CAST(u.i + 1 AS INT):CAST(u.i + 8 AS INT)], ' ') AS gram " +
@@ -1645,11 +1579,11 @@ object ExtQueries {
         "SELECT g0.doc_id, (n - 7)::BIGINT AS n_grams, n_sel, n_dup, n_spans, dup_tokens " +
         "FROM g0 JOIN s1 USING (doc_id) JOIN s2 USING (doc_id) JOIN s3 USING (doc_id) " +
         "ORDER BY doc_id"),
-    "q_dedup_lsh" ->
-      (s"WITH $wCte, $shCte, $sigCte, $bandsCte, $pairsCte " +
+    "q_dedup_lsh" -> Gate(qDedupLsh _,
+      s"WITH $wCte, $shCte, $sigCte, $bandsCte, $pairsCte " +
         "SELECT doc_a, doc_b FROM p ORDER BY doc_a, doc_b"),
-    "q_dedup_near" ->
-      (s"WITH $wCte, $shCte, $sigCte, $bandsCte, $pairsCte, " +
+    "q_dedup_near" -> Gate(qDedupNear _,
+      s"WITH $wCte, $shCte, $sigCte, $bandsCte, $pairsCte, " +
         "tk AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS td FROM documents) " +
         "SELECT doc_a, doc_b, " +
         O.r6("len(list_intersect(ta.td, tb.td)) / len(list_distinct(list_concat(ta.td, tb.td)))") +
@@ -1659,36 +1593,15 @@ object ExtQueries {
         "ORDER BY doc_a, doc_b"),
     // signatures are subset-independent (per-doc min over own shingles),
     // so one bands CTE serves both sides; the join is batch×corpus only
-    "q_dedup_incremental" -> dedupIncrementalOracleSql,
+    "q_dedup_incremental" -> Gate(qDedupIncremental _, dedupIncrementalOracleSql),
     // the stream-static bridge must reproduce the BATCH incremental
     // pair set exactly — same oracle, different engine path
-    "q_dedup_inc_stream" -> dedupIncrementalOracleSql,
-    "q_dedup_clusters" ->
-      (s"WITH RECURSIVE $wCte, $shCte, $sigCte, $bandsCte, $pairsCte, " +
-        "vp AS (SELECT doc_a, doc_b FROM p, " +
-        "(SELECT doc_id, list_distinct(string_split(text, ' ')) AS td FROM documents) ta, " +
-        "(SELECT doc_id, list_distinct(string_split(text, ' ')) AS td FROM documents) tb " +
-        "WHERE ta.doc_id = p.doc_a AND tb.doc_id = p.doc_b " +
-        "AND len(list_intersect(ta.td, tb.td)) / len(list_distinct(list_concat(ta.td, tb.td))) >= 0.8), " +
-        "e AS (SELECT doc_a AS src, doc_b AS dst FROM vp " +
-        "UNION ALL SELECT doc_b, doc_a FROM vp), " +
-        "reach(id, r) AS (SELECT src, src FROM e " +
-        "UNION SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.id) " +
-        "SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id ORDER BY doc_id"),
-"q_dedup_clusters_fast" -> // same oracle: both traversals must agree
-      (s"WITH RECURSIVE $wCte, $shCte, $sigCte, $bandsCte, $pairsCte, " +
-        "vp AS (SELECT doc_a, doc_b FROM p, " +
-        "(SELECT doc_id, list_distinct(string_split(text, ' ')) AS td FROM documents) ta, " +
-        "(SELECT doc_id, list_distinct(string_split(text, ' ')) AS td FROM documents) tb " +
-        "WHERE ta.doc_id = p.doc_a AND tb.doc_id = p.doc_b " +
-        "AND len(list_intersect(ta.td, tb.td)) / len(list_distinct(list_concat(ta.td, tb.td))) >= 0.8), " +
-        "e AS (SELECT doc_a AS src, doc_b AS dst FROM vp " +
-        "UNION ALL SELECT doc_b, doc_a FROM vp), " +
-        "reach(id, r) AS (SELECT src, src FROM e " +
-        "UNION SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.id) " +
-        "SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id ORDER BY doc_id"),
-    "q_dedup_best" -> // same closure; survivor = longest (id tiebreak)
-      (s"WITH RECURSIVE $wCte, $shCte, $sigCte, $bandsCte, $pairsCte, " +
+    "q_dedup_inc_stream" -> Gate(qDedupIncStream _, dedupIncrementalOracleSql),
+    "q_dedup_clusters" -> Gate(qDedupClusters _, dedupClustersOracleSql),
+    // same oracle: both traversals must agree
+    "q_dedup_clusters_fast" -> Gate(qDedupClustersFast _, dedupClustersOracleSql),
+    "q_dedup_best" -> Gate(qDedupBest _, // same closure; survivor = longest (id tiebreak)
+      s"WITH RECURSIVE $wCte, $shCte, $sigCte, $bandsCte, $pairsCte, " +
         "vp AS (SELECT doc_a, doc_b FROM p, " +
         "(SELECT doc_id, list_distinct(string_split(text, ' ')) AS td FROM documents) ta, " +
         "(SELECT doc_id, list_distinct(string_split(text, ' ')) AS td FROM documents) tb " +
@@ -1704,8 +1617,8 @@ object ExtQueries {
         "ORDER BY d.n_chars DESC, cl.doc_id) AS rn " +
         "FROM (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id) cl " +
         "JOIN documents d USING (doc_id)) WHERE rn > 1) ORDER BY doc_id"),
-    "q_dedup_canonical" -> // same closure, plus the survivor filter
-      (s"WITH RECURSIVE $wCte, $shCte, $sigCte, $bandsCte, $pairsCte, " +
+    "q_dedup_canonical" -> Gate(qDedupCanonical _, // same closure, plus the survivor filter
+      s"WITH RECURSIVE $wCte, $shCte, $sigCte, $bandsCte, $pairsCte, " +
         "vp AS (SELECT doc_a, doc_b FROM p, " +
         "(SELECT doc_id, list_distinct(string_split(text, ' ')) AS td FROM documents) ta, " +
         "(SELECT doc_id, list_distinct(string_split(text, ' ')) AS td FROM documents) tb " +
@@ -1718,8 +1631,8 @@ object ExtQueries {
         "SELECT doc_id, lang, source, n_chars FROM documents " +
         "WHERE doc_id NOT IN (SELECT id FROM (SELECT id, min(r) AS mr FROM reach " +
         "GROUP BY id) WHERE id != mr) ORDER BY doc_id"),
-    "q_upsert" ->
-      ("WITH u AS (SELECT o_orderkey, o_custkey, 'U' AS o_orderstatus, " +
+    "q_upsert" -> Gate(qUpsert _,
+      "WITH u AS (SELECT o_orderkey, o_custkey, 'U' AS o_orderstatus, " +
         "o_totalprice + 1000.0 AS o_totalprice, o_orderdate, o_orderpriority " +
         "FROM orders WHERE o_orderkey % 97 = 0 " +
         "UNION ALL SELECT o_orderkey + 10000000, o_custkey, o_orderstatus, " +
@@ -1730,8 +1643,8 @@ object ExtQueries {
         "SELECT o_orderstatus, count(*) AS n, " + O.dsum("o_totalprice") +
         " AS sum_price, min(o_orderkey) AS min_key, max(o_orderkey) AS max_key " +
         "FROM m GROUP BY 1 ORDER BY 1"),
-    "q_table_diff" ->
-      ("WITH a AS (SELECT o_orderkey, CASE WHEN o_orderkey % 97 = 0 " +
+    "q_table_diff" -> Gate(qTableDiff _,
+      "WITH a AS (SELECT o_orderkey, CASE WHEN o_orderkey % 97 = 0 " +
         "THEN o_totalprice + 1000.0 ELSE o_totalprice END AS o_totalprice, " +
         "o_orderstatus FROM orders WHERE o_orderkey % 89 <> 0 " +
         "UNION ALL SELECT o_orderkey + 10000000, o_totalprice, o_orderstatus " +
@@ -1747,8 +1660,8 @@ object ExtQueries {
         "WHERE change_type IS NOT NULL ORDER BY o_orderkey"),
     // the oracle aggregates the directly-constructed after snapshot:
     // a hash match proves diff + applyChanges reproduced it exactly
-    "q_cdc_apply" ->
-      ("WITH a AS (SELECT o_orderkey, CASE WHEN o_orderkey % 97 = 0 " +
+    "q_cdc_apply" -> Gate(qCdcApply _,
+      "WITH a AS (SELECT o_orderkey, CASE WHEN o_orderkey % 97 = 0 " +
         "THEN o_totalprice + 1000.0 ELSE o_totalprice END AS o_totalprice, " +
         "o_orderstatus FROM orders WHERE o_orderkey % 89 <> 0 " +
         "UNION ALL SELECT o_orderkey + 10000000, o_totalprice, o_orderstatus " +
@@ -1759,8 +1672,8 @@ object ExtQueries {
     // the k-th smallest md5 via row_number; the estimate reuses the
     // checksum gate's 15-hex-chars → BIGINT → double/2^60 spelling, and
     // the exact-path CASE mirrors kmvDistinct's n_kept < k short-circuit
-    "q_kmv" ->
-      ("WITH w AS (SELECT source, string_split(text, ' ') AS t FROM documents), " +
+    "q_kmv" -> Gate(qKmv _,
+      "WITH w AS (SELECT source, string_split(text, ' ') AS t FROM documents), " +
         "sh AS (SELECT source, list_distinct(list_transform(" +
         "range(greatest(len(t) - 2, 0)), " +
         "j -> t[j+1] || ' ' || t[j+2] || ' ' || t[j+3])) AS sh " +
@@ -1781,8 +1694,8 @@ object ExtQueries {
         "FROM e ORDER BY source"),
     // per-source k-lists merged with list algebra — the same union,
     // dedupe, keep-k-smallest the Spark side spells with array functions
-    "q_kmv_union" ->
-      ("WITH w AS (SELECT source, string_split(text, ' ') AS t FROM documents), " +
+    "q_kmv_union" -> Gate(qKmvUnion _,
+      "WITH w AS (SELECT source, string_split(text, ' ') AS t FROM documents), " +
         "sh AS (SELECT source, list_distinct(list_transform(" +
         "range(greatest(len(t) - 2, 0)), " +
         "j -> t[j+1] || ' ' || t[j+2] || ' ' || t[j+3])) AS sh " +
@@ -1815,8 +1728,8 @@ object ExtQueries {
         "FROM u ORDER BY g_a, g_b"),
     // per-doc distinct shingles (shCte) → corpus df → df=1 fraction;
     // the len(w) >= 3 guard excludes shingle-less docs on both engines
-    "q_novelty" ->
-      (s"WITH $wCte, $shCte, " +
+    "q_novelty" -> Gate(qNovelty _,
+      s"WITH $wCte, $shCte, " +
         "x AS (SELECT doc_id, u.g AS shingle FROM s, unnest(s.sh) AS u(g)), " +
         "dfq AS (SELECT shingle, count(*) AS df FROM x GROUP BY 1) " +
         "SELECT doc_id, count(*) AS n_shingles, " +
@@ -1824,8 +1737,8 @@ object ExtQueries {
         O.r6("CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS DOUBLE) " +
           "/ count(*)") + " AS novelty " +
         "FROM x JOIN dfq USING (shingle) GROUP BY 1 ORDER BY doc_id"),
-    "q_contamination" ->
-      (s"WITH $wCte, $shCte, " +
+    "q_contamination" -> Gate(qContamination _,
+      s"WITH $wCte, $shCte, " +
         "x AS (SELECT doc_id, u.g AS shingle FROM s, unnest(s.sh) AS u(g)), " +
         "ev AS (SELECT doc_id AS eval_id, shingle FROM x WHERE doc_id % 97 = 0), " +
         "tr AS (SELECT doc_id AS train_id, shingle FROM x WHERE doc_id % 97 != 0), " +
@@ -1837,8 +1750,8 @@ object ExtQueries {
         "SELECT eval_id, train_id, n_common, n_shingles, " +
         O.r6("n_common / n_shingles") + " AS overlap " +
         "FROM j JOIN et USING (eval_id) WHERE n_common >= 2 ORDER BY 1, 2"),
-    "q_zorder" ->
-      ("SELECT event_id, xb, yb, " +
+    "q_zorder" -> Gate(qZorder _,
+      "SELECT event_id, xb, yb, " +
         (0 until 10).map(b =>
           s"((((xb >> $b) & 1) << ${2 * b}) | (((yb >> $b) & 1) << ${2 * b + 1}))")
           .mkString("(", " | ", ")") + " AS z " +
@@ -1846,19 +1759,19 @@ object ExtQueries {
         "FROM events) ORDER BY event_id"),
     // rank-densified neighbor window (row_number, not raw id offsets):
     // matches Dedup.ngramNeighborPairs on sparse ids too
-    "q_dedup_ngram" ->
-      ("WITH tk AS (SELECT doc_id, row_number() OVER (ORDER BY doc_id) AS rk, " +
+    "q_dedup_ngram" -> Gate(qDedupNgram _,
+      "WITH tk AS (SELECT doc_id, row_number() OVER (ORDER BY doc_id) AS rk, " +
         "list_distinct(string_split(text, ' ')) AS td FROM documents) " +
         "SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, " +
         O.r6("len(list_intersect(a.td, b.td)) / len(list_distinct(list_concat(a.td, b.td)))") +
         " AS jac FROM tk a JOIN tk b ON b.rk - a.rk BETWEEN 1 AND 3 " +
         "ORDER BY doc_a, doc_b"),
-    "q_dedup_simhash" -> (simhashHexSelect + " ORDER BY doc_id"),
+    "q_dedup_simhash" -> Gate(qDedupSimhash _, simhashHexSelect + " ORDER BY doc_id"),
     // banded pairs + exact Hamming over the same hex fingerprints: band
     // i = hex chars [4i+1, 4i+4] (16 bits), Hamming = Σ bit_count(xor)
     // over the 16 nibbles
-    "q_dedup_simhash_pairs" ->
-      (s"WITH sim AS ($simhashHexSelect), " +
+    "q_dedup_simhash_pairs" -> Gate(qDedupSimhashPairs _,
+      s"WITH sim AS ($simhashHexSelect), " +
         "bands AS (SELECT doc_id, simhash_hex, b.i AS bi, " +
         "substr(simhash_hex, CAST(4 * b.i + 1 AS INT), 4) AS bv " +
         "FROM sim, (SELECT unnest(range(0, 4)) AS i) b), " +
@@ -1872,21 +1785,20 @@ object ExtQueries {
         "FROM cand) " +
         "SELECT doc_a, doc_b, d::INT AS hamming FROM ham WHERE d <= 3 " +
         "ORDER BY doc_a, doc_b"),
-    "q_vocab_exact" ->
-      ("WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents) " +
+    "q_vocab_exact" -> Gate(qVocabExact _,
+      "WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents) " +
         "SELECT count(DISTINCT token) AS vocab_exact, count(DISTINCT doc_id) AS docs_exact, " +
         "count(*) AS n_tokens FROM toks"),
     // exact halves hash-check as in q_vocab_exact; the in-band booleans
     // are literal true — the gate fails iff Spark's HLL drifts past
     // ±3·rsd of the exact counts
-    "q_vocab_sketch" ->
-      ("WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents) " +
+    "q_vocab_sketch" -> Gate(qVocabSketch _,
+      "WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents) " +
         "SELECT count(DISTINCT token) AS vocab_exact, count(DISTINCT doc_id) AS docs_exact, " +
         "count(*) AS n_tokens, true AS vocab_in_band, true AS docs_in_band FROM toks"),
-    "q_stats" ->
-      // moment sums in DECIMAL (exact, order-independent), final formula
+    "q_stats" -> Gate(qStats _, // moment sums in DECIMAL (exact, order-independent), final formula
       // spelled as the same double-op sequence as the Spark side
-      ("WITH m AS (SELECT l_returnflag, count(*) AS n, " +
+      "WITH m AS (SELECT l_returnflag, count(*) AS n, " +
         "CAST(CAST(sum(CAST(l_quantity AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS sx, " +
         "CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS sy, " +
         "CAST(CAST(sum(CAST(l_quantity*l_quantity AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS sxx, " +
@@ -1898,17 +1810,17 @@ object ExtQueries {
         O.r6("sqrt((sxx - sx*sx/n) / (n - 1))") + " AS stddev_x, " +
         O.r6("(n*sxy - sx*sy) / (sqrt(n*sxx - sx*sx) * sqrt(n*syy - sy*sy))") +
         " AS corr_xy FROM m ORDER BY l_returnflag"),
-    "q_percentile" ->
-      ("SELECT l_returnflag, quantile_disc(l_quantity, 0.25) AS q1, " +
+    "q_percentile" -> Gate(qPercentile _,
+      "SELECT l_returnflag, quantile_disc(l_quantity, 0.25) AS q1, " +
         "quantile_disc(l_quantity, 0.5) AS median, " +
         "quantile_disc(l_quantity, 0.75) AS q3, " +
         "quantile_disc(l_extendedprice, 0.5) AS median_price " +
         "FROM lineitem GROUP BY 1 ORDER BY l_returnflag"),
-    "q_fingerprint_roll" -> (rollHexSelect + " ORDER BY doc_id"),
+    "q_fingerprint_roll" -> Gate(qFingerprintRoll _, rollHexSelect + " ORDER BY doc_id"),
     // same rebuilds as the three Column-API gates, joined per doc; the
     // minhash g CTE only contains >=3-token docs, hence the LEFT JOIN
-    "q_sql_funcs" ->
-      (s"WITH sim AS ($simhashHexSelect), roll AS ($rollHexSelect), " +
+    "q_sql_funcs" -> Gate(qSqlFuncs _,
+      s"WITH sim AS ($simhashHexSelect), roll AS ($rollHexSelect), " +
         s"$wCte, $shCte, $sigCte " +
         "SELECT d.doc_id, sim.simhash_hex, g.sig[1] AS sig_0, " +
         "roll.fp_roll_hex FROM documents d " +
@@ -1916,8 +1828,8 @@ object ExtQueries {
         "LEFT JOIN g ON g.doc_id = d.doc_id " +
         "JOIN roll ON roll.doc_id = d.doc_id " +
         "ORDER BY d.doc_id"),
-    "q_ann_recall" ->
-      ("WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 5), " +
+    "q_ann_recall" -> Gate(qAnnRecall _,
+      "WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 5), " +
         "c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings), " +
         s"s AS (SELECT qid, cid, ${O.r6(cosSql("qe", "ce"))} AS score " +
         "FROM q JOIN c ON qid != cid), " +
@@ -1934,8 +1846,8 @@ object ExtQueries {
         "CAST(sum(coalesce(a._hit, 0)) AS DOUBLE) / count(*) AS recall " +
         "FROM e LEFT JOIN a ON e.qid = a.qid AND e.cid = a.cid " +
         "GROUP BY 1 ORDER BY 1"),
-    "q_sim_topk" ->
-      ("WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 5), " +
+    "q_sim_topk" -> Gate(qSimTopk _,
+      "WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 5), " +
         "c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings), " +
         s"s AS (SELECT qid, cid, ${O.r6(cosSql("qe", "ce"))} AS score " +
         "FROM q JOIN c ON qid != cid), " +
@@ -1944,8 +1856,8 @@ object ExtQueries {
         "ORDER BY qid, rank"),
     // exact chain twice — full vectors and the 16-dim prefix — then the
     // identical overlap/recall join as q_ann_recall
-    "q_ann_recall_trunc" ->
-      ("WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 5), " +
+    "q_ann_recall_trunc" -> Gate(qAnnRecallTrunc _,
+      "WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 5), " +
         "c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings), " +
         s"s AS (SELECT qid, cid, ${O.r6(cosSql("qe", "ce"))} AS score " +
         "FROM q JOIN c ON qid != cid), " +
@@ -1962,8 +1874,8 @@ object ExtQueries {
         "CAST(sum(coalesce(a._hit, 0)) AS DOUBLE) / count(*) AS recall " +
         "FROM e LEFT JOIN a ON e.qid = a.qid AND e.cid = a.cid " +
         "GROUP BY 1 ORDER BY 1"),
-    "q_sim_lsh" ->
-      (s"WITH q AS (SELECT vec_id AS qid, embedding AS qe, ${bucketSql("embedding", 4)} AS bucket " +
+    "q_sim_lsh" -> Gate(qSimLsh _,
+      s"WITH q AS (SELECT vec_id AS qid, embedding AS qe, ${bucketSql("embedding", 4)} AS bucket " +
         "FROM embeddings WHERE vec_id < 5), " +
         s"c AS (SELECT vec_id AS cid, embedding AS ce, ${bucketSql("embedding", 4)} AS bucket " +
         "FROM embeddings), " +
@@ -1972,18 +1884,18 @@ object ExtQueries {
         "r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rnk FROM s) " +
         "SELECT qid, cid, score, rnk::INT AS rank FROM r WHERE rnk <= 10 " +
         "ORDER BY qid, rank"),
-    "q_dedup_embed" ->
-      (s"WITH e AS (SELECT vec_id, embedding AS v, ${bucketSql("embedding", 4)} AS bucket " +
+    "q_dedup_embed" -> Gate(qDedupEmbed _,
+      s"WITH e AS (SELECT vec_id, embedding AS v, ${bucketSql("embedding", 4)} AS bucket " +
         "FROM embeddings), " +
         s"p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, ${cosSql("a.v", "b.v")} AS c " +
         "FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id) " +
         s"SELECT id_a, id_b, ${O.r6("c")} AS cos FROM p WHERE c >= 0.35 " +
         "ORDER BY id_a, id_b"),
-    "q_kmeans" ->
+    "q_kmeans" -> Gate(qKmeans _,
       graft.ops.Clustering.kmeansOracleSql(8, 2,
-        s"SELECT vec_id, cluster, ${O.r6("d2")} AS d2 FROM a ORDER BY vec_id"),
-    "q_ann_recall_ivf" ->
-      ("WITH cen AS (SELECT vec_id AS centroid_id, embedding AS cv " +
+        s"SELECT vec_id, cluster, ${O.r6("d2")} AS d2 FROM a ORDER BY vec_id")),
+    "q_ann_recall_ivf" -> Gate(qAnnRecallIvf _,
+      "WITH cen AS (SELECT vec_id AS centroid_id, embedding AS cv " +
         "FROM embeddings WHERE vec_id % 64 = 0), " +
         "cand AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings), " +
         "q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 5), " +
@@ -2009,8 +1921,8 @@ object ExtQueries {
         "CAST(sum(coalesce(a._hit, 0)) AS DOUBLE) / count(*) AS recall " +
         "FROM e LEFT JOIN a ON e.qid = a.qid AND e.cid = a.cid " +
         "GROUP BY 1 ORDER BY 1"),
-    "q_sim_ivf" ->
-      ("WITH cen AS (SELECT vec_id AS centroid_id, embedding AS cv " +
+    "q_sim_ivf" -> Gate(qSimIvf _,
+      "WITH cen AS (SELECT vec_id AS centroid_id, embedding AS cv " +
         "FROM embeddings WHERE vec_id % 64 = 0), " +
         "cand AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings), " +
         "q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 5), " +
@@ -2028,8 +1940,8 @@ object ExtQueries {
         "r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rnk FROM s) " +
         "SELECT qid, cid, score, rnk::INT AS rank FROM r WHERE rnk <= 10 " +
         "ORDER BY qid, rank"),
-    "q_sim_lsh_multi" ->
-      (s"WITH q0 AS (SELECT vec_id AS qid, embedding AS qe, ${bucketSql("embedding", 4)} AS b0 " +
+    "q_sim_lsh_multi" -> Gate(qSimLshMulti _,
+      s"WITH q0 AS (SELECT vec_id AS qid, embedding AS qe, ${bucketSql("embedding", 4)} AS b0 " +
         "FROM embeddings WHERE vec_id < 5), " +
         "q AS (SELECT qid, qe, xor(b0, m.m) AS bucket FROM q0, " +
         "(VALUES (0), (1), (2), (4), (8)) m(m)), " +
@@ -2040,8 +1952,8 @@ object ExtQueries {
         "r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rnk FROM s) " +
         "SELECT qid, cid, score, rnk::INT AS rank FROM r WHERE rnk <= 10 " +
         "ORDER BY qid, rank"),
-    "q_sim_topk_agg" ->
-      ("WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 5), " +
+    "q_sim_topk_agg" -> Gate(qSimTopkAgg _,
+      "WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 5), " +
         "c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings), " +
         s"s AS (SELECT qid, cid, ${O.r6(cosSql("qe", "ce"))} AS score " +
         "FROM q JOIN c ON qid != cid), " +
@@ -2051,8 +1963,8 @@ object ExtQueries {
     // independent spelling of the sign-bit pack: dimension j*32+b
     // contributes 2^b to word j, summed straight off the raw floats —
     // every packed bit is checked
-    "q_embed_binary" ->
-      ("WITH w AS (SELECT vec_id, embedding AS v, len(embedding) AS d " +
+    "q_embed_binary" -> Gate(qEmbedBinary _,
+      "WITH w AS (SELECT vec_id, embedding AS v, len(embedding) AS d " +
         "FROM embeddings), " +
         "p AS (SELECT vec_id, list_transform(range((d + 31) // 32), j -> " +
         "list_sum(list_transform(range(32), b -> " +
@@ -2062,8 +1974,8 @@ object ExtQueries {
         "x -> x::VARCHAR), ',') AS words FROM p ORDER BY vec_id"),
     // both stages replayed from the floats: sign-disagreement Hamming
     // m-cut, then the exact cosine fold and k-cut — one chained check
-    "q_twostage" ->
-      ("WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings " +
+    "q_twostage" -> Gate(qTwoStage _,
+      "WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings " +
         "WHERE vec_id < 5), " +
         "s AS (SELECT qid, qe, vec_id AS cid, embedding AS ce, " +
         "list_sum(list_transform(range(1, len(qe) + 1), i -> " +
@@ -2079,8 +1991,8 @@ object ExtQueries {
         "WHERE rank <= 10 ORDER BY qid, rank"),
     // Hamming distance from FLOATS (count of sign disagreements) — the
     // engine's xor/popcount over packed words must agree exactly
-    "q_sim_hamming" ->
-      ("WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings " +
+    "q_sim_hamming" -> Gate(qSimHamming _,
+      "WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings " +
         "WHERE vec_id < 5), " +
         "s AS (SELECT qid, vec_id AS cid, " +
         "list_sum(list_transform(range(1, len(qe) + 1), i -> " +
@@ -2090,8 +2002,8 @@ object ExtQueries {
         "AS rnk FROM s) " +
         "SELECT qid, cid, hd, rnk::INT AS rank FROM r WHERE rnk <= 10 " +
         "ORDER BY qid, rank"),
-    "q_text_stats" ->
-      ("SELECT doc_id, len(string_split(text, ' '))::INT AS n_tokens, " +
+    "q_text_stats" -> Gate(qTextStats _,
+      "SELECT doc_id, len(string_split(text, ' '))::INT AS n_tokens, " +
         "length(text)::INT AS n_chars_c, " +
         "len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]'))::INT AS n_bpe, " +
         O.r6("list_sum(list_transform(string_split(text, ' '), x -> length(x)))::INT / len(string_split(text, ' '))") +
@@ -2099,33 +2011,33 @@ object ExtQueries {
         O.r6(punctSql) + " AS punct_ratio, " +
         O.r6(stopRatioSql) + " AS stop_ratio " +
         "FROM documents ORDER BY doc_id"),
-    "q_lang_id" ->
-      ("SELECT doc_id, " +
+    "q_lang_id" -> Gate(qLangId _,
+      "SELECT doc_id, " +
         TextAnalysis.LangMarkers.map { case (lang, ws) =>
           s"${hitsSql(ws)} AS ${lang}_hits"
         }.mkString(", ") + ", " +
         langPredSql + " AS lang_pred " +
         "FROM documents ORDER BY doc_id"),
-    "q_quality" ->
-      ("SELECT doc_id, " +
+    "q_quality" -> Gate(qQuality _,
+      "SELECT doc_id, " +
         O.r6("least(1.0, len(string_split(text, ' ')) / 100.0) * " +
           s"(1.0 - $punctSql) * (0.5 + 0.5 * $stopRatioSql)") +
         " AS quality FROM documents ORDER BY doc_id"),
-    "q_fingerprint" ->
-      (s"WITH $wCte, $shCte " +
+    "q_fingerprint" -> Gate(qFingerprint _,
+      s"WITH $wCte, $shCte " +
         "SELECT w.doc_id, md5(text) AS fp_full, " +
         "list_min(list_transform(sh, s -> md5(s))) AS fp_min, " +
         "substr(md5(text), 1, 8) AS fp_head " +
         "FROM w LEFT JOIN s ON w.doc_id = s.doc_id ORDER BY w.doc_id"),
-    "q_asof" ->
-      ("WITH e AS (SELECT event_id, ts::TIMESTAMP::DATE AS d FROM events), " +
+    "q_asof" -> Gate(qAsof _,
+      "WITH e AS (SELECT event_id, ts::TIMESTAMP::DATE AS d FROM events), " +
         "daily AS (SELECT ts::TIMESTAMP::DATE AS rate_d, " +
         O.dsum("value") + " AS day_sum FROM events GROUP BY 1) " +
         "SELECT e.event_id, e.d, daily.rate_d AS prev_d, daily.day_sum AS prev_day_sum " +
         "FROM e ASOF LEFT JOIN daily ON e.d > daily.rate_d " +
         "ORDER BY event_id"),
-    "q_asof_big" ->
-      ("WITH e AS (SELECT event_id, user_id, ts::TIMESTAMP AS t, value FROM events) " +
+    "q_asof_big" -> Gate(qAsofBig _,
+      "WITH e AS (SELECT event_id, user_id, ts::TIMESTAMP AS t, value FROM events) " +
         "SELECT e.event_id, e.user_id, " +
         O.r6("coalesce(p.value, 0.0)") + " AS prev_value " +
         "FROM e ASOF LEFT JOIN e p ON e.user_id = p.user_id AND e.t > p.t " +
@@ -2139,8 +2051,8 @@ object ExtQueries {
     // then lead() over the distinct-t series IS "value at the smallest
     // t' > t" — any later t' is strictly farther, so the adjacent
     // distinct t is the unique candidate. Same doubles, same rounding.
-    "q_asof_fwd" ->
-      ("WITH e AS (SELECT event_id, user_id, ts::TIMESTAMP AS t, value FROM events), " +
+    "q_asof_fwd" -> Gate(qAsofFwd _,
+      "WITH e AS (SELECT event_id, user_id, ts::TIMESTAMP AS t, value FROM events), " +
         "s AS (SELECT user_id, t, min(value) AS vmin FROM e GROUP BY 1, 2), " +
         "nx AS (SELECT user_id, t, lead(vmin) OVER " +
         "(PARTITION BY user_id ORDER BY t) AS nv FROM s) " +
@@ -2152,8 +2064,8 @@ object ExtQueries {
     // applies to the nearest only — backward gaps grow monotonically
     // (floor(epoch) is monotone in t), so if the nearest is out of
     // tolerance, all are.
-    "q_asof_tol" ->
-      ("WITH e AS (SELECT event_id, user_id, ts::TIMESTAMP AS t, value FROM events), " +
+    "q_asof_tol" -> Gate(qAsofTol _,
+      "WITH e AS (SELECT event_id, user_id, ts::TIMESTAMP AS t, value FROM events), " +
         "s AS (SELECT user_id, t, max(value) AS vmax FROM e GROUP BY 1, 2), " +
         "pr AS (SELECT user_id, t, lag(t) OVER w AS pt, lag(vmax) OVER w AS pv " +
         "FROM s WINDOW w AS (PARTITION BY user_id ORDER BY t)) " +
@@ -2161,28 +2073,28 @@ object ExtQueries {
         O.r6("coalesce(CASE WHEN floor(epoch(e.t)) - floor(epoch(pr.pt)) " +
           "<= 3600 THEN pr.pv END, 0.0)") +
         " AS prev_value_1h FROM e JOIN pr USING (user_id, t) ORDER BY e.event_id"),
-    "q_asof_native" -> // same oracle as q_asof_big: both must agree with it
-      ("WITH e AS (SELECT event_id, user_id, ts::TIMESTAMP AS t, value FROM events) " +
+    "q_asof_native" -> Gate(qAsofNative _, // same oracle as q_asof_big: both must agree with it
+      "WITH e AS (SELECT event_id, user_id, ts::TIMESTAMP AS t, value FROM events) " +
         "SELECT e.event_id, e.user_id, " +
         O.r6("coalesce(p.value, 0.0)") + " AS prev_value " +
         "FROM e ASOF LEFT JOIN e p ON e.user_id = p.user_id AND e.t > p.t " +
         "ORDER BY e.event_id"),
-    "q_range" ->
-      ("WITH w AS (SELECT user_id AS w_user, min(ts::TIMESTAMP) AS w_start, " +
+    "q_range" -> Gate(qRange _,
+      "WITH w AS (SELECT user_id AS w_user, min(ts::TIMESTAMP) AS w_start, " +
         "min(ts::TIMESTAMP) + INTERVAL 12 HOUR AS w_end " +
         "FROM events WHERE user_id <= 20 GROUP BY 1), " +
         "e AS (SELECT event_id, ts::TIMESTAMP AS t FROM events) " +
         "SELECT e.event_id, w.w_user FROM e JOIN w " +
         "ON e.t >= w.w_start AND e.t <= w.w_end " +
         "ORDER BY event_id, w_user"),
-    "q_pivot" ->
-      ("SELECT hour(ts::TIMESTAMP)::INT AS hr, " +
+    "q_pivot" -> Gate(qPivot _,
+      "SELECT hour(ts::TIMESTAMP)::INT AS hr, " +
         Seq("click", "view", "purchase", "signup", "error").map(t =>
           s"sum(CASE WHEN event_type = '$t' THEN 1 ELSE 0 END)::BIGINT AS \"$t\"")
           .mkString(", ") +
         " FROM events GROUP BY 1 ORDER BY hr"),
-    "q_semi_anti" ->
-      ("WITH big AS (SELECT DISTINCT o_custkey FROM orders WHERE o_totalprice > 450000), " +
+    "q_semi_anti" -> Gate(qSemiAnti _,
+      "WITH big AS (SELECT DISTINCT o_custkey FROM orders WHERE o_totalprice > 450000), " +
         "inside AS (SELECT c_custkey, 'has_big_order' AS tag FROM customer " +
         "WHERE c_custkey IN (SELECT o_custkey FROM big)), " +
         "outside AS (SELECT c_custkey, 'no_big_order' AS tag FROM customer " +
@@ -2190,8 +2102,8 @@ object ExtQueries {
         "a AS (SELECT * FROM inside UNION ALL SELECT * FROM outside) " +
         "SELECT tag, count(*) AS n, min(c_custkey) AS min_key, max(c_custkey) AS max_key " +
         "FROM a GROUP BY 1 ORDER BY tag"),
-    "q_setops" ->
-      ("WITH urgent AS (SELECT o_custkey AS custkey FROM orders " +
+    "q_setops" -> Gate(qSetOps _,
+      "WITH urgent AS (SELECT o_custkey AS custkey FROM orders " +
         "WHERE o_orderpriority = '1-URGENT'), " +
         "hv AS (SELECT o_custkey AS custkey FROM orders WHERE o_totalprice > 450000), " +
         "u AS (SELECT DISTINCT custkey, 'union' AS set_op FROM " +
@@ -2203,29 +2115,29 @@ object ExtQueries {
         "allrows AS (SELECT * FROM u UNION ALL SELECT * FROM i UNION ALL SELECT * FROM e) " +
         "SELECT set_op, count(*) AS n, min(custkey) AS min_key, max(custkey) AS max_key " +
         "FROM allrows GROUP BY 1 ORDER BY set_op"),
-    "q_strings" ->
-      ("SELECT doc_id, upper(substr(text, 1, 12)) AS head_upper, " +
+    "q_strings" -> Gate(qStrings _,
+      "SELECT doc_id, upper(substr(text, 1, 12)) AS head_upper, " +
         "length(trim(text))::INT AS len_trim, " +
         "substr(regexp_replace(text, '[aeiou]', '', 'g'), 1, 20) AS devoweled_head, " +
         "levenshtein(substr(text, 1, 20), substr(text, 3, 22))::INT AS shift_dist, " +
         "len(string_split(text, 'e'))::INT AS e_splits " +
         "FROM documents ORDER BY doc_id"),
-    "q_cube" ->
-      ("SELECT o_orderpriority, o_orderstatus, count(*) AS n_orders, " +
+    "q_cube" -> Gate(qCube _,
+      "SELECT o_orderpriority, o_orderstatus, count(*) AS n_orders, " +
         O.dsum("o_totalprice") + " AS sum_price, " +
         "GROUPING(o_orderpriority) AS g_prio, GROUPING(o_orderstatus) AS g_status " +
         "FROM orders GROUP BY CUBE (o_orderpriority, o_orderstatus) " +
         "ORDER BY g_prio, g_status, o_orderpriority NULLS FIRST, o_orderstatus NULLS FIRST"),
-    "q_maps" ->
-      ("WITH per AS (SELECT user_id, event_type, count(*) AS cnt " +
+    "q_maps" -> Gate(qMaps _,
+      "WITH per AS (SELECT user_id, event_type, count(*) AS cnt " +
         "FROM events GROUP BY 1, 2) " +
         "SELECT user_id, count(*)::INT AS n_types, " +
         "coalesce(max(CASE WHEN event_type = 'click' THEN cnt END), 0)::BIGINT AS n_click, " +
         "coalesce(max(CASE WHEN event_type = 'view' THEN cnt END), 0)::BIGINT AS n_view, " +
         "string_agg(event_type, ',' ORDER BY event_type) AS types_csv " +
         "FROM per GROUP BY user_id ORDER BY user_id"),
-    "q_arrays" ->
-      ("WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks, " +
+    "q_arrays" -> Gate(qArrays _,
+      "WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks, " +
         "len(string_split(text, ' ')) AS n FROM documents), " +
         "h AS (SELECT doc_id, toks, " +
         "list_distinct(toks[1:(n // 2)]) AS h1, " +
@@ -2236,20 +2148,20 @@ object ExtQueries {
         "list_min(toks) AS first_sorted, " +
         "coalesce(list_position(toks, 'the'), 0)::BIGINT AS pos_the " +
         "FROM h ORDER BY doc_id"),
-    "q_grouping_sets" ->
-      ("SELECT o_orderpriority, o_orderstatus, count(*) AS n_orders, " +
+    "q_grouping_sets" -> Gate(qGroupingSets _,
+      "SELECT o_orderpriority, o_orderstatus, count(*) AS n_orders, " +
         O.dsum("o_totalprice") + " AS sum_price, " +
         "GROUPING(o_orderpriority) AS g_prio, GROUPING(o_orderstatus) AS g_status " +
         "FROM orders GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus), ()) " +
         "ORDER BY g_prio, g_status, o_orderpriority NULLS FIRST, o_orderstatus NULLS FIRST"),
-    "q_rollup" ->
-      ("SELECT o_orderpriority, o_orderstatus, count(*) AS n_orders, " +
+    "q_rollup" -> Gate(qRollup _,
+      "SELECT o_orderpriority, o_orderstatus, count(*) AS n_orders, " +
         O.dsum("o_totalprice") + " AS sum_price, " +
         "GROUPING(o_orderpriority) AS g_prio, GROUPING(o_orderstatus) AS g_status " +
         "FROM orders GROUP BY ROLLUP (o_orderpriority, o_orderstatus) " +
         "ORDER BY g_prio, g_status, o_orderpriority NULLS FIRST, o_orderstatus NULLS FIRST"),
-    "q_window" ->
-      ("WITH e AS (SELECT event_id, user_id, ts::TIMESTAMP AS t, value FROM events) " +
+    "q_window" -> Gate(qWindow _,
+      "WITH e AS (SELECT event_id, user_id, ts::TIMESTAMP AS t, value FROM events) " +
         "SELECT event_id, user_id, " +
         "row_number() OVER w AS rn, " +
         O.r6("sum(value) OVER (PARTITION BY user_id ORDER BY t, event_id " +
@@ -2257,8 +2169,8 @@ object ExtQueries {
         O.r6("value - coalesce(lag(value, 1) OVER w, 0.0)") + " AS delta_prev " +
         "FROM e WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id) " +
         "ORDER BY user_id, rn"),
-    "q_tfidf" ->
-      ("WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents), " +
+    "q_tfidf" -> Gate(qTfidf _,
+      "WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents), " +
         "tf AS (SELECT doc_id, token, count(*) AS tf FROM t GROUP BY 1, 2), " +
         "dfq AS (SELECT token, count(DISTINCT doc_id) AS df FROM tf GROUP BY 1), " +
         "nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents), " +
@@ -2269,7 +2181,7 @@ object ExtQueries {
         "ORDER BY tfidf DESC, token) AS rnk FROM sc) " +
         "SELECT doc_id, token, tf, tfidf, rnk::INT AS rnk FROM r WHERE rnk <= 3 " +
         "ORDER BY doc_id, rnk"),
-    "q_sessions" -> sessionsOracleSql,
+    "q_sessions" -> Gate(qSessions _, sessionsOracleSql),
     // the streaming bridge must reproduce the BATCH sessions exactly —
     // same oracle, different engine path. VALID ONLY on fixtures with
     // no exact-gap pair (consecutive same-user events exactly `gap`
@@ -2280,19 +2192,19 @@ object ExtQueries {
     // Round14Spec ("fixtures carry no exact-gap pair"); ScaleUp
     // replicas inherit it (user ids are strided per copy, so no new
     // same-user pair crosses replicas).
-    "q_sessions_stream" -> sessionsOracleSql,
+    "q_sessions_stream" -> Gate(qSessionsStream _, sessionsOracleSql),
     // the custom-state (flatMapGroupsWithState) sessionizer must equal
     // the session_window bridge relation — one oracle, two mechanisms
-    "q_sessions_fmgs" -> sessionsOracleSql,
+    "q_sessions_fmgs" -> Gate(qSessionsFmgs _, sessionsOracleSql),
     // streamed dropDuplicatesWithinWatermark with delay > span ⇒ the
     // global batch distinct on the dedup key
-    "q_dedup_stream_wm" ->
-      ("SELECT DISTINCT user_id, event_type, ts::DATE AS day FROM events " +
+    "q_dedup_stream_wm" -> Gate(qDedupStreamWm _,
+      "SELECT DISTINCT user_id, event_type, ts::DATE AS day FROM events " +
         "ORDER BY user_id, event_type, day"),
     // windowed-CMS bridge: same md5 bucket recipe as q_cms (w = 64),
     // epoch-aligned hourly windows = date_trunc('hour')
-    "q_cms_stream" ->
-      ("WITH e AS (SELECT date_trunc('hour', ts::TIMESTAMP) AS window_start, " +
+    "q_cms_stream" -> Gate(qCmsStream _,
+      "WITH e AS (SELECT date_trunc('hour', ts::TIMESTAMP) AS window_start, " +
         "event_type FROM events), " +
         "sk AS (SELECT window_start, r, " +
         "('0x' || substr(md5('cms' || '|' || r::VARCHAR || '|' || event_type), " +
@@ -2304,8 +2216,8 @@ object ExtQueries {
     // the watermarked click→purchase join — the pair set is order-free
     // and the (user_id, click_ts, purchase_ts) key unique, so the
     // streamed parquet hash-matches this verbatim
-    "q_attr_stream" ->
-      ("WITH e AS (SELECT ts::TIMESTAMP AS ts, user_id, event_type, value " +
+    "q_attr_stream" -> Gate(qAttrStream _,
+      "WITH e AS (SELECT ts::TIMESTAMP AS ts, user_id, event_type, value " +
         "FROM events), " +
         "c AS (SELECT user_id, ts AS click_ts, value AS click_value " +
         "FROM e WHERE event_type = 'click'), " +
@@ -2318,8 +2230,8 @@ object ExtQueries {
         "ORDER BY user_id, click_ts, purchase_ts, click_value, purchase_value"),
     // LEFT OUTER bridge: unmatched clicks carry NULL purchase columns;
     // NULLS FIRST pins DuckDB's sort to Spark's asc-nulls-first default
-    "q_attr_stream_outer" ->
-      ("WITH e AS (SELECT ts::TIMESTAMP AS ts, user_id, event_type, value " +
+    "q_attr_stream_outer" -> Gate(qAttrStreamOuter _,
+      "WITH e AS (SELECT ts::TIMESTAMP AS ts, user_id, event_type, value " +
         "FROM events), " +
         "c AS (SELECT user_id, ts AS click_ts, value AS click_value " +
         "FROM e WHERE event_type = 'click'), " +
@@ -2333,23 +2245,23 @@ object ExtQueries {
         "click_value, purchase_value NULLS FIRST"),
     // epoch-aligned hop assignment: start = hour-floor(ts) − k·1h for
     // k ∈ {0,1} — the relational spelling of Spark's window expand
-    "q_window_hop" ->
-      ("WITH h AS (SELECT date_trunc('hour', ts::TIMESTAMP) " +
+    "q_window_hop" -> Gate(qWindowHop _,
+      "WITH h AS (SELECT date_trunc('hour', ts::TIMESTAMP) " +
         "- t.k * INTERVAL 1 HOUR AS w_start, event_type, value " +
         "FROM events, unnest([0, 1]) AS t(k)) " +
         "SELECT w_start, w_start + INTERVAL 2 HOUR AS w_end, event_type, " +
         "count(*) AS n_events, " + O.dsum("value") + " AS sum_value " +
         "FROM h GROUP BY 1, 2, 3 ORDER BY w_start, event_type"),
-    "q_top_tokens" ->
-      ("WITH t AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents), " +
+    "q_top_tokens" -> Gate(qTopTokens _,
+      "WITH t AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents), " +
         "v AS (SELECT count(DISTINCT token) AS vocab_size FROM t) " +
         "SELECT token, count(*) AS freq, vocab_size FROM t CROSS JOIN v " +
         "GROUP BY token, vocab_size ORDER BY freq DESC, token LIMIT 20"),
     // support_guaranteed pins the Misra–Gries retention bound
     // (freq·(capacity+1) ≥ N, capacity = 256) as part of the hash —
     // the §10h exactness domain as a machine-checked contract
-    "q_heavy" ->
-      ("WITH t AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents), " +
+    "q_heavy" -> Gate(qHeavy _,
+      "WITH t AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents), " +
         "n AS (SELECT count(*) AS n_tokens FROM t) " +
         "SELECT token, count(*) AS freq, " +
         "(count(*) * 257 >= n_tokens) AS support_guaranteed " +
@@ -2360,16 +2272,16 @@ object ExtQueries {
     // gate emits the vector as a comma-joined ×1e6 scaled-int string
     // (array cells crash the driver's comparator, double formatting
     // differs across engines)
-    "q_text_embed" ->
-      (s"WITH e AS ($textEmbedSelect) " +
+    "q_text_embed" -> Gate(qTextEmbed _,
+      s"WITH e AS ($textEmbedSelect) " +
         "SELECT doc_id, array_to_string(list_transform(embedding, " +
         "x -> floor(x * 1000000 + 0.5)::BIGINT::VARCHAR), ',') AS embedding " +
         "FROM e ORDER BY doc_id"),
     // the full text→vector→ANN chain: hashed embeddings (cast to float
     // like the engine's CosineSim input) ranked by the same cosine
     // window as q_sim_topk
-    "q_text_knn" ->
-      (s"WITH e AS ($textEmbedSelect), " +
+    "q_text_knn" -> Gate(qTextKnn _,
+      s"WITH e AS ($textEmbedSelect), " +
         "f AS (SELECT doc_id, list_transform(embedding, x -> x::FLOAT) AS fe FROM e), " +
         "q AS (SELECT doc_id AS qid, fe AS qe FROM f WHERE doc_id < 5), " +
         "c AS (SELECT doc_id AS cid, fe AS ce FROM f), " +
@@ -2381,8 +2293,8 @@ object ExtQueries {
     // byte-based (hex over UTF-8 encode), matching Spark's binary payload
     // semantics for non-ASCII text too — ascii()/length() count CODEPOINTS
     // and would silently diverge on any multi-byte character
-    "q_multimodal" ->
-      ("WITH h AS (SELECT doc_id, hex(encode(text)) AS hx, " +
+    "q_multimodal" -> Gate(qMultimodal _,
+      "WITH h AS (SELECT doc_id, hex(encode(text)) AS hx, " +
         "octet_length(encode(text)) AS nb FROM documents) " +
         "SELECT doc_id, 'image' AS kind, nb::INT AS n_bytes, " +
         "(CASE WHEN nb >= 1 THEN ('0x' || substr(hx, 1, 2))::INT ELSE 0 END) AS head_byte, " +

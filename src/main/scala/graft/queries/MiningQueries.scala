@@ -337,40 +337,12 @@ object MiningQueries {
     Stats.skyline2D(Tables.table(s, dir, "part"), "p_retailprice", "p_size")
       .orderBy("p_retailprice", "p_size")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_dbscan" -> (qDbscan _),
-    "q_skyline" -> (qSkyline _),
-    "q_dow" -> (qDow _),
-    "q_profile_diff" -> (qProfileDiff _),
-    "q_autocorr" -> (qAutocorr _),
-    "q_seq3" -> (qSeq3 _),
-    "q_density" -> (qDensity _),
-    "q_mad" -> (qMad _),
-    "q_benford" -> (qBenford _),
-    "q_concentration" -> (qConcentration _),
-    "q_cusum" -> (qCusum _),
-    "q_khop" -> (qKhop _),
-    "q_er" -> (qEr _),
-    "q_psi" -> (qPsi _),
-    "q_quantile_norm" -> (qQuantileNorm _),
-    "q_abtest" -> (qAbTest _),
-    "q_spatial" -> (qSpatial _),
-    "q_cms" -> (qCms _),
-    "q_basket" -> (qBasket _),
-    "q_prune" -> (qPrune _),
-    "q_readability" -> (qReadability _),
-    "q_bins" -> (qBins _),
-    "q_jaro" -> (qJaro _),
-    "q_markov" -> (qMarkov _),
-    "q_bitmap" -> (qBitmap _),
-  )
-
   /** The haversine expression tree, token-for-token the Spark spelling
     * in [[Spatial.haversineM]] (products, not pow; same association).
     */
   // ---- q_dbscan oracle fragments, shared by the driver-facing
   // unrolled spelling (single statement, 96 fixed CC rounds) and the
-  // iterative check.py script in [[iterativeOracles]] (temp-table loop,
+  // iterative check.py script in [[dbscanIterOracle]] (temp-table loop,
   // early exit at the label-sum fixpoint). One source of truth: a
   // semantic edit to either spelling is an edit to these fragments.
   private def dbscanPtsSql: String =
@@ -437,20 +409,10 @@ object MiningQueries {
     * validated at the DRIVER scale it runs at (sf0.01: 12 rounds,
     * 8× headroom); wherever both spellings converge they agree.
     */
-  val iterativeOracles: Map[String, IterOracle] = Map(
-    "q_dbscan" -> dbscanIterOracle(dbscanPtsSql))
-
-  /** The q_dbscan iterative script parametrized over the `pts` source
-    * (r14, VERDICT r13 task 5): the registry gate reads the fixture's
-    * fixed lattice via [[dbscanPtsSql]]; the constant-density sf10
-    * oracle run (ScaleTune `dbscan_cd`) substitutes a parquet-backed
-    * points table with the lattice AREA scaled to the replica — the
-    * same loop, core/edge/CC/tail fragments byte-identical.
-    */
-  private[graft] def dbscanIterOracle(ptsSql: String): IterOracle =
+  private val dbscanIterOracle: IterOracle =
     IterOracle(
       setup = Seq(
-        s"CREATE OR REPLACE TEMP TABLE pts AS $ptsSql",
+        s"CREATE OR REPLACE TEMP TABLE pts AS $dbscanPtsSql",
         s"CREATE OR REPLACE TEMP TABLE p AS $dbscanPSql",
         s"CREATE OR REPLACE TEMP TABLE j AS WITH q AS ($dbscanQSql) $dbscanJSql",
         "DROP TABLE p",
@@ -477,7 +439,7 @@ object MiningQueries {
     // r and tok bound in the surrounding CTE
     "('0x' || substr(md5('cms' || '|' || r::VARCHAR || '|' || tok), 1, 8))::BIGINT % 16"
 
-  val oracleSql: Map[String, String] = Map(
+  val gates: Map[String, Gate] = Gate.registry(
     // full DBSCAN replay: grid join (the q_density spelling), degree,
     // core set, core-core connected components, border attach by MIN
     // core-neighbor cluster — the declared deterministic
@@ -493,10 +455,10 @@ object MiningQueries {
     // kCore unrolled-oracle discipline; an under-unroll would surface
     // as a loud hash mismatch, never silently). MATERIALIZED stops the
     // multiply-referenced chain from inlining. At sf1 the 96 live CTE
-    // rounds hit DuckDB's spill wall — [[iterativeOracles]] carries the
+    // rounds hit DuckDB's spill wall — [[dbscanIterOracle]] carries the
     // temp-table loop spelling (same fragments, two vertex tables live)
     // that check.py runs instead.
-    "q_dbscan" -> {
+    "q_dbscan" -> Gate(qDbscan _, {
       val ccRounds = (1 to 96)
         .map(i => s"l$i AS MATERIALIZED (${dbscanCcRoundSql(s"l${i - 1}")})")
         .mkString(", ")
@@ -511,19 +473,19 @@ object MiningQueries {
         s"$ccRounds, " +
         "cc AS MATERIALIZED (SELECT id, l AS cluster_id FROM l96), " +
         s"$dbscanTailSql"
-    },
+    }, iterative = Some(dbscanIterOracle)),
     // brute-force dominance: the two-phase sweep must return exactly
     // the non-dominated distinct pairs
-    "q_skyline" ->
-      ("WITH pts AS (SELECT DISTINCT p_retailprice AS x, p_size AS y FROM part) " +
+    "q_skyline" -> Gate(qSkyline _,
+      "WITH pts AS (SELECT DISTINCT p_retailprice AS x, p_size AS y FROM part) " +
         "SELECT x AS p_retailprice, y AS p_size FROM pts a " +
         "WHERE NOT EXISTS (SELECT 1 FROM pts b " +
         "WHERE b.x <= a.x AND b.y <= a.y AND (b.x < a.x OR b.y < a.y)) " +
         "ORDER BY 1, 2"),
     // Spark dayofweek is 1-based Sunday-first; DuckDB dayofweek is
     // 0-based Sunday-first — the +1 aligns them
-    "q_dow" ->
-      ("WITH c AS (SELECT event_type, " +
+    "q_dow" -> Gate(qDow _,
+      "WITH c AS (SELECT event_type, " +
         "(dayofweek(ts)::INT + 1) AS dow, count(*)::BIGINT AS n " +
         "FROM events GROUP BY 1, 2), " +
         "t AS (SELECT event_type, sum(n)::BIGINT AS tot FROM c GROUP BY 1) " +
@@ -531,7 +493,7 @@ object MiningQueries {
         O.r6("n::DOUBLE / tot") + " AS share, " +
         O.r6("n::DOUBLE / tot - 1.0 / 7.0") + " AS dev " +
         "FROM c JOIN t USING (event_type) ORDER BY event_type, dow"),
-    "q_profile_diff" -> {
+    "q_profile_diff" -> Gate(qProfileDiff _, {
       def prof(cond: String, suf: String) =
         Seq("value", "user_id").map { c =>
           s"SELECT '$c' AS \"column\", count(v) AS n$suf, " +
@@ -551,9 +513,9 @@ object MiningQueries {
         "NOT (mx_a IS NOT DISTINCT FROM mx_b) OR " +
         "NOT (median_a IS NOT DISTINCT FROM median_b)) AS drifted " +
         "FROM pa JOIN pb USING (\"column\") ORDER BY \"column\""
-    },
-    "q_autocorr" ->
-      ("WITH d AS (SELECT user_id, CAST(ts AS DATE) AS day, " +
+    }),
+    "q_autocorr" -> Gate(qAutocorr _,
+      "WITH d AS (SELECT user_id, CAST(ts AS DATE) AS day, " +
         "count(*)::BIGINT AS c FROM events GROUP BY 1, 2), " +
         "p AS (SELECT a.user_id, a.c AS x, b.c AS y FROM d a " +
         "JOIN d b ON a.user_id = b.user_id AND b.day = a.day + 1), " +
@@ -568,8 +530,8 @@ object MiningQueries {
           "sqrt((n_pairs::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE) * " +
           "(n_pairs::DOUBLE * syy::DOUBLE - sy::DOUBLE * sy::DOUBLE))") +
         " END AS autocorr FROM m ORDER BY user_id"),
-    "q_seq3" ->
-      ("WITH l AS (SELECT user_id, event_type, " +
+    "q_seq3" -> Gate(qSeq3 _,
+      "WITH l AS (SELECT user_id, event_type, " +
         "lag(event_type, 2) OVER w AS s1, lag(event_type, 1) OVER w AS s2 " +
         "FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)) " +
         "SELECT s1, s2, event_type AS s3, count(*)::BIGINT AS n FROM l " +
@@ -577,8 +539,8 @@ object MiningQueries {
         "ORDER BY n DESC, s1, s2, s3 LIMIT 20"),
     // grid REPLAY oracle (cells + 3×3 neighborhood + haversine), not
     // the 10k² brute force; grid recall is q_spatial's proven contract
-    "q_density" ->
-      ("WITH pts AS (SELECT event_id, " +
+    "q_density" -> Gate(qDensity _,
+      "WITH pts AS (SELECT event_id, " +
         "40.2::DOUBLE + (user_id % 997) * 0.0008::DOUBLE AS lat, " +
         "-74.6::DOUBLE + (event_id % 1013) * 0.0008::DOUBLE AS lon FROM events), " +
         "p AS (SELECT event_id, lat, lon, " +
@@ -592,8 +554,8 @@ object MiningQueries {
         "AND q.qid != p.event_id) " +
         "SELECT qid AS point_id, count(*)::BIGINT AS n_neighbors FROM j " +
         "GROUP BY 1 ORDER BY point_id"),
-    "q_mad" ->
-      ("WITH cd1 AS (SELECT event_type, value AS v, " +
+    "q_mad" -> Gate(qMad _,
+      "WITH cd1 AS (SELECT event_type, value AS v, " +
         "cume_dist() OVER (PARTITION BY event_type ORDER BY value) AS cd " +
         "FROM events), " +
         "med AS (SELECT event_type, min(v) AS med FROM cd1 " +
@@ -612,8 +574,8 @@ object MiningQueries {
         "GROUP BY 1 ORDER BY d.event_type"),
     // digit from integer string length, never log10 of the value; the
     // log ratio spelled ln/ln to match Spark's log(base, x) evaluation
-    "q_benford" ->
-      ("WITH b AS (SELECT CAST(floor(value * 100 + 0.5) AS BIGINT) AS c " +
+    "q_benford" -> Gate(qBenford _,
+      "WITH b AS (SELECT CAST(floor(value * 100 + 0.5) AS BIGINT) AS c " +
         "FROM events WHERE value IS NOT NULL " +
         "AND CAST(floor(value * 100 + 0.5) AS BIGINT) > 0), " +
         "d AS (SELECT CAST(floor(c / power(10.0, length(c::VARCHAR) - 1)) " +
@@ -627,8 +589,8 @@ object MiningQueries {
           "(n_d - n * (ln(1.0 + 1.0 / digit) / ln(10.0))) / " +
           "(n * (ln(1.0 + 1.0 / digit) / ln(10.0)))") + " AS chi_term " +
         "FROM g, t ORDER BY digit"),
-    "q_concentration" ->
-      ("WITH us AS (SELECT event_type, user_id, " +
+    "q_concentration" -> Gate(qConcentration _,
+      "WITH us AS (SELECT event_type, user_id, " +
         "sum(CAST(value AS DECIMAL(25,6))) AS s FROM events GROUP BY 1, 2), " +
         "r AS (SELECT *, row_number() OVER (PARTITION BY event_type " +
         "ORDER BY s, user_id) AS i FROM us), " +
@@ -648,8 +610,8 @@ object MiningQueries {
     // keep the product exact within width 38 in both engines; the max
     // and its argmax tie-compare happen on exact decimals, the final
     // /n² is the single IEEE division
-    "q_cusum" ->
-      ("WITH st AS (SELECT user_id, count(*)::BIGINT AS n, " +
+    "q_cusum" -> Gate(qCusum _,
+      "WITH st AS (SELECT user_id, count(*)::BIGINT AS n, " +
         "sum(CAST(value AS DECIMAL(25,6))) AS tot FROM events GROUP BY 1), " +
         "sq AS (SELECT e.user_id, e.ts, st.n, " +
         "abs(CAST(st.n AS DECIMAL(12,0)) * " +
@@ -665,8 +627,8 @@ object MiningQueries {
         "min(ts) AS change_ts " +
         "FROM sq JOIN pk USING (user_id) WHERE sq.s = pk.mx " +
         "GROUP BY user_id ORDER BY user_id"),
-    "q_khop" ->
-      ("WITH eu AS (SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v " +
+    "q_khop" -> Gate(qKhop _,
+      "WITH eu AS (SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v " +
         "FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey " +
         "AND a.l_partkey < b.l_partkey), " +
         "e AS (SELECT u AS src, v AS dst FROM eu " +
@@ -682,8 +644,8 @@ object MiningQueries {
     // the whole blocked-ER pipeline replayed: typo derivation (shared
     // string), md5 name ids, prefix blocks, rapidfuzz JW threshold,
     // recursive closure, min-label representative
-    "q_er" ->
-      (s"WITH RECURSIVE rec AS (SELECT p_partkey AS rid, $erNameSql AS name " +
+    "q_er" -> Gate(qEr _,
+      s"WITH RECURSIVE rec AS (SELECT p_partkey AS rid, $erNameSql AS name " +
         "FROM part), " +
         "n AS (SELECT DISTINCT name FROM rec), " +
         "ni AS (SELECT name, ('0x' || substr(md5(name), 1, 15))::BIGINT AS nid, " +
@@ -704,8 +666,8 @@ object MiningQueries {
     // reference-side equi-depth cuts via the cume_dist spelling of
     // percentile_disc (q_winsorize discipline); ln under r6-before-use
     // (q_kl_drift discipline); a vanished current-side bin yields NULL
-    "q_psi" ->
-      ("WITH ref AS (SELECT value AS v FROM events " +
+    "q_psi" -> Gate(qPsi _,
+      "WITH ref AS (SELECT value AS v FROM events " +
         "WHERE CAST(ts AS DATE) < DATE '2024-01-16' AND value IS NOT NULL), " +
         "cur AS (SELECT value AS v FROM events " +
         "WHERE CAST(ts AS DATE) >= DATE '2024-01-16' AND value IS NOT NULL), " +
@@ -726,8 +688,8 @@ object MiningQueries {
         O.r6("(n_ref::DOUBLE / tr - n_cur::DOUBLE / tc) * " +
           "ln((n_ref::DOUBLE / tr) / (n_cur::DOUBLE / tc))") +
         " END AS psi_term FROM j, t ORDER BY bin"),
-    "q_quantile_norm" ->
-      ("WITH cd AS (SELECT value AS v, cume_dist() OVER (ORDER BY value) " +
+    "q_quantile_norm" -> Gate(qQuantileNorm _,
+      "WITH cd AS (SELECT value AS v, cume_dist() OVER (ORDER BY value) " +
         "AS cd FROM events WHERE value IS NOT NULL), " +
         "g AS (SELECT k, min(v) AS gv FROM cd " +
         "CROSS JOIN range(1, 9) t(k) WHERE cd >= k / 8.0 GROUP BY k), " +
@@ -738,8 +700,8 @@ object MiningQueries {
         "SELECT event_id, event_type, value, k, " +
         "(SELECT gv FROM g WHERE g.k = r.k) AS norm_value " +
         "FROM r ORDER BY event_id"),
-    "q_abtest" ->
-      ("WITH u AS (SELECT user_id, " +
+    "q_abtest" -> Gate(qAbTest _,
+      "WITH u AS (SELECT user_id, " +
         "max(CASE WHEN event_type = 'purchase' AND value > 150 " +
         "THEN 1 ELSE 0 END) AS conv, " +
         "('0x' || substr(md5('ab' || user_id::VARCHAR), 1, 8))::BIGINT % 2 " +
@@ -760,8 +722,8 @@ object MiningQueries {
     // derivation in exact DECIMAL (0.004 parses as DECIMAL(4,3)) while
     // Spark accumulates double roundings — coordinates a few ulps apart
     // move haversine by ~1e-9 m, enough to flip r6 on some rows
-    "q_spatial" ->
-      ("WITH p AS (SELECT event_id, " +
+    "q_spatial" -> Gate(qSpatial _,
+      "WITH p AS (SELECT event_id, " +
         "40.2::DOUBLE + (user_id % 997) * 0.0008::DOUBLE AS lat, " +
         "-74.6::DOUBLE + (event_id % 1013) * 0.0008::DOUBLE AS lon FROM events), " +
         "q AS (SELECT event_id AS landmark_id, lat AS qlat, lon AS qlon " +
@@ -771,8 +733,8 @@ object MiningQueries {
         "FROM q CROSS JOIN p " +
         "WHERE " + havSql("qlat", "qlon", "lat", "lon") + " <= 500.0 " +
         "ORDER BY landmark_id, event_id"),
-    "q_cms" ->
-      ("WITH occ AS (SELECT unnest(string_split(text, ' ')) AS tok " +
+    "q_cms" -> Gate(qCms _,
+      "WITH occ AS (SELECT unnest(string_split(text, ' ')) AS tok " +
         "FROM documents), " +
         "o AS (SELECT tok FROM occ WHERE length(tok) > 0), " +
         "sk AS (SELECT r, " + cmsBucketSql + " AS b, count(*)::BIGINT AS cnt " +
@@ -784,8 +746,8 @@ object MiningQueries {
         "LEFT JOIN sk USING (r, b) GROUP BY tok) " +
         "SELECT tok, n_exact, est, est >= n_exact AS over_ok " +
         "FROM est JOIN ex USING (tok) ORDER BY tok"),
-    "q_basket" ->
-      ("WITH bi AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it " +
+    "q_basket" -> Gate(qBasket _,
+      "WITH bi AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it " +
         "FROM lineitem), " +
         "nb AS (SELECT count(DISTINCT bk)::BIGINT AS nb FROM bi), " +
         "ic AS (SELECT it, count(*)::BIGINT AS n_item FROM bi GROUP BY 1), " +
@@ -799,15 +761,15 @@ object MiningQueries {
         "FROM pr JOIN ic a ON pr.item_a = a.it " +
         "JOIN ic b ON pr.item_b = b.it CROSS JOIN nb " +
         "ORDER BY lift DESC, item_a, item_b LIMIT 50"),
-    "q_prune" ->
-      ("SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day, " +
+    "q_prune" -> Gate(qPrune _,
+      "SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day, " +
         "count(*)::BIGINT AS n_rows, min(value) AS min_v, max(value) AS max_v, " +
         "coalesce(max(value) < 400.0 OR min(value) > 500.0, TRUE) AS skippable, " +
         "CASE WHEN coalesce(max(value) < 400.0 OR min(value) > 500.0, TRUE) " +
         "THEN 0 ELSE count(*) END::BIGINT AS scan_rows " +
         "FROM events GROUP BY 1 ORDER BY day"),
-    "q_readability" ->
-      ("WITH t AS (SELECT doc_id, " +
+    "q_readability" -> Gate(qReadability _,
+      "WITH t AS (SELECT doc_id, " +
         "greatest(len(regexp_extract_all(text, '[.!?]+')), 1)::BIGINT AS s, " +
         "unnest(string_split(text, ' ')) AS w FROM documents), " +
         "f AS (SELECT * FROM t WHERE length(w) > 0), " +
@@ -823,8 +785,8 @@ object MiningQueries {
     // interior cuts via the SQL-standard cume_dist spelling of
     // percentile_disc (the q_winsorize discipline); bin = count of cuts
     // strictly below v
-    "q_bins" ->
-      ("WITH cd AS (SELECT value AS v, " +
+    "q_bins" -> Gate(qBins _,
+      "WITH cd AS (SELECT value AS v, " +
         "cume_dist() OVER (ORDER BY value) AS cd FROM events), " +
         "cuts AS (SELECT k, min(v) AS cut FROM cd " +
         "CROSS JOIN range(1, 8) t(k) WHERE cd >= k / 8.0 GROUP BY k), " +
@@ -835,15 +797,15 @@ object MiningQueries {
         "max(v) AS bin_max, " +
         "(SELECT c.cut FROM cuts c WHERE c.k = bin + 1) AS cut_hi " +
         "FROM asg GROUP BY bin ORDER BY bin"),
-    "q_jaro" ->
-      ("WITH n AS (SELECT DISTINCT p_name AS name FROM part) " +
+    "q_jaro" -> Gate(qJaro _,
+      "WITH n AS (SELECT DISTINCT p_name AS name FROM part) " +
         "SELECT a.name AS name_a, b.name AS name_b, " +
         O.r6("jaro_winkler_similarity(a.name, b.name)") + " AS jw " +
         "FROM n a JOIN n b ON a.name < b.name " +
         "WHERE jaro_winkler_similarity(a.name, b.name) >= 0.7 " +
         "ORDER BY name_a, name_b"),
-    "q_markov" ->
-      ("WITH p AS (SELECT user_id, event_type, " +
+    "q_markov" -> Gate(qMarkov _,
+      "WITH p AS (SELECT user_id, event_type, " +
         "lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) " +
         "AS prev FROM events), " +
         "c AS (SELECT prev AS state_from, event_type AS state_to, " +
@@ -853,8 +815,8 @@ object MiningQueries {
         "FROM c JOIN t USING (state_from) ORDER BY state_from, state_to"),
     // the SET spelling: distinct membership + id self-join — the bitmap
     // algebra must reproduce exactly these cardinalities
-    "q_bitmap" ->
-      ("WITH m AS (SELECT DISTINCT event_type AS g, user_id AS u FROM events), " +
+    "q_bitmap" -> Gate(qBitmap _,
+      "WITH m AS (SELECT DISTINCT event_type AS g, user_id AS u FROM events), " +
         "s AS (SELECT g, count(*)::BIGINT AS n FROM m GROUP BY 1), " +
         "c AS (SELECT x.g AS g_a, y.g AS g_b, count(*)::BIGINT AS nc " +
         "FROM m x JOIN m y ON x.u = y.u AND x.g < y.g GROUP BY 1, 2) " +

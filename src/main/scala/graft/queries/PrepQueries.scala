@@ -162,20 +162,6 @@ object PrepQueries {
       .orderBy("id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_chunks" -> (qChunks _),
-    "q_boilerplate" -> (qBoilerplate _),
-    "q_redact" -> (qRedact _),
-    "q_surprisal" -> (qSurprisal _),
-    "q_repetition" -> (qRepetition _),
-    "q_bpe" -> (qBpe _),
-    "q_bpe_encode" -> (qBpeEncode _),
-    "q_url_canon" -> (qUrlCanon _),
-    "q_zipf" -> (qZipf _),
-    "q_normalize" -> (qNormalize _),
-    "q_blocklist" -> (qBlocklist _),
-  )
-
   private def redactSql: String =
     TextPrep.PiiPatterns.foldLeft("text") { case (expr, (pat, tag)) =>
       val p = pat.replace("\\", "\\\\").replace("'", "''")
@@ -183,9 +169,9 @@ object PrepQueries {
       s"regexp_replace($expr, '$p', '$tag', 'g')"
     }
 
-  val oracleSql: Map[String, String] = Map(
-    "q_chunks" ->
-      ("WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents), " +
+  val gates: Map[String, Gate] = Gate.registry(
+    "q_chunks" -> Gate(qChunks _,
+      "WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents), " +
         "s AS (SELECT doc_id, w, greatest(CAST(ceil((len(w) - 16)::DOUBLE / 12) AS INT), 0) AS last FROM w), " +
         "c AS (SELECT doc_id, CAST(t.i AS INT) AS chunk_idx, " +
         "w[CAST(t.i*12 + 1 AS INT):CAST(t.i*12 + 16 AS INT)] AS toks " +
@@ -195,8 +181,8 @@ object PrepQueries {
         "ORDER BY doc_id, chunk_idx"),
     // disjoint-chunk mirror of the q_chunks CTE (size 8 = stride 8),
     // then the df count / filter / ordered string_agg reassembly
-    "q_boilerplate" ->
-      ("WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents), " +
+    "q_boilerplate" -> Gate(qBoilerplate _,
+      "WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents), " +
         "s AS (SELECT doc_id, w, greatest(CAST(ceil((len(w) - 8)::DOUBLE / 8) AS INT), 0) AS last FROM w), " +
         "c AS (SELECT doc_id, CAST(t.i AS INT) AS chunk_idx, " +
         "w[CAST(t.i*8 + 1 AS INT):CAST(t.i*8 + 8 AS INT)] AS toks " +
@@ -217,22 +203,22 @@ object PrepQueries {
         " ELSE 0.0 END AS removed_frac " +
         "FROM documents d LEFT JOIN n USING (doc_id) LEFT JOIN ka USING (doc_id) " +
         "ORDER BY doc_id"),
-    "q_redact" ->
-      (s"SELECT doc_id, $redactSql AS text_redacted, " +
+    "q_redact" -> Gate(qRedact _,
+      s"SELECT doc_id, $redactSql AS text_redacted, " +
         s"len(regexp_extract_all($redactSql, '<(EMAIL|SSN|PHONE|IP)>'))::INT " +
         "AS n_redactions FROM documents ORDER BY doc_id"),
-    "q_surprisal" -> (surprisalSelect + " ORDER BY doc_id"),
-    "q_bpe" -> Bpe.oracleSql(6),
-    "q_bpe_encode" -> Bpe.encodeOracleSql(6),
+    "q_surprisal" -> Gate(qSurprisal _, surprisalSelect + " ORDER BY doc_id"),
+    "q_bpe" -> Gate(qBpe _, Bpe.oracleSql(6)),
+    "q_bpe_encode" -> Gate(qBpeEncode _, Bpe.encodeOracleSql(6)),
     // Relational mirror of the engine's per-row fold: n-gram counts via
     // unnest+group-by; every fraction is one IEEE division of exact
     // integers, so values (and the keep comparisons) match bit-exactly.
-    "q_repetition" -> (PrepQueries.repetitionSelect + " ORDER BY doc_id"),
+    "q_repetition" -> Gate(qRepetition _, PrepQueries.repetitionSelect + " ORDER BY doc_id"),
     // Step-for-step mirror of TextPrep.canonicalUrl: anchored regexes
     // in the java.util.regex ∩ RE2 subset, list_filter/list_sort for
     // the param set — binary string order both engines.
-    "q_url_canon" ->
-      (s"WITH u AS (SELECT * FROM ($urlFixtureSql) AS t(id, url)), " +
+    "q_url_canon" -> Gate(qUrlCanon _,
+      s"WITH u AS (SELECT * FROM ($urlFixtureSql) AS t(id, url)), " +
         "s1 AS (SELECT id, lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme, " +
         "regexp_replace(regexp_replace(url, '^[A-Za-z][A-Za-z0-9+.-]*://', ''), '#.*$', '') AS nofrag FROM u), " +
         "s2 AS (SELECT id, scheme, regexp_extract(nofrag, '^([^/?]*)', 1) AS auth, " +
@@ -256,8 +242,8 @@ object PrepQueries {
         "(CASE WHEN cquery = '' THEN '' ELSE '?' || cquery END) AS canon_url FROM s4) " +
         "SELECT id, canon_url, count(*) OVER (PARTITION BY canon_url) AS n_dupes " +
         "FROM c ORDER BY id"),
-    "q_zipf" ->
-      ("WITH w AS (SELECT source, string_split(text, ' ') AS w FROM documents), " +
+    "q_zipf" -> Gate(qZipf _,
+      "WITH w AS (SELECT source, string_split(text, ' ') AS w FROM documents), " +
         "tok AS (SELECT source AS grp, t.t AS t FROM w, unnest(w.w) AS t(t) WHERE len(t.t) > 0), " +
         "c AS (SELECT grp, t, count(*) AS c FROM tok GROUP BY 1, 2), " +
         "r AS (SELECT grp, c, t, row_number() OVER (PARTITION BY grp ORDER BY c DESC, t ASC) AS rank FROM c), " +
@@ -276,8 +262,8 @@ object PrepQueries {
     // oracle spells the SEMANTICS (exact match or ends-with at a label
     // boundary) via EXISTS + LIKE — the engine's suffix-explode
     // equi-join must agree row-for-row
-    "q_blocklist" ->
-      (s"WITH u AS (SELECT * FROM ($urlFixtureSql) AS t(id, url)), " +
+    "q_blocklist" -> Gate(qBlocklist _,
+      s"WITH u AS (SELECT * FROM ($urlFixtureSql) AS t(id, url)), " +
         "bl AS (SELECT * FROM (VALUES " +
         Blocklist.map(d => s"('$d')").mkString(", ") + ") AS b(domain)), " +
         "h AS (SELECT id, regexp_replace(regexp_replace(lower(regexp_extract(" +
@@ -288,8 +274,8 @@ object PrepQueries {
     // DuckDB's utf8proc nfc_normalize/strip_accents implement the same
     // UCD algorithms as java.text.Normalizer — fully specified, no
     // engine freedom, so the strings hash-check exactly
-    "q_normalize" ->
-      (s"WITH u AS (SELECT * FROM ($normFixtureSql) AS t(id, text)) " +
+    "q_normalize" -> Gate(qNormalize _,
+      s"WITH u AS (SELECT * FROM ($normFixtureSql) AS t(id, text)) " +
         "SELECT id, nfc_normalize(text) AS nfc_text, " +
         "strip_accents(text) AS folded_text, " +
         "count(*) OVER (PARTITION BY nfc_normalize(text)) AS n_dupes " +
@@ -345,7 +331,7 @@ object PrepQueries {
 
   /** Repetition-metrics oracle body (no ORDER BY) — shared with the
     * composed curation pipeline oracle (CorpusQueries q_pipeline). A
-    * `def`, not a `val`: `oracleSql` above references it during object
+    * `def`, not a `val`: `gates` above references it during object
     * init, and a val defined below would still be null at that point.
     */
   private[queries] def repetitionSelect: String =

@@ -237,37 +237,23 @@ object RefQueries {
 
   // ---- registry -------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_scan" -> (qScan _),
-    "q_count" -> (qCount _),
-    "q_derive" -> (qDerive _),
-    "q_filter" -> (qFilter _),
-    "q_join" -> (qJoin _),
-    "q_agg" -> (qAgg _),
-    "q_sort_limit" -> (qSortLimit _),
-    "q_dropna" -> (qDropna _),
-    "q_e2e" -> (qE2e _),
-    "q_sample" -> (qSample _),
-    "q_split" -> (qSplit _),
-  )
-
   import graft.queries.{Oracle => O}
 
-  val oracleSql: Map[String, String] = Map(
-    "q_scan" ->
-      ("SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice, " +
+  val gates: Map[String, Gate] = Gate.registry(
+    "q_scan" -> Gate(qScan _,
+      "SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice, " +
         "l_returnflag, l_linestatus FROM lineitem " +
         "ORDER BY l_orderkey, l_linenumber, l_quantity, l_extendedprice, " +
         "l_returnflag, l_linestatus LIMIT 20"),
-    "q_count" -> "SELECT count(*) AS n_rows FROM lineitem",
-    "q_derive" ->
-      ("SELECT event_id, ts::DATE AS d, hour(ts)::INT AS hr, " +
+    "q_count" -> Gate(qCount _, "SELECT count(*) AS n_rows FROM lineitem"),
+    "q_derive" -> Gate(qDerive _,
+      "SELECT event_id, ts::DATE AS d, hour(ts)::INT AS hr, " +
         "strftime(ts::TIMESTAMP, '%a') AS dow, " +
         O.r6("((epoch_us(ts::TIMESTAMP)//1000000 + CAST(floor(value) AS BIGINT)) " +
           "- epoch_us(ts::TIMESTAMP)//1000000) / 60.0") + " AS dur_min " +
         "FROM events ORDER BY event_id"),
-    "q_filter" ->
-      ("SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, l_quantity, " +
+    "q_filter" -> Gate(qFilter _,
+      "SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, l_quantity, " +
         "l_extendedprice, l_discount, " +
         O.r6("l_extendedprice / l_quantity") + " AS price_per_qty " +
         "FROM lineitem " +
@@ -278,27 +264,27 @@ object RefQueries {
         "AND " + O.r6("l_extendedprice / l_quantity") + " BETWEEN 0 AND 100000 " +
         "ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey, " +
         "l_quantity, l_extendedprice, l_discount"),
-    "q_join" ->
-      ("SELECT o_orderpriority, o_orderkey, o_custkey, o_totalprice, " +
+    "q_join" -> Gate(qJoin _,
+      "SELECT o_orderpriority, o_orderkey, o_custkey, o_totalprice, " +
         s"prio_rank, prio_class FROM orders LEFT JOIN $prioLookupSql " +
         "USING (o_orderpriority) ORDER BY o_orderkey"),
-    "q_agg" ->
-      ("SELECT l_shipdate::DATE AS ship_date, l_returnflag, " +
+    "q_agg" -> Gate(qAgg _,
+      "SELECT l_shipdate::DATE AS ship_date, l_returnflag, " +
         "count(*) AS total_cnt, " +
         s"${O.davg("l_quantity")} AS avg_qty, " +
         s"${O.davg("l_extendedprice")} AS avg_price, " +
         s"${O.davg("l_discount")} AS avg_disc " +
         "FROM lineitem GROUP BY 1, 2 ORDER BY ship_date, l_returnflag"),
-    "q_sort_limit" ->
-      ("SELECT l_shipdate::DATE AS ship_date, l_extendedprice, l_orderkey, " +
+    "q_sort_limit" -> Gate(qSortLimit _,
+      "SELECT l_shipdate::DATE AS ship_date, l_extendedprice, l_orderkey, " +
         "l_linenumber FROM lineitem " +
         "ORDER BY ship_date, l_extendedprice, l_orderkey, l_linenumber " +
         "LIMIT 10"),
-    "q_dropna" ->
-      (s"SELECT count(*) AS n_rows FROM orders JOIN $prioLookupSql " +
+    "q_dropna" -> Gate(qDropna _,
+      s"SELECT count(*) AS n_rows FROM orders JOIN $prioLookupSql " +
         "USING (o_orderpriority)"),
-    "q_e2e" ->
-      ("WITH ev AS (SELECT *, epoch_us(ts::TIMESTAMP)//1000000 AS sec FROM events), " +
+    "q_e2e" -> Gate(qE2e _,
+      "WITH ev AS (SELECT *, epoch_us(ts::TIMESTAMP)//1000000 AS sec FROM events), " +
         "c AS (SELECT *, ((sec + CAST(floor(value) AS BIGINT)) - sec) / 60.0 AS dur_min " +
         "FROM ev WHERE value > 0 AND user_id >= 0), " +
         "f AS (SELECT *, value / (dur_min / 60.0) AS rate FROM c " +
@@ -316,15 +302,15 @@ object RefQueries {
     // interval contract gates (see qSample/qSplit scaladoc): the oracle
     // recomputes n_base and the 6σ bounds independently; the TRUE
     // columns assert the engine's draw landed inside them
-    "q_sample" -> {
+    "q_sample" -> Gate(qSample _, {
       val (lo, hi) = boundsSql(0.05)
       "SELECT n_base, " + s"$lo AS lo, $hi AS hi, TRUE AS within " +
         "FROM (SELECT count(*) AS n_base FROM lineitem)"
-    },
-    "q_split" -> {
+    }),
+    "q_split" -> Gate(qSplit _, {
       val (lo, hi) = boundsSql(0.8)
       "SELECT n_base, " + s"$lo AS lo, $hi AS hi, TRUE AS within, " +
         "TRUE AS partition_exact FROM (SELECT count(*) AS n_base FROM orders)"
-    },
+    }),
   )
 }

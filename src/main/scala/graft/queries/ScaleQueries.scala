@@ -243,20 +243,6 @@ object ScaleQueries {
       .orderBy("qid", "rank")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_bloom_join" -> (qBloomJoin _),
-    "q_sim_prefix" -> (qSimPrefix _),
-    "q_dq" -> (qDq _),
-    "q_sim_pq" -> (qSimPq _),
-    "q_compress" -> (qCompress _),
-    "q_semdedup" -> (qSemDedup _),
-    "q_hof" -> (qHof _),
-    "q_agg_inc" -> (qAggInc _),
-    "q_checksum" -> (qChecksum _),
-    "q_checksum_parts" -> (qChecksumParts _),
-    "q_sim_ivfpq" -> (qSimIvfPq _),
-  )
-
   /** DuckDB cosine over double lists — the [[graft.functions.CosineSim]]
     * fold's spelling (sequential dot and norms, one final division).
     */
@@ -265,26 +251,26 @@ object ScaleQueries {
       s"(sqrt(list_sum(list_transform($a, x -> x::DOUBLE * x::DOUBLE))) * " +
       s"sqrt(list_sum(list_transform($b, x -> x::DOUBLE * x::DOUBLE))))"
 
-  val oracleSql: Map[String, String] = Map(
+  val gates: Map[String, Gate] = Gate.registry(
     // the TRUE columns are the contract (see qCompress scaladoc): the
     // oracle independently computes raw_bytes and asserts the
     // deflate-derived flags hold for every doc; the byte count itself
     // is encoder freedom RFC 1951 leaves open and stays engine-local
-    "q_compress" ->
-      ("SELECT doc_id, strlen(text)::BIGINT AS raw_bytes, " +
+    "q_compress" -> Gate(qCompress _,
+      "SELECT doc_id, strlen(text)::BIGINT AS raw_bytes, " +
         "TRUE AS in_bounds, TRUE AS ratio_consistent " +
         "FROM documents ORDER BY doc_id"),
     // the kmeans CTE chain (assignment CTE `a`, double vectors `vecs`)
     // extends with the within-cluster pair scan and min-id dominance
-    "q_semdedup" -> Clustering.kmeansOracleSql(8, 2,
+    "q_semdedup" -> Gate(qSemDedup _, Clustering.kmeansOracleSql(8, 2,
       ", av AS (SELECT a.vec_id, a.cluster, v FROM a JOIN vecs USING (vec_id)), " +
         "p AS (SELECT x.vec_id AS ia, y.vec_id AS ib FROM av x JOIN av y " +
         "ON x.cluster = y.cluster AND x.vec_id < y.vec_id " +
         s"WHERE ${cosSql("x.v", "y.v")} >= 0.35) " +
         "SELECT vec_id, cluster FROM a " +
-        "WHERE vec_id NOT IN (SELECT ib FROM p) ORDER BY vec_id"),
-    "q_hof" ->
-      ("WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents), " +
+        "WHERE vec_id NOT IN (SELECT ib FROM p) ORDER BY vec_id")),
+    "q_hof" -> Gate(qHof _,
+      "WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents), " +
         "l AS (SELECT doc_id, w, list_transform(w, t -> length(t)) AS lens FROM w) " +
         "SELECT doc_id, " +
         "len(list_filter(w, t -> length(t) > 4))::BIGINT AS n_long, " +
@@ -295,14 +281,14 @@ object ScaleQueries {
         "coalesce(list_sum(list_transform(range(len(lens)), " +
         "i -> lens[i+1] + lens[len(lens)-i])), 0)::BIGINT AS sym_sum " +
         "FROM l ORDER BY doc_id"),
-    "q_agg_inc" ->
-      ("SELECT event_type, count(value) AS n, " +
+    "q_agg_inc" -> Gate(qAggInc _,
+      "SELECT event_type, count(value) AS n, " +
         "CAST(CAST(sum(CAST(value AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS sum_v, " +
         "min(value) AS min_v, max(value) AS max_v, " +
         O.r6("CAST(CAST(sum(CAST(value AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) / count(value)") +
         " AS avg_v FROM events GROUP BY 1 ORDER BY 1"),
-    "q_checksum_parts" ->
-      ("WITH h AS (SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day, " +
+    "q_checksum_parts" -> Gate(qChecksumParts _,
+      "WITH h AS (SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day, " +
         "('0x' || substr(md5(" +
         "coalesce(event_id::VARCHAR, '<null>') || '|' || " +
         "coalesce(user_id::VARCHAR, '<null>') || '|' || " +
@@ -312,8 +298,8 @@ object ScaleQueries {
         "SELECT day, count(*) AS n_rows, " +
         "coalesce(sum(v::DECIMAL(38,0)), 0::DECIMAL(38,0))::VARCHAR AS checksum " +
         "FROM h GROUP BY 1 ORDER BY 1"),
-    "q_checksum" ->
-      ("WITH h AS (SELECT ('0x' || substr(md5(" +
+    "q_checksum" -> Gate(qChecksum _,
+      "WITH h AS (SELECT ('0x' || substr(md5(" +
         "coalesce(event_id::VARCHAR, '<null>') || '|' || " +
         "coalesce(user_id::VARCHAR, '<null>') || '|' || " +
         "coalesce(event_type, '<null>') || '|' || " +
@@ -321,16 +307,16 @@ object ScaleQueries {
         "coalesce(props, '<null>')), 1, 15))::BIGINT AS v FROM events) " +
         "SELECT count(*) AS n_rows, " +
         "coalesce(sum(v::DECIMAL(38,0)), 0::DECIMAL(38,0))::VARCHAR AS checksum FROM h"),
-    "q_sim_ivfpq" -> ProductQuantization.ivfPqOracleSql(
+    "q_sim_ivfpq" -> Gate(qSimIvfPq _, ProductQuantization.ivfPqOracleSql(
       m = 8, k = 16, iters = 2, nq = 5, topK = 10, stride = 64, nProbe = 2,
       "SELECT qid, cid, " + O.r6("ad2") + " AS ad2, rank FROM r " +
-        "WHERE rank <= 10 ORDER BY qid, rank"),
-    "q_sim_pq" -> ProductQuantization.pqOracleSql(
+        "WHERE rank <= 10 ORDER BY qid, rank")),
+    "q_sim_pq" -> Gate(qSimPq _, ProductQuantization.pqOracleSql(
       m = 8, k = 16, iters = 2, nq = 5, topK = 10,
       "SELECT qid, cid, " + O.r6("ad2") + " AS ad2, rank FROM r " +
-        "WHERE rank <= 10 ORDER BY qid, rank"),
-    "q_bloom_join" ->
-      ("SELECT p_brand, count(*) AS n, " + O.dsum("l_quantity") + " AS sum_qty, " +
+        "WHERE rank <= 10 ORDER BY qid, rank")),
+    "q_bloom_join" -> Gate(qBloomJoin _,
+      "SELECT p_brand, count(*) AS n, " + O.dsum("l_quantity") + " AS sum_qty, " +
         O.dsum("l_extendedprice * (1.0 - l_discount)") + " AS revenue " +
         "FROM lineitem JOIN part ON l_partkey = p_partkey " +
         "WHERE p_size <= 3 GROUP BY 1 ORDER BY 1"),
@@ -340,8 +326,8 @@ object ScaleQueries {
     // candidate pairs come from a shingle equi-join (count = |a ∩ b|,
     // lists are distinct) and |a ∪ b| = n_a + n_b − inter — bounded by
     // Σ df², the same index shape the engine's prefix filter prunes.
-    "q_sim_prefix" ->
-      ("WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents), " +
+    "q_sim_prefix" -> Gate(qSimPrefix _,
+      "WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents), " +
         "s AS (SELECT doc_id, list_distinct(list_transform(" +
         "range(greatest(len(w) - 3, 0)), " +
         "j -> w[j+1] || ' ' || w[j+2] || ' ' || w[j+3] || ' ' || w[j+4])) AS sh " +
@@ -357,8 +343,8 @@ object ScaleQueries {
         "JOIN sz nb ON id_b = nb.doc_id " +
         "WHERE inter::DOUBLE / (na.n + nb.n - inter)::DOUBLE >= 0.5 " +
         "ORDER BY id_a, id_b"),
-    "q_dq" ->
-      ("WITH m AS (" +
+    "q_dq" -> Gate(qDq _,
+      "WITH m AS (" +
         "SELECT 'accepted:l_returnflag' AS \"check\", " +
         "sum(CASE WHEN l_returnflag IS NOT NULL AND " +
         "l_returnflag NOT IN ('A','N','R') THEN 1 ELSE 0 END)::DOUBLE AS metric " +

@@ -48,19 +48,13 @@ object SelectionQueries {
         targetDocs = 150, alpha = 0.5)
       .orderBy("source")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_dsir" -> (qDsir _),
-    "q_ppl_band" -> (qPplBand _),
-    "q_mix_temp" -> (qMixTemp _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
+  val gates: Map[String, Gate] = Gate.registry(
     // mirrors Selection.dsirScores stage for stage: occurrence →
     // (doc,bucket) counts → bucket model + totals → per-term r6 λ →
     // decimal per-doc sum; top-k spelled ORDER BY ... LIMIT like the
     // engine's TakeOrdered
-    "q_dsir" ->
-      ("WITH occ AS (SELECT doc_id, lang = 'en' AS tgt, u.t AS tok " +
+    "q_dsir" -> Gate(qDsir _,
+      "WITH occ AS (SELECT doc_id, lang = 'en' AS tgt, u.t AS tok " +
         "FROM (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents), " +
         "unnest(w) AS u(t)), " +
         s"bk AS (SELECT doc_id, tgt, ${bucketSql("dsir", "tok", 4096)} AS b FROM occ), " +
@@ -78,8 +72,8 @@ object SelectionQueries {
     // the engine's percentile_disc is the SQL-standard "smallest value
     // whose cume_dist >= p" — spelled as exactly that, since DuckDB's
     // quantile_disc uses a different (position-interpolating) rule
-    "q_ppl_band" ->
-      ("WITH sc AS (" + PrepQueries.surprisalSelect + "), " +
+    "q_ppl_band" -> Gate(qPplBand _,
+      "WITH sc AS (" + PrepQueries.surprisalSelect + "), " +
         "cd AS (SELECT *, cume_dist() OVER (ORDER BY mean_surprisal) AS cd FROM sc), " +
         "cuts AS (SELECT min(CASE WHEN cd >= 0.333333 THEN mean_surprisal END) AS t1, " +
         "min(CASE WHEN cd >= 0.666667 THEN mean_surprisal END) AS t2 FROM cd) " +
@@ -91,8 +85,8 @@ object SelectionQueries {
     // sqrt (correctly rounded per IEEE, unlike pow) → r6 weight →
     // exact decimal normalization sum → r6 rate → floor threshold —
     // every stage spelled identically to the engine
-    "q_mix_temp" ->
-      ("WITH st AS (SELECT source, count(*) AS n, sum(n_chars)::BIGINT AS mass " +
+    "q_mix_temp" -> Gate(qMixTemp _,
+      "WITH st AS (SELECT source, count(*) AS n, sum(n_chars)::BIGINT AS mass " +
         "FROM documents GROUP BY 1), " +
         "w AS (SELECT *, " + O.r6("sqrt(mass::DOUBLE)") + " AS w FROM st), " +
         "ws AS (SELECT CAST(CAST(sum(CAST(w AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) AS wsum FROM w), " +

@@ -71,34 +71,25 @@ object SignalQueries {
       Tables.table(s, dir, "lineitem"), "l_extendedprice",
       numPartitions = 8)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_ewma" -> (qEwma _),
-    "q_trend" -> (qTrend _),
-    "q_km" -> (qKm _),
-    "q_decompose" -> (qDecompose _),
-    "q_closeness" -> (qCloseness _),
-    "q_range_plan" -> (qRangePlan _),
-  )
-
   private def coPurchaseEdgesSql: String =
     "SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v " +
       "FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey " +
       "AND a.l_partkey < b.l_partkey"
 
-  val oracleSql: Map[String, String] = Map(
-    "q_ewma" -> (TimeSeries.ewmaLastOracleSql(
+  val gates: Map[String, Gate] = Gate.registry(
+    "q_ewma" -> Gate(qEwma _, TimeSeries.ewmaLastOracleSql(
       "SELECT user_id, ts, event_id AS id, value FROM events",
       "user_id", m = 16) + " ORDER BY user_id"),
-    "q_trend" -> (TimeSeries.linearTrendForecastOracleSql(
+    "q_trend" -> Gate(qTrend _, TimeSeries.linearTrendForecastOracleSql(
       "events", "event_type", "ts", horizonDays = 7) +
       " ORDER BY event_type"),
-    "q_km" -> TimeSeries.kaplanMeierOracleSql(
-      "orders", "o_custkey", "o_orderdate", censorDays = 90),
-    "q_decompose" -> TimeSeries.seasonalDecomposeOracleSql(
-      "events", "ts", "value"),
-    "q_closeness" -> Graphs.closenessOracleSql(
-      coPurchaseEdgesSql, seeds = Seq(0L, 1L, 2L, 3L, 4L), rounds = 8),
-    "q_range_plan" -> Quantiles.rangePartitionPlanOracleSql(
-      "lineitem", "l_extendedprice", numPartitions = 8),
+    "q_km" -> Gate(qKm _, TimeSeries.kaplanMeierOracleSql(
+      "orders", "o_custkey", "o_orderdate", censorDays = 90)),
+    "q_decompose" -> Gate(qDecompose _, TimeSeries.seasonalDecomposeOracleSql(
+      "events", "ts", "value")),
+    "q_closeness" -> Gate(qCloseness _, Graphs.closenessOracleSql(
+      coPurchaseEdgesSql, seeds = Seq(0L, 1L, 2L, 3L, 4L), rounds = 8)),
+    "q_range_plan" -> Gate(qRangePlan _, Quantiles.rangePartitionPlanOracleSql(
+      "lineitem", "l_extendedprice", numPartitions = 8)),
   )
 }

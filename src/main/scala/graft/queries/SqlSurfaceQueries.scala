@@ -648,65 +648,29 @@ object SqlSurfaceQueries {
         |ORDER BY doc_id, pos""".stripMargin)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_subquery" -> (qSubquery _),
-    "q_lateral" -> (qLateral _),
-    "q_tpch_q3" -> (qTpchQ3 _),
-    "q_tpch_q5" -> (qTpchQ5 _),
-    "q_tpch_q1" -> (qTpchQ1 _),
-    "q_tpch_q7" -> (qTpchQ7 _),
-    "q_tpch_q10" -> (qTpchQ10 _),
-    "q_tpch_q18" -> (qTpchQ18 _),
-    "q_tpch_q6" -> (qTpchQ6 _),
-    "q_tpch_q13" -> (qTpchQ13 _),
-    "q_tpch_q14" -> (qTpchQ14 _),
-    "q_tpch_q4" -> (qTpchQ4 _),
-    "q_argmax" -> (qArgmax _),
-    "q_tpch_q8" -> (qTpchQ8 _),
-    "q_tpch_q17" -> (qTpchQ17 _),
-    "q_tpch_q19" -> (qTpchQ19 _),
-    "q_tpch_q22" -> (qTpchQ22 _),
-    "q_try" -> (qTry _),
-    "q_unpivot" -> (qUnpivot _),
-    "q_join_outer" -> (qJoinOuter _),
-    "q_sort_nulls" -> (qSortNulls _),
-    "q_window_range" -> (qWindowRange _),
-    "q_window_frames" -> (qWindowFrames _),
-    "q_dates" -> (qDates _),
-    "q_json" -> (qJson _),
-    "q_sql" -> (qSql _),
-    "q_recursive" -> (qRecursive _),
-    "q_percentile_approx" -> (qPercentileApprox _),
-    "q_variant" -> (qVariant _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
+  val gates: Map[String, Gate] = Gate.registry(
     // exact medians hash-check as in q_percentile; the in-band booleans
     // are literal true — the gate fails iff Spark's t-digest drifts
     // past 5% of the exact median
-    "q_percentile_approx" ->
-      ("SELECT l_returnflag, quantile_disc(l_quantity, 0.5) AS median, " +
+    "q_percentile_approx" -> Gate(qPercentileApprox _,
+      "SELECT l_returnflag, quantile_disc(l_quantity, 0.5) AS median, " +
         "quantile_disc(l_extendedprice, 0.5) AS median_price, count(*) AS n, " +
         "true AS qty_in_band, true AS price_in_band " +
         "FROM lineitem GROUP BY 1 ORDER BY l_returnflag"),
-    "q_subquery" ->
-      ("SELECT c_custkey, c_mktsegment, " +
+    "q_subquery" -> Gate(qSubquery _,
+      "SELECT c_custkey, c_mktsegment, " +
         "(SELECT count(*) FROM orders o WHERE o.o_custkey = c.c_custkey) AS n_orders " +
         "FROM customer c " +
         "WHERE EXISTS (SELECT 1 FROM orders o " +
         "WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 450000) " +
         "ORDER BY c_custkey"),
-    "q_lateral" ->
-      ("WITH s AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents " +
+    "q_lateral" -> Gate(qLateral _,
+      "WITH s AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents " +
         "WHERE doc_id % 100 = 0) " +
         "SELECT doc_id, CAST(u.i AS INT) AS pos, w[CAST(u.i + 1 AS INT)] AS token " +
         "FROM s, unnest(range(len(s.w))) AS u(i) ORDER BY doc_id, pos"),
-    "q_variant" ->
-      ("WITH x AS (SELECT event_type, json_extract_string(props, '$.k')::INT AS k FROM events) " +
-        "SELECT event_type, count(*) AS n, sum(k)::BIGINT AS sum_k, " +
-        "min(k) AS min_k, max(k) AS max_k FROM x GROUP BY 1 ORDER BY event_type"),
-    "q_tpch_q3" ->
-      ("SELECT l_orderkey, " +
+    "q_tpch_q3" -> Gate(qTpchQ3 _,
+      "SELECT l_orderkey, " +
         O.dsum("l_extendedprice * (1.0 - l_discount)") + " AS revenue, " +
         "o_orderdate, o_orderpriority " +
         "FROM customer, orders, lineitem " +
@@ -716,8 +680,8 @@ object SqlSurfaceQueries {
         "AND l_shipdate > TIMESTAMP '1998-06-01' " +
         "GROUP BY l_orderkey, o_orderdate, o_orderpriority " +
         "ORDER BY revenue DESC, o_orderdate, l_orderkey LIMIT 10"),
-    "q_tpch_q5" ->
-      ("SELECT n_name, " + O.dsum("l_extendedprice * (1.0 - l_discount)") +
+    "q_tpch_q5" -> Gate(qTpchQ5 _,
+      "SELECT n_name, " + O.dsum("l_extendedprice * (1.0 - l_discount)") +
         " AS revenue " +
         "FROM customer, orders, lineitem, supplier, nation, region " +
         "WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey " +
@@ -725,8 +689,8 @@ object SqlSurfaceQueries {
         "AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey " +
         "AND r_name = 'ASIA' AND o_orderdate >= TIMESTAMP '1998-01-01' " +
         "GROUP BY n_name ORDER BY revenue DESC, n_name"),
-    "q_tpch_q7" ->
-      ("SELECT supp_nation, cust_nation, l_year, " +
+    "q_tpch_q7" -> Gate(qTpchQ7 _,
+      "SELECT supp_nation, cust_nation, l_year, " +
         O.dsum("l_extendedprice * (1.0 - l_discount)") + " AS revenue " +
         "FROM (SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation, " +
         "year(l_shipdate) AS l_year, l_extendedprice, l_discount " +
@@ -739,21 +703,21 @@ object SqlSurfaceQueries {
         "AND l_shipdate BETWEEN TIMESTAMP '1996-01-01' " +
         "AND TIMESTAMP '1997-12-31') " +
         "GROUP BY 1, 2, 3 ORDER BY 1, 2, 3"),
-    "q_argmax" ->
-      ("SELECT l_returnflag, " +
+    "q_argmax" -> Gate(qArgmax _,
+      "SELECT l_returnflag, " +
         "max_by(l_quantity, l_orderkey * 100 + l_linenumber) AS last_qty, " +
         "min_by(l_quantity, l_orderkey * 100 + l_linenumber) AS first_qty, " +
         "count(*) AS n FROM lineitem GROUP BY 1 ORDER BY 1"),
-    "q_tpch_q4" ->
-      ("SELECT o_orderpriority, count(*) AS order_count FROM orders " +
+    "q_tpch_q4" -> Gate(qTpchQ4 _,
+      "SELECT o_orderpriority, count(*) AS order_count FROM orders " +
         "WHERE o_orderdate >= TIMESTAMP '1997-01-01' " +
         "AND o_orderdate < TIMESTAMP '1997-04-01' " +
         "AND EXISTS (SELECT 1 FROM lineitem " +
         "WHERE l_orderkey = o_orderkey " +
         "AND l_shipdate > o_orderdate + INTERVAL 30 DAY) " +
         "GROUP BY 1 ORDER BY 1"),
-    "q_tpch_q8" ->
-      ("SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year, " +
+    "q_tpch_q8" -> Gate(qTpchQ8 _,
+      "SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year, " +
         O.r6("CAST(CAST(sum(CAST(CASE WHEN n2.n_name = 'NATION_5' " +
           "THEN l_extendedprice * (1.0 - l_discount) ELSE 0.0 END " +
           "AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) / " +
@@ -769,16 +733,16 @@ object SqlSurfaceQueries {
         "AND n1.n_regionkey = r_regionkey AND r_name = 'ASIA' " +
         "AND l_suppkey = s_suppkey AND s_nationkey = n2.n_nationkey " +
         "GROUP BY 1 ORDER BY 1"),
-    "q_tpch_q17" ->
-      ("SELECT " +
+    "q_tpch_q17" -> Gate(qTpchQ17 _,
+      "SELECT " +
         O.r6("CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(25,6))) " +
           "AS VARCHAR) AS DOUBLE) / 7.0") + " AS avg_yearly " +
         "FROM lineitem, part WHERE p_partkey = l_partkey " +
         "AND p_brand = 'Brand#23' " +
         "AND l_quantity < 0.2 * (SELECT avg(l_quantity) FROM lineitem l2 " +
         "WHERE l2.l_partkey = p_partkey)"),
-    "q_tpch_q19" ->
-      ("SELECT " + O.dsum("l_extendedprice * (1.0 - l_discount)") +
+    "q_tpch_q19" -> Gate(qTpchQ19 _,
+      "SELECT " + O.dsum("l_extendedprice * (1.0 - l_discount)") +
         " AS revenue FROM lineitem, part WHERE l_partkey = p_partkey " +
         "AND ((p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15 " +
         "AND l_quantity BETWEEN 1 AND 11) " +
@@ -786,8 +750,8 @@ object SqlSurfaceQueries {
         "AND l_quantity BETWEEN 10 AND 20) " +
         "OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 35 " +
         "AND l_quantity BETWEEN 20 AND 30))"),
-    "q_tpch_q22" ->
-      ("WITH t AS (SELECT " + O.davg("c_acctbal") + " AS _t " +
+    "q_tpch_q22" -> Gate(qTpchQ22 _,
+      "WITH t AS (SELECT " + O.davg("c_acctbal") + " AS _t " +
         "FROM customer WHERE c_acctbal > 0) " +
         "SELECT c_nationkey AS cntrycode, count(*) AS numcust, " +
         O.dsum("c_acctbal") + " AS totacctbal " +
@@ -795,20 +759,20 @@ object SqlSurfaceQueries {
         "AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey " +
         "AND o_orderdate >= TIMESTAMP '2000-01-01') " +
         "GROUP BY 1 ORDER BY 1"),
-    "q_tpch_q6" ->
-      ("SELECT " + O.dsum("l_extendedprice * l_discount") + " AS revenue " +
+    "q_tpch_q6" -> Gate(qTpchQ6 _,
+      "SELECT " + O.dsum("l_extendedprice * l_discount") + " AS revenue " +
         "FROM lineitem " +
         "WHERE l_shipdate >= TIMESTAMP '1997-01-01' " +
         "AND l_shipdate < TIMESTAMP '1998-01-01' " +
         "AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24"),
-    "q_tpch_q13" ->
-      ("WITH c AS (SELECT c_custkey, count(o_orderkey) AS c_count " +
+    "q_tpch_q13" -> Gate(qTpchQ13 _,
+      "WITH c AS (SELECT c_custkey, count(o_orderkey) AS c_count " +
         "FROM customer LEFT JOIN orders ON c_custkey = o_custkey " +
         "GROUP BY 1) " +
         "SELECT c_count, count(*) AS custdist FROM c GROUP BY 1 " +
         "ORDER BY custdist DESC, c_count DESC"),
-    "q_tpch_q14" ->
-      ("SELECT " +
+    "q_tpch_q14" -> Gate(qTpchQ14 _,
+      "SELECT " +
         O.r6("100.0 * CAST(CAST(sum(CAST(CASE WHEN p_type = 'PROMO' " +
           "THEN l_extendedprice * (1.0 - l_discount) ELSE 0.0 END " +
           "AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) / " +
@@ -818,8 +782,8 @@ object SqlSurfaceQueries {
         "AND l_shipdate >= TIMESTAMP '1997-09-01' " +
         "AND l_shipdate < TIMESTAMP '1997-10-01'"),
     // sum(l_quantity) is integer-valued doubles → exact, order-free
-    "q_tpch_q1" ->
-      ("SELECT l_returnflag, l_linestatus, " +
+    "q_tpch_q1" -> Gate(qTpchQ1 _,
+      "SELECT l_returnflag, l_linestatus, " +
         O.dsum("l_quantity") + " AS sum_qty, " +
         O.dsum("l_extendedprice") + " AS sum_base_price, " +
         O.dsum("l_extendedprice * (1.0 - l_discount)") + " AS sum_disc_price, " +
@@ -831,16 +795,16 @@ object SqlSurfaceQueries {
         "count(*) AS count_order " +
         "FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00' " +
         "GROUP BY 1, 2 ORDER BY 1, 2"),
-    "q_tpch_q10" ->
-      ("SELECT c_custkey, c_name, c_acctbal, n_name, " +
+    "q_tpch_q10" -> Gate(qTpchQ10 _,
+      "SELECT c_custkey, c_name, c_acctbal, n_name, " +
         O.dsum("l_extendedprice * (1.0 - l_discount)") + " AS revenue " +
         "FROM customer, orders, lineitem, nation " +
         "WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey " +
         "AND o_orderdate >= TIMESTAMP '1998-06-01 00:00:00' " +
         "AND l_returnflag = 'R' AND c_nationkey = n_nationkey " +
         "GROUP BY 1, 2, 3, 4 ORDER BY revenue DESC, c_custkey LIMIT 20"),
-    "q_try" ->
-      ("WITH x AS (SELECT event_id, json_extract_string(props, '$.k') AS raw, " +
+    "q_try" -> Gate(qTry _,
+      "WITH x AS (SELECT event_id, json_extract_string(props, '$.k') AS raw, " +
         "value FROM events), " +
         "t AS (SELECT event_id, TRY_CAST(raw AS BIGINT) AS k_num, " +
         "TRY_CAST('x' || raw AS BIGINT) AS bad_cast, " +
@@ -849,8 +813,8 @@ object SqlSurfaceQueries {
         "ELSE NULL END AS ov_add FROM x) " +
         "SELECT event_id, k_num, bad_cast, " + O.r6("dv") + " AS div_mod, " +
         "ov_add FROM t ORDER BY event_id"),
-    "q_tpch_q18" ->
-      ("SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice, " +
+    "q_tpch_q18" -> Gate(qTpchQ18 _,
+      "SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice, " +
         "sum(l_quantity) AS sum_qty " +
         "FROM customer, orders, lineitem " +
         "WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem " +
@@ -858,31 +822,31 @@ object SqlSurfaceQueries {
         "AND c_custkey = o_custkey AND o_orderkey = l_orderkey " +
         "GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice " +
         "ORDER BY o_totalprice DESC, o_orderdate, o_orderkey LIMIT 100"),
-    "q_join_outer" ->
-      ("WITH a AS (SELECT user_id, count(*) AS n_clicks FROM events " +
+    "q_join_outer" -> Gate(qJoinOuter _,
+      "WITH a AS (SELECT user_id, count(*) AS n_clicks FROM events " +
         "WHERE event_type = 'click' GROUP BY user_id), " +
         "b AS (SELECT user_id, count(*) AS n_views FROM events " +
         "WHERE event_type = 'view' GROUP BY user_id) " +
         "SELECT user_id, n_clicks, n_views FROM a FULL OUTER JOIN b USING (user_id) " +
         "ORDER BY user_id"),
-    "q_sort_nulls" ->
-      ("SELECT event_id, user_id, " +
+    "q_sort_nulls" -> Gate(qSortNulls _,
+      "SELECT event_id, user_id, " +
         "CASE WHEN event_type = 'click' THEN NULL ELSE value END AS v " +
         "FROM events ORDER BY v DESC NULLS FIRST, event_id LIMIT 50"),
-    "q_window_range" ->
-      ("SELECT event_id, user_id, count(*) OVER w AS n_last_hour, " +
+    "q_window_range" -> Gate(qWindowRange _,
+      "SELECT event_id, user_id, count(*) OVER w AS n_last_hour, " +
         O.r6("CAST(CAST(sum(CAST(value AS DECIMAL(25,6))) OVER w AS VARCHAR) AS DOUBLE)") +
         " AS sum_last_hour FROM events " +
         "WINDOW w AS (PARTITION BY user_id ORDER BY floor(epoch(ts))::BIGINT " +
         "RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW) ORDER BY event_id"),
-    "q_unpivot" ->
-      ("SELECT metric, count(*) AS n, " + O.davg("value") + " AS mean_v, " +
+    "q_unpivot" -> Gate(qUnpivot _,
+      "SELECT metric, count(*) AS n, " + O.davg("value") + " AS mean_v, " +
         O.r6("min(value)") + " AS min_v, " + O.r6("max(value)") + " AS max_v " +
         "FROM (UNPIVOT (SELECT l_quantity, l_extendedprice, l_discount, l_tax " +
         "FROM lineitem) ON l_quantity, l_extendedprice, l_discount, l_tax " +
         "INTO NAME metric VALUE value) GROUP BY metric ORDER BY metric"),
-    "q_window_frames" ->
-      ("SELECT event_id, user_id, " +
+    "q_window_frames" -> Gate(qWindowFrames _,
+      "SELECT event_id, user_id, " +
         "(ntile(4) OVER wt)::INT AS quartile, " +
         O.r6("percent_rank() OVER wv") + " AS pct_rank, " +
         O.r6("cume_dist() OVER wv") + " AS cume, " +
@@ -899,8 +863,8 @@ object SqlSurfaceQueries {
         "ws AS (PARTITION BY user_id ORDER BY ts, event_id " +
         "ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) " +
         "ORDER BY event_id"),
-    "q_dates" ->
-      ("SELECT event_id, " +
+    "q_dates" -> Gate(qDates _,
+      "SELECT event_id, " +
         "date_trunc('month', ts::TIMESTAMP)::TIMESTAMP AS month_start, " +
         "date_trunc('week', ts::TIMESTAMP)::TIMESTAMP AS week_start, " +
         "(ts::DATE + INTERVAL 2 MONTH)::DATE AS plus_2m, " +
@@ -911,20 +875,20 @@ object SqlSurfaceQueries {
         "datediff('day', DATE '2024-01-01', ts::DATE)::INT AS days_since, " +
         "floor(epoch(ts::TIMESTAMP))::BIGINT AS epoch_s " +
         "FROM events ORDER BY event_id"),
-    "q_variant" ->
-      ("WITH x AS (SELECT event_type, json_extract_string(props, '$.k')::INT AS k FROM events) " +
+    "q_variant" -> Gate(qVariant _,
+      "WITH x AS (SELECT event_type, json_extract_string(props, '$.k')::INT AS k FROM events) " +
         "SELECT event_type, count(*) AS n, sum(k)::BIGINT AS sum_k, " +
         "min(k) AS min_k, max(k) AS max_k FROM x GROUP BY 1 ORDER BY event_type"),
-    "q_json" ->
-      ("WITH x AS (SELECT json_extract_string(props, '$.k')::INT AS k FROM events) " +
+    "q_json" -> Gate(qJson _,
+      "WITH x AS (SELECT json_extract_string(props, '$.k')::INT AS k FROM events) " +
         "SELECT k % 10 AS k_mod, count(*) AS n, min(k) AS min_k, max(k) AS max_k " +
         "FROM x GROUP BY 1 ORDER BY k_mod"),
-    "q_sql" ->
-      ("SELECT event_type, count(*) AS n, min(event_id) AS min_id, " +
+    "q_sql" -> Gate(qSql _,
+      "SELECT event_type, count(*) AS n, min(event_id) AS min_id, " +
         "max(event_id) AS max_id FROM events GROUP BY event_type " +
         "ORDER BY event_type"),
-    "q_recursive" ->
-      ("WITH RECURSIVE walk AS (" +
+    "q_recursive" -> Gate(qRecursive _,
+      "WITH RECURSIVE walk AS (" +
         "SELECT p_partkey AS node, p_partkey AS cur, 0 AS depth FROM part " +
         "UNION ALL " +
         "SELECT node, cur // 2 AS cur, depth + 1 AS depth " +

@@ -245,22 +245,6 @@ object StructuralQueries {
       .orderBy("polygon")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_sssp" -> (qSssp _),
-    "q_hits" -> (qHits _),
-    "q_textrank" -> (qTextrank _),
-    "q_gram" -> (qGram _),
-    "q_kanon" -> (qKanon _),
-    "q_kanon_enforce" -> (qKanonEnforce _),
-    "q_lpa" -> (qLpa _),
-    "q_modularity" -> (qModularity _),
-    "q_adamic" -> (qAdamic _),
-    "q_dp_counts" -> (qDpCounts _),
-    "q_ppr" -> (qPpr _),
-    "q_quantile_dist" -> (qQuantileDist _),
-    "q_pip" -> (qPip _),
-  )
-
   private def coPurchaseEdgesSql: String =
     "SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v " +
       "FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey " +
@@ -297,22 +281,22 @@ object StructuralQueries {
       "(SELECT count(*) AS _n, count(DISTINCT user_id) AS _nd " +
       s"FROM events GROUP BY $groupBy)"
 
-  val oracleSql: Map[String, String] = Map(
-    "q_sssp" -> ("SELECT x AS vertex, dist FROM (" +
+  val gates: Map[String, Gate] = Gate.registry(
+    "q_sssp" -> Gate(qSssp _, "SELECT x AS vertex, dist FROM (" +
       Graphs.ssspOracleSql(
         s"SELECT u, v, 1 + (u + v) % 5 AS w FROM ($coPurchaseEdgesSql)",
         source = 0L, rounds = 10) +
       ") ORDER BY vertex"),
-    "q_hits" -> Graphs.hitsOracleSql(
+    "q_hits" -> Gate(qHits _, Graphs.hitsOracleSql(
       "SELECT DISTINCT o_custkey AS src, l_partkey AS dst " +
         "FROM orders JOIN lineitem ON l_orderkey = o_orderkey",
-      iters = 4),
-    "q_textrank" -> Graphs.pageRankWeightedOracleSql(
+      iters = 4)),
+    "q_textrank" -> Gate(qTextrank _, Graphs.pageRankWeightedOracleSql(
       textRankEdgesSql, damping = 0.85, iters = 3,
       finalSelect = "SELECT x AS token, " + O.r6("r * 1000.0") +
-        " AS rank_k FROM r3 ORDER BY rank_k DESC, token LIMIT 30"),
-    "q_gram" ->
-      ("WITH ex AS (SELECT vec_id, unnest(range(len(embedding))) AS i, " +
+        " AS rank_k FROM r3 ORDER BY rank_k DESC, token LIMIT 30")),
+    "q_gram" -> Gate(qGram _,
+      "WITH ex AS (SELECT vec_id, unnest(range(len(embedding))) AS i, " +
         "unnest(list_transform(embedding, x -> x::DOUBLE)) AS x " +
         "FROM embeddings), " +
         "g AS (SELECT a.i AS i, b.i AS j, count(*)::BIGINT AS n, " +
@@ -324,14 +308,14 @@ object StructuralQueries {
         O.r6("(g.gram - sa.sx * sb.sx / g.n) / g.n") + " AS cov " +
         "FROM g JOIN s sa ON sa.i = g.i JOIN s sb ON sb.i = g.j " +
         "ORDER BY g.i, g.j"),
-    "q_kanon" -> (Seq(
+    "q_kanon" -> Gate(qKanon _, Seq(
       kanonLevelSql("l0_hour",
         "event_type, CAST(ts AS DATE), extract(hour FROM ts)"),
       kanonLevelSql("l1_day", "event_type, CAST(ts AS DATE)"),
       kanonLevelSql("l2_month", "event_type, date_trunc('month', ts)"),
     ).map(q => s"($q)").mkString(" UNION ALL ") + " ORDER BY level"),
-    "q_kanon_enforce" ->
-      ("WITH k AS (SELECT event_type, CAST(ts AS DATE) AS day, " +
+    "q_kanon_enforce" -> Gate(qKanonEnforce _,
+      "WITH k AS (SELECT event_type, CAST(ts AS DATE) AS day, " +
         "extract(hour FROM ts) AS hr, value FROM events), " +
         "big AS (SELECT event_type, day, hr FROM k " +
         "GROUP BY 1, 2, 3 HAVING count(*) >= 5), " +
@@ -339,23 +323,23 @@ object StructuralQueries {
         "SELECT count(*)::BIGINT AS n_kept, " +
         "count(DISTINCT (event_type, day, hr))::BIGINT AS n_groups_kept, " +
         O.dsum("value") + " AS value_sum FROM kept"),
-    "q_lpa" -> ("SELECT x AS vertex, community FROM (" +
+    "q_lpa" -> Gate(qLpa _, "SELECT x AS vertex, community FROM (" +
       Graphs.labelPropagationOracleSql(coPurchaseEdgesSql, rounds = 4) +
       ") ORDER BY vertex"),
-    "q_modularity" -> Graphs.modularityOracleSql(
+    "q_modularity" -> Gate(qModularity _, Graphs.modularityOracleSql(
       coPurchaseEdgesSql,
-      Graphs.labelPropagationOracleSql(coPurchaseEdgesSql, rounds = 4)),
-    "q_adamic" -> Graphs.adamicAdarAdaptiveOracleSql(
-      coPurchaseEdgesSql, capQuantile = 0.99, topK = 50),
-    "q_dp_counts" -> (Privacy.noisyCountsOracleSql(
+      Graphs.labelPropagationOracleSql(coPurchaseEdgesSql, rounds = 4))),
+    "q_adamic" -> Gate(qAdamic _, Graphs.adamicAdarAdaptiveOracleSql(
+      coPurchaseEdgesSql, capQuantile = 0.99, topK = 50)),
+    "q_dp_counts" -> Gate(qDpCounts _, Privacy.noisyCountsOracleSql(
       "events", "event_type", epsilon = 1.0) + " ORDER BY event_type"),
-    "q_ppr" -> Graphs.pagerankPersonalizedOracleSql(
+    "q_ppr" -> Gate(qPpr _, Graphs.pagerankPersonalizedOracleSql(
       coPurchaseEdgesSql, seeds = Seq(0L, 1L, 2L), damping = 0.85, iters = 3,
       finalSelect = "SELECT x AS vertex, " + O.r6("r * 1000.0") +
-        " AS rank_k FROM r3 ORDER BY vertex"),
-    "q_quantile_dist" -> graft.ops.Quantiles.exactQuantilesOracleSql(
-      "lineitem", "l_extendedprice", Seq(0.5, 0.9, 0.99)),
-    "q_pip" -> {
+        " AS rank_k FROM r3 ORDER BY vertex")),
+    "q_quantile_dist" -> Gate(qQuantileDist _, graft.ops.Quantiles.exactQuantilesOracleSql(
+      "lineitem", "l_extendedprice", Seq(0.5, 0.9, 0.99))),
+    "q_pip" -> Gate(qPip _, {
       val pts = "SELECT user_id, " +
         "40.2::DOUBLE + (user_id % 997) * 0.0008::DOUBLE AS lat, " +
         "-74.6::DOUBLE + (event_id % 1013) * 0.0008::DOUBLE AS lon FROM events"
@@ -367,6 +351,6 @@ object StructuralQueries {
           "FROM pts)"
       }.mkString(" UNION ALL ")
       s"WITH pts AS ($pts) $polySelects ORDER BY polygon"
-    },
+    }),
   )
 }

@@ -305,22 +305,11 @@ object TpchDeepQueries {
       .limit(100)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_tpch_q2" -> (qTpchQ2 _),
-    "q_tpch_q9" -> (qTpchQ9 _),
-    "q_tpch_q11" -> (qTpchQ11 _),
-    "q_tpch_q12" -> (qTpchQ12 _),
-    "q_tpch_q15" -> (qTpchQ15 _),
-    "q_tpch_q16" -> (qTpchQ16 _),
-    "q_tpch_q20" -> (qTpchQ20 _),
-    "q_tpch_q21" -> (qTpchQ21 _),
-  )
-
   private val revD = "l_extendedprice * (1 - l_discount)"
 
-  val oracleSql: Map[String, String] = Map(
-    "q_tpch_q2" -> // correlated min — the engine's group-min must agree
-      (s"WITH $psCte, cand AS (SELECT ps_partkey, ps_supplycost, s_acctbal, " +
+  val gates: Map[String, Gate] = Gate.registry(
+    "q_tpch_q2" -> Gate(qTpchQ2 _, // correlated min — the engine's group-min must agree
+      s"WITH $psCte, cand AS (SELECT ps_partkey, ps_supplycost, s_acctbal, " +
         "s_name, n_name FROM ps, part, supplier, nation, region " +
         "WHERE p_partkey = ps_partkey AND p_size = 15 " +
         "AND s_suppkey = ps_suppkey AND s_nationkey = n_nationkey " +
@@ -330,8 +319,8 @@ object TpchDeepQueries {
         "WHERE ps_supplycost = (SELECT min(ps_supplycost) FROM cand c2 " +
         "WHERE c2.ps_partkey = c.ps_partkey) " +
         "ORDER BY acctbal DESC, n_name, s_name, ps_partkey LIMIT 100"),
-    "q_tpch_q9" ->
-      (s"WITH $psCte SELECT n_name AS nation, year(o_orderdate) AS o_year, " +
+    "q_tpch_q9" -> Gate(qTpchQ9 _,
+      s"WITH $psCte SELECT n_name AS nation, year(o_orderdate) AS o_year, " +
         s"${O.dsum(O.r6(s"$revD - ps_supplycost * l_quantity"))} AS sum_profit " +
         "FROM lineitem, ps, part, supplier, nation, orders " +
         "WHERE ps_partkey = l_partkey AND ps_suppkey = l_suppkey " +
@@ -339,8 +328,8 @@ object TpchDeepQueries {
         "AND s_suppkey = l_suppkey AND n_nationkey = s_nationkey " +
         "AND o_orderkey = l_orderkey " +
         "GROUP BY 1, 2 ORDER BY nation, o_year DESC"),
-    "q_tpch_q11" ->
-      (s"WITH $psCte, np AS (SELECT ps_partkey, " +
+    "q_tpch_q11" -> Gate(qTpchQ11 _,
+      s"WITH $psCte, np AS (SELECT ps_partkey, " +
         s"${O.r6("ps_supplycost * ps_availqty")} AS v FROM ps, supplier, nation " +
         "WHERE ps_suppkey = s_suppkey AND s_nationkey = n_nationkey " +
         "AND n_name = 'NATION_19') " +
@@ -349,8 +338,8 @@ object TpchDeepQueries {
         "AS sumv FROM np GROUP BY 1) " +
         "WHERE sumv > (SELECT CAST(CAST(sum(CAST(v AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) " +
         "* 0.001 FROM np) ORDER BY value DESC, ps_partkey"),
-    "q_tpch_q12" ->
-      ("SELECT CASE WHEN date_diff('day', o_orderdate::DATE, l_shipdate::DATE) " +
+    "q_tpch_q12" -> Gate(qTpchQ12 _,
+      "SELECT CASE WHEN date_diff('day', o_orderdate::DATE, l_shipdate::DATE) " +
         "> 60 THEN 'SLOW' WHEN date_diff('day', o_orderdate::DATE, " +
         "l_shipdate::DATE) <= 7 THEN 'FAST' ELSE 'MED' END AS delay_class, " +
         "CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') " +
@@ -361,16 +350,16 @@ object TpchDeepQueries {
         "AND l_shipdate >= TIMESTAMP '1997-01-01' " +
         "AND l_shipdate < TIMESTAMP '1998-01-01' " +
         "GROUP BY 1 ORDER BY delay_class"),
-    "q_tpch_q15" ->
-      (s"WITH rev AS (SELECT l_suppkey, ${O.dsum(revD)} AS total_revenue " +
+    "q_tpch_q15" -> Gate(qTpchQ15 _,
+      s"WITH rev AS (SELECT l_suppkey, ${O.dsum(revD)} AS total_revenue " +
         "FROM lineitem WHERE l_shipdate >= TIMESTAMP '1997-01-01' " +
         "AND l_shipdate < TIMESTAMP '1997-04-01' GROUP BY 1) " +
         "SELECT s_suppkey, s_name, total_revenue FROM supplier, rev " +
         "WHERE s_suppkey = l_suppkey " +
         "AND total_revenue = (SELECT max(total_revenue) FROM rev) " +
         "ORDER BY s_suppkey"),
-    "q_tpch_q16" ->
-      ("SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS " +
+    "q_tpch_q16" -> Gate(qTpchQ16 _,
+      "SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS " +
         "supplier_cnt FROM (SELECT DISTINCT l_partkey, l_suppkey " +
         "FROM lineitem) pairs, part " +
         "WHERE p_partkey = l_partkey AND p_brand <> 'Brand#4' " +
@@ -378,8 +367,8 @@ object TpchDeepQueries {
         "AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier " +
         "WHERE s_acctbal < 0) " +
         "GROUP BY 1, 2, 3 ORDER BY supplier_cnt DESC, p_brand, p_type, p_size"),
-    "q_tpch_q20" -> // correlated per-pair scalar — engine decorrelates
-      (s"WITH $psCte SELECT s_name, ${O.r6("s_acctbal")} AS acctbal " +
+    "q_tpch_q20" -> Gate(qTpchQ20 _, // correlated per-pair scalar — engine decorrelates
+      s"WITH $psCte SELECT s_name, ${O.r6("s_acctbal")} AS acctbal " +
         "FROM supplier, nation " +
         "WHERE s_nationkey = n_nationkey AND n_name = 'NATION_19' " +
         "AND s_suppkey IN (SELECT ps_suppkey FROM ps " +
@@ -389,8 +378,8 @@ object TpchDeepQueries {
         "WHERE l_partkey = ps_partkey AND l_suppkey = ps_suppkey " +
         "AND l_shipdate >= TIMESTAMP '1997-01-01' " +
         "AND l_shipdate < TIMESTAMP '1998-01-01')) ORDER BY s_name"),
-    "q_tpch_q21" -> // EXISTS + NOT EXISTS, correlated on key AND supplier ≠
-      ("WITH lo AS (SELECT l_orderkey AS ok, l_suppkey AS sk, " +
+    "q_tpch_q21" -> Gate(qTpchQ21 _, // EXISTS + NOT EXISTS, correlated on key AND supplier ≠
+      "WITH lo AS (SELECT l_orderkey AS ok, l_suppkey AS sk, " +
         "(l_shipdate > o_orderdate + INTERVAL 30 DAY) AS late " +
         "FROM lineitem, orders " +
         "WHERE o_orderkey = l_orderkey AND o_orderstatus = 'F') " +

@@ -76,7 +76,7 @@ class PlanSpec extends SparkTestBase {
     // the custom Catalyst expressions must live INSIDE a codegen span,
     // not fall back to interpreted eval (they all implement doGenCode;
     // this pins that the registration path keeps it)
-    val sim = stars(graft.queries.ExtQueries.queries("q_dedup_simhash")(spark, Sf0001))
+    val sim = stars(SparkEntry.queries("q_dedup_simhash")(spark, Sf0001))
     assert("""\*\(\d+\) Project \[.*simhash""".r.findFirstIn(sim).isDefined,
       s"simhash64 projection not inside a codegen span:\n$sim")
   }

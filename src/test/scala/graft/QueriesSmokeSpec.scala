@@ -53,7 +53,22 @@ class QueriesSmokeSpec extends SparkTestBase {
   }
 
   test("every oracle key has a matching query") {
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+    assert(SparkEntry.oracleSql.keySet === SparkEntry.queries.keySet)
+  }
+
+  private val stub = graft.queries.Gate((_, _) => spark.emptyDataFrame, "SELECT 1")
+
+  test("a gate registry rejects a name given twice") {
+    val e = intercept[IllegalArgumentException](
+      graft.queries.Gate.registry("q_a" -> stub, "q_b" -> stub, "q_a" -> stub))
+    assert(e.getMessage.contains("q_a") && !e.getMessage.contains("q_b"))
+  }
+
+  test("SparkEntry rejects one gate name registered by two objects") {
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.merge(Map("q_a" -> stub), Map("q_b" -> stub, "q_a" -> stub)))
+    assert(e.getMessage.contains("q_a"))
+    assert(SparkEntry.merge(Map("q_a" -> stub), Map("q_b" -> stub)).size === 2)
   }
 
   /** Pinned registry size: a module dropping out of the `++` chain in

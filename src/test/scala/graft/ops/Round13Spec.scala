@@ -139,7 +139,7 @@ class Round13Spec extends SparkTestBase {
     // contract check.py relies on: setup creates pts/j/core/e/labels,
     // the loop round-robins labels via labels_next, final consumes
     // `labels`, and the round bound equals the unrolled 96
-    val it = graft.queries.MiningQueries.iterativeOracles("q_dbscan")
+    val it = graft.SparkEntry.iterativeOracles("q_dbscan")
     // 4096 is a runaway bound; the loop exits at the label-sum fixpoint
     // (measured: 12 rounds at sf0.01, >96 at sf1 — which is WHY the
     // cap exceeds the unrolled spelling's 96)
@@ -148,7 +148,7 @@ class Round13Spec extends SparkTestBase {
     assert(it.loop.head.contains("TEMP TABLE labels_next"))
     assert(it.finalSql.startsWith("WITH cc AS (SELECT id, l AS cluster_id FROM labels)"))
     // and the unrolled oracle still carries the same CC round body
-    val unrolled = graft.queries.MiningQueries.oracleSql("q_dbscan")
+    val unrolled = graft.SparkEntry.oracleSql("q_dbscan")
     assert(unrolled.contains("least(t.l, coalesce(nb.ml, t.l), coalesce(jp.l, t.l))"))
     assert(it.loop.head.contains("least(t.l, coalesce(nb.ml, t.l), coalesce(jp.l, t.l))"))
   }
