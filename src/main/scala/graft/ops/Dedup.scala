@@ -387,7 +387,7 @@ object Dedup {
     // union-of-two-selects spelling needed the pair list checkpointed
     // first so the two branches would not each re-run it — one
     // pairs-sized localCheckpoint write+read dropped from the setup.
-    // Generations ROTATE (graft.util.Lineage): the label frame is
+    // Generations ROTATE (Lineage.fixpoint): the label frame is
     // corpus-sized, and without freeing, every round's checkpoint
     // blocks stay in executor storage until a driver GC — rounds × |V|
     // rows of dead weight in a long-lived session.
@@ -395,35 +395,28 @@ object Dedup {
       pairs.select(inline(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst"))))))
-    var labels = Lineage.checkpoint(
-      edges.df.select(col("src").as("id")).distinct()
-        .withColumn("label", col("id")))
     // labels only ever DECREASE under min-propagation, so an unchanged
     // label sum proves the fixed point — one aggregate per round instead
-    // of a join+diff; DECIMAL sum cannot overflow or lose precision
-    // coalesce guards the zero-pair corpus: sum over an empty frame is
-    // null, and without it the first compareTo below would NPE
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("label").cast("decimal(38,0)")),
-        lit(0).cast("decimal(38,0)"))).head().getDecimal(0)
-    var prevSum = labelSum(labels.df)
-    var converged = false
-    while (!converged) {
+    // of a join+diff. No round cap: min-labels strictly decrease until
+    // the fixpoint, so the loop terminates.
+    val (Seq(labels), _) = Lineage.fixpoint("duplicateClusters",
+        Seq(edges.df.select(col("src").as("id")).distinct()
+          .withColumn("label", col("id"))), Int.MaxValue) { s =>
       val neighbourLabels = edges.df
-        .join(labels.df.withColumnRenamed("id", "src"), "src")
+        .join(s.head.withColumnRenamed("id", "src"), "src")
         .select(col("dst").as("id"), col("label"))
-      val next = Lineage.rotate(
-        labels.df.union(neighbourLabels)
-          .groupBy("id").agg(min("label").as("label")),
-        labels)
-      val nextSum = labelSum(next.df)
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      labels = next
-    }
+      s.head.union(neighbourLabels).groupBy("id").agg(min("label").as("label"))
+    }(Lineage.unchanged(s => labelSum(s.head)))
     Lineage.free(edges)
     labels.df.select(col("id").as("doc_id"), col("label").as("cluster_id"))
   }
+
+  /** Σ label as an exact DECIMAL — the connected-components loops'
+    * settle witness. The coalesce guards the zero-pair corpus: sum over
+    * an empty frame is null. */
+  private def labelSum(df: DataFrame): java.math.BigDecimal =
+    df.agg(coalesce(sum(col("label").cast("decimal(38,0)")),
+      lit(0).cast("decimal(38,0)"))).head().getDecimal(0)
 
   /** Connected components in O(log n) rounds: min-label hooking, a
     * pointer shortcut, AND per-round edge CONTRACTION — the
@@ -461,8 +454,8 @@ object Dedup {
     * ordered chain stays logarithmic.
     *
     * Output contract unchanged: (doc_id, cluster_id = min reachable
-    * id). `maxRounds` bounds runaway iteration (and lets specs assert
-    * the logarithmic convergence).
+    * id). `maxRounds` bounds the hook and pointer-chase rounds together
+    * (and lets specs assert the logarithmic convergence).
     */
   def duplicateClustersFast(pairs: DataFrame, maxRounds: Int = 48): DataFrame = {
     // generation rotation: see duplicateClusters. Symmetrize in ONE
@@ -470,86 +463,70 @@ object Dedup {
     // pair pipeline is evaluated exactly once, directly into the edge
     // checkpoint — the former pairs-sized p0 checkpoint existed only to
     // keep a union's two branches from re-running the upstream.
-    var edges = Lineage.checkpoint(
+    val sym = Lineage.checkpoint(
       pairs.select(inline(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst"))))))
-    var labels = Lineage.checkpoint(
-      edges.df.select(col("src").as("id")).distinct()
-        .withColumn("label", col("id")))
-    var rounds = 0
-    while (!edges.df.isEmpty) {
-      rounds += 1
-      require(rounds <= maxRounds,
-        s"connected components did not converge in $maxRounds rounds")
-      // hook: min label over the closed neighbourhood of the
-      // contracted edge list (symmetric, so one flow direction covers
-      // every neighbourhood). Deliberately LAZY although the shortcut
-      // self-join below evaluates it twice: an eager per-round
-      // checkpoint was measured (r15, interleaved A/B ×3 at sf0.1)
-      // consistently SLOWER (lazy 11.6–13.4 s vs eager 14.8–20.5 s for
-      // the whole loop) — the per-round materialization job costs more
-      // than the duplicate join+aggregate at bench scale.
-      val hooked = labels.df.union(
-        edges.df.join(labels.df.withColumnRenamed("id", "src"), "src")
-          .select(col("dst").as("id"), col("label")))
-        .groupBy("id").agg(min("label").as("label"))
-      // shortcut: label ← label(label). Labels always point at node ids
-      // (mins of reachable sets), so the self-join hits; coalesce
-      // guards the root, whose label is itself
-      labels = Lineage.rotate(
-        hooked
-          .join(
-            hooked.select(col("id").as("label"), col("label").as("label2")),
-            Seq("label"), "left")
-          .select(col("id"), coalesce(col("label2"), col("label")).as("label")),
-        labels)
-      // contract: rewrite both endpoints onto the updated labels, drop
-      // self-loops (settled regions) and duplicate super-edges
-      edges = Lineage.rotate(
-        edges.df
-          .join(labels.df.select(col("id").as("src"), col("label").as("_ls")),
+        struct(col("doc_b").as("src"), col("doc_a").as("dst")))))).df
+    // state: (labels, contracted edges); both initial generations are
+    // Lineage.fixpoint's to free
+    val (Seq(hooked, contracted), hooks) = Lineage.fixpoint(
+        "connected components",
+        Seq(Lineage.checkpoint(sym.select(col("src").as("id")).distinct()
+          .withColumn("label", col("id"))).df, sym),
+        maxRounds)(
+      { case Seq(labels, edges) =>
+        // hook: min label over the closed neighbourhood of the
+        // contracted edge list (symmetric, so one flow direction covers
+        // every neighbourhood). Deliberately LAZY although the shortcut
+        // self-join below evaluates it twice: an eager per-round
+        // checkpoint was measured (r15, interleaved A/B ×3 at sf0.1)
+        // consistently SLOWER (lazy 11.6–13.4 s vs eager 14.8–20.5 s for
+        // the whole loop) — the per-round materialization job costs more
+        // than the duplicate join+aggregate at bench scale.
+        val hooked = labels.union(
+          edges.join(labels.withColumnRenamed("id", "src"), "src")
+            .select(col("dst").as("id"), col("label")))
+          .groupBy("id").agg(min("label").as("label"))
+        shortcut(hooked)
+      },
+      { case Seq(labels, edges) =>
+        // contract: rewrite both endpoints onto the labels just hooked,
+        // drop self-loops (settled regions) and duplicate super-edges
+        edges
+          .join(labels.select(col("id").as("src"), col("label").as("_ls")),
             Seq("src"), "left")
           .select(coalesce(col("_ls"), col("src")).as("_s"), col("dst"))
-          .join(labels.df.select(col("id").as("dst"), col("label").as("_ld")),
+          .join(labels.select(col("id").as("dst"), col("label").as("_ld")),
             Seq("dst"), "left")
           .select(col("_s").as("src"), coalesce(col("_ld"), col("dst")).as("dst"))
           .filter(col("src") =!= col("dst"))
-          .distinct(),
-        edges)
-    }
-    Lineage.free(edges)
-    // pointer-chase to the fixpoint: at loop exit every REGION ROOT
-    // carries its component min (a root only settles once no contracted
-    // edge touches its region), but contraction may have stranded
-    // interior nodes a few pointer hops behind — their edges were
-    // dropped while their root kept learning. Each chase round doubles
-    // the compressed depth (l ← l(l)), so this is log(strand depth)
-    // label-table self-joins, no edge shuffles; the label sum is
-    // strictly decreasing until the fixed point.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("label").cast("decimal(38,0)")),
-        lit(0).cast("decimal(38,0)"))).head().getDecimal(0)
-    var prevSum = labelSum(labels.df)
-    var settled = false
-    while (!settled) {
-      rounds += 1
-      require(rounds <= maxRounds,
-        s"connected components did not converge in $maxRounds rounds")
-      val next = Lineage.rotate(
-        labels.df
-          .join(
-            labels.df.select(col("id").as("label"), col("label").as("label2")),
-            Seq("label"), "left")
-          .select(col("id"), coalesce(col("label2"), col("label")).as("label")),
-        labels)
-      val nextSum = labelSum(next.df)
-      settled = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      labels = next
-    }
+          .distinct()
+      })(_(1).isEmpty)
+    Lineage.free(contracted)
+    // pointer-chase to the fixpoint, on what is left of the same round
+    // budget: at hook exit every REGION ROOT carries its component min
+    // (a root only settles once no contracted edge touches its region),
+    // but contraction may have stranded interior nodes a few pointer
+    // hops behind — their edges were dropped while their root kept
+    // learning. Each chase round doubles the compressed depth
+    // (l ← l(l)), so this is log(strand depth) label-table self-joins,
+    // no edge shuffles; the label sum is strictly decreasing until the
+    // fixed point.
+    val (Seq(labels), _) = Lineage.fixpoint(
+        s"connected components (pointer chase after $hooks hook rounds)",
+        Seq(hooked.df), maxRounds - hooks)(s => shortcut(s.head))(
+      Lineage.unchanged(s => labelSum(s.head), Some(labelSum(hooked.df))))
     labels.df.select(col("id").as("doc_id"), col("label").as("cluster_id"))
   }
+
+  /** One pointer jump, label ← label(label). Labels always point at
+    * node ids (mins of reachable sets), so the self-join hits; coalesce
+    * guards the root, whose label is itself. */
+  private def shortcut(labels: DataFrame): DataFrame =
+    labels
+      .join(labels.select(col("id").as("label"), col("label").as("label2")),
+        Seq("label"), "left")
+      .select(col("id"), coalesce(col("label2"), col("label")).as("label"))
 
   /** The dedup pipeline's OUTPUT stage: drop every non-canonical cluster
     * member, keeping one representative (the min-id doc — exactly the

@@ -170,13 +170,6 @@ object Graphs {
     // run neither overflows the planner with a 50-deep tree nor holds
     // more than one |V|-sized generation of blocks. Small runs (the
     // common analytics shape) never pay the materialization.
-    // When rotation WILL occur, the loop-invariant caches must
-    // materialize before the first in-loop checkpoint: the registry diff
-    // would otherwise attribute their blocks to that generation and free
-    // them mid-loop (the hitsBipartite edge-generation lesson).
-    if (checkpointEvery > 0 && iters > checkpointEvery) {
-      outgoing.count(); verts.count()
-    }
     var gen: Option[graft.util.Lineage.Gen] = None
     for (i <- 1 to iters) {
       val sums = ranks
@@ -260,11 +253,11 @@ object Graphs {
     * list; rounds are data-dependent but small in practice (a round
     * removes EVERY sub-k vertex simultaneously, so round count is the
     * peel DEPTH, not the vertex count). Like the CC loop, each round
-    * pays one scalar edge-count action for convergence detection —
-    * inherent to iterate-to-fixpoint — and the edge lineage is rotated
-    * through `localCheckpoint` so plans don't grow with rounds.
-    * `maxRounds` is a runaway guard, not a truncation: hitting it
-    * throws rather than returning a non-fixpoint.
+    * pays one scalar action for convergence detection (the sub-k count
+    * of the new degree table) — inherent to iterate-to-fixpoint — and the
+    * degree table rotates through [[graft.util.Lineage.fixpoint]] so
+    * plans don't grow with rounds. `maxRounds` is a runaway guard, not a
+    * truncation: hitting it throws rather than returning a non-fixpoint.
     */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 64): DataFrame = {
     // DELTA peeling: the edge list is scanned, never rewritten. Keep a
@@ -283,39 +276,35 @@ object Graphs {
       .unionAll(edges.select(col("v").as("x"), col("u").as("y")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val verts = sym.select(col("x")).distinct()
-    var deg = sym.groupBy("x").agg(count(lit(1)).as("d"))
-    var gen: Option[graft.util.Lineage.Gen] = None
-    var rounds = 0
-    var done = false
-    while (!done) {
-      val removed = deg.filter(col("d") < k).select(col("x").as("y")).cache()
-      if (removed.count() == 0) done = true
-      else {
-        val loss = sym.join(removed, "y")
-          .groupBy("x").agg(count(lit(1)).as("lost"))
-        val nxt = deg.filter(col("d") >= k)
-          .join(loss, Seq("x"), "left")
-          .select(col("x"),
-            (col("d") - coalesce(col("lost"), lit(0L))).as("d"))
-        val g = gen match {
-          case Some(prev) => graft.util.Lineage.rotate(nxt, prev)
-          case None => graft.util.Lineage.checkpoint(nxt)
-        }
-        gen = Some(g)
-        deg = g.df
-        rounds += 1
-        if (rounds >= maxRounds)
-          throw new IllegalStateException(
-            s"kCore(k=$k) did not reach a fixpoint in $maxRounds rounds")
-      }
-      removed.unpersist()
+    // The settle check counts the new generation's sub-k frontier and
+    // CACHES it: the next peel reads that same frontier plan, so its
+    // planner sees the real (small) size and broadcasts it instead of
+    // re-shuffling the edge list every round (sf0.1: 20 vs 65 MB
+    // shuffled). Frontiers are disjoint (a vertex is peeled once), so
+    // the caches total at most |V| ids until they are dropped at exit.
+    def frontier(deg: DataFrame) = deg.filter(col("d") < k).select(col("x").as("y"))
+    val counted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def settled(deg: DataFrame): Boolean = {
+      counted += frontier(deg).cache()
+      counted.last.count() == 0
     }
+    val deg0 = sym.groupBy("x").agg(count(lit(1)).as("d"))
+    settled(deg0) // round 1's frontier, counted and cached like the rest
+    val (Seq(deg), _) = graft.util.Lineage.fixpoint(s"kCore(k=$k)",
+        Seq(deg0), maxRounds) { s =>
+      val loss = sym.join(frontier(s.head), "y")
+        .groupBy("x").agg(count(lit(1)).as("lost"))
+      s.head.filter(col("d") >= k)
+        .join(loss, Seq("x"), "left")
+        .select(col("x"), (col("d") - coalesce(col("lost"), lit(0L))).as("d"))
+    }(s => settled(s.head))
     // loop-exit hygiene: see [[pageRank]]
     val out = graft.util.Lineage.checkpoint(
-      verts.join(deg.withColumnRenamed("d", "core_degree"), Seq("x"), "left")
+      verts.join(deg.df.withColumnRenamed("d", "core_degree"), Seq("x"), "left")
         .select(col("x"), col("core_degree").isNotNull.as("in_core"),
           col("core_degree")))
-    gen.foreach(graft.util.Lineage.free)
+    graft.util.Lineage.free(deg)
+    counted.foreach(_.unpersist(blocking = false))
     sym.unpersist(blocking = false)
     out.df
   }
@@ -405,9 +394,10 @@ object Graphs {
     * (reached-count, distance-sum) pair — min-relaxation monotonically
     * grows the reached set and shrinks the sum, so the pair is a
     * fixpoint witness — at the cost of one 1-row action per round (the
-    * CC/k-core scalar discipline). Lineage rotates through
-    * `localCheckpoint` every 8 rounds; `maxRounds` is a runaway guard
-    * that throws rather than returning a non-fixpoint.
+    * CC/k-core scalar discipline). The distance frame rotates through
+    * [[graft.util.Lineage.fixpoint]] while the symmetrized edges stay a
+    * lazily persisted invariant; `maxRounds` is a runaway guard that
+    * throws rather than returning a non-fixpoint.
     *
     * @return every vertex with `dist` (BIGINT), NULL when unreachable.
     */
@@ -417,40 +407,28 @@ object Graphs {
         col("w").cast("long")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val verts = e.select(col("u").as("x")).distinct()
-    var dist = verts.filter(col("x") === source)
-      .select(col("x"), lit(0L).as("d"))
-    var state = (-1L, -1L)
-    var rounds = 0
-    var done = false
-    while (!done) {
+    val (Seq(dist), _) = graft.util.Lineage.fixpoint("sssp",
+        Seq(verts.filter(col("x") === source).select(col("x"), lit(0L).as("d"))),
+        maxRounds) { s =>
       // USING-join on the renamed frontier key: the rename mints fresh
       // attribute ids, so the shared lineage with `e` never trips
       // Spark's self-join ambiguity check
-      var nxt = dist.withColumnRenamed("x", "u")
+      s.head.withColumnRenamed("x", "u")
         .join(e, Seq("u"))
         .select(col("v").as("x"), (col("d") + col("w")).as("d"))
-        .unionAll(dist)
+        .unionAll(s.head)
         .groupBy("x").agg(min(col("d")).as("d"))
-      if (rounds % 8 == 7) nxt = nxt.localCheckpoint(eager = false)
-      nxt = nxt.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val row = nxt.agg(count(lit(1)), sum(col("d"))).head()
+    }(graft.util.Lineage.unchanged { s =>
+      val row = s.head.agg(count(lit(1)), sum(col("d"))).head()
       // null-safe witness read: when `source` is not a vertex of the
       // edge list the frontier is empty, so sum(d) is NULL — the
       // contract then returns every vertex at NULL dist, not an NPE
-      val s2 = (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
-      dist.unpersist()
-      dist = nxt
-      done = s2 == state
-      state = s2
-      rounds += 1
-      if (!done && rounds >= maxRounds)
-        throw new IllegalStateException(
-          s"sssp did not reach a fixpoint in $maxRounds rounds")
-    }
+      (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
+    })
     // loop-exit hygiene: see [[pageRank]]
     val out = graft.util.Lineage.checkpoint(
-      verts.join(dist, Seq("x"), "left").select(col("x"), col("d").as("dist")))
-    dist.unpersist(blocking = false)
+      verts.join(dist.df, Seq("x"), "left").select(col("x"), col("d").as("dist")))
+    graft.util.Lineage.free(dist)
     e.unpersist(blocking = false)
     out.df
   }
@@ -724,11 +702,10 @@ object Graphs {
     import graft.queries.Det.r6
     import graft.util.Lineage
     require(iters >= 1, s"hitsBipartite needs iters >= 1, got $iters")
-    // the edge list is its OWN tracked generation (eager localCheckpoint,
-    // not a lazy cache): a lazy cache would first materialize inside
-    // iteration 1's generation checkpoint, whose registry diff would
-    // mis-attribute the edge blocks to that generation and free them on
-    // rotation — silently un-caching the loop invariant
+    // the edge list materializes once, eagerly, as its own generation:
+    // every half-iteration joins it, and the caller's edge plan must not
+    // re-run per join; it is freed as soon as the last half-iteration
+    // has read it
     val eGen = Lineage.checkpoint(edges.select(col("src"), col("dst")))
     val e = eGen.df
     val srcs = e.select(col("src").as("x")).distinct()
@@ -826,8 +803,8 @@ object Graphs {
     *
     * Same fixpoint discipline as [[sssp]]: the (count, sum) witness
     * pair is monotone under BFS relaxation, one 1-row driver scalar
-    * per round, lineage rotated through `localCheckpoint`, `maxRounds`
-    * a loud runaway guard.
+    * per round, lineage rotated through [[graft.util.Lineage.fixpoint]],
+    * `maxRounds` a loud runaway guard.
     */
   def closenessCentrality(
       edges: DataFrame,
@@ -840,38 +817,27 @@ object Graphs {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     import spark.implicits._
     val seedDf = seeds.toDF("s")
-    var dist = seedDf.select(col("s"), col("s").as("x"), lit(0L).as("d"))
-    var state = (-1L, -1L)
-    var rounds = 0
-    var done = false
-    while (!done) {
-      var nxt = dist.withColumnRenamed("x", "u")
+    val (Seq(dist), _) = graft.util.Lineage.fixpoint("closenessCentrality",
+        Seq(seedDf.select(col("s"), col("s").as("x"), lit(0L).as("d"))),
+        maxRounds) { s =>
+      s.head.withColumnRenamed("x", "u")
         .join(e, Seq("u"))
         .select(col("s"), col("v").as("x"), (col("d") + 1L).as("d"))
-        .unionAll(dist)
+        .unionAll(s.head)
         .groupBy("s", "x").agg(min(col("d")).as("d"))
-      if (rounds % 8 == 7) nxt = nxt.localCheckpoint(eager = false)
-      nxt = nxt.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val row = nxt.agg(count(lit(1)), sum(col("d"))).head()
-      val s2 = (row.getLong(0), row.getLong(1))
-      dist.unpersist()
-      dist = nxt
-      done = s2 == state
-      state = s2
-      rounds += 1
-      if (!done && rounds >= maxRounds)
-        throw new IllegalStateException(
-          s"closenessCentrality did not settle in $maxRounds rounds")
-    }
+    }(graft.util.Lineage.unchanged { s =>
+      val row = s.head.agg(count(lit(1)), sum(col("d"))).head()
+      (row.getLong(0), row.getLong(1))
+    })
     // loop-exit hygiene: see [[pageRank]]
     val out = graft.util.Lineage.checkpoint(
-      dist.groupBy(col("s").as("seed"))
+      dist.df.groupBy(col("s").as("seed"))
         .agg(count(lit(1)).as("n_reached"), sum(col("d")).as("dist_sum"))
         .select(col("seed"), col("n_reached"), col("dist_sum"),
           when(col("dist_sum") > 0, graft.queries.Det.r6(
             (col("n_reached") - 1).cast("double") /
               col("dist_sum").cast("double"))).as("closeness")))
-    dist.unpersist(blocking = false)
+    graft.util.Lineage.free(dist)
     e.unpersist(blocking = false)
     out.df
   }

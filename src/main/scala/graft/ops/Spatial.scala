@@ -268,93 +268,81 @@ object Spatial {
       cellDeg: Double,
       maxAbsLatDeg: Double,
       maxCellOccupancy: Int = 64): DataFrame = {
-    val sc = points.sparkSession.sparkContext
-    // exit-hygiene sweep contract (see the release at the end): the
-    // registry diff attributes every RDD persisted DURING this call to
-    // this op. That holds only single-driver-threaded, and only when
-    // the caller does not lazily materialize ITS OWN cached frames
-    // inside this op's actions (a caller-owned Dataset cache whose
-    // first materialization happens here would be swept with the
-    // op-internal blocks — re-cache or materialize it before calling).
-    val persistedBefore = sc.getPersistentRDDs.keySet
-    // r15: rebuild at the feasibility floor UNCONDITIONALLY (when the
-    // caller's cell sits above it and the knob is armed). The r14 form
-    // sampled max cell occupancy first and only shrank past a bound —
-    // but shrinking strictly shrinks the 3×3 candidate area ∝ cellDeg²
-    // at ANY density while the exact-distance survivors (and so every
-    // label) stay identical, so the sample was a pure extra pass
-    // guarding a change with no downside (measured sf0.1: 3.2M → 1.0M
-    // candidate pairs, identical 278k survivors). `maxCellOccupancy <= 0`
-    // still pins the caller's grid verbatim.
-    val floorC = minCellDeg(radiusM, maxAbsLatDeg) * 1.02
-    val cellUsed =
-      if (maxCellOccupancy <= 0 || cellDeg <= floorC) cellDeg else floorC
-    // canonical neighbor pairs (each unordered pair once, distance-
-    // checked once — [[selfNeighborPairs]], half the two-sided
-    // candidate stream) cached; the symmetric view consumers need is a
-    // union of the two directions over that half-sized cache. Reused
-    // three times (degree count, core-core edges, border assignment).
-    val canon = selfNeighborPairs(points, idCol, latCol, lonCol,
-        radiusM, cellUsed, maxAbsLatDeg)
-      .cache()
-    val nbrs = canon.unionAll(
-      canon.select(col("b").as("a"), col("a").as("b")))
-    // the core set is checkpointed EAGERLY (vertex-sized — tiny): the
-    // degree aggregate feeds five consumers across the gate's jobs
-    // (both sides of the core-edge semi-joins, each coreClusters copy,
-    // and the border anti-join), and Spark 4.1's AQE does not reuse
-    // canonically identical stages (the r15 surprisal finding), so
-    // without materialization each consumer re-runs the union+aggregate
-    // over the cached pair list. Interleaved same-JVM A/B ×3
-    // (OPTIMIZATION_r15 §13): checkpointed core faster in every cycle,
-    // min 11.7 vs 13.4 s, med 15.0 vs 19.1 s, output bit-identical.
-    // (The sibling prev-generation CC shortcut was measured there too
-    // and REJECTED: it saves one hook evaluation per round but costs
-    // +2 contraction rounds on this lattice, 8 → 10, net slower.)
-    val core = graft.util.Lineage.checkpoint(
-      nbrs.groupBy(col("a").as("pid"))
-        .agg((count(lit(1)) + 1).as("_nb"))
-        .filter(col("_nb") >= minPts)
-        .select("pid")).df
-    val coreEdges = nbrs
-      .join(core.select(col("pid").as("a")), "a")
-      .join(core.select(col("pid").as("b")), "b")
-      .filter(col("a") < col("b"))
-      .select(col("a").as("doc_a"), col("b").as("doc_b"))
-    val cc = Dedup.duplicateClustersFast(coreEdges)
-      .select(col("doc_id").as("pid"), col("cluster_id"))
-    val coreClusters = core
-      .join(cc, Seq("pid"), "left")
-      .select(col("pid"),
-        coalesce(col("cluster_id"), col("pid")).as("cluster_id"))
-    val borderAssign = nbrs
-      .join(core.select(col("pid").as("a")), Seq("a"), "left_anti")
-      .join(coreClusters.select(col("pid").as("b"), col("cluster_id")), "b")
-      .groupBy(col("a").as("pid"))
-      .agg(min(col("cluster_id")).as("cluster_id"))
-    val labeled = points.select(col(idCol).as("pid"))
-      .join(coreClusters.select(col("pid"), col("cluster_id").as("_ccl")),
-        Seq("pid"), "left")
-      .join(borderAssign.select(col("pid"), col("cluster_id").as("_bcl")),
-        Seq("pid"), "left")
-      .select(
-        col("pid").as("point_id"),
-        when(col("_ccl").isNotNull, lit("core"))
-          .when(col("_bcl").isNotNull, lit("border"))
-          .otherwise(lit("noise")).as("role"),
-        coalesce(col("_ccl"), col("_bcl")).as("cluster_id"))
     // exit hygiene (the triangleCounts discipline): the returned plan
     // must not stay rooted in the pair cache — the op's LARGEST
     // intermediate — or in the CC loop's final checkpoint generation,
     // or a library caller keeps both resident for the session. The
-    // point-sized label frame materializes eagerly; then every block
-    // this call persisted (the pair cache AND the embedded clustering's
-    // generation) is released, leaving only the result's own blocks.
-    val out = graft.util.Lineage.checkpoint(labeled)
-    val reg = sc.getPersistentRDDs
-    (reg.keySet -- persistedBefore -- out.ids)
-      .foreach(id => reg.get(id).foreach(_.unpersist(blocking = false)))
-    out.df
+    // point-sized label frame materializes eagerly and every block this
+    // call persisted (the pair cache AND the embedded clustering's
+    // generation) is released, under Lineage.sweep's caveat.
+    graft.util.Lineage.sweep(points.sparkSession) {
+      // r15: rebuild at the feasibility floor UNCONDITIONALLY (when the
+      // caller's cell sits above it and the knob is armed). The r14 form
+      // sampled max cell occupancy first and only shrank past a bound —
+      // but shrinking strictly shrinks the 3×3 candidate area ∝ cellDeg²
+      // at ANY density while the exact-distance survivors (and so every
+      // label) stay identical, so the sample was a pure extra pass
+      // guarding a change with no downside (measured sf0.1: 3.2M → 1.0M
+      // candidate pairs, identical 278k survivors). `maxCellOccupancy <= 0`
+      // still pins the caller's grid verbatim.
+      val floorC = minCellDeg(radiusM, maxAbsLatDeg) * 1.02
+      val cellUsed =
+        if (maxCellOccupancy <= 0 || cellDeg <= floorC) cellDeg else floorC
+      // canonical neighbor pairs (each unordered pair once, distance-
+      // checked once — [[selfNeighborPairs]], half the two-sided
+      // candidate stream) cached; the symmetric view consumers need is a
+      // union of the two directions over that half-sized cache. Reused
+      // three times (degree count, core-core edges, border assignment).
+      val canon = selfNeighborPairs(points, idCol, latCol, lonCol,
+          radiusM, cellUsed, maxAbsLatDeg)
+        .cache()
+      val nbrs = canon.unionAll(
+        canon.select(col("b").as("a"), col("a").as("b")))
+      // the core set is checkpointed EAGERLY (vertex-sized — tiny): the
+      // degree aggregate feeds five consumers across the gate's jobs
+      // (both sides of the core-edge semi-joins, each coreClusters copy,
+      // and the border anti-join), and Spark 4.1's AQE does not reuse
+      // canonically identical stages (the r15 surprisal finding), so
+      // without materialization each consumer re-runs the union+aggregate
+      // over the cached pair list. Interleaved same-JVM A/B ×3
+      // (OPTIMIZATION_r15 §13): checkpointed core faster in every cycle,
+      // min 11.7 vs 13.4 s, med 15.0 vs 19.1 s, output bit-identical.
+      // (The sibling prev-generation CC shortcut was measured there too
+      // and REJECTED: it saves one hook evaluation per round but costs
+      // +2 contraction rounds on this lattice, 8 → 10, net slower.)
+      val core = graft.util.Lineage.checkpoint(
+        nbrs.groupBy(col("a").as("pid"))
+          .agg((count(lit(1)) + 1).as("_nb"))
+          .filter(col("_nb") >= minPts)
+          .select("pid")).df
+      val coreEdges = nbrs
+        .join(core.select(col("pid").as("a")), "a")
+        .join(core.select(col("pid").as("b")), "b")
+        .filter(col("a") < col("b"))
+        .select(col("a").as("doc_a"), col("b").as("doc_b"))
+      val cc = Dedup.duplicateClustersFast(coreEdges)
+        .select(col("doc_id").as("pid"), col("cluster_id"))
+      val coreClusters = core
+        .join(cc, Seq("pid"), "left")
+        .select(col("pid"),
+          coalesce(col("cluster_id"), col("pid")).as("cluster_id"))
+      val borderAssign = nbrs
+        .join(core.select(col("pid").as("a")), Seq("a"), "left_anti")
+        .join(coreClusters.select(col("pid").as("b"), col("cluster_id")), "b")
+        .groupBy(col("a").as("pid"))
+        .agg(min(col("cluster_id")).as("cluster_id"))
+      points.select(col(idCol).as("pid"))
+        .join(coreClusters.select(col("pid"), col("cluster_id").as("_ccl")),
+          Seq("pid"), "left")
+        .join(borderAssign.select(col("pid"), col("cluster_id").as("_bcl")),
+          Seq("pid"), "left")
+        .select(
+          col("pid").as("point_id"),
+          when(col("_ccl").isNotNull, lit("core"))
+            .when(col("_bcl").isNotNull, lit("border"))
+            .otherwise(lit("noise")).as("role"),
+          coalesce(col("_ccl"), col("_bcl")).as("cluster_id"))
+    }
   }
 
   /** A polygon for [[pointInPolygons]]: closed ring of (lon, lat) =

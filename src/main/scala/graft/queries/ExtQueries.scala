@@ -186,8 +186,8 @@ object ExtQueries {
       // NOT CacheManager-tracked, so spark.catalog.clearCache() in the
       // harness sweeps cannot silently drop the memo's storage — only
       // invalidateSharedStages() (which pairs block release with memo
-      // removal) can. Registry is driver-single-threaded (Lineage's
-      // id-attribution caveat).
+      // removal) can. The memo entry owns exactly the checkpoint's own
+      // RDD (Lineage.checkpoint's attribution).
       graft.util.Lineage.checkpoint(
         Dedup.duplicateClustersFast(
           Dedup.nearDuplicatePairs(

@@ -124,27 +124,18 @@ object StructuralQueries {
     // verdict is itself materialized and every block this gate pinned
     // (edge generation + LPA's final label generation) is released —
     // the Spark-side mirror of the oracle's AS MATERIALIZED fix.
-    val sc = s.sparkContext
-    // registry-diff sweep: attributes all RDDs persisted during the
-    // call to this gate — valid single-driver-threaded with no
-    // lazily-cached caller frames materializing inside (the
-    // Lineage.checkpoint id-attribution caveat, same contract)
-    val persistedBefore = sc.getPersistentRDDs.keySet
-    val eGen = graft.util.Lineage.checkpoint(
-      Graphs.coOccurrenceEdges(
-        Tables.table(s, dir, "lineitem"), "l_orderkey", "l_partkey"))
-    // cacheEdges = false: eGen is already checkpoint-backed, and LPA's
-    // internal cache would store the list AGAIN at 2× width — at sf10
-    // the duplicate pushed storage into eviction churn (277 s vs the
-    // 189.9 s pre-checkpoint composition; SCALE.md §10g)
-    val labels = Graphs.labelPropagation(eGen.df, rounds = 4, cacheEdges = false)
-      .select(col("x"), col("community"))
-    val out = graft.util.Lineage.checkpoint(
-      Graphs.modularity(eGen.df, labels))
-    val reg = sc.getPersistentRDDs
-    (reg.keySet -- persistedBefore -- out.ids)
-      .foreach(id => reg.get(id).foreach(_.unpersist(blocking = false)))
-    out.df
+    graft.util.Lineage.sweep(s) {
+      val edges = graft.util.Lineage.checkpoint(
+        Graphs.coOccurrenceEdges(
+          Tables.table(s, dir, "lineitem"), "l_orderkey", "l_partkey")).df
+      // cacheEdges = false: the edges are already checkpoint-backed, and
+      // LPA's internal cache would store the list AGAIN at 2× width — at
+      // sf10 the duplicate pushed storage into eviction churn (277 s vs
+      // the 189.9 s pre-checkpoint composition; SCALE.md §10g)
+      val labels = Graphs.labelPropagation(edges, rounds = 4, cacheEdges = false)
+        .select(col("x"), col("community"))
+      Graphs.modularity(edges, labels)
+    }
   }
 
   /** Personalized PageRank ([[Graphs.pageRankPersonalized]]) seeded at
@@ -167,23 +158,13 @@ object StructuralQueries {
     * self-join otherwise replays for the cap scan + the wedge join),
     * all gate-pinned blocks released on exit.
     */
-  def qAdamic(s: SparkSession, dir: String): DataFrame = {
-    val sc = s.sparkContext
-    // registry-diff sweep: attributes all RDDs persisted during the
-    // call to this gate — valid single-driver-threaded with no
-    // lazily-cached caller frames materializing inside (the
-    // Lineage.checkpoint id-attribution caveat, same contract)
-    val persistedBefore = sc.getPersistentRDDs.keySet
-    val eGen = graft.util.Lineage.checkpoint(
-      Graphs.coOccurrenceEdges(
-        Tables.table(s, dir, "lineitem"), "l_orderkey", "l_partkey"))
-    val out = graft.util.Lineage.checkpoint(
-      Graphs.adamicAdarAdaptive(eGen.df, capQuantile = 0.99, topK = 50))
-    val reg = sc.getPersistentRDDs
-    (reg.keySet -- persistedBefore -- out.ids)
-      .foreach(id => reg.get(id).foreach(_.unpersist(blocking = false)))
-    out.df
-  }
+  def qAdamic(s: SparkSession, dir: String): DataFrame =
+    graft.util.Lineage.sweep(s) {
+      Graphs.adamicAdarAdaptive(
+        graft.util.Lineage.checkpoint(Graphs.coOccurrenceEdges(
+          Tables.table(s, dir, "lineitem"), "l_orderkey", "l_partkey")).df,
+        capQuantile = 0.99, topK = 50)
+    }
 
   /** ε-DP noisy count release ([[Privacy.noisyCounts]]) of the
     * per-event-type counts at ε = 1 — the governed-release twin of the

@@ -36,6 +36,18 @@ class GraphsSpec extends SparkTestBase {
     assert(byV(2L) > byV(1L))
   }
 
+  test("pageRank: 20 iterations rotate generations, conserve mass, free their blocks") {
+    // past checkpointEvery = 8 the ranks rotate through checkpoints while
+    // the lazily cached loop invariants stay cached until exit
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val g = Seq((1L, 2L), (2L, 3L), (3L, 4L), (2L, 4L), (4L, 5L)).toDF("u", "v")
+    val r = Graphs.pageRank(g, iters = 20).as[(Long, Double)].collect()
+    assert(r.length == 5)
+    assert(math.abs(r.map(_._2).sum - 1.0) < 1e-12)
+    val residue = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(residue.size <= 2, s"${residue.size} persisted RDDs left behind")
+  }
+
   test("triangleCounts: one triangle plus a tail counts only the cycle vertices") {
     val g = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L)).toDF("u", "v")
     val got = Graphs.triangleCounts(g)

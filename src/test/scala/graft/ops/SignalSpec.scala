@@ -137,6 +137,16 @@ class SignalSpec extends SparkTestBase {
     assert(r(0).getLong(1) == 2L && r(0).getLong(2) == 1L)
   }
 
+  test("closenessCentrality: a 30-vertex path leaves at most 2 persisted RDDs behind") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val path = (0L until 29L).map(i => (i, i + 1)).toDF("u", "v")
+    val r = Graphs.closenessCentrality(path, Seq(0L)).collect()
+    // from one end: n = 30, Σ dist = 0 + 1 + … + 29 = 435
+    assert(r.length == 1 && r(0).getLong(1) == 30L && r(0).getLong(2) == 435L)
+    val residue = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(residue.size <= 2, s"${residue.size} persisted RDDs left behind")
+  }
+
   // ---- Quantiles.rangePartitionPlan --------------------------------------
 
   test("rangePartitionPlan: uniform values split evenly, boundary ties go low") {

@@ -30,6 +30,18 @@ class StructuralSpec extends SparkTestBase {
     assert(got(4L) == 3L)
   }
 
+  test("sssp: a 30-vertex path leaves at most 2 persisted RDDs behind") {
+    // 30 relaxation rounds: every round's distance generation must be
+    // freed, not only those the loop happened to checkpoint
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val path = (0L until 29L).map(i => (i, i + 1, 1L)).toDF("u", "v", "w")
+    val got = Graphs.sssp(path, source = 0L).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == (0L until 30L).map(i => i -> i).toMap)
+    val residue = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(residue.size <= 2, s"${residue.size} persisted RDDs left behind")
+  }
+
   test("sssp: a source absent from the edge list yields all-NULL distances") {
     // round-9 advice fix: the empty frontier makes sum(d) NULL — the
     // witness read must not NPE; the contract returns NULL everywhere
