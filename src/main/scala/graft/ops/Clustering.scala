@@ -48,12 +48,6 @@ object Clustering {
 
   /** Fixed-iteration Lloyd k-means.
     *
-    * @param checkpointEvery lineage guard for high iteration counts:
-    *        every N rounds the k-row centroid frame is lazily
-    *        local-checkpointed, truncating the otherwise
-    *        linearly-growing plan (each round embeds all previous
-    *        rounds' aggregates twice — a plan-size bomb at iters=25).
-    *        0 disables; results are identical either way.
     * @return (vec_id, cluster, d2) — the assignment under the FINAL
     *         centroids, d2 = exact squared distance (callers round for
     *         cross-engine hashing).
@@ -64,7 +58,6 @@ object Clustering {
       vecCol: String,
       k: Int,
       iters: Int = 2,
-      checkpointEvery: Int = 5,
   ): DataFrame = {
     // exact float→double widening once, up front
     val vecs = emb.select(
@@ -80,7 +73,7 @@ object Clustering {
     // k-row frame. n < k degrades gracefully to n centroids.
     val seeded = vecs.withColumn("_h",
       md5(concat(lit("kmeans"), col("vec_id").cast("string"))))
-    var centroids = seeded
+    val init = seeded
       .orderBy(col("_h"), col("vec_id"))
       .limit(k)
       .withColumn("cluster",
@@ -88,32 +81,57 @@ object Clustering {
           .orderBy(col("_h"), col("vec_id"))) - 1).cast("int"))
       .select(col("cluster"), col("v").as("c"))
 
-    def assign(cent: DataFrame): DataFrame =
-      vecs.crossJoin(broadcast(cent))
-        .withColumn("d2", sqDist(col("v"), col("c")))
-        .groupBy("vec_id")
-        .agg(min(struct(col("d2"), col("cluster"))).as("_best"))
-        .select(col("vec_id"), col("_best.cluster").as("cluster"),
-          col("_best.d2").as("d2"))
+    nearest(vecs, lloyd(vecs, init, Nil, "v", iters), Nil, "v")
+  }
 
-    for (i <- 1 to iters) {
-      // update: exact decimal component sums (order-independent), one
-      // double division per component, array rebuilt in index order
-      val assigned = assign(centroids)
-        .join(vecs, "vec_id")
-        .select(col("cluster"), posexplode(col("v")).as(Seq("pos", "x")))
-      centroids = assigned
-        .groupBy("cluster", "pos")
+  /** The nearest centroid of each point: `pts` (vec_id, keys…, `vec`)
+    * against the broadcast `cent` (keys…, cluster, c). Without keys
+    * every point meets every centroid (the kmeans cross join); with
+    * keys only its own group's (PQ's subspace). Ties go to the lower
+    * cluster id.
+    *
+    * @return (vec_id, keys…, cluster, d2)
+    */
+  private[ops] def nearest(
+      pts: DataFrame, cent: DataFrame, keys: Seq[String], vec: String): DataFrame = {
+    val pairs =
+      if (keys.isEmpty) pts.crossJoin(broadcast(cent))
+      else pts.join(broadcast(cent), keys)
+    val ids = ("vec_id" +: keys).map(col)
+    pairs
+      .withColumn("d2", sqDist(col(vec), col("c")))
+      .groupBy(ids: _*)
+      .agg(min(struct(col("d2"), col("cluster"))).as("_best"))
+      .select(ids :+ col("_best.cluster").as("cluster") :+
+        col("_best.d2").as("d2"): _*)
+  }
+
+  /** `iters` Lloyd rounds from the centroids `init`, keyed like
+    * [[nearest]]: assign every point, then rebuild each (keys…,
+    * cluster) centroid from exact decimal component sums
+    * (order-independent), one double division per component, the
+    * array rebuilt in index order. Rounds run lazily through
+    * [[graft.util.Lineage.unrolled]]; past 8 rounds the returned frame
+    * reads the one centroid generation behind it, which stays
+    * persisted while the frame may still be read.
+    *
+    * @return the final centroids (keys…, cluster, c)
+    */
+  private[ops] def lloyd(
+      pts: DataFrame, init: DataFrame, keys: Seq[String], vec: String,
+      iters: Int): DataFrame =
+    graft.util.Lineage.unrolled(init, iters) { cent =>
+      nearest(pts, cent, keys, vec)
+        .join(pts, "vec_id" +: keys)
+        .select(keys.map(col) :+ col("cluster") :+
+          posexplode(col(vec)).as(Seq("pos", "x")): _*)
+        .groupBy((keys :+ "cluster" :+ "pos").map(col): _*)
         .agg((sum(col("x").cast("decimal(38,20)")).cast("double") /
           count(lit(1))).as("m"))
-        .groupBy("cluster")
+        .groupBy((keys :+ "cluster").map(col): _*)
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
           s => s("m")).as("c"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters)
-        centroids = centroids.localCheckpoint(eager = false)
-    }
-    assign(centroids)
-  }
+    }._1
 
   /** DuckDB spelling of [[kmeans]] — the oracle side, generated for the
     * same (k, iters) so the unrolled CTE chain mirrors the loop above.

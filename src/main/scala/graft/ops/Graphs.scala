@@ -110,7 +110,7 @@ object Graphs {
       .select(col("s").as("a"), col("b"), col("c"))
     // explode, not a 3-way union: union branches would re-evaluate the
     // whole wedge pipeline once each (no cross-branch subplan sharing)
-    // loop-exit hygiene: see [[pageRank]] — the vertex-sized count
+    // loop-exit hygiene: see [[pageRankOn]] — the vertex-sized count
     // frame materializes eagerly so the edge cache can be released here
     val out = graft.util.Lineage.checkpoint(triangles
       .select(explode(array(col("a"), col("b"), col("c"))).as("vertex"))
@@ -122,32 +122,54 @@ object Graphs {
   /** Fixed-iteration PageRank over an undirected canonical (u < v,
     * distinct) edge list, treated as a symmetric directed graph.
     *
-    * Determinism discipline (same as [[Clustering.kmeans]]): each
-    * contribution r/outdeg is one double division; the per-target sum —
-    * the only order-dependent reduction — rides DECIMAL(38,20), so
-    * partial aggregation order is invisible; the damping update is a
-    * fixed double expression. Constants are interpolated from the SAME
-    * Scala doubles into the oracle SQL, so e.g. 1−0.85 (which is NOT
-    * the double 0.15) agrees bit-for-bit cross-engine.
-    *
     * @return (x, r) — vertex and rank; ranks sum to 1 over the graph
     *         (symmetric graphs have no dangling mass).
     */
   def pageRank(
       edges: DataFrame,
       damping: Double = 0.85,
-      iters: Int = 3,
-      checkpointEvery: Int = 8): DataFrame = {
+      iters: Int = 3): DataFrame =
+    pageRankOn(edges.select(col("u"), col("v"), lit(1L).as("w")),
+      damping, iters)(uniformTerms(damping))
+
+  /** Uniform start and teleport: `(x, 1/n, (1−d)/n)` over `n` vertices. */
+  private def uniformTerms(damping: Double)(verts: DataFrame): DataFrame = {
+    val n = verts.agg(count(lit(1)).as("n"))
+    verts.crossJoin(broadcast(n)).select(col("x"),
+      (lit(1.0) / col("n")).as("r0"), (lit(1 - damping) / col("n")).as("t"))
+  }
+
+  /** The one PageRank loop behind [[pageRank]], [[pageRankWeighted]]
+    * and [[pageRankPersonalized]]: `iters` rounds over an undirected
+    * weighted edge list `(u, v, w)`, treated as a symmetric directed
+    * graph. `terms` maps the vertex frame `(x)` to `(x, r0, t)`, each
+    * vertex's initial rank and teleport term; a round sets
+    * `r = t + d·m`, where `m` is the in-mass and each vertex splits its
+    * rank among its out-edges in proportion to weight (`r·w / Σw`; at
+    * w = 1 that is exactly `r / outdeg`).
+    *
+    * Determinism discipline (same as [[Clustering.kmeans]]): each
+    * contribution is one double product and division; the per-target
+    * sum — the only order-dependent reduction — rides DECIMAL(38,20),
+    * so partial aggregation order is invisible; the damping update is a
+    * fixed double expression. Constants are interpolated from the SAME
+    * Scala doubles into the oracle SQL, so e.g. 1−0.85 (which is NOT
+    * the double 0.15) agrees bit-for-bit cross-engine.
+    */
+  private def pageRankOn(edges: DataFrame, damping: Double, iters: Int)(
+      terms: DataFrame => DataFrame): DataFrame = {
+    import graft.util.Lineage
     // the symmetrized edge list materializes ONCE, eagerly: it feeds
     // three derivations (degrees+outgoing, the vertex set, the count),
     // and the caller's edge plan is often itself an expensive self-join
     // (the co-purchase graph) that must not run once per derivation —
     // measured 24 s → 8 s at sf0.1 on the co-occurrence input
-    val eGen = graft.util.Lineage.checkpoint(
-      edges.select(col("u"), col("v"))
-        .unionAll(edges.select(col("v").as("u"), col("u").as("v"))))
+    val eGen = Lineage.checkpoint(
+      edges.select(col("u"), col("v"), col("w").cast("long"))
+        .unionAll(edges.select(col("v").as("u"), col("u").as("v"),
+          col("w").cast("long"))))
     val directed = eGen.df
-    val deg = directed.groupBy("u").agg(count(lit(1)).as("od"))
+    val wdeg = directed.groupBy("u").agg(sum(col("w")).as("wd"))
     // CACHE the loop-invariant frames, lazily. A fully uncached
     // iteration tree re-evaluates the edge input (often itself an
     // expensive self-join, e.g. the co-purchase graph) at every
@@ -160,47 +182,30 @@ object Graphs {
     // scheduler round-trip + block write + codegen break per round).
     // Both caches are explicitly unpersisted on loop exit, after the
     // final generation materializes.
-    val outgoing = directed.join(deg, "u").cache()
-    val verts = directed.select(col("u").as("x")).distinct().cache()
-    val n = verts.agg(count(lit(1)).as("n"))
-    var ranks = verts.crossJoin(broadcast(n))
-      .select(col("x"), (lit(1.0) / col("n")).as("r"))
-    // high-iteration lineage guard: generations past `checkpointEvery`
-    // ROTATE through local checkpoints (graft.util.Lineage) so a 50-iter
-    // run neither overflows the planner with a 50-deep tree nor holds
-    // more than one |V|-sized generation of blocks. Small runs (the
-    // common analytics shape) never pay the materialization.
-    var gen: Option[graft.util.Lineage.Gen] = None
-    for (i <- 1 to iters) {
+    val outgoing = directed.join(wdeg, "u").cache()
+    val verts = terms(directed.select(col("u").as("x")).distinct()).cache()
+    val (ranks, gen) = Lineage.unrolled(
+        verts.select(col("x"), col("r0").as("r")), iters) { ranks =>
       val sums = ranks
         .join(outgoing, col("x") === col("u"))
-        .select(col("v").as("x"), (col("r") / col("od")).as("cr"))
+        .select(col("v").as("x"),
+          (col("r") * col("w") / col("wd")).as("cr"))
         .groupBy("x")
         .agg(sum(col("cr").cast("decimal(38,20)")).cast("double").as("m"))
       // left join: general graphs have rank-sink vertices with no
       // in-edges (symmetric ones don't, but the operator shouldn't care)
-      ranks = verts.crossJoin(broadcast(n))
-        .join(sums, Seq("x"), "left")
+      verts.join(sums, Seq("x"), "left")
         .select(col("x"),
-          (lit(1 - damping) / col("n") +
-            lit(damping) * coalesce(col("m"), lit(0.0))).as("r"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters) {
-        val next = gen match {
-          case Some(g) => graft.util.Lineage.rotate(ranks, g)
-          case None => graft.util.Lineage.checkpoint(ranks)
-        }
-        gen = Some(next)
-        ranks = next.df
-      }
+          (col("t") + lit(damping) * coalesce(col("m"), lit(0.0))).as("r"))
     }
     // loop-exit hygiene (round-9 discipline): materialize the final
     // generation eagerly, then release every internal cache/checkpoint.
     // Returning the lazy frame instead would either leak the loop
     // caches for the session lifetime or — if the caller unpersisted
     // them — silently recompute an iters-deep uncached tree.
-    val out = graft.util.Lineage.checkpoint(ranks)
-    gen.foreach(graft.util.Lineage.free)
-    graft.util.Lineage.free(eGen)
+    val out = Lineage.checkpoint(ranks)
+    gen.foreach(Lineage.free)
+    Lineage.free(eGen)
     outgoing.unpersist(blocking = false)
     verts.unpersist(blocking = false)
     out.df
@@ -298,7 +303,7 @@ object Graphs {
         .join(loss, Seq("x"), "left")
         .select(col("x"), (col("d") - coalesce(col("lost"), lit(0L))).as("d"))
     }(s => settled(s.head))
-    // loop-exit hygiene: see [[pageRank]]
+    // loop-exit hygiene: see [[pageRankOn]]
     val out = graft.util.Lineage.checkpoint(
       verts.join(deg.df.withColumnRenamed("d", "core_degree"), Seq("x"), "left")
         .select(col("x"), col("core_degree").isNotNull.as("in_core"),
@@ -425,7 +430,7 @@ object Graphs {
       // contract then returns every vertex at NULL dist, not an NPE
       (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
     })
-    // loop-exit hygiene: see [[pageRank]]
+    // loop-exit hygiene: see [[pageRankOn]]
     val out = graft.util.Lineage.checkpoint(
       verts.join(dist.df, Seq("x"), "left").select(col("x"), col("d").as("dist")))
     graft.util.Lineage.free(dist)
@@ -470,39 +475,8 @@ object Graphs {
   def pageRankWeighted(
       edges: DataFrame,
       damping: Double = 0.85,
-      iters: Int = 3): DataFrame = {
-    // one eager materialization of the symmetrized list: see [[pageRank]]
-    val eGen = graft.util.Lineage.checkpoint(
-      edges.select(col("u"), col("v"), col("w").cast("long"))
-        .unionAll(edges.select(col("v").as("u"), col("u").as("v"),
-          col("w").cast("long"))))
-    val directed = eGen.df
-    val wdeg = directed.groupBy("u").agg(sum(col("w")).as("wd"))
-    val outgoing = directed.join(wdeg, "u").cache()
-    val verts = directed.select(col("u").as("x")).distinct().cache()
-    val n = verts.agg(count(lit(1)).as("n"))
-    var ranks = verts.crossJoin(broadcast(n))
-      .select(col("x"), (lit(1.0) / col("n")).as("r"))
-    for (_ <- 1 to iters) {
-      val sums = ranks
-        .join(outgoing, col("x") === col("u"))
-        .select(col("v").as("x"),
-          (col("r") * col("w") / col("wd")).as("cr"))
-        .groupBy("x")
-        .agg(sum(col("cr").cast("decimal(38,20)")).cast("double").as("m"))
-      ranks = verts.crossJoin(broadcast(n))
-        .join(sums, Seq("x"), "left")
-        .select(col("x"),
-          (lit(1 - damping) / col("n") +
-            lit(damping) * coalesce(col("m"), lit(0.0))).as("r"))
-    }
-    // loop-exit hygiene: see [[pageRank]]
-    val out = graft.util.Lineage.checkpoint(ranks)
-    graft.util.Lineage.free(eGen)
-    outgoing.unpersist(blocking = false)
-    verts.unpersist(blocking = false)
-    out.df
-  }
+      iters: Int = 3): DataFrame =
+    pageRankOn(edges, damping, iters)(uniformTerms(damping))
 
   /** DuckDB spelling of [[pageRankWeighted]] — unrolled like
     * [[pageRankOracleSql]] with weighted degrees. `finalSelect`
@@ -548,26 +522,23 @@ object Graphs {
     * per-vertex argmax — all partial-aggregable / key-local; the
     * argmax is max(struct(count, −label)), never a window.
     *
-    * `cacheEdges`: by default the symmetrized list is cached so an
-    * arbitrary caller plan (e.g. a co-occurrence self-join) evaluates
-    * once, not once per round. A caller that ALREADY materialized
-    * `edges` (checkpoint-backed, like qModularity's shared edge
-    * generation) must pass `false`: caching would store the edge list
-    * a second time at 2× width, and at 100× scale the duplicate is
-    * what pushes storage into eviction churn — re-reading the
-    * caller's blocks per round is strictly cheaper.
+    * The symmetrized list is cached so an arbitrary caller plan (e.g.
+    * a co-occurrence self-join) evaluates once, not once per round —
+    * unless `edges` is already a generation (checkpoint-backed, like
+    * qModularity's shared edge list): caching would store the edge
+    * list a second time at 2× width, and at 100× scale the duplicate is
+    * what pushes storage into eviction churn (SCALE.md §10g) —
+    * re-reading the caller's blocks per round is strictly cheaper.
     */
-  def labelPropagation(
-      edges: DataFrame,
-      rounds: Int = 4,
-      cacheEdges: Boolean = true): DataFrame = {
+  def labelPropagation(edges: DataFrame, rounds: Int = 4): DataFrame = {
+    import graft.util.Lineage
     val sym0 = edges.select(col("u").as("src"), col("v").as("dst"))
       .unionAll(edges.select(col("v").as("src"), col("u").as("dst")))
-    val sym = if (cacheEdges) sym0.cache() else sym0
-    var labels = sym.select(col("src").as("x")).distinct()
-      .select(col("x"), col("x").as("lbl"))
-    for (_ <- 1 to rounds) {
-      labels = sym
+    val sym = if (Lineage.isGeneration(edges)) sym0 else sym0.cache()
+    val (labels, gen) = Lineage.unrolled(
+        sym.select(col("src").as("x")).distinct()
+          .select(col("x"), col("x").as("lbl")), rounds) { labels =>
+      sym
         .join(labels.withColumnRenamed("x", "src"), "src")
         .groupBy(col("dst").as("x"), col("lbl"))
         .agg(count(lit(1)).as("cnt"))
@@ -575,9 +546,10 @@ object Graphs {
         .agg(max(struct(col("cnt"), (-col("lbl")).as("nl"))).as("m"))
         .select(col("x"), (-col("m.nl")).as("lbl"))
     }
-    // loop-exit hygiene: see [[pageRank]]
-    val out = graft.util.Lineage.checkpoint(
+    // loop-exit hygiene: see [[pageRankOn]]
+    val out = Lineage.checkpoint(
       labels.select(col("x"), col("lbl").as("community")))
+    gen.foreach(Lineage.free)
     sym.unpersist(blocking = false)
     out.df
   }
@@ -617,35 +589,16 @@ object Graphs {
       damping: Double = 0.85,
       iters: Int = 3): DataFrame = {
     require(seeds.nonEmpty, "personalized PageRank needs a seed set")
-    // one eager materialization of the symmetrized list: see [[pageRank]]
-    val eGen = graft.util.Lineage.checkpoint(
-      edges.select(col("u"), col("v"))
-        .unionAll(edges.select(col("v").as("u"), col("u").as("v"))))
-    val directed = eGen.df
-    val deg = directed.groupBy("u").agg(count(lit(1)).as("od"))
-    val outgoing = directed.join(deg, "u").cache()
-    val verts = directed.select(col("u").as("x")).distinct().cache()
+    // a repeated seed counts twice in the 1/|seeds| share but once in
+    // `isin`, so the teleport mass would sum to less than 1
+    val repeated = seeds.diff(seeds.distinct)
+    require(repeated.isEmpty,
+      s"personalized PageRank seed ${repeated.head} is given twice")
     val tele = when(col("x").isin(seeds: _*), lit(1.0 / seeds.size))
       .otherwise(lit(0.0))
-    var ranks = verts.select(col("x"), tele.as("r"))
-    for (_ <- 1 to iters) {
-      val sums = ranks
-        .join(outgoing, col("x") === col("u"))
-        .select(col("v").as("x"), (col("r") / col("od")).as("cr"))
-        .groupBy("x")
-        .agg(sum(col("cr").cast("decimal(38,20)")).cast("double").as("m"))
-      ranks = verts
-        .join(sums, Seq("x"), "left")
-        .select(col("x"),
-          (lit(1 - damping) * tele +
-            lit(damping) * coalesce(col("m"), lit(0.0))).as("r"))
-    }
-    // loop-exit hygiene: see [[pageRank]]
-    val out = graft.util.Lineage.checkpoint(ranks)
-    graft.util.Lineage.free(eGen)
-    outgoing.unpersist(blocking = false)
-    verts.unpersist(blocking = false)
-    out.df
+    pageRankOn(edges.select(col("u"), col("v"), lit(1L).as("w")),
+      damping, iters)(_.select(col("x"), tele.as("r0"),
+        (lit(1 - damping) * tele).as("t")))
   }
 
   /** DuckDB spelling of [[pageRankPersonalized]] — the
@@ -829,7 +782,7 @@ object Graphs {
       val row = s.head.agg(count(lit(1)), sum(col("d"))).head()
       (row.getLong(0), row.getLong(1))
     })
-    // loop-exit hygiene: see [[pageRank]]
+    // loop-exit hygiene: see [[pageRankOn]]
     val out = graft.util.Lineage.checkpoint(
       dist.df.groupBy(col("s").as("seed"))
         .agg(count(lit(1)).as("n_reached"), sum(col("d")).as("dist_sum"))

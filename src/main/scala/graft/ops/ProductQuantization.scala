@@ -42,12 +42,9 @@ object ProductQuantization {
       .toDF("vec_id", "subspace", "sv")
   }
 
-  /** Train the m codebooks: fixed-iteration Lloyd keyed by subspace —
-    * one distributed computation for all m subspaces, not m jobs.
-    * Returns (subspace, cluster, c: array<double>).
-    * `checkpointEvery`: lazy localCheckpoint of the codebook frame
-    * every N rounds so the plan stays bounded at high iteration counts
-    * (see [[Clustering.kmeans]]); 0 disables, results identical.
+  /** Train the m codebooks: fixed-iteration Lloyd keyed by subspace
+    * ([[Clustering.lloyd]]) — one distributed computation for all m
+    * subspaces, not m jobs. Returns (subspace, cluster, c: array<double>).
     */
   def train(
       emb: DataFrame,
@@ -56,42 +53,17 @@ object ProductQuantization {
       m: Int = 8,
       k: Int = 16,
       iters: Int = 2,
-      checkpointEvery: Int = 5,
   ): DataFrame = {
     val subs = subvectors(emb, idCol, vecCol, m)
     // per-subspace deterministic hash-sample init (same k vec_ids win in
     // every subspace — harmless: their SUBvectors differ per subspace)
     val w = Window.partitionBy("subspace")
       .orderBy(md5(concat(lit("pq"), col("vec_id").cast("string"))), col("vec_id"))
-    var centroids = subs
+    val init = subs
       .withColumn("cluster", (row_number().over(w) - 1).cast("int"))
       .filter(col("cluster") < k)
       .select(col("subspace"), col("cluster"), col("sv").as("c"))
-
-    def assign(cent: DataFrame): DataFrame =
-      subs.join(broadcast(cent), "subspace")
-        .withColumn("d2", Clustering.sqDist(col("sv"), col("c")))
-        .groupBy("vec_id", "subspace")
-        .agg(min(struct(col("d2"), col("cluster"))).as("_best"))
-        .select(col("vec_id"), col("subspace"),
-          col("_best.cluster").as("cluster"), col("_best.d2").as("d2"))
-
-    for (i <- 1 to iters) {
-      val assigned = assign(centroids)
-        .join(subs, Seq("vec_id", "subspace"))
-        .select(col("subspace"), col("cluster"),
-          posexplode(col("sv")).as(Seq("pos", "x")))
-      centroids = assigned
-        .groupBy("subspace", "cluster", "pos")
-        .agg((sum(col("x").cast("decimal(38,20)")).cast("double") /
-          count(lit(1))).as("m"))
-        .groupBy("subspace", "cluster")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-          s => s("m")).as("c"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters)
-        centroids = centroids.localCheckpoint(eager = false)
-    }
-    centroids
+    Clustering.lloyd(subs, init, Seq("subspace"), "sv", iters)
   }
 
   /** Encode: nearest codebook entry per (vector, subspace) →
@@ -104,12 +76,9 @@ object ProductQuantization {
       codebooks: DataFrame,
       m: Int,
   ): DataFrame =
-    subvectors(emb, idCol, vecCol, m)
-      .join(broadcast(codebooks), "subspace")
-      .withColumn("d2", Clustering.sqDist(col("sv"), col("c")))
-      .groupBy("vec_id", "subspace")
-      .agg(min(struct(col("d2"), col("cluster"))).as("_best"))
-      .select(col("vec_id"), col("subspace"), col("_best.cluster").as("code"))
+    Clustering.nearest(subvectors(emb, idCol, vecCol, m), codebooks,
+        Seq("subspace"), "sv")
+      .select(col("vec_id"), col("subspace"), col("cluster").as("code"))
 
   /** ADC top-k: exact query subvectors against the codebook LUT, summed
     * over subspaces per candidate, smallest approximate distance wins.

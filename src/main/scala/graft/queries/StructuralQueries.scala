@@ -128,11 +128,11 @@ object StructuralQueries {
       val edges = graft.util.Lineage.checkpoint(
         Graphs.coOccurrenceEdges(
           Tables.table(s, dir, "lineitem"), "l_orderkey", "l_partkey")).df
-      // cacheEdges = false: the edges are already checkpoint-backed, and
-      // LPA's internal cache would store the list AGAIN at 2× width — at
-      // sf10 the duplicate pushed storage into eviction churn (277 s vs
-      // the 189.9 s pre-checkpoint composition; SCALE.md §10g)
-      val labels = Graphs.labelPropagation(edges, rounds = 4, cacheEdges = false)
+      // the edges are already a generation, so LPA reads them in place
+      // instead of caching the list AGAIN at 2× width — at sf10 the
+      // duplicate pushed storage into eviction churn (277 s vs the
+      // 189.9 s pre-checkpoint composition; SCALE.md §10g)
+      val labels = Graphs.labelPropagation(edges, rounds = 4)
         .select(col("x"), col("community"))
       Graphs.modularity(edges, labels)
     }

@@ -1,5 +1,7 @@
 package graft.ops
 
+import org.apache.spark.sql.functions.lit
+
 import graft.SparkTestBase
 
 class GraphsSpec extends SparkTestBase {
@@ -37,8 +39,8 @@ class GraphsSpec extends SparkTestBase {
   }
 
   test("pageRank: 20 iterations rotate generations, conserve mass, free their blocks") {
-    // past checkpointEvery = 8 the ranks rotate through checkpoints while
-    // the lazily cached loop invariants stay cached until exit
+    // past round 8 the ranks rotate through checkpoints while the
+    // lazily cached loop invariants stay cached until exit
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val g = Seq((1L, 2L), (2L, 3L), (3L, 4L), (2L, 4L), (4L, 5L)).toDF("u", "v")
     val r = Graphs.pageRank(g, iters = 20).as[(Long, Double)].collect()
@@ -46,6 +48,16 @@ class GraphsSpec extends SparkTestBase {
     assert(math.abs(r.map(_._2).sum - 1.0) < 1e-12)
     val residue = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(residue.size <= 2, s"${residue.size} persisted RDDs left behind")
+  }
+
+  test("pageRankWeighted with every weight 1 equals pageRank bit for bit") {
+    val g = Seq((1L, 2L), (2L, 3L), (3L, 4L), (2L, 4L), (4L, 5L), (5L, 6L))
+      .toDF("u", "v")
+    val plain = Graphs.pageRank(g, iters = 5).as[(Long, Double)].collect().toMap
+    val weighted = Graphs.pageRankWeighted(g.withColumn("w", lit(1L)), iters = 5)
+      .as[(Long, Double)].collect().toMap
+    assert(plain.size == 6)
+    assert(weighted == plain)
   }
 
   test("triangleCounts: one triangle plus a tail counts only the cycle vertices") {

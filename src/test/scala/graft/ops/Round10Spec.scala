@@ -63,16 +63,21 @@ class Round10Spec extends SparkTestBase {
     assert(Graphs.degreeCapAtQuantile(star, 0.95) == 9L)
   }
 
-  test("labelPropagation(cacheEdges = false) matches the cached path") {
-    // the uncached path exists for callers whose edge frame is already
-    // checkpoint-backed (qModularity): same rounds, same argmax rule,
+  test("labelPropagation over a checkpointed edge frame matches the raw frame and caches nothing extra") {
+    // an edge frame that is already a generation (qModularity's shared
+    // edge list) is read in place: same rounds, same argmax rule,
     // bit-identical labels — only the storage behavior differs
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (1L, 3L),
       (5L, 6L), (6L, 7L)).toDF("u", "v")
-    val cached = Graphs.labelPropagation(edges, rounds = 3)
-    val uncached = Graphs.labelPropagation(edges, rounds = 3, cacheEdges = false)
-    assert(cached.exceptAll(uncached).isEmpty &&
-      uncached.exceptAll(cached).isEmpty)
+    val raw = Graphs.labelPropagation(edges, rounds = 3)
+    val gen = graft.util.Lineage.checkpoint(edges)
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val onGen = Graphs.labelPropagation(gen.df, rounds = 3)
+    // only the returned label generation is new: no cached edge list
+    val added = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(added.size == 1, s"${added.size} RDDs persisted, expected the labels only")
+    assert(raw.exceptAll(onGen).isEmpty && onGen.exceptAll(raw).isEmpty)
+    graft.util.Lineage.free(gen)
   }
 
   test("adamicAdarAdaptive == adamicAdar at the derived cap") {

@@ -192,25 +192,35 @@ class ScaleOpsSpec extends SparkTestBase {
     ivf.foreach { case (pair, d) => assert(full(pair) == d, s"ad2 drift at $pair") }
   }
 
-  test("kmeans checkpointEvery bounds plan size without changing results") {
-    // 12 Lloyd rounds: without the lineage guard each round embeds all
-    // previous rounds' aggregates twice, so the optimized plan grows
-    // super-linearly; with checkpointEvery=5 the centroid lineage is
-    // truncated twice and the final plan stays near the 2-round shape
+  test("kmeans past 8 rounds rotates: the plan of iters = 12 is no larger than iters = 8") {
+    // without rotation each Lloyd round embeds all previous rounds'
+    // aggregates twice, so the optimized plan grows super-linearly; the
+    // fixed-round driver rotates the centroids at round 8, so 12 rounds
+    // plan over that generation plus 4 rounds (results: LineageSpec's
+    // fold-equality test)
     def nNodes(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.optimizedPlan.collect { case p => p }.size
-    val guarded = Clustering.kmeans(emb, "vec_id", "embedding",
-      k = 4, iters = 12, checkpointEvery = 5)
-    val unguarded = Clustering.kmeans(emb, "vec_id", "embedding",
-      k = 4, iters = 12, checkpointEvery = 0)
-    assert(nNodes(guarded) < nNodes(unguarded) / 2,
-      s"plan not truncated: ${nNodes(guarded)} vs ${nNodes(unguarded)}")
-    // identical assignments either way — the guard is pure plumbing
-    val a = guarded.orderBy("vec_id").collect()
-      .map(r => (r.getLong(0), r.getInt(1)))
-    val b = unguarded.orderBy("vec_id").collect()
-      .map(r => (r.getLong(0), r.getInt(1)))
-    assert(a.sameElements(b))
+    val eight = Clustering.kmeans(emb, "vec_id", "embedding", k = 4, iters = 8)
+    val twelve = Clustering.kmeans(emb, "vec_id", "embedding", k = 4, iters = 12)
+    assert(nNodes(twelve) <= nNodes(eight),
+      s"plan not truncated: ${nNodes(twelve)} vs ${nNodes(eight)}")
+  }
+
+  test("kmeans and PQ.train persist nothing at 6 iterations and leave at most 1 RDD at 12") {
+    emb.count() // the spec's shared cache materializes outside the count
+    def residue(run: => Unit): Int = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      run
+      (spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).size
+    }
+    for ((iters, most) <- Seq(6 -> 0, 12 -> 1)) {
+      val km = residue(Clustering.kmeans(emb, "vec_id", "embedding",
+        k = 4, iters = iters).collect())
+      assert(km <= most, s"kmeans(iters = $iters) left $km persisted RDDs")
+      val pq = residue(ProductQuantization.train(emb, "vec_id", "embedding",
+        m = 8, k = 4, iters = iters).collect())
+      assert(pq <= most, s"PQ.train(iters = $iters) left $pq persisted RDDs")
+    }
   }
 
   // ---- Semantic dedup --------------------------------------------------

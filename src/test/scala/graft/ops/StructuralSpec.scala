@@ -214,6 +214,16 @@ class StructuralSpec extends SparkTestBase {
     assert(r(2L) > r(5L)) // one hop from the seed beats the tail end
   }
 
+  test("pageRankPersonalized rejects a seed given twice") {
+    // a repeated seed would halve its teleport share and the ranks
+    // would sum to 0.5: the contract fails loudly instead
+    val edges = Seq((1L, 2L), (2L, 3L)).toDF("u", "v")
+    val e = intercept[IllegalArgumentException] {
+      Graphs.pageRankPersonalized(edges, seeds = Seq(1L, 1L), iters = 3)
+    }
+    assert(e.getMessage.contains("seed 1 is given twice"))
+  }
+
   // ---- Quantiles ---------------------------------------------------------
 
   test("exactQuantiles: ordinal selection across distinct buckets") {

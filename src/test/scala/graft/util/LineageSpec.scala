@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions.{col, max}
 
 import graft.SparkTestBase
 
-/** Generation attribution and the contract of `Lineage.fixpoint`: the
-  * round guard, the last allowed round, and what stays persisted.
+/** Generation attribution and the contracts of `Lineage.fixpoint` (the
+  * round guard, the last allowed round, what stays persisted) and of
+  * `Lineage.unrolled` (fold equality, what it persists).
   */
 class LineageSpec extends SparkTestBase {
 
@@ -64,6 +65,44 @@ class LineageSpec extends SparkTestBase {
     assert(persisted -- before == out.flatMap(_.ids).toSet)
     assert(out.forall(_.ids.size == 1))
     out.foreach(Lineage.free)
+    assert((persisted -- before).isEmpty)
+  }
+
+  /** One fixed round: each row adds its own id, times two — not
+    * idempotent, so a dropped or repeated round shows. */
+  private def step(df: DataFrame): DataFrame =
+    df.select(col("id"), (col("x") * 2 + col("id")).as("x"))
+  private def seeded = spark.range(5).toDF("id").select(col("id"), col("id").as("x"))
+  private def rows(df: DataFrame): Seq[(Long, Long)] =
+    df.orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+
+  test("unrolled equals a plain foldLeft of step for 1, 8, 9 and 17 rounds") {
+    for (rounds <- Seq(1, 8, 9, 17)) {
+      val (out, gen) = Lineage.unrolled(seeded, rounds)(step)
+      val folded = (1 to rounds).foldLeft(seeded)((df, _) => step(df))
+      assert(rows(out) == rows(folded), s"at $rounds rounds")
+      gen.foreach(Lineage.free)
+    }
+  }
+
+  test("unrolled persists nothing at 8 rounds or fewer") {
+    val before = persisted
+    for (rounds <- Seq(0, 1, 8)) {
+      val (out, gen) = Lineage.unrolled(seeded, rounds)(step)
+      assert(gen.isEmpty, s"a generation at $rounds rounds")
+      out.collect()
+    }
+    assert((persisted -- before).isEmpty)
+  }
+
+  test("after unrolled returns only the generation behind its frame is persisted") {
+    val before = persisted
+    val (out, gen) = Lineage.unrolled(seeded, 25)(step)
+    assert(gen.exists(_.ids.size == 1))
+    assert(persisted -- before == gen.get.ids)
+    out.collect()
+    assert(persisted -- before == gen.get.ids)
+    Lineage.free(gen.get)
     assert((persisted -- before).isEmpty)
   }
 }
