@@ -64,25 +64,29 @@ object Clustering {
       col(idCol).as("vec_id"),
       transform(col(vecCol), _.cast("double")).as("v"))
 
-    // deterministic hash-sample init: the k vectors with the smallest
-    // md5('kmeans' || id) — a uniform pseudo-random draw with no RNG
-    // state, no assumption about id density or range (a stride over raw
-    // id VALUES returns nothing on shifted ids and divides by zero when
-    // n < k). orderBy+limit plans as TakeOrdered (per-partition top-k,
-    // no global sort); the k survivors rank into cluster ids on a
-    // k-row frame. n < k degrades gracefully to n centroids.
-    val seeded = vecs.withColumn("_h",
-      md5(concat(lit("kmeans"), col("vec_id").cast("string"))))
-    val init = seeded
+    nearest(vecs, lloyd(vecs, seed(vecs, k), Nil, "v", iters), Nil, "v")
+  }
+
+  /** kmeans' initial centroids over `vecs` (vec_id, v): deterministic
+    * hash-sample init, the k vectors with the smallest
+    * md5('kmeans' || id) — a uniform pseudo-random draw with no RNG
+    * state, no assumption about id density or range (a stride over raw
+    * id VALUES returns nothing on shifted ids and divides by zero when
+    * n < k). orderBy+limit plans as TakeOrdered (per-partition top-k,
+    * no global sort); the k survivors rank into cluster ids on a
+    * k-row frame. n < k degrades gracefully to n centroids.
+    *
+    * @return (cluster, c)
+    */
+  private[ops] def seed(vecs: DataFrame, k: Int): DataFrame =
+    vecs
+      .withColumn("_h", md5(concat(lit("kmeans"), col("vec_id").cast("string"))))
       .orderBy(col("_h"), col("vec_id"))
       .limit(k)
       .withColumn("cluster",
         (row_number().over(org.apache.spark.sql.expressions.Window
           .orderBy(col("_h"), col("vec_id"))) - 1).cast("int"))
       .select(col("cluster"), col("v").as("c"))
-
-    nearest(vecs, lloyd(vecs, init, Nil, "v", iters), Nil, "v")
-  }
 
   /** The nearest centroid of each point: `pts` (vec_id, keys…, `vec`)
     * against the broadcast `cent` (keys…, cluster, c). Without keys

@@ -63,7 +63,9 @@ class Round10Spec extends SparkTestBase {
     assert(Graphs.degreeCapAtQuantile(star, 0.95) == 9L)
   }
 
-  test("labelPropagation over a checkpointed edge frame matches the raw frame and caches nothing extra") {
+  test("labelPropagation(cacheEdges = false) matches the cached path") {
+    // cacheEdges is gone: the "uncached path" is now an edge frame that
+    // is already a generation, the cached path the raw frame
     // an edge frame that is already a generation (qModularity's shared
     // edge list) is read in place: same rounds, same argmax rule,
     // bit-identical labels — only the storage behavior differs

@@ -192,18 +192,28 @@ class ScaleOpsSpec extends SparkTestBase {
     ivf.foreach { case (pair, d) => assert(full(pair) == d, s"ad2 drift at $pair") }
   }
 
-  test("kmeans past 8 rounds rotates: the plan of iters = 12 is no larger than iters = 8") {
-    // without rotation each Lloyd round embeds all previous rounds'
-    // aggregates twice, so the optimized plan grows super-linearly; the
-    // fixed-round driver rotates the centroids at round 8, so 12 rounds
-    // plan over that generation plus 4 rounds (results: LineageSpec's
-    // fold-equality test)
+  test("kmeans checkpointEvery bounds plan size without changing results") {
+    // checkpointEvery is gone: the fixed-round driver rotates the
+    // centroids at round 8. Without rotation each Lloyd round embeds all
+    // previous rounds' aggregates twice, so the optimized plan grows
+    // super-linearly; with it 12 rounds plan over that generation plus
+    // 4 rounds
     def nNodes(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.optimizedPlan.collect { case p => p }.size
     val eight = Clustering.kmeans(emb, "vec_id", "embedding", k = 4, iters = 8)
     val twelve = Clustering.kmeans(emb, "vec_id", "embedding", k = 4, iters = 12)
     assert(nNodes(twelve) <= nNodes(eight),
       s"plan not truncated: ${nNodes(twelve)} vs ${nNodes(eight)}")
+    // identical assignments to 12 unrotated rounds (4 then 8, neither
+    // past the rotation boundary) — the rotation is pure plumbing
+    val vecs = emb.select(col("vec_id"),
+      transform(col("embedding"), _.cast("double")).as("v"))
+    val lazy12 = Clustering.lloyd(vecs,
+      Clustering.lloyd(vecs, Clustering.seed(vecs, 4), Nil, "v", 4), Nil, "v", 8)
+    val unrotated = Clustering.nearest(vecs, lazy12, Nil, "v")
+    def assignment(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("vec_id").collect().map(r => (r.getLong(0), r.getInt(1)))
+    assert(assignment(twelve).sameElements(assignment(unrotated)))
   }
 
   test("kmeans and PQ.train persist nothing at 6 iterations and leave at most 1 RDD at 12") {
