@@ -687,9 +687,6 @@ object Bench {
     spark.stop()
     // the staged CSV + write sinks are ~1.6 GB per run; don't leak them
     // across rounds
-    import java.nio.file.{Files, Path}
-    import java.util.Comparator
-    scala.util.Using.resource(Files.walk(Path.of(tmp)))(
-      _.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p)))
+    graft.streaming.EventStreams.wipeTree(tmp)
   }
 }

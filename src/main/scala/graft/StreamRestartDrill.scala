@@ -2,10 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.streaming.EventStreams
+
 /** Cross-JVM streaming-restart drill (r12, ADVICE r11 item 1).
   *
-  * Round11Spec proves kill-and-resume exactly-once WITHIN one JVM; the
-  * r11 advisor showed the guarantee previously broke ACROSS JVMs: the
+  * EventStreamsSpec proves kill-and-resume exactly-once WITHIN one JVM;
+  * the r11 advisor showed the guarantee previously broke ACROSS JVMs: the
   * staged-slice path was an in-memory memo of a fresh temp dir, so a
   * resumed checkpoint in a new process saw a brand-new staging dir,
   * treated every slice as unseen, and silently re-ingested the whole
@@ -35,15 +37,15 @@ object StreamRestartDrill {
     val spark = graft.util.Sessions.get("graft-restart-drill", "local[8]", 8)
     phase match {
       case "interrupt" =>
-        val out = graft.streaming.EventStreams.replayEventsDirToParquet(
-          spark, sfDir, workDir, sessionQuery,
+        val out = EventStreams.replayEventsDirToParquet(
+          spark, sfDir, workDir, EventStreams.sessionWindowQuery,
           interruptAfterBatches = Some(2))
         val partial = spark.read.parquet(out)
           .filter(col("user_id") >= 0).count()
         println(s"""{"phase":"interrupt","partial_sessions":$partial}""")
       case "resume" =>
-        val out = graft.streaming.EventStreams.replayEventsDirToParquet(
-          spark, sfDir, workDir, sessionQuery, resume = true)
+        val out = EventStreams.replayEventsDirToParquet(
+          spark, sfDir, workDir, EventStreams.sessionWindowQuery, resume = true)
         import graft.queries.Det
         val streamed = spark.read.parquet(out)
           .filter(col("user_id") >= 0)
@@ -67,18 +69,4 @@ object StreamRestartDrill {
     }
     spark.stop()
   }
-
-  private def sessionQuery(
-      stream: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    stream
-      .select(col("ts"), col("user_id"), col("value"))
-      .withWatermark("ts", "0 seconds")
-      .groupBy(session_window(col("ts"), "6 hours"), col("user_id"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        graft.queries.Det.dsum(col("value")).as("sum_value"))
-      .select(
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("user_id"), col("n_events"), col("sum_value"))
 }

@@ -95,7 +95,7 @@ object ExtQueries {
     */
   def qDedupIncStream(s: SparkSession, dir: String): DataFrame = {
     val out = graft.streaming.DocStreams.incrementalDedupDirToParquet(
-      s, dir, streamWorkDir("graft_dedup_inc_stream", dir), threshold = 0.8)
+      s, dir, streamWorkDir("graft_dedup_inc_stream", dir))
     s.read.parquet(out)
       .withColumn("jac", r6(col("jac")))
       .select(col("batch_id"), col("corpus_id"), col("jac"))
@@ -1062,15 +1062,6 @@ object ExtQueries {
         col("user_id"), col("n_events"), col("sum_value"))
       .orderBy("user_id", "session_start")
 
-  /** STREAMING sessionization hash-gated against the same DuckDB
-    * oracle as q_sessions ([[graft.streaming.EventStreams
-    * .sessionizeEventsDirToParquet]]): the events table replayed as a
-    * file stream through the watermarked `session_window` aggregate in
-    * append mode, closed sessions foreachBatch-appended to parquet,
-    * and THAT parquet read back as the gate result — the
-    * streaming path proven end-to-end against SQL, not just
-    * suite-internally against its batch twin (VERDICT r9 item 7).
-    */
   /** Gap-break sessionization in SQL (lag + cumulative break sum) —
     * shared by the batch gate and its streaming twin. */
   private val sessionsOracleSql: String =
@@ -1136,9 +1127,18 @@ object ExtQueries {
       .digest(java.nio.file.Path.of(dir).toAbsolutePath.normalize.toString
         .getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
 
+  /** STREAMING sessionization hash-gated against the same DuckDB
+    * oracle as q_sessions ([[graft.streaming.EventStreams
+    * .sessionizeEventsDirToParquet]]): the events table replayed as a
+    * file stream through the watermarked `session_window` aggregate in
+    * append mode, closed sessions foreachBatch-appended to parquet,
+    * and THAT parquet read back as the gate result — the
+    * streaming path proven end-to-end against SQL, not just
+    * suite-internally against its batch twin (VERDICT r9 item 7).
+    */
   def qSessionsStream(s: SparkSession, dir: String): DataFrame = {
     val out = graft.streaming.EventStreams.sessionizeEventsDirToParquet(
-      s, dir, streamWorkDir("graft_sessions_stream", dir), gap = "6 hours")
+      s, dir, streamWorkDir("graft_sessions_stream", dir))
     s.read.parquet(out)
       .filter(col("user_id") >= 0) // drop the watermark-flush sentinel user
       .select(col("session_start"), col("session_end"), col("user_id"),
@@ -1201,7 +1201,7 @@ object ExtQueries {
     */
   def qCmsStream(s: SparkSession, dir: String): DataFrame = {
     val out = graft.streaming.EventStreams.windowedCmsEventsDirToParquet(
-      s, dir, streamWorkDir("graft_cms_stream", dir), d = 4, w = 64)
+      s, dir, streamWorkDir("graft_cms_stream", dir))
     val maxTs = Tables.events(s, dir).agg(max(col("ts"))).head().getTimestamp(0)
     s.read.parquet(out)
       .filter(col("window_start") <= lit(maxTs))
@@ -1224,7 +1224,7 @@ object ExtQueries {
     */
   def qAttrStream(s: SparkSession, dir: String): DataFrame = {
     val out = graft.streaming.EventStreams.attributionJoinEventsDirToParquet(
-      s, dir, streamWorkDir("graft_attr_stream", dir), within = "2 hours")
+      s, dir, streamWorkDir("graft_attr_stream", dir))
     s.read.parquet(out)
       .filter(col("user_id") >= 0) // drop watermark-sentinel rows
       .select(col("user_id"), col("click_ts"), col("purchase_ts"),
@@ -1246,7 +1246,7 @@ object ExtQueries {
     */
   def qAttrStreamOuter(s: SparkSession, dir: String): DataFrame = {
     val out = graft.streaming.EventStreams.attributionOuterEventsDirToParquet(
-      s, dir, streamWorkDir("graft_attr_stream_outer", dir), within = "2 hours")
+      s, dir, streamWorkDir("graft_attr_stream_outer", dir))
     s.read.parquet(out)
       .filter(col("user_id") >= 0) // drop watermark-sentinel rows
       .select(col("user_id"), col("click_ts"), col("purchase_ts"),

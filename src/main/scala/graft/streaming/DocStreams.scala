@@ -72,19 +72,6 @@ object DocStreams {
       .select(col("doc_id"), col("corpus_id"), col("band_idx"))
   }
 
-  /** Admission filter for ONE micro-batch: docs that collide with NO
-    * corpus band — the rows safe to append to the corpus.
-    *
-    * This is a per-micro-batch (foreachBatch) function, not a streaming
-    * plan: admission needs a LEFT ANTI join of the batch against its own
-    * band hits, and a stream-derived right side is not streaming-
-    * plannable (Spark rejects `LeftAnti` with a streaming right) — nor
-    * should it be: "which of this batch's docs had no hit" is a
-    * batch-local question. Inside `foreachBatch`
-    * ([[EventStreams.toForeachBatchSink]]) each micro-batch is a plain
-    * DataFrame, the anti join is legal, and the corpus index append can
-    * ride in the same idempotent handler (keyed by batchId).
-    */
   /** Stream-static bridge harness — the FIFTH batch↔stream gate (r11):
     * replay the `doc_id % 5 == 0` slice of the documents table as a
     * FILE STREAM against the band index of the static corpus
@@ -111,86 +98,59 @@ object DocStreams {
   def incrementalDedupDirToParquet(
       spark: SparkSession,
       srcDir: String,
-      workDir: String,
-      threshold: Double = 0.8,
-      k: Int = 8,
-      bands: Int = 4,
-      slices: Int = 4): String = {
-    import java.nio.file.{Files, Path}
-    import java.util.Comparator
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val root = Path.of(workDir)
-    if (Files.exists(root))
-      scala.util.Using.resource(Files.walk(root))(
-        _.sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p)))
+      workDir: String): String = {
+    EventStreams.wipeTree(workDir)
     val stage = s"$workDir/stage"
-    val out = s"$workDir/out"
-    val ckpt = s"$workDir/ckpt"
     val indexPath = s"$workDir/band_index"
     val d = graft.sources.Tables.table(spark, srcDir, "documents")
       .select(col("doc_id"), col("text"))
     val corpus = d.filter(col("doc_id") % 5 =!= 0)
     // the batch-maintained static side: built once, landed as a table
-    corpusBandIndex(corpus, "doc_id", "text", k, bands)
-      .write.parquet(indexPath)
+    corpusBandIndex(corpus, "doc_id", "text").write.parquet(indexPath)
     val bandIndex = spark.read.parquet(indexPath)
     // slice the new-doc stream by doc_id hash: any partitioning works
     // (every band hit of a doc lands in that doc's own micro-batch),
     // hash keeps the staging deterministic
-    d.filter(col("doc_id") % 5 === 0)
-      .withColumn("_slice", pmod(col("doc_id"), lit(slices)).cast("int"))
-      .repartition(slices, col("_slice"))
-      .write.partitionBy("_slice").parquet(stage)
-    // flatten: one file per slice at the stage root (the partition-dir
-    // layout would otherwise surface _slice as a stream column)
-    val stageDir = Path.of(stage)
-    for (s <- 0 until slices) {
-      val part = stageDir.resolve(s"_slice=$s")
-      if (Files.isDirectory(part)) {
-        scala.util.Using.resource(Files.list(part))(
-          _.filter(p => p.getFileName.toString.startsWith("part-"))
-            .forEach(p =>
-              Files.move(p, stageDir.resolve(f"slice_$s%02d.parquet"))))
-        scala.util.Using.resource(Files.walk(part))(
-          _.sorted(Comparator.reverseOrder[Path]())
-            .forEach(q => Files.deleteIfExists(q)))
-      }
-    }
-    scala.util.Using.resource(Files.list(stageDir))(
-      _.filter(p => !p.getFileName.toString.startsWith("slice_"))
-        .forEach(p => Files.deleteIfExists(p)))
+    val slices = 4
+    EventStreams.stageSlices(
+      d.filter(col("doc_id") % 5 === 0)
+        .withColumn("_slice", pmod(col("doc_id"), lit(slices)).cast("int")),
+      slices, stage)
     val tokens = d.select(col("doc_id"),
       graft.ops.TextAnalysis.tokens(col("text")).as("toks"))
-    val stream = spark.readStream
-      .schema("doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stage)
-    val q = nearDupCandidates(stream, bandIndex, "doc_id", "text", k, bands)
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (cands: DataFrame, id: Long) =>
+    // the session's own shuffle width: the stream is stateless, so
+    // there is no state store to size
+    EventStreams.streamSlices(spark, "doc_id BIGINT, text STRING", stage,
+      workDir, "mb", spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      interruptAfterBatches = None)(
+      nearDupCandidates(_, bandIndex, "doc_id", "text"),
+      { cands =>
         // within-batch: collapse per-band duplicates (bounded — ≤ bands
-        // rows per pair), verify with exact token Jaccard, land
-        // idempotently in the micro-batch's own overwrite partition
-        val pairs = cands
+        // rows per pair) and verify with exact token Jaccard
+        cands
           .select(col("doc_id").as("batch_id"), col("corpus_id"))
           .distinct()
-        pairs
           .join(tokens.toDF("batch_id", "toks_b"), "batch_id")
           .join(tokens.toDF("corpus_id", "toks_c"), "corpus_id")
           .withColumn("jac", Dedup.jaccard(col("toks_b"), col("toks_c")))
-          .filter(col("jac") >= threshold)
+          .filter(col("jac") >= 0.8)
           .select(col("batch_id"), col("corpus_id"), col("jac"))
-          .write.mode("overwrite").parquet(s"$out/mb=$id")
-      }
-      .start()
-    q.awaitTermination()
-    out
+      })
   }
 
+  /** Admission filter for ONE micro-batch: docs that collide with NO
+    * corpus band — the rows safe to append to the corpus.
+    *
+    * This is a per-micro-batch (foreachBatch) function, not a streaming
+    * plan: admission needs a LEFT ANTI join of the batch against its own
+    * band hits, and a stream-derived right side is not streaming-
+    * plannable (Spark rejects `LeftAnti` with a streaming right) — nor
+    * should it be: "which of this batch's docs had no hit" is a
+    * batch-local question. Inside `foreachBatch`
+    * ([[EventStreams.toForeachBatchSink]]) each micro-batch is a plain
+    * DataFrame, the anti join is legal, and the corpus index append can
+    * ride in the same idempotent handler (keyed by batchId).
+    */
   def admissibleBatch(
       batch: DataFrame,
       bandIndex: DataFrame,

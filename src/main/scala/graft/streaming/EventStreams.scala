@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -27,9 +28,9 @@ object EventStreams {
     * reads cannot infer.
     */
   def readEventStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema("ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE")
-      .parquet(dir)
+    spark.readStream.schema(EventSchema).parquet(dir)
+
+  private val EventSchema = "ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE"
 
   /** Watermarked event-time hourly aggregation — the streaming
     * trips_by_hour: tumbling 1-hour windows per event_type, state
@@ -344,6 +345,9 @@ object EventStreams {
       }
   }
 
+  private val stagedEventsFor =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
+
   /** Shared batch↔stream bridge harness: stage the events table as a
     * multi-file directory replayed in EVENT-TIME order, run an
     * arbitrary watermarked streaming aggregation over it as a FILE
@@ -351,9 +355,11 @@ object EventStreams {
     * contract: results emit exactly once, when the watermark closes
     * them), and land each batch in `workDir/out/batch_id=N` as parquet
     * (idempotent per batchId — restart-safe) for a DuckDB batch oracle
-    * to hash-check. Factored out of the r10
-    * sessionization bridge so every bridge gate (sessions, windowed
-    * CMS, …) reuses one staging discipline.
+    * to hash-check. Every event bridge gate (sessions, windowed CMS,
+    * …) goes through here: the slices are written by [[stageSlices]]
+    * and replayed by [[streamSlices]], the stager and stream driver
+    * the doc bridge ([[DocStreams.incrementalDedupDirToParquet]])
+    * shares.
     *
     * Staging must replay in event-time order ACROSS micro-batches: the
     * watermark ratchets to each batch's max event time, so a file
@@ -393,9 +399,6 @@ object EventStreams {
     * lifetime (the fixture contract — a mutated source needs a new
     * path or a cleared stage dir).
     */
-  private val stagedEventsFor =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def replayEventsDirToParquet(
       spark: SparkSession,
       srcDir: String,
@@ -404,25 +407,49 @@ object EventStreams {
       statePartitions: Int = 8,
       resume: Boolean = false,
       interruptAfterBatches: Option[Int] = None): String = {
-    import java.nio.file.{Files, Path}
-    import java.util.Comparator
-    import org.apache.spark.sql.streaming.Trigger
-    val root = Path.of(workDir)
     // `resume = true` continues an interrupted run from its checkpoint
     // (exactly-once restart: committed batches are skipped, the
     // in-flight one replays into its own overwritten partition);
     // a fresh run wipes the previous out + checkpoint first
-    if (!resume && Files.exists(root))
-      scala.util.Using.resource(Files.walk(root))(
-        _.sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p)))
-    val out = s"$workDir/out"
-    val ckpt = s"$workDir/ckpt"
+    if (!resume) wipeTree(workDir)
     val stage = stagedEventsFor.computeIfAbsent(
       Path.of(srcDir).toAbsolutePath.normalize.toString,
       key => stageEventSlices(spark, srcDir, key))
+    streamSlices(spark, EventSchema, stage, workDir, "batch_id",
+      statePartitions, interruptAfterBatches)(buildQuery, batch => batch)
+  }
+
+  /** The one stream driver behind every batch↔stream bridge: replay the
+    * `slice_NN.parquet` files of `stage` ([[stageSlices]]) as a FILE
+    * STREAM of `schema`, one file per micro-batch (`maxFilesPerTrigger`
+    * 1, `Trigger.AvailableNow`, append mode, checkpoint at
+    * `workDir/ckpt`), run `query` over it, and land each micro-batch,
+    * passed through `perBatch`, in its own overwrite partition
+    * `workDir/out/<part>=<batchId>`. Returns `workDir/out`.
+    *
+    * `perBatch` is the batch-local step a streaming plan cannot hold
+    * (the doc bridge's exact-Jaccard verify); the event bridges pass
+    * the batch through. `statePartitions` is the
+    * `spark.sql.shuffle.partitions` the query runs under, set for the
+    * query's lifetime and restored after it. `interruptAfterBatches`
+    * stops the query after that many committed batches (the restart
+    * drill's failure injection). The caller owns `workDir`: a fresh run
+    * wipes it first, a resumed one keeps its checkpoint.
+    */
+  private[streaming] def streamSlices(
+      spark: SparkSession,
+      schema: String,
+      stage: String,
+      workDir: String,
+      part: String,
+      statePartitions: Int,
+      interruptAfterBatches: Option[Int])(
+      query: DataFrame => DataFrame,
+      perBatch: DataFrame => DataFrame): String = {
+    import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
+    val out = s"$workDir/out"
     val stream = spark.readStream
-      .schema("ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE")
+      .schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(stage)
     // State-store partitioning is pinned at query start from
@@ -450,17 +477,13 @@ object EventStreams {
     // goes through the captured handle, not spark.streams.get (which
     // returns null for an already-terminated query — NPE on the bus
     // thread).
-    val targetQuery = new java.util.concurrent.atomic.AtomicReference[
-      org.apache.spark.sql.streaming.StreamingQuery](null)
+    val targetQuery = new java.util.concurrent.atomic.AtomicReference[StreamingQuery](null)
     val interruptListener = interruptAfterBatches.map { n =>
       val seen = new java.util.concurrent.atomic.AtomicInteger(0)
-      new org.apache.spark.sql.streaming.StreamingQueryListener {
-        override def onQueryStarted(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryTerminated(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-        override def onQueryProgress(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = {
+      new StreamingQueryListener {
+        override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+        override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+        override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
           val q = targetQuery.get()
           if (q != null && e.progress.id == q.id &&
               seen.incrementAndGet() == n)
@@ -470,17 +493,17 @@ object EventStreams {
     }
     interruptListener.foreach(spark.streams.addListener)
     try {
-      val q = buildQuery(stream).writeStream
+      val q = query(stream).writeStream
         .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", s"$workDir/ckpt")
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, id: Long) =>
           // idempotent per batchId: a batch replayed after a crash +
           // restart OVERWRITES its own partition instead of appending
           // a duplicate — the exactly-once contract foreachBatch
-          // leaves to its handler. Readers see batch_id as a
+          // leaves to its handler. Readers see `part` as a
           // provenance partition column.
-          batch.write.mode("overwrite").parquet(s"$out/batch_id=$id")
+          perBatch(batch).write.mode("overwrite").parquet(s"$out/$part=$id")
         }
         .start()
       targetQuery.set(q)
@@ -509,8 +532,6 @@ object EventStreams {
     */
   private def stageEventSlices(
       spark: SparkSession, srcDir: String, srcKey: String): String = {
-    import java.nio.file.{Files, Path}
-    import java.util.Comparator
     // the digest covers the source path AND a listing fingerprint
     // (relative name, size, mtime per file): a source REGENERATED at
     // the same path — new round, new fixture — keys a fresh stage
@@ -534,13 +555,8 @@ object EventStreams {
     if (Files.exists(stageRoot.resolve("_STAGED"))) return published
     val buildRoot = Path.of(
       s"$stageRoot.build_${ProcessHandle.current().pid()}")
-    if (Files.exists(buildRoot))
-      scala.util.Using.resource(Files.walk(buildRoot))(
-        _.sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p)))
+    wipeTree(buildRoot.toString)
     import spark.implicits._
-    // subpath of the scratch root: the parquet writer creates it
-    val stage = s"$buildRoot/slices"
     val ev = graft.sources.Tables.events(spark, srcDir)
       .select(col("ts"), col("user_id"), col("event_type"), col("value"))
     // one probe for the replay bounds AND the sentinel-domain guard:
@@ -564,71 +580,23 @@ object EventStreams {
       (bounds.getTimestamp(0).getTime, bounds.getTimestamp(1).getTime)
     val nSlices = 4
     val span = maxMs - minMs + 1
-    // mtime is the file source's order key (ties fall back to the
-    // filesystem's listing order, which the local FS does not define) —
-    // stamp each slice with a synthetic strictly-ascending whole-second
-    // mtime instead of sleeping a second between writes (whole seconds
-    // stay distinct even on 1 s-granularity filesystems)
-    val sliceMtimeBase = System.currentTimeMillis()
-    def stamp(target: Path, idx: Int): Unit =
-      Files.setLastModifiedTime(target,
-        java.nio.file.attribute.FileTime
-          .fromMillis(sliceMtimeBase + idx * 1000L))
-    // ALL slices in ONE pass over the events table (r11; the per-slice
-    // filter loop scanned the table nSlices times): a slice column +
-    // partitionBy write lands each event-time slice in its own
-    // directory — repartition by the slice value first, so every
-    // directory holds exactly one file — then the files move to the
-    // flat slice_NN layout the stream reads, mtimes stamped ascending.
-    val sliced = ev.withColumn("_slice",
-      least(lit(nSlices - 1),
-        ((unix_millis(col("ts")) - lit(minMs)) * nSlices / lit(span))
-          .cast("int")))
-    sliced.repartition(nSlices, col("_slice"))
-      .write.partitionBy("_slice").parquet(stage)
-    val stageDir = Path.of(stage)
-    for (k <- 0 until nSlices) {
-      val part = stageDir.resolve(s"_slice=$k")
-      if (Files.isDirectory(part)) {
-        scala.util.Using.resource(Files.list(part))(
-          _.filter(p => p.getFileName.toString.startsWith("part-"))
-            .forEach { p =>
-              val target = stageDir.resolve(f"slice_$k%02d.parquet")
-              Files.move(p, target)
-              stamp(target, k)
-            })
-        scala.util.Using.resource(Files.walk(part))(
-          _.sorted(Comparator.reverseOrder[Path]())
-            .forEach(q => Files.deleteIfExists(q)))
-      }
-    }
-    // _SUCCESS / .crc markers from the batch write would be listed by
-    // the file source; clear everything that is not a slice file
-    scala.util.Using.resource(Files.list(stageDir))(
-      _.filter(p => !p.getFileName.toString.startsWith("slice_"))
-        .forEach(p => Files.deleteIfExists(p)))
-    var sliceIdx = nSlices
-    def writeSlice(df: DataFrame): Unit = {
-      df.coalesce(1).write.mode("append").parquet(stage)
-      // rename the new part file so lexicographic order matches event
-      // time too (POSIX move keeps the stamped mtime — both keys agree)
-      scala.util.Using.resource(Files.list(stageDir))(
-        _.filter(p => p.getFileName.toString.startsWith("part-"))
-          .forEach { p =>
-            val target = stageDir.resolve(f"slice_$sliceIdx%02d.parquet")
-            Files.move(p, target)
-            stamp(target, sliceIdx)
-          })
-      sliceIdx += 1
-    }
-    // sentinels LAST: the first advances the watermark past every real
-    // result close (30 d ≫ any gap/window), the second's batch evicts
-    // and emits under that watermark
+    // sentinels LAST (slices nSlices and nSlices + 1 of the same write):
+    // the first advances the watermark past every real result close
+    // (30 d ≫ any gap/window), the second's batch evicts and emits
+    // under that watermark
     val dayMs = 24L * 3600 * 1000
-    writeSlice(Seq((new Timestamp(maxMs + 30 * dayMs), -1L, "_sentinel", 0.0))
-      .toDF("ts", "user_id", "event_type", "value"))
-    writeSlice(Seq((new Timestamp(maxMs + 31 * dayMs), -1L, "_sentinel", 0.0))
-      .toDF("ts", "user_id", "event_type", "value"))
+    val sentinels = Seq(
+      (new Timestamp(maxMs + 30 * dayMs), -1L, "_sentinel", 0.0, nSlices),
+      (new Timestamp(maxMs + 31 * dayMs), -1L, "_sentinel", 0.0, nSlices + 1))
+      .toDF("ts", "user_id", "event_type", "value", "_slice")
+    // subpath of the scratch root: the parquet writer creates it
+    stageSlices(
+      ev.withColumn("_slice",
+        least(lit(nSlices - 1),
+          ((unix_millis(col("ts")) - lit(minMs)) * nSlices / lit(span))
+            .cast("int")))
+        .unionByName(sentinels),
+      nSlices + 2, s"$buildRoot/slices")
     // complete the build (markers INSIDE, so they travel with the
     // rename), then publish atomically: the winner's rename succeeds,
     // a loser adopts whatever complete stage now sits at stageRoot.
@@ -637,10 +605,6 @@ object EventStreams {
     // regeneration keys a fresh dir) can be pruned instead of orphaned.
     Files.writeString(buildRoot.resolve("_SOURCE"), srcKey)
     Files.createFile(buildRoot.resolve("_STAGED"))
-    def wipe(root: Path): Unit =
-      scala.util.Using.resource(Files.walk(root))(
-        _.sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p)))
     def publish(): Unit =
       Files.move(buildRoot, stageRoot,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -657,18 +621,60 @@ object EventStreams {
           // it — but another process may publish a COMPLETE stage
           // between this wipe and the retry move, so on a second race
           // failure adopt the winner instead of propagating
-          wipe(stageRoot)
+          wipeTree(stageRoot.toString)
           try publish()
           catch {
             case e2: Throwable
                 if raceFailure.applyOrElse(e2, (_: Throwable) => false) &&
                   Files.exists(stageRoot.resolve("_STAGED")) =>
-              wipe(buildRoot)
+              wipeTree(buildRoot.toString)
           }
-        } else wipe(buildRoot)
+        } else wipeTree(buildRoot.toString)
     }
     pruneStaleStages(stageRoot, srcKey)
     published
+  }
+
+  /** The one slice stager: write `sliced`, whose int `_slice` column
+    * runs over [0, nSlices), to `dir` as ONE file per non-empty slice,
+    * `slice_NN.parquet`, with nothing else left in `dir`.
+    *
+    * One pass over the input (r11; a per-slice filter loop scanned it
+    * nSlices times): repartition by the slice value, so every
+    * `partitionBy` directory holds exactly one file, then move the
+    * files to the flat layout the file stream reads (the partition-dir
+    * layout would surface `_slice` as a stream column). mtime is the
+    * file source's order key (ties fall back to the filesystem's
+    * listing order, which the local FS does not define), so each slice
+    * is stamped with a synthetic strictly-ascending whole-second mtime
+    * instead of sleeping a second between writes (whole seconds stay
+    * distinct even on 1 s-granularity filesystems); the lexicographic
+    * names agree with it.
+    */
+  private[streaming] def stageSlices(sliced: DataFrame, nSlices: Int, dir: String): Unit = {
+    sliced.repartition(nSlices, col("_slice"))
+      .write.partitionBy("_slice").parquet(dir)
+    val stageDir = Path.of(dir)
+    val mtimeBase = System.currentTimeMillis()
+    for (k <- 0 until nSlices) {
+      val part = stageDir.resolve(s"_slice=$k")
+      if (Files.isDirectory(part)) {
+        scala.util.Using.resource(Files.list(part))(
+          _.filter(p => p.getFileName.toString.startsWith("part-"))
+            .forEach { p =>
+              val target = stageDir.resolve(f"slice_$k%02d.parquet")
+              Files.move(p, target)
+              Files.setLastModifiedTime(target,
+                java.nio.file.attribute.FileTime.fromMillis(mtimeBase + k * 1000L))
+            })
+        wipeTree(part.toString)
+      }
+    }
+    // _SUCCESS / .crc markers from the batch write would be listed by
+    // the file source; clear everything that is not a slice file
+    scala.util.Using.resource(Files.list(stageDir))(
+      _.filter(p => !p.getFileName.toString.startsWith("slice_"))
+        .forEach(p => wipeTree(p.toString)))
   }
 
   /** Whether `pid` names a running process: the liveness rule for the
@@ -676,15 +682,23 @@ object EventStreams {
   private[graft] def pidAlive(pid: Long): Boolean =
     ProcessHandle.of(pid).map[Boolean](_.isAlive).orElse(false)
 
-  /** Best-effort recursive delete: a concurrent pruner may remove files
-    * first, which just means they are already gone. */
-  private[graft] def deleteTree(p: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, Path}
-    try scala.util.Using.resource(Files.walk(p))(
-      _.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(q => Files.deleteIfExists(q)))
-    catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
+  /** Recursive delete of `dir` (a no-op when it does not exist) that
+    * throws on any failure: a wipe that silently left, say, a
+    * `batch_id=N` directory of an earlier run behind would have it
+    * read back as output. */
+  private[graft] def wipeTree(dir: String): Unit = {
+    val root = Path.of(dir)
+    if (Files.exists(root))
+      scala.util.Using.resource(Files.walk(root))(
+        _.sorted(java.util.Comparator.reverseOrder[Path]())
+          .forEach(p => Files.deleteIfExists(p)))
   }
+
+  /** Best-effort [[wipeTree]] for the pruners: a concurrent pruner may
+    * remove files first, which just means they are already gone. */
+  private[graft] def deleteTree(p: Path): Unit =
+    try wipeTree(p.toString)
+    catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
 
   /** Delete orphaned stage dirs for `srcKey` other than the live
     * `stageRoot`: published stages whose digest no longer matches (the
@@ -698,9 +712,7 @@ object EventStreams {
     * Best-effort: races with another pruner just mean the file is
     * already gone.
     */
-  private[streaming] def pruneStaleStages(
-      stageRoot: java.nio.file.Path, srcKey: String): Unit = {
-    import java.nio.file.{Files, Path}
+  private[streaming] def pruneStaleStages(stageRoot: Path, srcKey: String): Unit = {
     val tmp = stageRoot.getParent
     if (tmp == null || !Files.isDirectory(tmp)) return
     // Two-phase prune (r14, ADVICE r13): a published-but-stale stage is
@@ -767,20 +779,26 @@ object EventStreams {
   def sessionizeEventsDirToParquet(
       spark: SparkSession,
       srcDir: String,
-      workDir: String,
-      gap: String = "6 hours"): String =
-    replayEventsDirToParquet(spark, srcDir, workDir, stream =>
-      stream
-        .select(col("ts"), col("user_id"), col("value"))
-        .withWatermark("ts", "0 seconds")
-        .groupBy(session_window(col("ts"), gap), col("user_id"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          graft.queries.Det.dsum(col("value")).as("sum_value"))
-        .select(
-          col("session_window.start").as("session_start"),
-          col("session_window.end").as("session_end"),
-          col("user_id"), col("n_events"), col("sum_value")))
+      workDir: String): String =
+    replayEventsDirToParquet(spark, srcDir, workDir, sessionWindowQuery)
+
+  /** The query [[sessionizeEventsDirToParquet]] replays: a 6 h-gap
+    * `session_window` per user (the gap of the q_sessions oracle) with
+    * a count and a decimal sum, also the query of the cross-JVM
+    * restart drill ([[graft.StreamRestartDrill]]).
+    */
+  private[graft] def sessionWindowQuery(stream: DataFrame): DataFrame =
+    stream
+      .select(col("ts"), col("user_id"), col("value"))
+      .withWatermark("ts", "0 seconds")
+      .groupBy(session_window(col("ts"), "6 hours"), col("user_id"))
+      .agg(
+        count(lit(1)).as("n_events"),
+        graft.queries.Det.dsum(col("value")).as("sum_value"))
+      .select(
+        col("session_window.start").as("session_start"),
+        col("session_window.end").as("session_end"),
+        col("user_id"), col("n_events"), col("sum_value"))
 
   /** Custom-state sessionization bridge — the SIXTH batch↔stream gate
     * (r12, VERDICT r11 task 4), over [[replayEventsDirToParquet]]: the
@@ -806,11 +824,10 @@ object EventStreams {
   def sessionizeFmgsEventsDirToParquet(
       spark: SparkSession,
       srcDir: String,
-      workDir: String,
-      gapMs: Long = 6L * 3600 * 1000): String =
+      workDir: String): String =
     replayEventsDirToParquet(spark, srcDir, workDir, { stream =>
       import spark.implicits._
-      sessionize(stream.as[Event], gapMs).toDF()
+      sessionize(stream.as[Event], gapMs = 6L * 3600 * 1000).toDF()
     })
 
   /** Watermarked streaming-dedup bridge — the SEVENTH batch↔stream
@@ -832,12 +849,11 @@ object EventStreams {
   def dedupStreamEventsDirToParquet(
       spark: SparkSession,
       srcDir: String,
-      workDir: String,
-      watermarkDelay: String = "90 days"): String =
+      workDir: String): String =
     replayEventsDirToParquet(spark, srcDir, workDir, stream =>
       dedupStream(
         stream.withColumn("day", to_date(col("ts"))),
-        Seq("user_id", "event_type", "day"), watermarkDelay))
+        Seq("user_id", "event_type", "day"), watermark = "90 days"))
 
   /** Windowed CMS bridge — the SECOND batch↔stream gate (r11, VERDICT
     * r10 task 5), over [[replayEventsDirToParquet]]: the
@@ -852,18 +868,34 @@ object EventStreams {
   def windowedCmsEventsDirToParquet(
       spark: SparkSession,
       srcDir: String,
-      workDir: String,
-      d: Int = 4,
-      w: Int = 64): String =
+      workDir: String): String =
     replayEventsDirToParquet(spark, srcDir, workDir, stream =>
       windowedCms(stream.select(col("ts"), col("event_type")),
         "event_type", watermark = "0 seconds", windowLen = "1 hour",
-        d = d, w = w),
+        d = 4, w = 64),
       // COMPUTE-bound, not state-bound: the d× row explode + hash
       // aggregate dominates each micro-batch, so this bridge keeps the
       // batch shuffle width (8 state partitions measured 13.2 s vs
       // 6.4 s at 32 — the inverse of the join/session bridges)
       statePartitions = 32)
+
+  /** Carve one join side out of the replayed stream. The sentinel rows
+    * (user_id < 0) MUST pass the side filter: each side's watermark
+    * node sits downstream of it ([[clickPurchaseAttribution]] applies
+    * `withWatermark` on the filtered frame), so a plain event-type
+    * filter would hide the sentinels from the watermark entirely — the
+    * watermark then stalls at (real max − delay) and every row still
+    * inside the join interval at end of stream sits in state forever
+    * (observed: the outer bridge's last-2 h clicks never emitted their
+    * null rows). Sentinels never join REAL rows (they sit 30/31 days
+    * past the data, ≫ any join interval) but each does match ITSELF —
+    * the same row enters both sides with click_ts == purchase_ts — so
+    * consumers must drop user_id < 0 from the result (the gates do).
+    */
+  private def joinSide(stream: DataFrame, eventType: String): DataFrame =
+    stream
+      .filter(col("event_type") === eventType || col("user_id") < 0)
+      .select(col("ts"), col("user_id"), col("value"))
 
   /** Stream–stream interval-join bridge — the THIRD batch↔stream gate
     * (r11), over [[replayEventsDirToParquet]]: the
@@ -883,38 +915,19 @@ object EventStreams {
     * do); sentinels never match real rows (they sit ≥30 days past the
     * data, far outside any join interval).
     *
-    * Scale shape: per-side state is bounded by watermark + `within`
-    * (the eviction horizon Spark derives from the time-bound join
+    * Scale shape: per-side state is bounded by watermark + the 2 h
+    * join interval (the eviction horizon Spark derives from the time-bound join
     * condition) — never by stream length. That bound is the entire
     * difference between this plan and an unbounded stream-stream join
     * Spark would reject in append mode.
     */
-  /** Carve one join side out of the replayed stream. The sentinel rows
-    * (user_id < 0) MUST pass the side filter: each side's watermark
-    * node sits downstream of it ([[clickPurchaseAttribution]] applies
-    * `withWatermark` on the filtered frame), so a plain event-type
-    * filter would hide the sentinels from the watermark entirely — the
-    * watermark then stalls at (real max − delay) and every row still
-    * inside the join interval at end of stream sits in state forever
-    * (observed: the outer bridge's last-2 h clicks never emitted their
-    * null rows). Sentinels never join REAL rows (they sit 30/31 days
-    * past the data, ≫ any join interval) but each does match ITSELF —
-    * the same row enters both sides with click_ts == purchase_ts — so
-    * consumers must drop user_id < 0 from the result (the gates do).
-    */
-  private def joinSide(stream: DataFrame, eventType: String): DataFrame =
-    stream
-      .filter(col("event_type") === eventType || col("user_id") < 0)
-      .select(col("ts"), col("user_id"), col("value"))
-
   def attributionJoinEventsDirToParquet(
       spark: SparkSession,
       srcDir: String,
-      workDir: String,
-      within: String = "2 hours"): String =
+      workDir: String): String =
     replayEventsDirToParquet(spark, srcDir, workDir, stream =>
       clickPurchaseAttribution(
-        joinSide(stream, "click"), joinSide(stream, "purchase"), within))
+        joinSide(stream, "click"), joinSide(stream, "purchase"), "2 hours"))
 
   /** LEFT OUTER stream–stream bridge — the FOURTH batch↔stream gate
     * (r11), over [[replayEventsDirToParquet]]: the
@@ -932,11 +945,10 @@ object EventStreams {
   def attributionOuterEventsDirToParquet(
       spark: SparkSession,
       srcDir: String,
-      workDir: String,
-      within: String = "2 hours"): String =
+      workDir: String): String =
     replayEventsDirToParquet(spark, srcDir, workDir, stream =>
       clickPurchaseAttributionOuter(
-        joinSide(stream, "click"), joinSide(stream, "purchase"), within))
+        joinSide(stream, "click"), joinSide(stream, "purchase"), "2 hours"))
 
   /** Stream–static enrichment join: the batch lookup join (J1) applied
     * per micro-batch. The static side broadcasts once; no stream state,
@@ -965,25 +977,7 @@ object EventStreams {
       clicks: DataFrame,
       purchases: DataFrame,
       within: String = "1 hour",
-  ): DataFrame = {
-    // watermark delay tracks the join interval: a fixed delay narrower
-    // than `within` would silently drop late clicks the wider window
-    // was meant to capture
-    val c = clicks
-      .withWatermark("ts", within)
-      .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
-        col("value").as("click_value"))
-    val p = purchases
-      .withWatermark("ts", within)
-      .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
-        col("value").as("purchase_value"))
-    c.join(p,
-      col("c_user") === col("p_user") &&
-        col("click_ts") <= col("purchase_ts") &&
-        col("click_ts") >= col("purchase_ts") - expr(s"INTERVAL $within"))
-      .select(col("p_user").as("user_id"), col("click_ts"),
-        col("purchase_ts"), col("click_value"), col("purchase_value"))
-  }
+  ): DataFrame = intervalJoin(clicks, purchases, within, "inner")
 
   /** LEFT OUTER interval join: every click eventually emits — matched
     * rows as soon as the purchase arrives, UNMATCHED clicks with null
@@ -998,7 +992,21 @@ object EventStreams {
       clicks: DataFrame,
       purchases: DataFrame,
       within: String = "1 hour",
-  ): DataFrame = {
+  ): DataFrame = intervalJoin(clicks, purchases, within, "left_outer")
+
+  /** The one body of both attribution joins: clicks within `within`
+    * before a purchase of the same user, joined as `joinType`. The
+    * output's user_id is the click side's, which under the inner join's
+    * equality is the purchase side's too.
+    */
+  private def intervalJoin(
+      clicks: DataFrame,
+      purchases: DataFrame,
+      within: String,
+      joinType: String): DataFrame = {
+    // watermark delay tracks the join interval: a fixed delay narrower
+    // than `within` would silently drop late clicks the wider window
+    // was meant to capture
     val c = clicks
       .withWatermark("ts", within)
       .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
@@ -1011,7 +1019,7 @@ object EventStreams {
       col("c_user") === col("p_user") &&
         col("click_ts") <= col("purchase_ts") &&
         col("click_ts") >= col("purchase_ts") - expr(s"INTERVAL $within"),
-      "left_outer")
+      joinType)
       .select(col("c_user").as("user_id"), col("click_ts"),
         col("purchase_ts"), col("click_value"), col("purchase_value"))
   }

@@ -1,14 +1,12 @@
 package graft.ops
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 
 /** Round-10 hardening: dbscan exit hygiene + occupancy-derived grid,
-  * the quantile-derived Adamic–Adar hub cap, the bootstrap replicate
-  * bound, and the streaming↔batch sessionization bridge.
+  * the quantile-derived Adamic–Adar hub cap and the bootstrap
+  * replicate bound.
   */
 class Round10Spec extends SparkTestBase {
   import spark.implicits._
@@ -101,38 +99,5 @@ class Round10Spec extends SparkTestBase {
     }
     assert(e.getMessage.contains("4096"))
     assert(Stats.bootstrapMeanCI(df, "id", "x", b = 8).count() == 1)
-  }
-
-  test("streaming sessionization bridge reproduces batch sessions exactly") {
-    // 3 users / 5 sessions. User 1: {0,1} and {9,10} (8 h gap). User 2:
-    // {2, 5.5, 7} — a session whose events SPAN the 6 h slice boundary,
-    // so the stream must merge state across micro-batches — plus {20}.
-    // User 3: {23.5, 24} near the global max (the sentinel flush must
-    // emit it).
-    val t0 = Timestamp.valueOf("2024-03-01 00:00:00")
-    def ts(h: Double) = new Timestamp(t0.getTime + (h * 3600 * 1000).toLong)
-    val events = Seq(
-      (ts(0.0), 1L, "a", 1.5), (ts(1.0), 1L, "a", 2.5), (ts(9.0), 1L, "a", 4.0),
-      (ts(10.0), 1L, "b", 0.25), (ts(2.0), 2L, "a", 1.0), (ts(5.5), 2L, "a", 2.0),
-      (ts(7.0), 2L, "a", 0.5), (ts(23.5), 3L, "c", 7.0),
-      (ts(20.0), 2L, "b", 3.0), (ts(24.0), 3L, "c", 1.0))
-      .toDF("ts", "user_id", "event_type", "value")
-    val src = tmpDir("sessions_stream_src")
-    events.write.mode("overwrite").parquet(s"$src/events.parquet")
-    val out = graft.streaming.EventStreams.sessionizeEventsDirToParquet(
-      spark, src, tmpDir("sessions_stream_work"), gap = "6 hours")
-    val streamed = spark.read.parquet(out).filter(col("user_id") >= 0)
-      .select("session_start", "session_end", "user_id",
-        "n_events", "sum_value") // shed the batch_id provenance column
-    val batch = graft.sources.Tables.events(spark, src)
-      .groupBy(session_window(col("ts"), "6 hours"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"),
-        graft.queries.Det.dsum(col("value")).as("sum_value"))
-      .select(col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("user_id"), col("n_events"), col("sum_value"))
-    assert(streamed.count() == 5, "3 users' sessions: 2 + 2 + 1")
-    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty,
-      "streaming result diverged from the batch session_window aggregate")
   }
 }

@@ -8,7 +8,7 @@ import graft.queries.Det
 /** Round-11 fix pins (VERDICT r10 tasks + advisor items): the dsum6
   * fast path's value identity with dsum, the grouped-adjacency
   * Adamic–Adar's equivalence to the reference self-join spelling, and
-  * the streaming replay harness's loud-failure guards.
+  * the heavy-hitter support flag.
   */
 class Round11Spec extends SparkTestBase {
   import spark.implicits._
@@ -57,153 +57,6 @@ class Round11Spec extends SparkTestBase {
       .orderBy("a", "b").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(viaOp.nonEmpty && viaOp.toSeq == viaJoin.toSeq)
-  }
-
-  test("replay harness fails loudly on negative user_id (in-band sentinel guard)") {
-    val src = java.nio.file.Files.createTempDirectory("graft_r11_neg").toString
-    Seq((java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), -7L, "view", 1.0),
-      (java.sql.Timestamp.valueOf("2024-01-01 01:00:00"), 3L, "click", 2.0))
-      .toDF("ts", "user_id", "event_type", "value")
-      .write.mode("overwrite").parquet(s"$src/events.parquet")
-    val e = intercept[IllegalArgumentException] {
-      graft.streaming.EventStreams.replayEventsDirToParquet(
-        spark, src, s"$src/work", _.groupBy("user_id").count())
-    }
-    assert(e.getMessage.contains("negative user_id"))
-  }
-
-  test("stream-stream interval-join bridge equals the batch join at sf0.001") {
-    // the third batch↔stream bridge end-to-end on the real fixture: a
-    // watermarked click→purchase self-join over the replayed file
-    // stream must emit EXACTLY the batch interval join's pair set —
-    // inner joins emit once per match, so no flush subtleties hide here
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_attr_bridge").toString
-    val out = graft.streaming.EventStreams
-      .attributionJoinEventsDirToParquet(spark, Sf0001, work, "2 hours")
-    val streamed = spark.read.parquet(out)
-      // each sentinel row enters BOTH sides and matches itself
-      // (click_ts == purchase_ts) — dropped like the gate does
-      .filter(col("user_id") >= 0)
-      .orderBy("user_id", "click_ts", "purchase_ts").collect()
-      .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
-        r.getDouble(3), r.getDouble(4)))
-    val ev = graft.sources.Tables.events(spark, Sf0001)
-    val c = ev.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("click_ts"),
-        col("value").as("click_value"))
-    val p = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
-        col("value").as("purchase_value"))
-    val batch = c.join(p,
-      col("user_id") === col("p_user") &&
-        col("click_ts") <= col("purchase_ts") &&
-        col("click_ts") >= col("purchase_ts") - expr("INTERVAL 2 HOURS"))
-      .select(col("user_id"), col("click_ts"), col("purchase_ts"),
-        col("click_value"), col("purchase_value"))
-      .orderBy("user_id", "click_ts", "purchase_ts").collect()
-      .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
-        r.getDouble(3), r.getDouble(4)))
-    assert(streamed.nonEmpty && streamed.toSeq == batch.toSeq)
-  }
-
-  test("outer stream-stream bridge equals the batch LEFT join at sf0.001") {
-    // the watermark-gated null side: every never-converted click must
-    // emit exactly one null-purchase row once the sentinels advance the
-    // watermark past its 2 h window — equality with the batch LEFT
-    // join checks both the match set AND the eviction-time emission
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_attr_outer_bridge").toString
-    val out = graft.streaming.EventStreams
-      .attributionOuterEventsDirToParquet(spark, Sf0001, work, "2 hours")
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getTimestamp(1), Option(r.getTimestamp(2)),
-        r.getDouble(3), Option(r.get(4)).map(_.asInstanceOf[Double]))
-    val streamed = spark.read.parquet(out)
-      .filter(col("user_id") >= 0) // the sentinel clicks' own null rows
-      .select("user_id", "click_ts", "purchase_ts",
-        "click_value", "purchase_value")
-      .collect().map(key).sortBy(t => (t._1, t._2.getTime,
-        t._3.map(_.getTime).getOrElse(Long.MinValue)))
-    val ev = graft.sources.Tables.events(spark, Sf0001)
-    val c = ev.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("click_ts"),
-        col("value").as("click_value"))
-    val p = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
-        col("value").as("purchase_value"))
-    val batch = c.join(p,
-      col("user_id") === col("p_user") &&
-        col("click_ts") <= col("purchase_ts") &&
-        col("click_ts") >= col("purchase_ts") - expr("INTERVAL 2 HOURS"),
-      "left_outer")
-      .select(col("user_id"), col("click_ts"), col("purchase_ts"),
-        col("click_value"), col("purchase_value"))
-      .collect().map(key).sortBy(t => (t._1, t._2.getTime,
-        t._3.map(_.getTime).getOrElse(Long.MinValue)))
-    assert(streamed.exists(_._3.isEmpty),
-      "expected at least one watermark-evicted unmatched click")
-    assert(streamed.exists(_._3.nonEmpty), "expected matched pairs too")
-    assert(streamed.toSeq == batch.toSeq)
-  }
-
-  test("bridge restart is exactly-once: kill mid-stream, resume, identical result") {
-    // the production failure drill: stop() after 2 of the 6 replay
-    // batches (failure injection), restart from the same checkpoint,
-    // and require the final output to equal an uninterrupted run's —
-    // committed batches skip, the in-flight batch replays into its own
-    // OVERWRITTEN batch_id partition (the idempotent-sink contract)
-    def sessionQuery(stream: org.apache.spark.sql.DataFrame) =
-      stream
-        .select(col("ts"), col("user_id"), col("value"))
-        .withWatermark("ts", "0 seconds")
-        .groupBy(session_window(col("ts"), "6 hours"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"),
-          Det.dsum(col("value")).as("sum_value"))
-        .select(col("session_window.start").as("session_start"),
-          col("user_id"), col("n_events"), col("sum_value"))
-    def run(work: String, resume: Boolean, interrupt: Option[Int]) =
-      graft.streaming.EventStreams.replayEventsDirToParquet(
-        spark, Sf0001, work, sessionQuery,
-        resume = resume, interruptAfterBatches = interrupt)
-    def readBack(out: String) = spark.read.parquet(out)
-      .filter(col("user_id") >= 0)
-      .select("session_start", "user_id", "n_events", "sum_value")
-      .orderBy("user_id", "session_start").collect()
-      .map(r => (r.getTimestamp(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3)))
-    val workA = java.nio.file.Files
-      .createTempDirectory("graft_restart_a").toString
-    val outInterrupted = run(workA, resume = false, interrupt = Some(2))
-    val partial = readBack(outInterrupted)
-    val outResumed = run(workA, resume = true, interrupt = None)
-    val resumed = readBack(outResumed)
-    val workB = java.nio.file.Files
-      .createTempDirectory("graft_restart_b").toString
-    val clean = readBack(run(workB, resume = false, interrupt = None))
-    assert(partial.length < clean.length,
-      "the interrupt must actually cut the run short")
-    assert(resumed.nonEmpty && resumed.toSeq == clean.toSeq,
-      "resumed run diverged from the uninterrupted run")
-  }
-
-  test("stream-static dedup bridge equals the batch incremental pairs at sf0.001") {
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_inc_bridge").toString
-    val out = graft.streaming.DocStreams
-      .incrementalDedupDirToParquet(spark, Sf0001, work, threshold = 0.8)
-    val streamed = spark.read.parquet(out)
-      .select("batch_id", "corpus_id", "jac")
-      .orderBy("batch_id", "corpus_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val d = graft.sources.Tables.table(spark, Sf0001, "documents")
-    val batch = graft.ops.Dedup.incrementalNearDupPairs(
-      d.filter(col("doc_id") % 5 =!= 0),
-      d.filter(col("doc_id") % 5 === 0),
-      "doc_id", "text", threshold = 0.8)
-      .orderBy("batch_id", "corpus_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(streamed.nonEmpty && streamed.toSeq == batch.toSeq)
   }
 
   test("heavy hitters: support_guaranteed is false below the retention bound") {

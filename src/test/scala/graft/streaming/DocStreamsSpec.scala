@@ -95,6 +95,43 @@ class DocStreamsSpec extends SparkTestBase {
         s"expected no state operators, got $progress")
     } finally q.stop()
   }
+
+  test("stream-static dedup bridge equals the batch incremental pairs at sf0.001") {
+    val work = java.nio.file.Files
+      .createTempDirectory("graft_inc_bridge").toString
+    val out = graft.streaming.DocStreams
+      .incrementalDedupDirToParquet(spark, Sf0001, work)
+    val streamed = spark.read.parquet(out)
+      .select("batch_id", "corpus_id", "jac")
+      .orderBy("batch_id", "corpus_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val d = graft.sources.Tables.table(spark, Sf0001, "documents")
+    val batch = graft.ops.Dedup.incrementalNearDupPairs(
+      d.filter(col("doc_id") % 5 =!= 0),
+      d.filter(col("doc_id") % 5 === 0),
+      "doc_id", "text", threshold = 0.8)
+      .orderBy("batch_id", "corpus_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(streamed.nonEmpty && streamed.toSeq == batch.toSeq)
+  }
+
+  test("the doc bridge stages only its four slice files, in whole-second ascending mtime order") {
+    // the file source orders a trigger's files by mtime; the stager
+    // stamps one whole second apart so the order holds even on a
+    // filesystem with 1 s timestamps, and leaves no _SUCCESS/.crc
+    // files for the stream to list
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    val work = tmpDir("inc_bridge_stage")
+    DocStreams.incrementalDedupDirToParquet(spark, Sf0001, work)
+    val files = scala.util.Using.resource(Files.list(Path.of(work, "stage")))(
+      _.iterator.asScala.toList).sortBy(_.getFileName.toString)
+    assert(files.map(_.getFileName.toString) ==
+      (0 until 4).map(k => f"slice_$k%02d.parquet"))
+    val seconds = files.map(p => Files.getLastModifiedTime(p).toMillis / 1000)
+    assert(seconds.zip(seconds.tail).forall { case (a, b) => a < b },
+      s"slice mtimes (s) not strictly ascending: $seconds")
+  }
 }
 
 /** Top level, not spec-nested: an inner case class forces its encoder's

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.SparkTestBase
+import graft.queries.Det
 import graft.streaming.EventStreams.{Event, UserStats}
 
 class EventStreamsSpec extends SparkTestBase {
@@ -607,5 +608,238 @@ class EventStreamsSpec extends SparkTestBase {
       EventStreams.hourlyCounts(EventStreams.readEventStream(spark, dir)),
       "hourly_file", OutputMode.Complete())
     assert(spark.table("hourly_file").count() > 0)
+  }
+
+  test("streaming sessionization bridge reproduces batch sessions exactly") {
+    import spark.implicits._
+    // 3 users / 5 sessions. User 1: {0,1} and {9,10} (8 h gap). User 2:
+    // {2, 5.5, 7} — a session whose events SPAN the 6 h slice boundary,
+    // so the stream must merge state across micro-batches — plus {20}.
+    // User 3: {23.5, 24} near the global max (the sentinel flush must
+    // emit it).
+    val t0 = Timestamp.valueOf("2024-03-01 00:00:00")
+    def ts(h: Double) = new Timestamp(t0.getTime + (h * 3600 * 1000).toLong)
+    val events = Seq(
+      (ts(0.0), 1L, "a", 1.5), (ts(1.0), 1L, "a", 2.5), (ts(9.0), 1L, "a", 4.0),
+      (ts(10.0), 1L, "b", 0.25), (ts(2.0), 2L, "a", 1.0), (ts(5.5), 2L, "a", 2.0),
+      (ts(7.0), 2L, "a", 0.5), (ts(23.5), 3L, "c", 7.0),
+      (ts(20.0), 2L, "b", 3.0), (ts(24.0), 3L, "c", 1.0))
+      .toDF("ts", "user_id", "event_type", "value")
+    val src = tmpDir("sessions_stream_src")
+    events.write.mode("overwrite").parquet(s"$src/events.parquet")
+    val out = graft.streaming.EventStreams.sessionizeEventsDirToParquet(
+      spark, src, tmpDir("sessions_stream_work"))
+    val streamed = spark.read.parquet(out).filter(col("user_id") >= 0)
+      .select("session_start", "session_end", "user_id",
+        "n_events", "sum_value") // shed the batch_id provenance column
+    val batch = graft.sources.Tables.events(spark, src)
+      .groupBy(session_window(col("ts"), "6 hours"), col("user_id"))
+      .agg(count(lit(1)).as("n_events"),
+        graft.queries.Det.dsum(col("value")).as("sum_value"))
+      .select(col("session_window.start").as("session_start"),
+        col("session_window.end").as("session_end"),
+        col("user_id"), col("n_events"), col("sum_value"))
+    assert(streamed.count() == 5, "3 users' sessions: 2 + 2 + 1")
+    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty,
+      "streaming result diverged from the batch session_window aggregate")
+  }
+
+  test("replay harness fails loudly on negative user_id (in-band sentinel guard)") {
+    import spark.implicits._
+    val src = java.nio.file.Files.createTempDirectory("graft_r11_neg").toString
+    Seq((java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), -7L, "view", 1.0),
+      (java.sql.Timestamp.valueOf("2024-01-01 01:00:00"), 3L, "click", 2.0))
+      .toDF("ts", "user_id", "event_type", "value")
+      .write.mode("overwrite").parquet(s"$src/events.parquet")
+    val e = intercept[IllegalArgumentException] {
+      graft.streaming.EventStreams.replayEventsDirToParquet(
+        spark, src, s"$src/work", _.groupBy("user_id").count())
+    }
+    assert(e.getMessage.contains("negative user_id"))
+  }
+
+  test("stream-stream interval-join bridge equals the batch join at sf0.001") {
+    // the third batch↔stream bridge end-to-end on the real fixture: a
+    // watermarked click→purchase self-join over the replayed file
+    // stream must emit EXACTLY the batch interval join's pair set —
+    // inner joins emit once per match, so no flush subtleties hide here
+    val work = java.nio.file.Files
+      .createTempDirectory("graft_attr_bridge").toString
+    val out = graft.streaming.EventStreams
+      .attributionJoinEventsDirToParquet(spark, Sf0001, work)
+    val streamed = spark.read.parquet(out)
+      // each sentinel row enters BOTH sides and matches itself
+      // (click_ts == purchase_ts) — dropped like the gate does
+      .filter(col("user_id") >= 0)
+      .orderBy("user_id", "click_ts", "purchase_ts").collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
+        r.getDouble(3), r.getDouble(4)))
+    val ev = graft.sources.Tables.events(spark, Sf0001)
+    val c = ev.filter(col("event_type") === "click")
+      .select(col("user_id"), col("ts").as("click_ts"),
+        col("value").as("click_value"))
+    val p = ev.filter(col("event_type") === "purchase")
+      .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
+        col("value").as("purchase_value"))
+    val batch = c.join(p,
+      col("user_id") === col("p_user") &&
+        col("click_ts") <= col("purchase_ts") &&
+        col("click_ts") >= col("purchase_ts") - expr("INTERVAL 2 HOURS"))
+      .select(col("user_id"), col("click_ts"), col("purchase_ts"),
+        col("click_value"), col("purchase_value"))
+      .orderBy("user_id", "click_ts", "purchase_ts").collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
+        r.getDouble(3), r.getDouble(4)))
+    assert(streamed.nonEmpty && streamed.toSeq == batch.toSeq)
+  }
+
+  test("outer stream-stream bridge equals the batch LEFT join at sf0.001") {
+    // the watermark-gated null side: every never-converted click must
+    // emit exactly one null-purchase row once the sentinels advance the
+    // watermark past its 2 h window — equality with the batch LEFT
+    // join checks both the match set AND the eviction-time emission
+    val work = java.nio.file.Files
+      .createTempDirectory("graft_attr_outer_bridge").toString
+    val out = graft.streaming.EventStreams
+      .attributionOuterEventsDirToParquet(spark, Sf0001, work)
+    def key(r: org.apache.spark.sql.Row) =
+      (r.getLong(0), r.getTimestamp(1), Option(r.getTimestamp(2)),
+        r.getDouble(3), Option(r.get(4)).map(_.asInstanceOf[Double]))
+    val streamed = spark.read.parquet(out)
+      .filter(col("user_id") >= 0) // the sentinel clicks' own null rows
+      .select("user_id", "click_ts", "purchase_ts",
+        "click_value", "purchase_value")
+      .collect().map(key).sortBy(t => (t._1, t._2.getTime,
+        t._3.map(_.getTime).getOrElse(Long.MinValue)))
+    val ev = graft.sources.Tables.events(spark, Sf0001)
+    val c = ev.filter(col("event_type") === "click")
+      .select(col("user_id"), col("ts").as("click_ts"),
+        col("value").as("click_value"))
+    val p = ev.filter(col("event_type") === "purchase")
+      .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
+        col("value").as("purchase_value"))
+    val batch = c.join(p,
+      col("user_id") === col("p_user") &&
+        col("click_ts") <= col("purchase_ts") &&
+        col("click_ts") >= col("purchase_ts") - expr("INTERVAL 2 HOURS"),
+      "left_outer")
+      .select(col("user_id"), col("click_ts"), col("purchase_ts"),
+        col("click_value"), col("purchase_value"))
+      .collect().map(key).sortBy(t => (t._1, t._2.getTime,
+        t._3.map(_.getTime).getOrElse(Long.MinValue)))
+    assert(streamed.exists(_._3.isEmpty),
+      "expected at least one watermark-evicted unmatched click")
+    assert(streamed.exists(_._3.nonEmpty), "expected matched pairs too")
+    assert(streamed.toSeq == batch.toSeq)
+  }
+
+  test("bridge restart is exactly-once: kill mid-stream, resume, identical result") {
+    // the production failure drill: stop() after 2 of the 6 replay
+    // batches (failure injection), restart from the same checkpoint,
+    // and require the final output to equal an uninterrupted run's —
+    // committed batches skip, the in-flight batch replays into its own
+    // OVERWRITTEN batch_id partition (the idempotent-sink contract)
+    def sessionQuery(stream: org.apache.spark.sql.DataFrame) =
+      stream
+        .select(col("ts"), col("user_id"), col("value"))
+        .withWatermark("ts", "0 seconds")
+        .groupBy(session_window(col("ts"), "6 hours"), col("user_id"))
+        .agg(count(lit(1)).as("n_events"),
+          Det.dsum(col("value")).as("sum_value"))
+        .select(col("session_window.start").as("session_start"),
+          col("user_id"), col("n_events"), col("sum_value"))
+    def run(work: String, resume: Boolean, interrupt: Option[Int]) =
+      graft.streaming.EventStreams.replayEventsDirToParquet(
+        spark, Sf0001, work, sessionQuery,
+        resume = resume, interruptAfterBatches = interrupt)
+    def readBack(out: String) = spark.read.parquet(out)
+      .filter(col("user_id") >= 0)
+      .select("session_start", "user_id", "n_events", "sum_value")
+      .orderBy("user_id", "session_start").collect()
+      .map(r => (r.getTimestamp(0), r.getLong(1), r.getLong(2),
+        r.getDouble(3)))
+    val workA = java.nio.file.Files
+      .createTempDirectory("graft_restart_a").toString
+    val outInterrupted = run(workA, resume = false, interrupt = Some(2))
+    val partial = readBack(outInterrupted)
+    val outResumed = run(workA, resume = true, interrupt = None)
+    val resumed = readBack(outResumed)
+    val workB = java.nio.file.Files
+      .createTempDirectory("graft_restart_b").toString
+    val clean = readBack(run(workB, resume = false, interrupt = None))
+    assert(partial.length < clean.length,
+      "the interrupt must actually cut the run short")
+    assert(resumed.nonEmpty && resumed.toSeq == clean.toSeq,
+      "resumed run diverged from the uninterrupted run")
+  }
+
+  test("fmgs sessionize bridge equals the session_window bridge at sf0.001") {
+    // two mechanisms, one relation: the flatMapGroupsWithState
+    // sessionizer (event-time timers, emit-on-close) must produce the
+    // SAME session rows as the declarative session_window aggregate on
+    // this fixture (whose micro-precision timestamps carry no
+    // exact-gap pairs — at that measure-zero boundary the two
+    // mechanisms deliberately differ: the sessionizer follows the
+    // islands oracle, session_window coalesces; EventStreamsSpec r13
+    // pins both), end = last + gap, and
+    // per-session count/sum all agree
+    val workF = java.nio.file.Files
+      .createTempDirectory("graft_fmgs_bridge").toString
+    val outF = graft.streaming.EventStreams
+      .sessionizeFmgsEventsDirToParquet(spark, Sf0001, workF)
+    val fmgs = spark.read.parquet(outF)
+      .filter(col("user_id") >= 0)
+      .select(col("user_id"), col("session_start"), col("session_end"),
+        col("n_events"), graft.queries.Det.r6(col("sum_value")).as("sv"))
+      .orderBy("user_id", "session_start").collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
+        r.getLong(3), r.getDouble(4)))
+    val batch = graft.sources.Tables.events(spark, Sf0001)
+      .groupBy(session_window(col("ts"), "6 hours"), col("user_id"))
+      .agg(count(lit(1)).as("n_events"),
+        graft.queries.Det.dsum(col("value")).as("sv"))
+      .select(col("user_id"), col("session_window.start"),
+        col("session_window.end"), col("n_events"), col("sv"))
+      .orderBy("user_id", "start").collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
+        r.getLong(3), r.getDouble(4)))
+    assert(fmgs.nonEmpty && fmgs.toSeq == batch.toSeq)
+  }
+
+  test("fmgs session bounds keep microsecond precision (no ms truncation)") {
+    // the fixture's timestamps carry sub-millisecond digits; state that
+    // rode Timestamp.getTime (millis) zeroed them — a session_start is
+    // an event time verbatim, so at least one must keep micros % 1000
+    val work = java.nio.file.Files
+      .createTempDirectory("graft_fmgs_micros").toString
+    val out = graft.streaming.EventStreams
+      .sessionizeFmgsEventsDirToParquet(spark, Sf0001, work)
+    val subMs = spark.read.parquet(out)
+      .filter(col("user_id") >= 0)
+      .filter(unix_micros(col("session_start")) % 1000 =!= 0)
+      .count()
+    assert(subMs > 0, "all session_start micros were multiples of 1 ms — " +
+      "state truncated event times to millis again")
+  }
+
+  test("watermarked dedup bridge equals the batch distinct at sf0.001") {
+    val work = java.nio.file.Files
+      .createTempDirectory("graft_dedup_wm_bridge").toString
+    val out = graft.streaming.EventStreams
+      .dedupStreamEventsDirToParquet(spark, Sf0001, work)
+    val streamed = spark.read.parquet(out)
+      .filter(col("user_id") >= 0)
+      .select("user_id", "event_type", "day")
+      .orderBy("user_id", "event_type", "day").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getDate(2)))
+    val batch = graft.sources.Tables.events(spark, Sf0001)
+      .select(col("user_id"), col("event_type"), to_date(col("ts")).as("day"))
+      .distinct()
+      .orderBy("user_id", "event_type", "day").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getDate(2)))
+    assert(streamed.nonEmpty && streamed.toSeq == batch.toSeq)
+    // and it actually deduplicated: the raw stream is strictly larger
+    val raw = graft.sources.Tables.events(spark, Sf0001).count()
+    assert(raw > streamed.length)
   }
 }
