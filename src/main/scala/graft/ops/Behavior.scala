@@ -138,21 +138,6 @@ object Behavior {
         dsum(col(valueCol)).as("sum_value"))
   }
 
-  /** First-order Markov transition matrix of per-entity event
-    * sequences: for each (state_from, state_to) adjacent pair in a
-    * user's (ts, tie)-ordered stream, the count and the row-normalized
-    * transition probability — the behavioral-model summary behind
-    * next-event prediction, anomaly scoring, and bot detection. A
-    * user's first event has no predecessor and contributes nothing.
-    *
-    * Ordering ties break on `tieCol` (unique), so adjacency — and the
-    * whole matrix — is deterministic under any partitioning.
-    *
-    * Scale shape: one lag window PARTITIONED BY the entity (per-user
-    * sequences, never a global order), then a states²-bounded hash
-    * aggregate and a states-bounded row-total join. The matrix size
-    * depends on the state alphabet, not the corpus.
-    */
   /** Top event-sequence motifs: the most frequent length-3 runs of
     * consecutive states per entity stream — the behavioral n-gram
     * mining [[transitionMatrix]] generalizes past bigrams. Two lag
@@ -178,6 +163,21 @@ object Behavior {
       .limit(topN)
   }
 
+  /** First-order Markov transition matrix of per-entity event
+    * sequences: for each (state_from, state_to) adjacent pair in a
+    * user's (ts, tie)-ordered stream, the count and the row-normalized
+    * transition probability — the behavioral-model summary behind
+    * next-event prediction, anomaly scoring, and bot detection. A
+    * user's first event has no predecessor and contributes nothing.
+    *
+    * Ordering ties break on `tieCol` (unique), so adjacency — and the
+    * whole matrix — is deterministic under any partitioning.
+    *
+    * Scale shape: one lag window PARTITIONED BY the entity (per-user
+    * sequences, never a global order), then a states²-bounded hash
+    * aggregate and a states-bounded row-total join. The matrix size
+    * depends on the state alphabet, not the corpus.
+    */
   def transitionMatrix(
       events: DataFrame,
       userCol: String,

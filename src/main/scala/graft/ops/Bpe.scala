@@ -145,10 +145,6 @@ object Bpe {
     (mergeDf, vocab, vocab0)
   }
 
-  /** Generated DuckDB oracle for [[learnMerges]] over `documents.text`
-    * — same init, same per-step pair counts / tie-break / replace,
-    * unrolled as CTEs.
-    */
   /** Shared CTE chain v0..vN (w carried through for the encode oracle). */
   private def chainSql(nMerges: Int): String = {
     val init =
@@ -168,6 +164,10 @@ object Bpe {
     s"$init, ${steps.mkString(", ")}"
   }
 
+  /** Generated DuckDB oracle for [[learnMerges]] over `documents.text`
+    * — same init, same per-step pair counts / tie-break / replace,
+    * unrolled as CTEs.
+    */
   def oracleSql(nMerges: Int): String = {
     val out = (1 to nMerges).map { i =>
       s"SELECT $i AS step, a AS sym_a, b AS sym_b, a || b AS merged, pc AS pair_count FROM b$i"

@@ -235,6 +235,19 @@ object Dedup {
       .select("batch_id", "corpus_id", "jac")
   }
 
+  /** The [[denseRank]] adaptive width: summary ≤ min(2^20, max(1024,
+    * n/4096)) occupied buckets whatever the id distribution's RANGE is,
+    * average bucket ~4096 rows. Pure so the bound is unit-testable.
+    */
+  private[ops] def adaptiveBucketWidth(lo: Long, hi: Long, n: Long): Long = {
+    // hi ≥ lo, but the span of a full-64-bit id domain overflows —
+    // saturate instead (the width only has to be monotone-consistent)
+    val d = hi - lo
+    val range = if (d < 0 || d == Long.MaxValue) Long.MaxValue else d + 1
+    val targetBuckets = math.max(1024L, math.min(1L << 20, n / 4096))
+    math.max(1L, range / targetBuckets + (if (range % targetBuckets == 0) 0 else 1))
+  }
+
   /** Global dense rank (1-based, ordered by `idCol`) WITHOUT the
     * single-partition window `row_number().over(Window.orderBy(id))`
     * plans — that spelling funnels the whole table through one task.
@@ -264,19 +277,6 @@ object Dedup {
     * range-partitioned ranking would fix it at the cost of a sampled
     * boundary pass whose reuse-across-branches is not contractual.
     */
-  /** The [[denseRank]] adaptive width: summary ≤ min(2^20, max(1024,
-    * n/4096)) occupied buckets whatever the id distribution's RANGE is,
-    * average bucket ~4096 rows. Pure so the bound is unit-testable.
-    */
-  private[ops] def adaptiveBucketWidth(lo: Long, hi: Long, n: Long): Long = {
-    // hi ≥ lo, but the span of a full-64-bit id domain overflows —
-    // saturate instead (the width only has to be monotone-consistent)
-    val d = hi - lo
-    val range = if (d < 0 || d == Long.MaxValue) Long.MaxValue else d + 1
-    val targetBuckets = math.max(1024L, math.min(1L << 20, n / 4096))
-    math.max(1L, range / targetBuckets + (if (range % targetBuckets == 0) 0 else 1))
-  }
-
   def denseRank(
       df: DataFrame,
       idCol: String,

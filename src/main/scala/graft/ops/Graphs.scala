@@ -1005,7 +1005,6 @@ object Graphs {
       .limit(topK)
   }
 
-  /** DuckDB spelling of [[adamicAdar]]. */
   /** Degree value at the `q`-quantile of the symmetrized-degree
     * distribution (ascending rank semantics: the smallest degree d
     * whose cumulative vertex count reaches ⌈q·n⌉), floored at 2 — the
@@ -1101,6 +1100,7 @@ object Graphs {
       s"ORDER BY aa DESC, cn DESC, a, b LIMIT $topK"
   }
 
+  /** DuckDB spelling of [[adamicAdar]]. */
   def adamicAdarOracleSql(
       edgesSql: String,
       maxNeighborDeg: Int,

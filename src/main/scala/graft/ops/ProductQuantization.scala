@@ -95,22 +95,31 @@ object ProductQuantization {
       queries: DataFrame, // (qid, qv: array<float|double>)
       m: Int,
       topK: Int,
-  ): DataFrame = {
-    val qsubs = subvectors(queries, "qid", "qv", m)
-      .toDF("qid", "subspace", "qsv")
-    val lut = qsubs.join(broadcast(codebooks), "subspace")
+  ): DataFrame =
+    adcTopK(codes, codebooks, queries, m, topK)
+
+  /** The ADC body of [[topK]] and [[ivfPqTopK]]: the query-subvector
+    * LUT (qid, subspace, code, pd2) joined to the candidate codes
+    * `cands` on the columns they share — every code for every query,
+    * or, when `cands` carries a `qid`, only that query's probed
+    * candidates — summed per (qid, candidate) and cut by the retrieval
+    * kernel ([[Similarity.rankCut]]).
+    */
+  private def adcTopK(
+      cands: DataFrame, // (vec_id, subspace, code[, qid])
+      codebooks: DataFrame,
+      queries: DataFrame,
+      m: Int,
+      topK: Int): DataFrame = {
+    val lut = subvectors(queries, "qid", "qv", m).toDF("qid", "subspace", "qsv")
+      .join(broadcast(codebooks), "subspace")
       .select(col("qid"), col("subspace"), col("cluster").as("code"),
         Clustering.sqDist(col("qsv"), col("c")).as("pd2"))
-    val scored = codes
-      .join(broadcast(lut), Seq("subspace", "code"))
-      .groupBy("qid", "vec_id")
+    val ad = cands
+      .join(broadcast(lut), lut.columns.toSeq.intersect(cands.columns))
+      .groupBy(col("qid"), col("vec_id").as("cid"))
       .agg(sum(col("pd2").cast("decimal(38,20)")).cast("double").as("ad2"))
-    scored
-      .withColumn("rank",
-        row_number().over(Window.partitionBy("qid")
-          .orderBy(col("ad2"), col("vec_id"))))
-      .filter(col("rank") <= topK)
-      .select(col("qid"), col("vec_id").as("cid"), col("ad2"), col("rank"))
+    Similarity.rankCut(ad, "ad2", topK, descending = false)
   }
 
   /** Index-order squared-distance fold between two DuckDB double lists
@@ -242,33 +251,19 @@ object ProductQuantization {
   ): DataFrame = {
     val vecs = emb.select(col(idCol).as("vec_id"),
       transform(col(vecCol), _.cast("double")).as("v"))
-    val cen = vecs.filter(col("vec_id") % stride === 0)
-      .select(col("vec_id").as("cell_id"), col("v").as("cv"))
-    val cCells = vecs.crossJoin(broadcast(cen))
-      .withColumn("d2", Clustering.sqDist(col("v"), col("cv")))
-      .groupBy("vec_id")
-      .agg(min(struct(col("d2"), col("cell_id"))).as("_best"))
-      .select(col("vec_id"), col("_best.cell_id").as("cell_id"))
-    val qvecs = queries.select(col("qid"),
-      transform(col("qv"), _.cast("double")).as("v"))
-    val qCells = qvecs.crossJoin(broadcast(cen))
-      .withColumn("d2", Clustering.sqDist(col("v"), col("cv")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("qid").orderBy(col("d2"), col("cell_id"))))
-      .filter(col("rn") <= nProbe)
-      .select("qid", "cell_id")
-    val cand = cCells.join(broadcast(qCells), "cell_id").select("qid", "vec_id")
-    val qsubs = subvectors(queries, "qid", "qv", m).toDF("qid", "subspace", "qsv")
-    val lut = qsubs.join(broadcast(codebooks), "subspace")
-      .select(col("qid"), col("subspace"), col("cluster").as("code"),
-        Clustering.sqDist(col("qsv"), col("c")).as("pd2"))
-    cand.join(codes, "vec_id")
-      .join(broadcast(lut), Seq("qid", "subspace", "code"))
-      .groupBy("qid", "vec_id")
-      .agg(sum(col("pd2").cast("decimal(38,20)")).cast("double").as("ad2"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("qid").orderBy(col("ad2"), col("vec_id"))))
-      .filter(col("rank") <= topK)
-      .select(col("qid"), col("vec_id").as("cid"), col("ad2"), col("rank"))
+    // cells: the stride-sampled centroids; a vector's cell is its
+    // nearest by exact squared distance, ties to the lower cell id
+    val cen = Similarity.ivfCentroids(vecs, "vec_id", "v", stride)
+      .select(col("centroid_id").as("cluster"), col("cv").as("c"))
+    val cCells = Clustering.nearest(vecs, cen, Nil, "v")
+    val qCells = Similarity.rankCut(
+        queries.select(col("qid"), transform(col("qv"), _.cast("double")).as("v"))
+          .crossJoin(broadcast(cen))
+          .select(col("qid"), col("cluster").as("cid"),
+            Clustering.sqDist(col("v"), col("c")).as("d2")),
+        "d2", nProbe, descending = false)
+      .select(col("qid"), col("cid").as("cluster"))
+    val cand = cCells.join(broadcast(qCells), "cluster").select("qid", "vec_id")
+    adcTopK(cand.join(codes, "vec_id"), codebooks, queries, m, topK)
   }
 }

@@ -92,20 +92,6 @@ object Profile {
         coalesce(sum(rowHash), lit(0).cast("decimal(38,0)")).as("checksum"))
   }
 
-  /** Data-skipping audit: per-partition min/max zone statistics for
-    * `valCol` plus, for the band predicate `valCol BETWEEN lo AND hi`,
-    * whether the partition is provably skippable (its whole range falls
-    * outside the band) and the scan-row bound a pruning reader would
-    * pay. This is THE 100 TB lever made inspectable: parquet/iceberg
-    * readers prune on exactly these stats, and this op quantifies — per
-    * partition, before running anything — how much of the table a given
-    * predicate actually has to touch. The output is partition-count
-    * sized; one hash aggregate over the partition key produces it.
-    *
-    * Nulls sit outside any band (SQL three-valued BETWEEN), matching
-    * what a stats-pruning reader assumes when null_count is tracked
-    * separately — `n_rows` counts them, min/max ignore them.
-    */
   /** Profile DIFF — the data-contract monitor: [[numeric]] computed
     * over two snapshots (yesterday/today, upstream/downstream,
     * reference/current) and joined per column, with a `drifted` verdict
@@ -131,6 +117,20 @@ object Profile {
           !(col("median_a") <=> col("median_b")))
   }
 
+  /** Data-skipping audit: per-partition min/max zone statistics for
+    * `valCol` plus, for the band predicate `valCol BETWEEN lo AND hi`,
+    * whether the partition is provably skippable (its whole range falls
+    * outside the band) and the scan-row bound a pruning reader would
+    * pay. This is THE 100 TB lever made inspectable: parquet/iceberg
+    * readers prune on exactly these stats, and this op quantifies — per
+    * partition, before running anything — how much of the table a given
+    * predicate actually has to touch. The output is partition-count
+    * sized; one hash aggregate over the partition key produces it.
+    *
+    * Nulls sit outside any band (SQL three-valued BETWEEN), matching
+    * what a stats-pruning reader assumes when null_count is tracked
+    * separately — `n_rows` counts them, min/max ignore them.
+    */
   def pruneAudit(
       df: DataFrame,
       partCol: String,

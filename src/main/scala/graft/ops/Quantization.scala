@@ -126,17 +126,10 @@ object Quantization {
   def hammingTopK(
       queries: DataFrame,
       corpus: DataFrame,
-      k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val scored = corpus.crossJoin(broadcast(queries))
-      .withColumn("hd", hamming(col("qw"), col("cw")))
-    scored
-      .withColumn("rank",
-        row_number().over(
-          Window.partitionBy("qid").orderBy(col("hd"), col("cid"))))
-      .filter(col("rank") <= k)
-      .select("qid", "cid", "hd", "rank")
-  }
+      k: Int): DataFrame =
+    Similarity.rankCut(
+      corpus.crossJoin(broadcast(queries)).withColumn("hd", hamming(col("qw"), col("cw"))),
+      "hd", k, descending = false)
 
   /** Two-stage retrieval — the production architecture the pieces above
     * exist for, composed end to end: the 32×-smaller binary codes
@@ -159,21 +152,16 @@ object Quantization {
       queries: DataFrame, // (qid, qv: array<float>)
       m: Int,
       k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.queries.Det.r6
     require(m >= k, s"candidate pool m=$m must cover k=$k")
     val packed = quantizeBinary(corpus, idCol, vecCol)
       .select(col(idCol).as("cid"), col("words").as("cw"))
     val qPacked = quantizeBinary(queries, "qid", "qv")
       .select(col("qid"), col("words").as("qw"))
     val cands = hammingTopK(qPacked, packed, m).select("qid", "cid")
-    cands
-      .join(corpus.select(col(idCol).as("cid"), col(vecCol).as("ce")), "cid")
-      .join(broadcast(queries.select(col("qid"), col("qv").as("qe"))), "qid")
-      .withColumn("score", r6(Similarity.cosine(col("qe"), col("ce"))))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("qid").orderBy(col("score").desc, col("cid"))))
-      .filter(col("rank") <= k)
-      .select("qid", "cid", "score", "rank")
+    Similarity.scoreTopK(
+      cands
+        .join(corpus.select(col(idCol).as("cid"), col(vecCol).as("ce")), "cid")
+        .join(broadcast(queries.select(col("qid"), col("qv").as("qe"))), "qid"),
+      k)
   }
 }

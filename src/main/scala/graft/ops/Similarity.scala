@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.queries.Det.r6
+
 /** Temporal joins Spark lacks as built-ins, per the build brief's
   * preference order: composed from existing operators (tier a) rather
   * than custom plan machinery, valid while the reference side stays
@@ -190,15 +192,23 @@ object TemporalJoins {
 /** Similarity search over embedding columns (`array<float>`) — SURVEY.md
   * §7.4 extension surface.
   *
-  * Two paths:
-  *  - [[cosineTopK]]: exact brute force — broadcast the (small) query set
-  *    against all candidates; per-candidate work is a codegen'd
-  *    fold over the vector, and the only shuffle is the final top-k per
-  *    query. The baseline and the verifier for the approximate path.
-  *  - [[lshBuckets]] / [[bucketedTopK]]: the scale path — deterministic
-  *    random-hyperplane signatures bucket the corpus so each query only
-  *    scores its own bucket (LSH for cosine distance, Charikar 2002).
-  *    At 100 TB the bucket column doubles as a partition/clustering key.
+  * One score-and-rank kernel, many candidate generators. Every top-k
+  * in the retrieval family builds its own (qid, cid, qe, ce) candidate
+  * pairs and hands them to the same two steps:
+  *  - [[score]]: `r6(cosine(qe, ce))` — the 6-dp rounding that lets a
+  *    gate hash-check its scores against DuckDB;
+  *  - [[rankCut]]: per query, order by the metric then `cid` and keep
+  *    ranks 1..k, emitting (qid, cid, metric, rank).
+  *
+  * The generators: [[cosineTopK]] (exact: the small query set broadcast
+  * against every candidate — the verifier for the rest),
+  * [[multiProbeTopK]] and [[bucketedTopK]] (LSH: only the query's own
+  * bucket, plus its Hamming-1 neighbours for multi-probe — Charikar
+  * 2002, Lv et al. 2007) and [[ivfTopK]] (inverted-file cells). The
+  * Hamming, two-stage and PQ rankers in [[Quantization]] and
+  * [[ProductQuantization]] reuse [[rankCut]] on their own metric.
+  * [[cosineTopKAgg]] takes the score step and then a bounded-heap
+  * aggregator instead of the window.
   *
   * All arithmetic is double-precision in array order (left fold), making
   * scores bit-reproducible across runs and engines.
@@ -233,6 +243,36 @@ object Similarity {
   def cosineHof(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(normSq(a)) * sqrt(normSq(b)))
 
+  /** The kernel's score step: (qid, cid, qe, ce) pairs → (qid, cid,
+    * score) with `score = r6(cosine(qe, ce))`. Only the triple leaves
+    * it, so the rank-cut's shuffle never moves vectors.
+    */
+  private def score(pairs: DataFrame): DataFrame =
+    pairs.select(col("qid"), col("cid"), r6(cosine(col("qe"), col("ce"))).as("score"))
+
+  /** The kernel's rank-cut: per `qid`, order by `metric` (descending
+    * for similarities, ascending for distances) then `cid`, and keep
+    * ranks 1..k. Returns (qid, cid, metric, rank) — a total order, so
+    * the cut is the same in every engine.
+    */
+  private[ops] def rankCut(
+      scored: DataFrame, metric: String, k: Int, descending: Boolean): DataFrame = {
+    val by = if (descending) col(metric).desc else col(metric).asc
+    scored.select(col("qid"), col("cid"), col(metric))
+      .withColumn("rank", row_number().over(Window.partitionBy("qid").orderBy(by, col("cid"))))
+      .filter(col("rank") <= k)
+  }
+
+  /** Both kernel steps: the k best cosine scores per query. */
+  private[ops] def scoreTopK(pairs: DataFrame, k: Int): DataFrame =
+    rankCut(score(pairs), "score", k, descending = true)
+
+  /** Every (query, candidate) pair but a query's match with itself —
+    * the generator of the exact paths.
+    */
+  private def allPairs(queries: DataFrame, candidates: DataFrame): DataFrame =
+    candidates.crossJoin(broadcast(queries)).filter(col("qid") =!= col("cid"))
+
   /** Exact top-k cosine neighbours for each query vector.
     *
     * `queries` must be small enough to broadcast (the usual ANN serving
@@ -245,18 +285,8 @@ object Similarity {
       queries: DataFrame, // (qid, qe: array<float>)
       candidates: DataFrame, // (cid, ce: array<float>)
       k: Int,
-      scoreRounding: Column => Column = identity,
-  ): DataFrame = {
-    val scored = candidates
-      .crossJoin(broadcast(queries))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("score", scoreRounding(cosine(col("qe"), col("ce"))))
-      .select("qid", "cid", "score")
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("cid"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
+  ): DataFrame =
+    scoreTopK(allPairs(queries, candidates), k)
 
   /** Deterministic random-hyperplane LSH bucket id (`nBits` sign bits).
     *
@@ -306,15 +336,11 @@ object Similarity {
       queries: DataFrame, // (qid, qe: array<float>)
       candidates: DataFrame, // (cid, ce: array<float>)
       k: Int,
-      scoreRounding: Column => Column = identity,
   ): DataFrame = {
     val spark = candidates.sparkSession
     import spark.implicits._
-    val scored = candidates
-      .crossJoin(broadcast(queries))
-      .filter(col("qid") =!= col("cid"))
-      .select(col("qid").cast("long"), col("cid").cast("long"),
-        scoreRounding(cosine(col("qe"), col("ce"))).as("score"))
+    val scored = score(allPairs(queries, candidates))
+      .select(col("qid").cast("long"), col("cid").cast("long"), col("score"))
       .as[(Long, Long, Double)]
     scored
       .groupByKey(_._1)
@@ -338,26 +364,41 @@ object Similarity {
       candidates: DataFrame, // (cid, ce)
       k: Int,
       nBits: Int = 4,
-      scoreRounding: Column => Column = identity,
-  ): DataFrame = {
-    val qBase = queries.withColumn("bucket0", lshBucket(col("qe"), nBits))
-    val qProbes = qBase.withColumn(
-      "bucket",
-      explode(array((lit(0) +: (0 until nBits).map(j => lit(1 << j))).map(
-        m => col("bucket0").bitwiseXOR(m)): _*)))
+  ): DataFrame =
+    probeTopK(queries, candidates, k, nBits, 0 +: (0 until nBits).map(1 << _))
+
+  /** Approximate top-k: score only candidates sharing the query's LSH
+    * bucket — multi-probe with the query's own bucket as the only probe.
+    * Trades recall for a 2^nBits fan-in reduction; callers verify
+    * recall against [[cosineTopK]] on a sample.
+    */
+  def bucketedTopK(
+      queries: DataFrame, // (qid, qe)
+      candidates: DataFrame, // (cid, ce)
+      k: Int,
+      nBits: Int = 4,
+  ): DataFrame =
+    probeTopK(queries, candidates, k, nBits, Seq(0))
+
+  /** The LSH generator: each query probes the buckets `masks` away (by
+    * XOR) from its own and meets the candidates hashed there.
+    */
+  private def probeTopK(
+      queries: DataFrame,
+      candidates: DataFrame,
+      k: Int,
+      nBits: Int,
+      masks: Seq[Int]): DataFrame = {
+    val qProbes = queries
+      .withColumn("bucket0", lshBucket(col("qe"), nBits))
+      .withColumn("bucket",
+        explode(array(masks.map(m => col("bucket0").bitwiseXOR(lit(m))): _*)))
       .drop("bucket0")
     val cb = candidates.withColumn("bucket", lshBucket(col("ce"), nBits))
-    val scored = cb
-      .join(broadcast(qProbes), Seq("bucket"))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("score", scoreRounding(cosine(col("qe"), col("ce"))))
-      .select("qid", "cid", "score")
     // no distinct needed: the probed masks are pairwise distinct, a
     // candidate lives in exactly one bucket → each (qid, cid) at most once
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("cid"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    scoreTopK(
+      cb.join(broadcast(qProbes), Seq("bucket")).filter(col("qid") =!= col("cid")), k)
   }
 
   /** IVF coarse quantizer: a deterministic stride-subset of the corpus
@@ -369,27 +410,6 @@ object Similarity {
   def ivfCentroids(vecs: DataFrame, idCol: String, vecCol: String, stride: Int): DataFrame =
     vecs.filter(col(idCol) % stride === 0)
       .select(col(idCol).as("centroid_id"), col(vecCol).as("cv"))
-
-  /** Cell assignment: each vector goes to its best centroid by rounded
-    * cosine, ties broken by centroid id. Scoring is a map-side
-    * broadcast cross join; the argmax window shuffles only
-    * (id, centroid_id, score) triples, never embeddings.
-    */
-  private def ivfAssign(
-      vecs: DataFrame, // (id, v)
-      idCol: String,
-      centroids: DataFrame,
-      nProbe: Int,
-      scoreRounding: Column => Column): DataFrame = {
-    val w = Window.partitionBy(idCol).orderBy(col("cs").desc, col("centroid_id"))
-    vecs
-      .crossJoin(broadcast(centroids))
-      .withColumn("cs", scoreRounding(cosine(col("v"), col("cv"))))
-      .select(col(idCol), col("centroid_id"), col("cs"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= nProbe)
-      .select(col(idCol), col("centroid_id"))
-  }
 
   /** IVF approximate top-k (inverted-file ANN): candidates live in
     * exactly one cell, queries probe their `nProbe` nearest cells, and
@@ -404,35 +424,31 @@ object Similarity {
       k: Int,
       stride: Int = 64,
       nProbe: Int = 2,
-      scoreRounding: Column => Column = identity,
   ): DataFrame = {
-    val cen = ivfCentroids(
-      candidates.select(col("cid").as("id"), col("ce")), "id", "ce", stride)
-    val cCells = ivfAssign(
-      candidates.select(col("cid"), col("ce").as("v")), "cid", cen, 1, scoreRounding)
-    val qCells = ivfAssign(
-      queries.select(col("qid"), col("qe").as("v")), "qid", cen, nProbe, scoreRounding)
+    val cen = ivfCentroids(candidates, "cid", "ce", stride)
+      .select(col("centroid_id").as("cid"), col("cv").as("ce"))
+    // cell assignment is the kernel again, with the centroids as the
+    // candidates: each vector's `n` best centroids by rounded cosine,
+    // ties to the lower centroid id. Scoring is a map-side broadcast
+    // cross join; the cut shuffles only triples, never embeddings.
+    def cells(vecs: DataFrame, n: Int): DataFrame =
+      scoreTopK(vecs.crossJoin(broadcast(cen)), n)
+        .select(col("qid"), col("cid").as("centroid_id"))
+    val cCells = cells(candidates.select(col("cid").as("qid"), col("ce").as("qe")), 1)
+      .withColumnRenamed("qid", "cid")
+    val qCells = cells(queries, nProbe)
     // each (qid, cid) pair arises at most once: a candidate has one cell.
     // qCells (nQueries × nProbe rows) broadcasts, so the probe is a
     // map-side semi-join against the cell-keyed candidate assignment —
     // no shuffle keyed on the (skewed) cell id.
-    val scored = cCells
+    val pairs = cCells
       .join(broadcast(qCells), "centroid_id")
       .join(broadcast(queries), "qid")
       .join(candidates, "cid")
       .filter(col("qid") =!= col("cid"))
-      .withColumn("score", scoreRounding(cosine(col("qe"), col("ce"))))
-      .select("qid", "cid", "score")
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("cid"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    scoreTopK(pairs, k)
   }
 
-  /** Approximate top-k: score only candidates sharing the query's LSH
-    * bucket. Trades recall for a 2^nBits fan-in reduction; callers verify
-    * recall against [[cosineTopK]] on a sample.
-    */
   /** ANN quality evaluation: per-query recall of an approximate top-k
     * against the exact one — THE metric that justifies (or indicts) an
     * LSH/IVF scale path, computed as a relational op so it runs over
@@ -455,26 +471,6 @@ object Similarity {
       // long/long via one double cast: the same single IEEE division in
       // any engine — no rounding discipline needed
       .withColumn("recall", col("n_hit").cast("double") / col("n_exact"))
-  }
-
-  def bucketedTopK(
-      queries: DataFrame, // (qid, qe)
-      candidates: DataFrame, // (cid, ce)
-      k: Int,
-      nBits: Int = 4,
-      scoreRounding: Column => Column = identity,
-  ): DataFrame = {
-    val qb = queries.withColumn("bucket", lshBucket(col("qe"), nBits))
-    val cb = candidates.withColumn("bucket", lshBucket(col("ce"), nBits))
-    val scored = cb
-      .join(broadcast(qb), Seq("bucket"))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("score", scoreRounding(cosine(col("qe"), col("ce"))))
-      .select("qid", "cid", "score")
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("cid"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
   }
 
   /** Johnson–Lindenstrauss signed random projection of an embedding
@@ -507,6 +503,6 @@ object Similarity {
          |  cast(0.0 AS DOUBLE), (acc, x) -> acc + x))""".stripMargin
     df.select(col(idCol), posexplode(expr(signedSums)).as(Seq("dim", "_raw")))
       .select(col(idCol), col("dim"),
-        graft.queries.Det.r6(col("_raw") / sqrt(lit(k.toDouble))).as("proj"))
+        r6(col("_raw") / sqrt(lit(k.toDouble))).as("proj"))
   }
 }

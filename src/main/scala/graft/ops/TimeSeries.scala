@@ -107,25 +107,6 @@ object TimeSeries {
         graft.queries.Det.r6(col("decayed_value") / col("sum_value")))
   }
 
-  /** Offline CUSUM change-point detection per key: the maximum absolute
-    * cumulative deviation of `valCol` from the key's own mean, and the
-    * earliest time attaining it — the classic single-change-point test
-    * statistic (a level shift makes the partial sums drift to a peak AT
-    * the change; a stable series random-walks near zero). Emits per
-    * key: n, the normalized statistic max|S_i|/n (r6), and `change_ts`.
-    *
-    * EXACT-arithmetic trick: instead of deviations from the double
-    * mean (whose rounding would contaminate every partial sum), the
-    * partial sums are computed n-SCALED — S'_i = n·prefix_i − i·total,
-    * all DECIMAL/integer ops — so the running values, the max, and the
-    * argmax tie-compare are bit-exact in both engines; the ONLY double
-    * op is the final /n² normalization, then r6. (S'_i = n²·(classic
-    * CUSUM_i), hence the squared normalizer.)
-    *
-    * Scale shape: one per-key aggregate for (n, total), a key-keyed
-    * join back, one prefix-sum window PARTITIONED BY the key (per-key
-    * sequences, never a global order), one final per-key aggregate.
-    */
   /** Day-of-week seasonality profile: per (key, weekday) event counts,
     * the weekday's share of the key's activity, and its deviation from
     * the uniform 1/7 — the weekly-rhythm audit behind staffing, alert
@@ -193,6 +174,25 @@ object TimeSeries {
         .as("autocorr"))
   }
 
+  /** Offline CUSUM change-point detection per key: the maximum absolute
+    * cumulative deviation of `valCol` from the key's own mean, and the
+    * earliest time attaining it — the classic single-change-point test
+    * statistic (a level shift makes the partial sums drift to a peak AT
+    * the change; a stable series random-walks near zero). Emits per
+    * key: n, the normalized statistic max|S_i|/n (r6), and `change_ts`.
+    *
+    * EXACT-arithmetic trick: instead of deviations from the double
+    * mean (whose rounding would contaminate every partial sum), the
+    * partial sums are computed n-SCALED — S'_i = n·prefix_i − i·total,
+    * all DECIMAL/integer ops — so the running values, the max, and the
+    * argmax tie-compare are bit-exact in both engines; the ONLY double
+    * op is the final /n² normalization, then r6. (S'_i = n²·(classic
+    * CUSUM_i), hence the squared normalizer.)
+    *
+    * Scale shape: one per-key aggregate for (n, total), a key-keyed
+    * join back, one prefix-sum window PARTITIONED BY the key (per-key
+    * sequences, never a global order), one final per-key aggregate.
+    */
   def cusumChangePoint(
       events: DataFrame,
       keyCol: String,

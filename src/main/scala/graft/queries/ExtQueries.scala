@@ -141,10 +141,6 @@ object ExtQueries {
         Dedup.nearDuplicatePairs(docs(s, dir), "doc_id", "text", threshold = 0.8))
       .orderBy("doc_id")
 
-  /** Same clusters via the O(log diameter) hook+shortcut variant —
-    * shares q_dedup_clusters' recursive-CTE oracle, so both traversal
-    * strategies must agree with DuckDB's transitive closure.
-    */
   /** The shingle→MinHash→LSH→verify→CC chain at threshold 0.8, shared
     * by the three survivor gates (q_dedup_clusters_fast / _canonical /
     * _best) — computed ONCE per (session, dir), persisted, and eagerly
@@ -194,6 +190,10 @@ object ExtQueries {
             docs(s, dir), "doc_id", "text", threshold = 0.8)))
     }).df
 
+  /** Same clusters via the O(log diameter) hook+shortcut variant —
+    * shares q_dedup_clusters' recursive-CTE oracle, so both traversal
+    * strategies must agree with DuckDB's transitive closure.
+    */
   def qDedupClustersFast(s: SparkSession, dir: String): DataFrame =
     clustersFast(s, dir).orderBy("doc_id")
 
@@ -233,14 +233,13 @@ object ExtQueries {
 
   def qSimTopk(s: SparkSession, dir: String): DataFrame =
     Similarity
-      .cosineTopK(queriesDf(s, dir), candsDf(s, dir), k = 10, scoreRounding = r6)
+      .cosineTopK(queriesDf(s, dir), candsDf(s, dir), k = 10)
       .select("qid", "cid", "score", "rank")
       .orderBy("qid", "rank")
 
   def qSimLsh(s: SparkSession, dir: String): DataFrame =
     Similarity
-      .bucketedTopK(queriesDf(s, dir), candsDf(s, dir), k = 10, nBits = 4,
-        scoreRounding = r6)
+      .bucketedTopK(queriesDf(s, dir), candsDf(s, dir), k = 10, nBits = 4)
       .select("qid", "cid", "score", "rank")
       .orderBy("qid", "rank")
 
@@ -265,9 +264,9 @@ object ExtQueries {
     Similarity
       .recallAtK(
         Similarity.bucketedTopK(queriesDf(s, dir), candsDf(s, dir),
-          k = 10, nBits = 4, scoreRounding = r6),
+          k = 10, nBits = 4),
         Similarity.cosineTopK(queriesDf(s, dir), candsDf(s, dir),
-          k = 10, scoreRounding = r6))
+          k = 10))
       .orderBy("qid")
 
   /** IVF's recall against the brute-force top-k — the same metric as
@@ -278,9 +277,9 @@ object ExtQueries {
     Similarity
       .recallAtK(
         Similarity.ivfTopK(queriesDf(s, dir), candsDf(s, dir),
-          k = 10, stride = 64, nProbe = 2, scoreRounding = r6),
+          k = 10, stride = 64, nProbe = 2),
         Similarity.cosineTopK(queriesDf(s, dir), candsDf(s, dir),
-          k = 10, scoreRounding = r6))
+          k = 10))
       .orderBy("qid")
 
   def qDedupEmbed(s: SparkSession, dir: String): DataFrame =
@@ -303,9 +302,9 @@ object ExtQueries {
     val tc = candsDf(s, dir).withColumn("ce", slice(col("ce"), 1, 16))
     Similarity
       .recallAtK(
-        Similarity.cosineTopK(tq, tc, k = 10, scoreRounding = r6),
+        Similarity.cosineTopK(tq, tc, k = 10),
         Similarity.cosineTopK(queriesDf(s, dir), candsDf(s, dir),
-          k = 10, scoreRounding = r6))
+          k = 10))
       .orderBy("qid")
   }
 
@@ -315,7 +314,7 @@ object ExtQueries {
     */
   def qSimTopkAgg(s: SparkSession, dir: String): DataFrame =
     Similarity
-      .cosineTopKAgg(queriesDf(s, dir), candsDf(s, dir), k = 10, scoreRounding = r6)
+      .cosineTopKAgg(queriesDf(s, dir), candsDf(s, dir), k = 10)
       .orderBy("qid", "rank")
 
   /** Sign-bit packing ([[graft.ops.Quantization.quantizeBinary]]): the
@@ -376,15 +375,14 @@ object ExtQueries {
 
   def qSimLshMulti(s: SparkSession, dir: String): DataFrame =
     Similarity
-      .multiProbeTopK(queriesDf(s, dir), candsDf(s, dir), k = 10, nBits = 4,
-        scoreRounding = r6)
+      .multiProbeTopK(queriesDf(s, dir), candsDf(s, dir), k = 10, nBits = 4)
       .select("qid", "cid", "score", "rank")
       .orderBy("qid", "rank")
 
   def qSimIvf(s: SparkSession, dir: String): DataFrame =
     Similarity
       .ivfTopK(queriesDf(s, dir), candsDf(s, dir), k = 10, stride = 64,
-        nProbe = 2, scoreRounding = r6)
+        nProbe = 2)
       .select("qid", "cid", "score", "rank")
       .orderBy("qid", "rank")
 
@@ -480,7 +478,7 @@ object ExtQueries {
     Similarity.cosineTopK(
         e.filter(col("doc_id") < 5).select(col("doc_id").as("qid"), col("fe").as("qe")),
         e.select(col("doc_id").as("cid"), col("fe").as("ce")),
-        k = 5, scoreRounding = r6)
+        k = 5)
       .select("qid", "cid", "score", "rank")
       .orderBy("qid", "rank")
   }
@@ -681,12 +679,6 @@ object ExtQueries {
       .orderBy("o_orderstatus")
   }
 
-  /** Snapshot diff ([[Layout.snapshotDiff]]) — recover the CDC stream
-    * between two table versions: the "after" snapshot drops every 89th
-    * order, bumps the price of every 97th surviving one, and adds
-    * offset-keyed new orders; the diff must classify exactly those as
-    * deleted/updated/inserted and drop everything unchanged.
-    */
   /** The drifted "after" snapshot both CDC gates diff against: every
     * 89th order deleted, every 97th survivor price-bumped, offset-keyed
     * new orders appended.
@@ -702,6 +694,12 @@ object ExtQueries {
     (orders, after)
   }
 
+  /** Snapshot diff ([[Layout.snapshotDiff]]) — recover the CDC stream
+    * between two table versions: the "after" snapshot drops every 89th
+    * order, bumps the price of every 97th surviving one, and adds
+    * offset-keyed new orders; the diff must classify exactly those as
+    * deleted/updated/inserted and drop everything unchanged.
+    */
   def qTableDiff(s: SparkSession, dir: String): DataFrame = {
     val (orders, after) = driftedOrders(s, dir)
     Layout.snapshotDiff(orders, after, Seq("o_orderkey"),
@@ -1479,9 +1477,6 @@ object ExtQueries {
   private val stopRatioSql =
     s"(${hitsSql(TextAnalysis.EnStopwords)} / len(string_split(text, ' ')))"
 
-  /** DuckDB cosine between two list<float> cols, double left-fold (same
-    * order as Spark's `aggregate`).
-    */
   /** Hashing-trick embedding oracle body (no ORDER BY) — shared by
     * q_text_embed and q_text_knn. A def: referenced during `gates`
     * init (see PrepQueries.repetitionSelect for the val-order hazard).
@@ -1501,6 +1496,9 @@ object ExtQueries {
       "SELECT doc_id, list_transform(vec, x -> CASE WHEN nrm > 0 " +
       "THEN x / nrm ELSE 0.0 END) AS embedding FROM n"
 
+  /** DuckDB cosine between two list<float> cols, double left-fold (same
+    * order as Spark's `aggregate`).
+    */
   private def cosSql(a: String, b: String): String =
     s"list_sum(list_transform(range(len($a)), i -> $a[i+1]::DOUBLE * $b[i+1]::DOUBLE)) / " +
       s"(sqrt(list_sum(list_transform($a, x -> x::DOUBLE * x::DOUBLE))) * " +

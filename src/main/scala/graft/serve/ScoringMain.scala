@@ -21,21 +21,24 @@ import graft.util.Sessions
 object ScoringMain {
 
   /** Parse one input line into a request (the `app.py:25-31` type
-    * validation/coercion step).
+    * validation/coercion step): fields go through Python's `float()`
+    * and `int()` grammars, shared with [[HttpScoring]], so `3.2f` and
+    * `0x1p3` are errors and `1_000` is a number, as in the reference.
     */
   def parseLine(line: String): Either[String, Scoring.ScoringRequest] = {
+    import HttpScoring.{pyFloat, pyInt}
     val parts = line.trim.split(",").map(_.trim)
     try {
       parts.length match {
         case 5 =>
           Right(Scoring.ScoringRequest(
-            parts(0).toDouble, parts(1).toDouble,
-            parts(2).toInt, parts(3).toInt, parts(4).toInt))
+            pyFloat(parts(0)), pyFloat(parts(1)),
+            pyInt(parts(2)), pyInt(parts(3)), pyInt(parts(4))))
         case 4 =>
-          val dist = parts(0).toDouble
+          val dist = pyFloat(parts(0))
           Right(Scoring.ScoringRequest(
             dist, Scoring.estimateDurationMin(dist),
-            parts(1).toInt, parts(2).toInt, parts(3).toInt))
+            pyInt(parts(1)), pyInt(parts(2)), pyInt(parts(3))))
         case n => Left(s"expected 4 or 5 fields, got $n")
       }
     } catch {

@@ -169,7 +169,7 @@ class PlanSpec extends SparkTestBase {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val base = java.nio.file.Files.createTempDirectory("bucket_plan").toString
+      val base = tmpDir("bucket_plan")
       graft.etl.Layout.writeBucketed(Tables.table(spark, Sf0001, "lineitem"),
         "li_bucketed", s"$base/li", "l_orderkey", 8)
       graft.etl.Layout.writeBucketed(Tables.table(spark, Sf0001, "orders"),

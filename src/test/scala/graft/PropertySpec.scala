@@ -310,6 +310,23 @@ class PropertySpec extends SparkTestBase {
         s"price median approx $pa vs exact $p")
     }
   }
+
+  test("dsum6 equals dsum exactly on 6-dp inputs (the long fast path is a pure speedup)") {
+    import spark.implicits._
+    import graft.queries.Det
+    // adversarial 6-dp values: boundary magnitudes, many groups, values
+    // whose double representation sits below/above the true decimal
+    val vals = (1 to 5000).map { i =>
+      val raw = math.sin(i.toDouble) * 1000.0 + 1.0 / math.log(i + 2.0)
+      (i % 37, math.floor(raw * 1e6 + 0.5) / 1e6) // an r6 output by construction
+    }
+    val df = vals.toDF("g", "x").repartition(16)
+    val a = df.groupBy("g").agg(Det.dsum(col("x")).as("s"))
+      .orderBy("g").collect().map(r => (r.getInt(0), r.getDouble(1)))
+    val b = df.groupBy("g").agg(Det.dsum6(col("x")).as("s"))
+      .orderBy("g").collect().map(r => (r.getInt(0), r.getDouble(1)))
+    assert(a.toSeq == b.toSeq)
+  }
 }
 
 object PropertySpec {

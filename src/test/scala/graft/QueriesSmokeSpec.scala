@@ -5,11 +5,12 @@ package graft
   * block it persisted beyond its own result.
   *
   * The hygiene half generalizes the round-10 dbscan exit-discipline
-  * spec (Round10Spec) to the WHOLE registry: a library caller composing
-  * any gate query must not inherit a session-lifetime cache it never
-  * asked for (the round-8 q_containment contamination / round-9 dbscan
-  * neighbor-pair pattern). The contract: after one action, a query may
-  * leave at most its result-backing checkpoint generation in the block
+  * spec (MiningSpec, "dbscan releases every block it persisted") to the
+  * WHOLE registry: a library caller composing any gate query must not
+  * inherit a session-lifetime cache it never asked for (the round-8
+  * q_containment contamination / round-9 dbscan neighbor-pair
+  * pattern). The contract: after one action, a query may leave at
+  * most its result-backing checkpoint generation in the block
   * manager (≤ 2 persisted RDDs; deliberate cross-query shared stages
   * get a named allowance below). Between tests the audit clears the
   * block manager AND the shared-stage memo together — unpersisting a

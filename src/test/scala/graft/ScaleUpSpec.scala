@@ -14,7 +14,7 @@ class ScaleUpSpec extends SparkTestBase {
   private val Src = "/root/testdata/sf0.001"
 
   test("scale-up x3: counts, key integrity, fanout, copy-0 identity") {
-    val dst = java.nio.file.Files.createTempDirectory("graft_scaleup").toString
+    val dst = tmpDir("scaleup")
     try {
       ScaleUp.run(spark, Src, dst, factor = 3)
 

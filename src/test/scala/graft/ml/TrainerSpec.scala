@@ -141,6 +141,21 @@ class TrainerSpec extends SparkTestBase {
     assert(out(1) == manual.head)
   }
 
+  test("scoring CLI: fields follow Python's float()/int() grammar") {
+    import graft.serve.ScoringMain
+    val (model, _) = trained
+    val out = ScoringMain.scoreLines(spark, model, Iterator(
+      "3.2f,10,1,8,1", // Java's toDouble takes the suffix; float() raises
+      "0x1p3,10,1,8,1", // hex float: same
+      "3.2,10,1,8,1",
+      "3.2,1_0,1,8,1", // float("1_0") == 10.0
+    )).toList
+    assert(out.length == 4)
+    assert(out(0).startsWith("ERROR:") && out(1).startsWith("ERROR:"), out)
+    assert(out(2).toDouble.isFinite)
+    assert(out(3) == out(2))
+  }
+
   test("round2 is banker's rounding (Python round parity)") {
     assert(Scoring.round2(2.125) == 2.12) // 2.125 dyadic-exact, HALF_EVEN down
     assert(Scoring.round2(2.375) == 2.38) // exact, HALF_EVEN up

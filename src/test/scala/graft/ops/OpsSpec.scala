@@ -311,6 +311,37 @@ class OpsSpec extends SparkTestBase {
     info(s"IVF recall: $hits/${exact.count()}")
   }
 
+  test("IVF top-k probing every cell equals exact cosine top-k row for row") {
+    val q = emb.filter(col("vec_id") < 5).select(col("vec_id").as("qid"), col("embedding").as("qe"))
+    val c = emb.select(col("vec_id").as("cid"), col("embedding").as("ce"))
+    val cells = emb.filter(col("vec_id") % 64 === 0).count().toInt
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("qid", "cid", "score", "rank").orderBy("qid", "rank").collect().toSeq
+    val ivf = rows(Similarity.ivfTopK(q, c, 10, stride = 64, nProbe = cells))
+    assert(cells > 1 && ivf.length == 50)
+    assert(ivf == rows(Similarity.cosineTopK(q, c, 10)))
+  }
+
+  test("bucketed top-k equals exact top-k over the query's own LSH bucket") {
+    import org.apache.spark.sql.expressions.Window
+    import graft.queries.Det.r6
+    val q = emb.filter(col("vec_id") < 5).select(col("vec_id").as("qid"), col("embedding").as("qe"))
+    val c = emb.select(col("vec_id").as("cid"), col("embedding").as("ce"))
+    val approx = Similarity.bucketedTopK(q, c, 10, nBits = 4)
+      .select(col("qid"), col("cid"), r6(col("score")).as("score"), col("rank"))
+      .orderBy("qid", "rank").collect().toSeq
+    // the same-bucket candidates, spelled without the library's generator
+    val exact = c.withColumn("b", Similarity.lshBucket(col("ce"), 4))
+      .join(q.withColumn("b", Similarity.lshBucket(col("qe"), 4)), "b")
+      .filter(col("qid") =!= col("cid"))
+      .select(col("qid"), col("cid"), r6(Similarity.cosine(col("qe"), col("ce"))).as("score"))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy("qid").orderBy(col("score").desc, col("cid"))))
+      .filter(col("rank") <= 10)
+      .orderBy("qid", "rank").collect().toSeq
+    assert(approx.nonEmpty && approx == exact)
+  }
+
   test("codegen cosine matches the declarative HOF reference bit-for-bit") {
     val pairs = emb.select(col("vec_id").as("a_id"), col("embedding").as("va"))
       .crossJoin(emb.select(col("vec_id").as("b_id"), col("embedding").as("vb")))
@@ -639,5 +670,22 @@ class OpsSpec extends SparkTestBase {
     val ng = Dedup.duplicatedSpans(docs, "doc_id", "text", 8, 4, 2)
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(ng(4L) == 0L && ng(3L) == 33L)
+  }
+
+  test("heavy hitters: support_guaranteed is false below the retention bound") {
+    import spark.implicits._
+    // a:16 clears 16·3 ≥ 46; b:10 (30 < 46) is below the bound — if the
+    // sketch keeps it, the flag must say so. Only a's presence is
+    // GUARANTEED (freq > N/(cap+1)); every returned row's flag must
+    // match the recomputed bound either way.
+    val rows = Seq.fill(16)("a") ++ Seq.fill(10)("b") ++
+      (1 to 20).map(i => s"t$i")
+    val df = rows.zipWithIndex.map { case (w, i) => (i.toLong, w) }
+      .toDF("id", "text").repartition(8)
+    val n = rows.size.toLong
+    val out = TextAnalysis.heavyHitters(df, "text", k = 5, capacity = 2)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getBoolean(2)))
+    assert(out.exists { case (t, _, g) => t == "a" && g })
+    assert(out.forall { case (_, f, g) => g == (f * 3 >= n) })
   }
 }

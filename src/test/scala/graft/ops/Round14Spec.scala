@@ -148,7 +148,7 @@ class Round14Spec extends SparkTestBase {
     // pair and the failure mode: a missing or corrupt file must mean
     // "no floors" (no dumps, merge starts fresh), never a crash that
     // takes the bench run down with it.
-    val dir = java.nio.file.Files.createTempDirectory("graft_floors")
+    val dir = java.nio.file.Path.of(tmpDir("floors"))
     val p = s"$dir/floors.json"
     val floors = Map("q_a" -> 1.234, "q_b" -> 0.007, "write" -> 6.208)
     graft.Bench.writeFloors(p, floors)

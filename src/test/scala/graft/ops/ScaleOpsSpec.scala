@@ -192,6 +192,21 @@ class ScaleOpsSpec extends SparkTestBase {
     ivf.foreach { case (pair, d) => assert(full(pair) == d, s"ad2 drift at $pair") }
   }
 
+  test("IVF-PQ probing every cell equals full-scan ADC top-k row for row") {
+    val cb = ProductQuantization.train(emb, "vec_id", "embedding",
+      m = 8, k = 16, iters = 1)
+    val codes = ProductQuantization.encode(emb, "vec_id", "embedding", cb, m = 8)
+    val queries = emb.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    val cells = emb.filter(col("vec_id") % 64 === 0).count().toInt
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("qid", "rank").collect().toSeq
+    val ivf = rows(ProductQuantization.ivfPqTopK(emb, "vec_id", "embedding",
+      codes, cb, queries, m = 8, topK = 10, stride = 64, nProbe = cells))
+    assert(cells > 1 && ivf.length == 50)
+    assert(ivf == rows(ProductQuantization.topK(codes, cb, queries, m = 8, topK = 10)))
+  }
+
   test("kmeans checkpointEvery bounds plan size without changing results") {
     // checkpointEvery is gone: the fixed-round driver rotates the
     // centroids at round 8. Without rotation each Lloyd round embeds all

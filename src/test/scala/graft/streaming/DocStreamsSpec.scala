@@ -97,8 +97,7 @@ class DocStreamsSpec extends SparkTestBase {
   }
 
   test("stream-static dedup bridge equals the batch incremental pairs at sf0.001") {
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_inc_bridge").toString
+    val work = tmpDir("inc_bridge")
     val out = graft.streaming.DocStreams
       .incrementalDedupDirToParquet(spark, Sf0001, work)
     val streamed = spark.read.parquet(out)

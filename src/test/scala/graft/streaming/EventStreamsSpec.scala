@@ -377,7 +377,7 @@ class EventStreamsSpec extends SparkTestBase {
     // them without sabotaging a live stage, another source's stage, or
     // a CONCURRENT builder's .build_<pid> dir
     import java.nio.file.{Files, Path}
-    val parent = Files.createTempDirectory("graft_prune_spec")
+    val parent = java.nio.file.Path.of(tmpDir("prune_spec"))
     def mk(name: String, source: Option[String], staged: Boolean): Path = {
       val d = Files.createDirectories(parent.resolve(name))
       source.foreach(s => Files.writeString(d.resolve("_SOURCE"), s))
@@ -420,7 +420,7 @@ class EventStreamsSpec extends SparkTestBase {
 
   test("bridge scratch dirs of dead JVMs are pruned, live pids' dirs survive") {
     import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_workdir_prune")
+    val tmp = java.nio.file.Path.of(tmpDir("workdir_prune"))
     def mk(name: String) = {
       val d = Files.createDirectories(tmp.resolve(name).resolve("ckpt"))
       Files.writeString(d.resolve("0"), "x")
@@ -646,7 +646,7 @@ class EventStreamsSpec extends SparkTestBase {
 
   test("replay harness fails loudly on negative user_id (in-band sentinel guard)") {
     import spark.implicits._
-    val src = java.nio.file.Files.createTempDirectory("graft_r11_neg").toString
+    val src = tmpDir("r11_neg")
     Seq((java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), -7L, "view", 1.0),
       (java.sql.Timestamp.valueOf("2024-01-01 01:00:00"), 3L, "click", 2.0))
       .toDF("ts", "user_id", "event_type", "value")
@@ -663,8 +663,7 @@ class EventStreamsSpec extends SparkTestBase {
     // watermarked click→purchase self-join over the replayed file
     // stream must emit EXACTLY the batch interval join's pair set —
     // inner joins emit once per match, so no flush subtleties hide here
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_attr_bridge").toString
+    val work = tmpDir("attr_bridge")
     val out = graft.streaming.EventStreams
       .attributionJoinEventsDirToParquet(spark, Sf0001, work)
     val streamed = spark.read.parquet(out)
@@ -698,8 +697,7 @@ class EventStreamsSpec extends SparkTestBase {
     // emit exactly one null-purchase row once the sentinels advance the
     // watermark past its 2 h window — equality with the batch LEFT
     // join checks both the match set AND the eviction-time emission
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_attr_outer_bridge").toString
+    val work = tmpDir("attr_outer_bridge")
     val out = graft.streaming.EventStreams
       .attributionOuterEventsDirToParquet(spark, Sf0001, work)
     def key(r: org.apache.spark.sql.Row) =
@@ -758,14 +756,12 @@ class EventStreamsSpec extends SparkTestBase {
       .orderBy("user_id", "session_start").collect()
       .map(r => (r.getTimestamp(0), r.getLong(1), r.getLong(2),
         r.getDouble(3)))
-    val workA = java.nio.file.Files
-      .createTempDirectory("graft_restart_a").toString
+    val workA = tmpDir("restart_a")
     val outInterrupted = run(workA, resume = false, interrupt = Some(2))
     val partial = readBack(outInterrupted)
     val outResumed = run(workA, resume = true, interrupt = None)
     val resumed = readBack(outResumed)
-    val workB = java.nio.file.Files
-      .createTempDirectory("graft_restart_b").toString
+    val workB = tmpDir("restart_b")
     val clean = readBack(run(workB, resume = false, interrupt = None))
     assert(partial.length < clean.length,
       "the interrupt must actually cut the run short")
@@ -783,8 +779,7 @@ class EventStreamsSpec extends SparkTestBase {
     // islands oracle, session_window coalesces; EventStreamsSpec r13
     // pins both), end = last + gap, and
     // per-session count/sum all agree
-    val workF = java.nio.file.Files
-      .createTempDirectory("graft_fmgs_bridge").toString
+    val workF = tmpDir("fmgs_bridge")
     val outF = graft.streaming.EventStreams
       .sessionizeFmgsEventsDirToParquet(spark, Sf0001, workF)
     val fmgs = spark.read.parquet(outF)
@@ -810,8 +805,7 @@ class EventStreamsSpec extends SparkTestBase {
     // the fixture's timestamps carry sub-millisecond digits; state that
     // rode Timestamp.getTime (millis) zeroed them — a session_start is
     // an event time verbatim, so at least one must keep micros % 1000
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_fmgs_micros").toString
+    val work = tmpDir("fmgs_micros")
     val out = graft.streaming.EventStreams
       .sessionizeFmgsEventsDirToParquet(spark, Sf0001, work)
     val subMs = spark.read.parquet(out)
@@ -823,8 +817,7 @@ class EventStreamsSpec extends SparkTestBase {
   }
 
   test("watermarked dedup bridge equals the batch distinct at sf0.001") {
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_dedup_wm_bridge").toString
+    val work = tmpDir("dedup_wm_bridge")
     val out = graft.streaming.EventStreams
       .dedupStreamEventsDirToParquet(spark, Sf0001, work)
     val streamed = spark.read.parquet(out)

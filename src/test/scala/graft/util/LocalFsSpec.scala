@@ -51,7 +51,7 @@ class LocalFsSpec extends SparkTestBase {
 
   test("setPermission round-trips rwx bits in-process and a sticky mode through chmod") {
     val fs = raw(new ForkFreeRawLocalFileSystem)
-    val dir = Files.createTempDirectory("graft_fs_perm")
+    val dir = java.nio.file.Path.of(tmpDir("fs_perm"))
     val file = Files.createFile(dir.resolve("f"))
     fs.setPermission(new Path(file.toUri), new FsPermission(Integer.parseInt("700", 8).toShort))
     assert(mode(file) == Integer.parseInt("700", 8))
@@ -64,7 +64,7 @@ class LocalFsSpec extends SparkTestBase {
   test("getFileLinkStatus answers as the stock method, links included") {
     val mine = raw(new ForkFreeRawLocalFileSystem)
     val stock = raw(new RawLocalFileSystem)
-    val dir = Files.createTempDirectory("graft_fs_link")
+    val dir = java.nio.file.Path.of(tmpDir("fs_link"))
     val target = Files.writeString(dir.resolve("target"), "abc")
     val link = Files.createSymbolicLink(dir.resolve("link"), target)
     val dangling = Files.createSymbolicLink(dir.resolve("dangling"), dir.resolve("gone"))
