@@ -89,6 +89,16 @@ object Bench {
       .filter(_.isCompilationTimeMonitoringSupported)
       .map(_.getTotalCompilationTime).getOrElse(-1L)
 
+  /** Spark's generated-code compiles so far in this JVM, and their
+    * Janino ms: a gate's delta of zero means every plan it replayed hit
+    * the codegen cache ([[graft.util.Sessions.CodegenCacheEntries]]).
+    */
+  private def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  private def codegenMs(): Long =
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1000000L
+
   /** Used bytes across the CodeHeap/CodeCache pools, in MB. JIT output
     * lives here; at the default 240 MB reserve a full cache disables
     * compilation for the rest of the run — exactly the kind of
@@ -218,10 +228,13 @@ object Bench {
           catch { case scala.util.control.NonFatal(_) => () }
           clearCaches()
           val (gc0, jit0) = (gcMs(), jitMs())
+          val (cg0, cgMs0) = (codegenCompiles(), codegenMs())
           timed(name)(fn(spark, sfDir).count())
           clearCaches()
           soloStats(name) = s"""{"gc_ms":${gcMs() - gc0},""" +
             s""""jit_ms":${jitMs() - jit0},""" +
+            s""""codegen_compiles":${codegenCompiles() - cg0},""" +
+            s""""codegen_ms":${codegenMs() - cgMs0},""" +
             s""""code_cache_mb":${codeCacheMb().round}}"""
         }
       // "train_gbt" is a stage, not a registry query; accept it here so
@@ -444,6 +457,7 @@ object Bench {
         clearCaches()
         val st0 = cpuStat()
         val (gc0, jit0) = (gcMs(), jitMs())
+        val (cg0, cgMs0) = (codegenCompiles(), codegenMs())
         timed(name)(fn(spark, sfDir).count())
         clearCaches()
         if (!errors.contains(name) && times(name) > repeatThreshold) {
@@ -458,6 +472,7 @@ object Bench {
           }
           val steal = stealPct(st0, cpuStat())
           val (gcD, jitD) = (gcMs() - gc0, jitMs() - jit0)
+          val (cgD, cgMsD) = (codegenCompiles() - cg0, codegenMs() - cgMs0)
           val sorted = runs.sorted
           times(name) = sorted.head
           queryStats(name) =
@@ -466,6 +481,7 @@ object Bench {
               s""""spread":${fmtS(sorted.last - sorted.head)}""" +
               steal.map(s => s""","steal_pct":${fmtS(s)}""").getOrElse("") +
               s""","gc_ms":$gcD,"jit_ms":$jitD""" +
+              s""","codegen_compiles":$cgD,"codegen_ms":$cgMsD""" +
               s""","code_cache_mb":${fmtS(codeCacheMb())}}"""
           floors.get(name).filter(f => sorted.head > slowFactor * f)
             .foreach { f =>
@@ -474,7 +490,7 @@ object Bench {
                   s"floor=${fmtS(f)} (factor ${fmtS(sorted.head / f)})\n" +
                   s"runs=${runs.map(fmtS).mkString(",")} " +
                   s"steal_pct=${steal.map(fmtS).getOrElse("n/a")} " +
-                  s"gc_ms=$gcD jit_ms=$jitD " +
+                  s"gc_ms=$gcD jit_ms=$jitD codegen_compiles=$cgD " +
                   s"code_cache_mb=${fmtS(codeCacheMb())}\n")
             }
         }

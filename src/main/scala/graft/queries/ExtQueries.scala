@@ -1312,11 +1312,11 @@ object ExtQueries {
     * the bucket key with no exchange and no sort (asserted in PlanSpec)
     * — result checked against the plain-join oracle.
     */
-  // one bucketed copy per (JVM, sf dir): repeat invocations (bench
-  // warm-up + timed run, plan specs) measure the exchange-free JOIN,
-  // not a fresh table write, and temp-dir disk stays bounded. Distinct
-  // JVMs get distinct temp dirs and table names are dir-keyed, so
-  // neither cross-process nor cross-dir runs overwrite each other.
+  // one bucketed copy per (JVM, sf dir), deleted at JVM exit: repeat
+  // invocations (bench warm-up + timed run, plan specs) measure the
+  // exchange-free JOIN, not a fresh table write. Distinct JVMs get
+  // distinct temp dirs and table names are dir-keyed, so neither
+  // cross-process nor cross-dir runs overwrite each other.
   private val bucketTablesFor =
     new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
 
@@ -1324,8 +1324,8 @@ object ExtQueries {
     val (liTable, ordTable) = bucketTablesFor.computeIfAbsent(dir, { _ =>
       val suffix = pathDigest(dir)
       val (li, ord) = (s"graft_b_lineitem_$suffix", s"graft_b_orders_$suffix")
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_bucket").toString
+      val base = java.nio.file.Files.createTempDirectory("graft_bucket")
+      sys.addShutdownHook(graft.streaming.EventStreams.deleteTree(base))
       graft.etl.Layout.writeBucketed(
         Tables.table(s, dir, "lineitem")
           .select("l_orderkey", "l_extendedprice", "l_discount"),

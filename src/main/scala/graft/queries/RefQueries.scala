@@ -150,17 +150,26 @@ object RefQueries {
       .na.drop()
       .agg(count(lit(1)).as("n_rows"))
 
+  // one CSV export per (JVM, sf dir), deleted at JVM exit: repeat calls
+  // re-read it instead of leaving a new dir each. A per-JVM dir, not a
+  // fixed shared path, so two concurrent sessions (Verify + a test run)
+  // never overwrite each other mid-read.
+  private val e2eCsvFor =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
+
   /** S1→A1 vertical slice (SURVEY §7.2): export events to CSV, re-read
     * with header+inferSchema, then the full clean-and-aggregate pipeline
     * (cast, derive, 4 filter forms, broadcast left join, 2-key agg, sort).
     */
   def qE2e(s: SparkSession, dir: String): DataFrame = {
-    // per-run unique dir: a fixed shared path lets two concurrent
-    // sessions (Verify + a test run) overwrite each other mid-read
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_e2e_csv").resolve("events").toString
-    Tables.exportCsv(Tables.events(s, dir), tmp)
-    val raw = Tables.csvInfer(s, tmp)
+    val csv = e2eCsvFor.computeIfAbsent(dir, { _ =>
+      val base = java.nio.file.Files.createTempDirectory("graft_e2e_csv")
+      sys.addShutdownHook(graft.streaming.EventStreams.deleteTree(base))
+      val out = base.resolve("events").toString
+      Tables.exportCsv(Tables.events(s, dir), out)
+      out
+    })
+    val raw = Tables.csvInfer(s, csv)
     graft.etl.EventsPipeline.clean(raw) // P1-P6, F1-F4, J1
       .groupBy("d", "hr", "event_desc") // A1
       .agg(

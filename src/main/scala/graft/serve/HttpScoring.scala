@@ -50,13 +50,19 @@ object HttpScoring {
     "|\\.\\d(_?\\d)*)([eE][+-]?\\d(_?\\d)*)?|(?i:inf(inity)?|nan))$").r
   private[serve] val PyInt = "^[+-]?\\d(_?\\d)*$".r
 
-  /** Python `float(str)`: accepts the Python grammar only. */
+  /** Python `float(str)`: accepts the Python grammar only. Java reads
+    * the IEEE specials only as `Infinity` and `NaN`, so Python's `inf`,
+    * `infinity` and `nan` (any case, signed) are respelled first.
+    */
   private[serve] def pyFloat(s: String): Double = {
     val t = s.trim
     if (PyFloat.findFirstIn(t).isEmpty)
       throw new NumberFormatException(
         s"could not convert string to float: '$s'")
-    t.replace("_", "").toDouble
+    t.replace("_", "")
+      .replaceFirst("(?i)inf(inity)?$", "Infinity")
+      .replaceFirst("(?i)nan$", "NaN")
+      .toDouble
   }
 
   /** Python `int(str)`: digits only — `int("3.2")` raises. */

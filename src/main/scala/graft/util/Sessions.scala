@@ -62,6 +62,21 @@ object Sessions {
     "spark.sql.cteRecursionRowLimit"         -> "1000000000",
   )
 
+  /** Entries in Spark's generated-class cache (the static
+    * `spark.sql.codegen.cache.maxEntries`, default 100). The cache is an
+    * LRU keyed by (context classloader, source), and in local mode the
+    * compile check at planning time and the executor task's compile run
+    * under different classloaders, so each source takes two entries. The
+    * engine replays the same plans inside one JVM (fixpoint rounds,
+    * micro-batches, repeated passes over a gate list), and a replayed
+    * cycle larger than the cache never hits it: each class is evicted
+    * before its next use. One q_kcore + q_sessions_stream pass loads
+    * 115 entries, so at 100 the next q_kcore pass compiled 38-47 of its
+    * 57 classes again (DECISIONS #44); 1,000 holds that cycle with room
+    * to spare.
+    */
+  private[graft] val CodegenCacheEntries = 1000
+
   def get(
       appName: String,
       master: String = "local[*]",
@@ -72,6 +87,9 @@ object Sessions {
       .appName(appName)
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      // static: read once, when Spark's code generator is first used;
+      // `tune` cannot set it on a running session
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
       // custom-operator machinery (graft.plans): planner strategy for the
       // native as-of join. No-op if the JVM session already exists —

@@ -72,6 +72,22 @@ class QueriesSmokeSpec extends SparkTestBase {
     assert(SparkEntry.merge(Map("q_a" -> stub), Map("q_b" -> stub)).size === 2)
   }
 
+  test("q_e2e exports its CSV once per sf dir") {
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    val dir = tmpDir("e2e_src")
+    Files.copy(Path.of(Sf0001, "events.parquet"), Path.of(dir, "events.parquet"))
+    def exports() = scala.util.Using.resource(
+      Files.list(Path.of(System.getProperty("java.io.tmpdir"))))(
+      _.iterator.asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft_e2e_csv")).toSet)
+    val before = exports()
+    val first = queries.RefQueries.qE2e(spark, dir).collect().toSeq
+    val second = queries.RefQueries.qE2e(spark, dir).collect().toSeq
+    assert((exports() -- before).size == 1)
+    assert(first.nonEmpty && first == second)
+  }
+
   /** Pinned registry size: a module dropping out of the `++` chain in
     * SparkEntry (or a key collision between modules silently shadowing a
     * query) must fail loudly here, not as a quiet shrink of the driver's
@@ -81,5 +97,49 @@ class QueriesSmokeSpec extends SparkTestBase {
     assert(SparkEntry.queries.size === 246,
       s"registry has ${SparkEntry.queries.size} queries; expected 246 — " +
         "if you added/removed queries update this pin deliberately")
+  }
+
+  test("check.py CONTRACTS map is pinned to the known sketch gates (r12 task 7)") {
+    // contract-aware compare is the one mechanism that can WEAKEN a
+    // gate (value compare relaxed to key compare on unflagged rows) —
+    // any new entry must show up as a diff of this literal, reviewed
+    // deliberately, not slipped in beside a new gate
+    val src = java.nio.file.Files.readString(
+      java.nio.file.Path.of("tools/check.py"))
+    val line = src.linesIterator.filter(_.startsWith("CONTRACTS = ")).toList
+    // r14 (VERDICT r13 task 3): the entry gained a third element — the
+    // FULL exact aggregate every engine unflagged row is value-checked
+    // against (closes the engine-only fabricated-row blind spot). The
+    // exact SQL itself must stay the un-limited spelling of the gate's
+    // oracle aggregate; pin its load-bearing shape too.
+    assert(line == List(
+      """CONTRACTS = {"q_heavy": ("support_guaranteed", ["token"], HEAVY_EXACT)}"""),
+      s"CONTRACTS changed — if deliberate, update this pin + DECISIONS.md: $line")
+    val exact = src.linesIterator.dropWhile(!_.startsWith("HEAVY_EXACT = "))
+      .takeWhile(l => !l.startsWith("CONTRACTS")).mkString("\n")
+    for (frag <- Seq("string_split(text, ' ')", "count(*) * 257 >= n_tokens",
+        "GROUP BY token, n_tokens"))
+      assert(exact.contains(frag), s"HEAVY_EXACT lost fragment '$frag':\n$exact")
+    assert(!exact.toUpperCase.contains("LIMIT"),
+      s"HEAVY_EXACT must be the FULL aggregate (no top-k):\n$exact")
+  }
+
+  test("iterative q_dbscan oracle script matches the unrolled oracle's fragments") {
+    // the two spellings share fragment builders; pin the structural
+    // contract check.py relies on: setup creates pts/j/core/e/labels,
+    // the loop round-robins labels via labels_next, final consumes
+    // `labels`, and the round bound equals the unrolled 96
+    val it = graft.SparkEntry.iterativeOracles("q_dbscan")
+    // 4096 is a runaway bound; the loop exits at the label-sum fixpoint
+    // (measured: 12 rounds at sf0.01, >96 at sf1 — which is WHY the
+    // cap exceeds the unrolled spelling's 96)
+    assert(it.maxRounds == 4096)
+    assert(it.setup.exists(_.contains("TEMP TABLE labels AS SELECT pid AS id, pid AS l FROM core")))
+    assert(it.loop.head.contains("TEMP TABLE labels_next"))
+    assert(it.finalSql.startsWith("WITH cc AS (SELECT id, l AS cluster_id FROM labels)"))
+    // and the unrolled oracle still carries the same CC round body
+    val unrolled = graft.SparkEntry.oracleSql("q_dbscan")
+    assert(unrolled.contains("least(t.l, coalesce(nb.ml, t.l), coalesce(jp.l, t.l))"))
+    assert(it.loop.head.contains("least(t.l, coalesce(nb.ml, t.l), coalesce(jp.l, t.l))"))
   }
 }

@@ -45,6 +45,58 @@ class MiningSpec extends SparkTestBase {
     }
   }
 
+  test("selfNeighborPairs never pairs an id with itself across cells") {
+    import spark.implicits._
+    // cellDeg 0.01 ≈ 1.11 km of latitude; radius 500 m is feasible.
+    // id 1 appears twice, straddling a cell boundary (lat 0.0099 vs
+    // 0.0101 — adjacent cells, ~22 m apart); id 2 sits within radius
+    // of both copies in the upper cell.
+    val pts = Seq(
+      (1L, 0.0099, 0.0),
+      (1L, 0.0101, 0.0),
+      (2L, 0.0103, 0.0),
+    ).toDF("id", "lat", "lon")
+    val pairs = Spatial
+      .selfNeighborPairs(pts, "id", "lat", "lon",
+        radiusM = 500.0, cellDeg = 0.01, maxAbsLatDeg = 1.0)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(!pairs.exists(p => p._1 == p._2),
+      s"same-id pair emitted: ${pairs.mkString(",")}")
+    // both copies of id 1 still see id 2 (the rule drops identity
+    // pairs, not duplicate ids' genuine neighbors): (1,2) survives
+    // twice — once per copy
+    assert(pairs.count(p => Set(p._1, p._2) == Set(1L, 2L)) == 2,
+      s"expected both (1,2) pairs, got ${pairs.mkString(",")}")
+  }
+
+  test("selfNeighborPairs matches the two-sided gridRadiusJoin survivor set on real points") {
+    // distinct-id points: the canonical form symmetrized must equal the
+    // two-sided self-join with the identity pair dropped (the r14
+    // densityCounts shape) on the same grid. Deterministic lattice with
+    // irregular strides so cells are unevenly occupied.
+    val pts = spark.range(0, 500).select(col("id"),
+      (col("id") % 23 * 0.0007).as("lat"),
+      (col("id") % 31 * 0.0007).as("lon"))
+    val cellDeg = 0.004
+    val radiusM = 300.0
+    val canon = Spatial
+      .selfNeighborPairs(pts, "id", "lat", "lon", radiusM, cellDeg, 1.0)
+    val sym = canon.select(col("a"), col("b"))
+      .unionAll(canon.select(col("b").as("a"), col("a").as("b")))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+    val q = pts.select(col("id").as("_qid"),
+      col("lat").as("_qlat2"), col("lon").as("_qlon2"))
+    val twoSided = Spatial
+      .gridRadiusJoin(pts, q, "id", "lat", "lon",
+        "_qid", "_qlat2", "_qlon2", radiusM, cellDeg, 1.0)
+      .filter(col("_qid") =!= col("id"))
+      .select(col("_qid"), col("id"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+    assert(sym.nonEmpty, "degenerate fixture: no surviving pairs")
+    assert(sym.toSeq == twoSided.toSeq,
+      s"survivor sets differ: canonical ${sym.length} vs two-sided ${twoSided.length}")
+  }
+
   // ---- Count-min sketch ----
 
   test("CMS never underestimates, and is exact when w clears the vocabulary") {
@@ -621,6 +673,26 @@ class MiningSpec extends SparkTestBase {
     // the derived floor must itself satisfy the coverage requires
     val floor = Spatial.minCellDeg(300.0, 41.1)
     assert(floor * 1.02 < 0.004, "fixture no longer exercises the shrink")
+  }
+
+  test("dbscan survives an empty core set with the eager core checkpoint") {
+    import spark.implicits._
+    // three isolated points, minPts 3 ⇒ no core anywhere: the eager
+    // core-set checkpoint (r15 session 2) runs its materialization job
+    // on an EMPTY frame, every point must come back noise with a NULL
+    // cluster, and the exit sweep must still release all blocks
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val pts = Seq(
+      (1L, 40.0, -74.0), (2L, 40.5, -74.3), (3L, 41.0, -74.6))
+      .toDF("id", "lat", "lon")
+    val out = Spatial.dbscan(pts, "id", "lat", "lon",
+      radiusM = 300.0, minPts = 3, cellDeg = 0.004, maxAbsLatDeg = 41.1)
+    val rows = out.collect()
+    assert(rows.length == 3)
+    assert(rows.forall(r => r.getString(1) == "noise" && r.isNullAt(2)))
+    val residue = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(residue.size <= 2,
+      s"${residue.size} persisted RDDs left behind (core checkpoint leaked)")
   }
 
   test("skyline2D equals brute-force dominance, ties and duplicates included") {

@@ -688,4 +688,133 @@ class OpsSpec extends SparkTestBase {
     assert(out.exists { case (t, _, g) => t == "a" && g })
     assert(out.forall { case (_, f, g) => g == (f * 3 >= n) })
   }
+
+  test("denseRank equals row_number over the global order (gapped + clustered ids)") {
+    import spark.implicits._
+    // ids with gaps, a dense cluster inside one bucket, and values far
+    // apart (different buckets) — the shapes the bucketed cumulative
+    // offset has to stitch correctly
+    val ids = Seq(3L, 7L, 8L, 9L, 1000000L, 1048577L, 5000000L, 5000001L,
+      99L, 12345678L)
+    val df = ids.toDF("doc_id")
+    val got = Dedup.denseRank(df, "doc_id")
+      .orderBy("doc_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val want = ids.sorted.zipWithIndex.map { case (id, i) => (id, (i + 1).toLong) }
+    assert(got.toSeq == want)
+  }
+
+  test("ngram neighbor pairs survive sparse/surrogate ids (r12 task 6)") {
+    import spark.implicits._
+    // surrogate-style ids: consecutive docs are NOT id+1 apart, so the
+    // old raw-id offset window would produce ZERO candidates
+    val docs = Seq(
+      (100L, "a b c d"),
+      (2000L, "a b c d"), // near-dup of 100, rank-adjacent
+      (30000L, "x y z"),
+      (400000L, "p q r s t"),
+    ).toDF("doc_id", "text")
+    val pairs = Dedup.ngramNeighborPairs(docs, "doc_id", "text", window = 3)
+      .orderBy("doc_a", "doc_b")
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    // every doc pairs with its next ≤3 docs in id ORDER (not id value):
+    // (100,2000) (100,30000) (100,400000) (2000,30000) (2000,400000)
+    // (30000,400000)
+    assert(pairs.map(p => (p._1, p._2)).toSeq == Seq(
+      (100L, 2000L), (100L, 30000L), (100L, 400000L),
+      (2000L, 30000L), (2000L, 400000L), (30000L, 400000L)))
+    assert(pairs.head._3 == 1.0, "identical docs must score jaccard 1.0")
+  }
+
+  test("densified ngram window matches the dense-id spelling where ids ARE dense") {
+    import spark.implicits._
+    // on dense consecutive ids the densified window must reproduce the
+    // old raw-id semantics exactly (the gate's fixture regime)
+    val docs = (0L to 9L).map(i => (i, s"tok$i shared t${i % 3}")).toDF("doc_id", "text")
+    val got = Dedup.ngramNeighborPairs(docs, "doc_id", "text", window = 3)
+      .select("doc_a", "doc_b").orderBy("doc_a", "doc_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val want = for {
+      a <- 0L to 9L
+      off <- 1L to 3L
+      if a + off <= 9L
+    } yield (a, a + off)
+    assert(got.toSeq == want.toSeq)
+  }
+
+  test("denseRank plans its only unpartitioned window over the bucket SUMMARY, not the data") {
+    // the scale contract: the raw `row_number().over(Window.orderBy(id))`
+    // spelling funnels the whole table through one task; the bucketed
+    // spelling's single-partition window must sit above the bucket-count
+    // HashAggregate (one row per occupied bucket), while the data-sized
+    // rank window is hash-partitioned by bucket. Walk the physical tree:
+    // every SinglePartition shuffle's subtree must contain an aggregate
+    // between it and any file scan.
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    val df = graft.queries.ExtQueries.qDedupNgram(spark, Sf0001)
+    df.count() // materialize so AQE finalizes the plan
+    def walk(p: SparkPlan): Seq[SparkPlan] =
+      p +: (p.children ++ p.subqueries).flatMap(walk)
+    def finalPlan(p: SparkPlan): SparkPlan = p match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan
+      case other => other
+    }
+    val nodes = walk(finalPlan(df.queryExecution.executedPlan))
+      .map {
+        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => q.plan
+        case other => other
+      }
+      .flatMap(walk)
+    val singleParts = nodes.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition => e
+    }
+    assert(singleParts.nonEmpty, "expected the bucket-summary window's exchange")
+    singleParts.foreach { e =>
+      def guarded(p: SparkPlan): Boolean = p match {
+        case _: BaseAggregateExec => true // scan below is aggregate-shielded
+        case leaf if leaf.children.isEmpty && leaf.subqueries.isEmpty =>
+          !leaf.nodeName.toLowerCase.contains("scan") // a bare scan = data-sized
+        case other =>
+          (other.children ++ other.subqueries).forall(guarded)
+      }
+      assert(guarded(e.child),
+        s"SinglePartition exchange over un-aggregated data:\n${e.child.treeString}")
+    }
+  }
+
+  test("CC inline symmetrize equals the checkpoint+union edge multiset") {
+    import spark.implicits._
+    val pairs = Seq((3L, 7L), (7L, 9L), (3L, 7L), (5L, 5L))
+      .toDF("doc_a", "doc_b")
+    val inlined = pairs.select(inline(array(
+      struct(col("doc_a").as("src"), col("doc_b").as("dst")),
+      struct(col("doc_b").as("src"), col("doc_a").as("dst")))))
+    val unioned = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .unionAll(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+    assert(inlined.count() == unioned.count())
+    assert(inlined.exceptAll(unioned).count() == 0)
+    assert(unioned.exceptAll(inlined).count() == 0)
+  }
+
+  test("duplicateClusters and duplicateClustersFast agree after the fused setup") {
+    import spark.implicits._
+    // a chain (adversarial for plain propagation) plus a clique and a
+    // self-loop pair
+    val chain = (1L until 40L).map(i => (i, i + 1))
+    val clique = for { a <- 100L to 104L; b <- (a + 1) to 104L } yield (a, b)
+    val pairs = (chain ++ clique ++ Seq((200L, 200L))).toDF("doc_a", "doc_b")
+    val slow = Dedup.duplicateClusters(pairs)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val fast = Dedup.duplicateClustersFast(pairs)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    assert(slow == fast)
+    assert(slow.filter(_._1 <= 40L).forall(_._2 == 1L))
+    assert(slow.filter(t => t._1 >= 100L && t._1 <= 104L).forall(_._2 == 100L))
+    assert(slow.find(_._1 == 200L).exists(_._2 == 200L))
+  }
 }

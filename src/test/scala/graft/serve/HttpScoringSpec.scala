@@ -132,6 +132,26 @@ class HttpScoringSpec extends SparkTestBase {
     }
   }
 
+  test("Python's inf/infinity/nan spellings parse, signed and in any case") {
+    def dist(d: String) = HttpScoring.parseRequest(
+      s"""{"trip_distance": "$d", "trip_duration_min": 14.5,
+        |"passenger_count": 1, "pickup_hour": 18, "payment_type": 1}""".stripMargin)
+      .map(_.trip_distance)
+    assert(dist("inf") == Right(Double.PositiveInfinity))
+    assert(dist("-Infinity") == Right(Double.NegativeInfinity))
+    assert(dist("+iNf") == Right(Double.PositiveInfinity))
+    assert(dist("NaN").exists(_.isNaN) && dist("nan").exists(_.isNaN))
+    for (bad <- Seq("infinit", "nanx"))
+      assert(dist(bad) == Left("Invalid type for field: trip_distance"), bad)
+    // the scoring CLI coerces through the same function
+    def cli(d: String) = ScoringMain.parseLine(s"$d,10,1,8,1").map(_.trip_distance)
+    assert(cli("inf") == Right(Double.PositiveInfinity))
+    assert(cli("-Infinity") == Right(Double.NegativeInfinity))
+    assert(cli("NaN").exists(_.isNaN) && cli("nan").exists(_.isNaN))
+    for (bad <- Seq("infinit", "nanx"))
+      assert(cli(bad).left.exists(_.startsWith("bad number")), bad)
+  }
+
   test("fast flag + non-conforming model fails AT SERVER START with a clear message (r14)") {
     // the flag is read once at process/server start; a pipeline the
     // FastScorer can't replicate must refuse to serve, not throw on

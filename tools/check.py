@@ -33,7 +33,7 @@ TABLES = "region nation customer supplier part orders lineitem events documents 
 # exact top-20 legitimately differ in membership below the bound, so a
 # row-by-row key compare would fail correct behavior). Queries absent
 # from this map keep the full exact compare. The CONTRACTS population
-# is pinned by Round13Spec — adding an entry is a deliberate diff.
+# is pinned by QueriesSmokeSpec — adding an entry is a deliberate diff.
 #
 # r14 (VERDICT r13 task 3): the third element is the FULL exact
 # aggregate (no top-k) and closes the engine-only-row blind spot r13's
