@@ -15,11 +15,10 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * Installs the native as-of join planner strategy
   * ([[graft.plans.AsOfJoinStrategy]]) and every custom SQL function
   * ([[graft.functions.SqlFunctions.builders]]). Equivalent to what
-  * [[graft.util.Sessions.get]] wires inline and
-  * [[graft.util.Sessions.tune]] retrofits onto already-built sessions —
-  * three entry points, one source of truth, so a cluster-config install,
-  * a programmatic build, and a harness-supplied session all expose the
-  * identical surface.
+  * [[graft.util.Sessions.tune]] installs on a session that
+  * [[graft.util.Sessions.get]] builds or a harness supplies — two entry
+  * points, one source of truth, so a cluster-config install and a
+  * programmatic or harness session expose the identical surface.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{GraftShims, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.types.IntegerType
 
@@ -9,7 +10,7 @@ import org.apache.spark.sql.types.IntegerType
   * codegen'd operators as the Column API — the expressions are
   * first-class functions, not Column-API-only helpers.
   *
-  * Registered (all idempotently, on every [[graft.util.Sessions.tune]]):
+  * Registered by [[graft.util.Sessions.tune]], once per session:
   *  - `simhash64(tokens)`                — 64-bit SimHash fingerprint
   *  - `minhash_sigs(shingles, k)`        — k-permutation MinHash array
   *  - `cosine_sim(a, b)`                 — double cosine similarity
@@ -81,9 +82,13 @@ object SqlFunctions {
     },
   )
 
-  /** Register every custom expression on `spark` (idempotent). */
-  def register(spark: SparkSession): Unit =
+  /** Register every custom expression `spark` lacks (a replaced entry
+    * would be an equal one, and Spark logs a WARN per replacement). */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     builders.foreach { case (name, b) =>
-      GraftShims.registerFunction(spark, name, b)
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        GraftShims.registerFunction(spark, name, b)
     }
+  }
 }

@@ -20,6 +20,9 @@ import graft.util.Lineage
   *  - the LSH self-join never compares all pairs — candidates are
   *    generated per band bucket, and only candidates get the exact
   *    Jaccard verification.
+  *  - connected components run on the min-plus kernel of [[Graphs]]:
+  *    [[duplicateClusters]] is the kernel alone, [[duplicateClustersFast]]
+  *    adds its own shortcut and contraction.
   */
 object Dedup {
 
@@ -371,52 +374,35 @@ object Dedup {
     *
     * Distributed min-label propagation: labels start as own id; each
     * round every node takes the min of its own and its neighbours'
-    * labels; fixed point when nothing changes. Each round is two
-    * hash-partitioned operations (edge join + min aggregate); the driver
-    * only sees the converged/changed counter, never data. Rounds ≈ the
-    * cluster graph's diameter — small for duplicate clusters, which are
-    * near-cliques (for adversarial long-chain graphs, switch to
-    * large-star/small-star, same DataFrame skeleton).
-    * `localCheckpoint` truncates the growing lineage each round so the
-    * plan stays O(1) regardless of iteration count.
+    * labels; fixed point when nothing changes. It is the min-plus
+    * kernel ([[Graphs.relax]]) with ids as vertices, labels as
+    * distances and every edge weight 0: each round is two
+    * hash-partitioned operations (edge join + min aggregate), and the
+    * driver only sees the [[Graphs.reach]] witness, never data. Rounds
+    * ≈ the cluster graph's diameter — small for duplicate clusters,
+    * which are near-cliques (adversarial long chains are what
+    * [[duplicateClustersFast]] is for). Generations rotate through
+    * [[Lineage.fixpoint]], so the plan stays O(1) regardless of
+    * iteration count.
     */
   def duplicateClusters(pairs: DataFrame): DataFrame = {
-    // symmetrize in ONE pass over the pair pipeline: inline() emits the
-    // two directed copies of each pair from a single evaluation of the
-    // upstream (shingle→minhash→LSH→verify) lineage, where the earlier
-    // union-of-two-selects spelling needed the pair list checkpointed
-    // first so the two branches would not each re-run it — one
-    // pairs-sized localCheckpoint write+read dropped from the setup.
-    // Generations ROTATE (Lineage.fixpoint): the label frame is
-    // corpus-sized, and without freeing, every round's checkpoint
-    // blocks stay in executor storage until a driver GC — rounds × |V|
-    // rows of dead weight in a long-lived session.
-    val edges = Lineage.checkpoint(
-      pairs.select(inline(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst"))))))
-    // labels only ever DECREASE under min-propagation, so an unchanged
-    // label sum proves the fixed point — one aggregate per round instead
-    // of a join+diff. No round cap: min-labels strictly decrease until
-    // the fixpoint, so the loop terminates.
+    // the label frame is corpus-sized, so each round's generation is
+    // freed (Lineage.fixpoint). Labels only decrease over a fixed vertex
+    // set: an unchanged witness proves the fixed point — one aggregate
+    // per round instead of a join+diff — and no round cap is needed.
+    val edges = Graphs.undirected(pairs, "doc_a", "doc_b")
     val (Seq(labels), _) = Lineage.fixpoint("duplicateClusters",
-        Seq(edges.df.select(col("src").as("id")).distinct()
-          .withColumn("label", col("id"))), Int.MaxValue) { s =>
-      val neighbourLabels = edges.df
-        .join(s.head.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), col("label"))
-      s.head.union(neighbourLabels).groupBy("id").agg(min("label").as("label"))
-    }(Lineage.unchanged(s => labelSum(s.head)))
-    Lineage.free(edges)
-    labels.df.select(col("id").as("doc_id"), col("label").as("cluster_id"))
+        Seq(ownLabels(edges)), Int.MaxValue)(
+      s => Graphs.relax(s.head, edges, lit(0)))(
+      Lineage.unchanged(s => Graphs.reach(s.head)))
+    edges.unpersist(blocking = false)
+    labels.df.select(col("x").as("doc_id"), col("d").as("cluster_id"))
   }
 
-  /** Σ label as an exact DECIMAL — the connected-components loops'
-    * settle witness. The coalesce guards the zero-pair corpus: sum over
-    * an empty frame is null. */
-  private def labelSum(df: DataFrame): java.math.BigDecimal =
-    df.agg(coalesce(sum(col("label").cast("decimal(38,0)")),
-      lit(0).cast("decimal(38,0)"))).head().getDecimal(0)
+  /** Every vertex of a symmetric edge list labelled with its own id:
+    * `(x, d = x)`, the connected-components start state. */
+  private def ownLabels(edges: DataFrame): DataFrame =
+    edges.select(col("u").as("x")).distinct().withColumn("d", col("x"))
 
   /** Connected components in O(log n) rounds: min-label hooking, a
     * pointer shortcut, AND per-round edge CONTRACTION — the
@@ -458,51 +444,38 @@ object Dedup {
     * (and lets specs assert the logarithmic convergence).
     */
   def duplicateClustersFast(pairs: DataFrame, maxRounds: Int = 48): DataFrame = {
-    // generation rotation: see duplicateClusters. Symmetrize in ONE
-    // pass (inline of the two directed struct copies) so the upstream
-    // pair pipeline is evaluated exactly once, directly into the edge
-    // checkpoint — the former pairs-sized p0 checkpoint existed only to
-    // keep a union's two branches from re-running the upstream.
-    val sym = Lineage.checkpoint(
-      pairs.select(inline(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))))).df
-    // state: (labels, contracted edges); both initial generations are
-    // Lineage.fixpoint's to free
+    // generation rotation: see duplicateClusters. State: (labels,
+    // contracted edges); Lineage.fixpoint frees the label checkpoint,
+    // the persisted edges are unpersisted after the loop
+    val sym = Graphs.undirected(pairs, "doc_a", "doc_b")
     val (Seq(hooked, contracted), hooks) = Lineage.fixpoint(
         "connected components",
-        Seq(Lineage.checkpoint(sym.select(col("src").as("id")).distinct()
-          .withColumn("label", col("id"))).df, sym),
-        maxRounds)(
+        Seq(Lineage.checkpoint(ownLabels(sym)).df, sym), maxRounds)(
       { case Seq(labels, edges) =>
         // hook: min label over the closed neighbourhood of the
-        // contracted edge list (symmetric, so one flow direction covers
-        // every neighbourhood). Deliberately LAZY although the shortcut
+        // contracted edge list. Deliberately LAZY although the shortcut
         // self-join below evaluates it twice: an eager per-round
         // checkpoint was measured (r15, interleaved A/B ×3 at sf0.1)
         // consistently SLOWER (lazy 11.6–13.4 s vs eager 14.8–20.5 s for
         // the whole loop) — the per-round materialization job costs more
         // than the duplicate join+aggregate at bench scale.
-        val hooked = labels.union(
-          edges.join(labels.withColumnRenamed("id", "src"), "src")
-            .select(col("dst").as("id"), col("label")))
-          .groupBy("id").agg(min("label").as("label"))
-        shortcut(hooked)
+        shortcut(Graphs.relax(labels, edges, lit(0)))
       },
       { case Seq(labels, edges) =>
         // contract: rewrite both endpoints onto the labels just hooked,
         // drop self-loops (settled regions) and duplicate super-edges
         edges
-          .join(labels.select(col("id").as("src"), col("label").as("_ls")),
-            Seq("src"), "left")
-          .select(coalesce(col("_ls"), col("src")).as("_s"), col("dst"))
-          .join(labels.select(col("id").as("dst"), col("label").as("_ld")),
-            Seq("dst"), "left")
-          .select(col("_s").as("src"), coalesce(col("_ld"), col("dst")).as("dst"))
-          .filter(col("src") =!= col("dst"))
+          .join(labels.select(col("x").as("u"), col("d").as("_lu")),
+            Seq("u"), "left")
+          .select(coalesce(col("_lu"), col("u")).as("_u"), col("v"))
+          .join(labels.select(col("x").as("v"), col("d").as("_lv")),
+            Seq("v"), "left")
+          .select(col("_u").as("u"), coalesce(col("_lv"), col("v")).as("v"))
+          .filter(col("u") =!= col("v"))
           .distinct()
       })(_(1).isEmpty)
     Lineage.free(contracted)
+    sym.unpersist(blocking = false)
     // pointer-chase to the fixpoint, on what is left of the same round
     // budget: at hook exit every REGION ROOT carries its component min
     // (a root only settles once no contracted edge touches its region),
@@ -510,23 +483,23 @@ object Dedup {
     // hops behind — their edges were dropped while their root kept
     // learning. Each chase round doubles the compressed depth
     // (l ← l(l)), so this is log(strand depth) label-table self-joins,
-    // no edge shuffles; the label sum is strictly decreasing until the
-    // fixed point.
+    // no edge shuffles; the Graphs.reach label sum strictly decreases
+    // until the fixed point.
     val (Seq(labels), _) = Lineage.fixpoint(
         s"connected components (pointer chase after $hooks hook rounds)",
         Seq(hooked.df), maxRounds - hooks)(s => shortcut(s.head))(
-      Lineage.unchanged(s => labelSum(s.head), Some(labelSum(hooked.df))))
-    labels.df.select(col("id").as("doc_id"), col("label").as("cluster_id"))
+      Lineage.unchanged(s => Graphs.reach(s.head), Some(Graphs.reach(hooked.df))))
+    labels.df.select(col("x").as("doc_id"), col("d").as("cluster_id"))
   }
 
-  /** One pointer jump, label ← label(label). Labels always point at
-    * node ids (mins of reachable sets), so the self-join hits; coalesce
-    * guards the root, whose label is itself. */
+  /** One pointer jump, d ← d(d). Labels always point at vertex ids
+    * (mins of reachable sets), so the self-join hits; coalesce guards
+    * the root, whose label is itself. */
   private def shortcut(labels: DataFrame): DataFrame =
     labels
-      .join(labels.select(col("id").as("label"), col("label").as("label2")),
-        Seq("label"), "left")
-      .select(col("id"), coalesce(col("label2"), col("label")).as("label"))
+      .join(labels.select(col("x").as("d"), col("d").as("_d2")),
+        Seq("d"), "left")
+      .select(col("x"), coalesce(col("_d2"), col("d")).as("d"))
 
   /** The dedup pipeline's OUTPUT stage: drop every non-canonical cluster
     * member, keeping one representative (the min-id doc — exactly the

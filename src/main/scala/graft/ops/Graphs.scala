@@ -1,11 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Distributed graph primitives over edge lists. Connected components
-  * live in [[Dedup.duplicateClusters]] / `duplicateClustersFast`; this
-  * adds co-occurrence graph derivation and triangle counting.
+/** Distributed graph primitives over edge lists. One min-plus kernel
+  * ([[undirected]] edges, a [[relax]] round, the [[reach]] witness)
+  * runs [[sssp]], [[closenessCentrality]] and the connected components
+  * of [[Dedup]] (labels are distances over weight-0 edges).
   *
   * Scale shape: triangle counting uses the degree-ordered wedge join —
   * every edge is directed from its lower-(degree, id) endpoint to the
@@ -383,53 +384,78 @@ object Graphs {
       .join(h2.withColumnRenamed("src", vertexCol), Seq(vertexCol), "left")
   }
 
+  /** Both directions of every `(a, b)` edge as `(u, v)` (plus `w`, if
+    * given), lazily persisted: `inline` emits the two copies from ONE
+    * evaluation of the upstream (a union of two selects runs it twice),
+    * and the first round's job materializes them. The caller
+    * unpersists. Lazy persist rather than an eager checkpoint: the
+    * checkpoint's extra job made q_sssp and q_closeness slower
+    * (DECISIONS #45). */
+  private[ops] def undirected(
+      edges: DataFrame,
+      a: String,
+      b: String,
+      w: Option[Column] = None): DataFrame = {
+    def arc(from: String, to: String) =
+      struct(Seq(col(from).as("u"), col(to).as("v")) ++ w.map(_.as("w")): _*)
+    edges.select(inline(array(arc(a, b), arc(b, a))))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** One min-plus round over [[undirected]] edges: each `(keys…, x)` of
+    * `state` keeps min(d, d(u) + w), `w` an edge column or a constant.
+    * One equi-join on the frontier key plus one min-aggregate, both
+    * shuffling on the vertex key. */
+  private[ops] def relax(
+      state: DataFrame,
+      edges: DataFrame,
+      w: Column,
+      keys: String*): DataFrame = {
+    val kx = (keys :+ "x").map(col)
+    // USING-join on the renamed frontier key: the rename mints fresh
+    // attribute ids, so a state derived from `edges` never trips
+    // Spark's self-join ambiguity check
+    state.withColumnRenamed("x", "u")
+      .join(edges, Seq("u"))
+      .select(keys.map(col) :+ col("v").as("x") :+ (col("d") + w).as("d"): _*)
+      .unionAll(state.select(kx :+ col("d"): _*))
+      .groupBy(kx: _*).agg(min(col("d")).as("d"))
+  }
+
+  /** The settle witness of a [[relax]] loop, (rows, Σ d as an exact
+    * decimal): rounds only add rows and lower distances, so it repeats
+    * exactly when nothing changed. The coalesce covers an empty state. */
+  private[ops] def reach(state: DataFrame): (Long, java.math.BigDecimal) = {
+    val row = state.agg(count(lit(1)), coalesce(
+      sum(col("d").cast("decimal(38,0)")), lit(0).cast("decimal(38,0)"))).head()
+    (row.getLong(0), row.getDecimal(1))
+  }
+
   /** Single-source shortest paths over an undirected weighted graph
     * (`(u, v, w)`, integer weights), by distributed Bellman–Ford
     * relaxation: each round extends every settled distance across every
-    * edge and keeps the per-vertex minimum. A round is ONE equi-join on
-    * the frontier key plus ONE min-aggregate — both partial-aggregable,
-    * both shuffling on the vertex key — and the round count is the
-    * graph's (weighted-path hop) diameter, not its size: every vertex
-    * improves simultaneously, so small-world graphs settle in a handful
-    * of rounds at any data scale.
+    * edge and keeps the per-vertex minimum ([[relax]], `source` the one
+    * seed). The round count is the graph's (weighted-path hop)
+    * diameter, not its size: every vertex improves simultaneously, so
+    * small-world graphs settle in a handful of rounds at any data scale.
     *
     * Determinism: weights are integers, `min` over integer path sums is
     * order-independent, so the result hash-checks exactly — no float
-    * accumulation anywhere. Convergence is detected by the
-    * (reached-count, distance-sum) pair — min-relaxation monotonically
-    * grows the reached set and shrinks the sum, so the pair is a
-    * fixpoint witness — at the cost of one 1-row action per round (the
-    * CC/k-core scalar discipline). The distance frame rotates through
-    * [[graft.util.Lineage.fixpoint]] while the symmetrized edges stay a
-    * lazily persisted invariant; `maxRounds` is a runaway guard that
-    * throws rather than returning a non-fixpoint.
+    * accumulation anywhere. Convergence is detected by [[reach]], one
+    * 1-row action per round; the distance frame rotates through
+    * [[graft.util.Lineage.fixpoint]], whose `maxRounds` is a runaway
+    * guard that throws rather than returning a non-fixpoint. A `source`
+    * that is no vertex leaves every vertex at NULL dist.
     *
     * @return every vertex with `dist` (BIGINT), NULL when unreachable.
     */
   def sssp(edges: DataFrame, source: Long, maxRounds: Int = 64): DataFrame = {
-    val e = edges.select(col("u"), col("v"), col("w").cast("long"))
-      .unionAll(edges.select(col("v").as("u"), col("u").as("v"),
-        col("w").cast("long")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = undirected(edges, "u", "v", Some(col("w").cast("long")))
     val verts = e.select(col("u").as("x")).distinct()
     val (Seq(dist), _) = graft.util.Lineage.fixpoint("sssp",
         Seq(verts.filter(col("x") === source).select(col("x"), lit(0L).as("d"))),
-        maxRounds) { s =>
-      // USING-join on the renamed frontier key: the rename mints fresh
-      // attribute ids, so the shared lineage with `e` never trips
-      // Spark's self-join ambiguity check
-      s.head.withColumnRenamed("x", "u")
-        .join(e, Seq("u"))
-        .select(col("v").as("x"), (col("d") + col("w")).as("d"))
-        .unionAll(s.head)
-        .groupBy("x").agg(min(col("d")).as("d"))
-    }(graft.util.Lineage.unchanged { s =>
-      val row = s.head.agg(count(lit(1)), sum(col("d"))).head()
-      // null-safe witness read: when `source` is not a vertex of the
-      // edge list the frontier is empty, so sum(d) is NULL — the
-      // contract then returns every vertex at NULL dist, not an NPE
-      (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
-    })
+        maxRounds)(s => relax(s.head, e, col("w")))(
+      graft.util.Lineage.unchanged(s => reach(s.head)))
     // loop-exit hygiene: see [[pageRankOn]]
     val out = graft.util.Lineage.checkpoint(
       verts.join(dist.df, Seq("x"), "left").select(col("x"), col("d").as("dist")))
@@ -754,9 +780,9 @@ object Graphs {
     * counts — integers — so the whole gate is exact arithmetic plus
     * one division.
     *
-    * Same fixpoint discipline as [[sssp]]: the (count, sum) witness
-    * pair is monotone under BFS relaxation, one 1-row driver scalar
-    * per round, lineage rotated through [[graft.util.Lineage.fixpoint]],
+    * Same fixpoint discipline as [[sssp]]: [[relax]] keyed by seed
+    * with `w = 1`, the [[reach]] witness one 1-row driver scalar per
+    * round, lineage rotated through [[graft.util.Lineage.fixpoint]],
     * `maxRounds` a loud runaway guard.
     */
   def closenessCentrality(
@@ -765,23 +791,13 @@ object Graphs {
       maxRounds: Int = 64): DataFrame = {
     require(seeds.nonEmpty, "closenessCentrality needs at least one seed")
     val spark = edges.sparkSession
-    val e = edges.select(col("u"), col("v"))
-      .unionAll(edges.select(col("v").as("u"), col("u").as("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = undirected(edges, "u", "v")
     import spark.implicits._
     val seedDf = seeds.toDF("s")
     val (Seq(dist), _) = graft.util.Lineage.fixpoint("closenessCentrality",
         Seq(seedDf.select(col("s"), col("s").as("x"), lit(0L).as("d"))),
-        maxRounds) { s =>
-      s.head.withColumnRenamed("x", "u")
-        .join(e, Seq("u"))
-        .select(col("s"), col("v").as("x"), (col("d") + 1L).as("d"))
-        .unionAll(s.head)
-        .groupBy("s", "x").agg(min(col("d")).as("d"))
-    }(graft.util.Lineage.unchanged { s =>
-      val row = s.head.agg(count(lit(1)), sum(col("d"))).head()
-      (row.getLong(0), row.getLong(1))
-    })
+        maxRounds)(s => relax(s.head, e, lit(1L), "s"))(
+      graft.util.Lineage.unchanged(s => reach(s.head)))
     // loop-exit hygiene: see [[pageRankOn]]
     val out = graft.util.Lineage.checkpoint(
       dist.df.groupBy(col("s").as("seed"))

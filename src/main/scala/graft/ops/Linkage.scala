@@ -8,8 +8,9 @@ import graft.functions.JaroWinkler
 /** Record linkage / entity resolution, composed end to end from the
   * engine's own parts: block candidate names, score the blocked pairs
   * with the codegen'd [[graft.functions.JaroWinkler]] expression, and
-  * resolve the match graph with [[Dedup.duplicateClusters]]'
-  * min-label connected components — the dedupe-people/merchants/
+  * resolve the match graph with [[Dedup.duplicateClusters]] (min-label
+  * connected components on the min-plus kernel of [[Graphs]], edge
+  * weight 0) — the dedupe-people/merchants/
   * products pipeline every warehouse eventually grows, as one
   * declarative plan.
   *

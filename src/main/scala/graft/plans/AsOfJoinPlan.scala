@@ -57,10 +57,10 @@ case class AsOfJoin(
     copy(left = newLeft, right = newRight)
 }
 
-/** Planner rule: [[AsOfJoin]] → [[AsOfJoinExec]]. Injected via
-  * `SparkSessionExtensions.injectPlannerStrategy` (Sessions.get) with an
-  * `experimental.extraStrategies` fallback for sessions built elsewhere
-  * (Sessions.tune) — both are public extension points.
+/** Planner rule: [[AsOfJoin]] → [[AsOfJoinExec]]. Installed through
+  * the public `experimental.extraStrategies` hook by Sessions.tune
+  * (which Sessions.get calls), or at session build by
+  * `SparkSessionExtensions.injectPlannerStrategy` ([[graft.GraftExtensions]]).
   */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -220,8 +220,7 @@ object AsOfJoinPlan {
   }
 
   /** Idempotently register the planner strategy on an existing session
-    * (public `experimental.extraStrategies` hook — the fallback for
-    * sessions not built through Sessions.get's extension injection).
+    * (the public `experimental.extraStrategies` hook).
     */
   def register(spark: SparkSession): Unit = {
     val cur = spark.experimental.extraStrategies

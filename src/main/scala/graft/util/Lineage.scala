@@ -22,9 +22,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   * Two loop drivers sit on [[rotate]], and a loop takes the one its
   * round count calls for:
   *  - [[fixpoint]], for data-dependent loops that run until a settle
-  *    check holds (kCore, sssp, closenessCentrality, the
-  *    connected-components loops): it rotates every round, because
-  *    each round's settle check runs a job on the new state anyway;
+  *    check holds: kCore's delta-peel, and the four min-plus relaxation
+  *    loops that share one kernel and one witness in `graft.ops.Graphs`
+  *    (sssp, closenessCentrality, Dedup's duplicateClusters and the hook
+  *    and pointer chase of duplicateClustersFast). It rotates every
+  *    round, because each round's settle check runs a job on the new
+  *    state anyway;
   *  - [[unrolled]], for fixed-round loops (the PageRank family,
   *    labelPropagation, the Lloyd loop of kmeans and PQ): it applies
   *    each round lazily and rotates only every 8th round, the boundary

@@ -91,10 +91,6 @@ object Sessions {
       // `tune` cannot set it on a running session
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
-      // custom-operator machinery (graft.plans): planner strategy for the
-      // native as-of join. No-op if the JVM session already exists —
-      // tune() below re-registers through the public experimental hook.
-      .withExtensions(_.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy))
     sqlConfs.foreach { case (k, v) => b.config(k, v) }
     LocalFs.hadoopConfs.foreach { case (k, v) => b.config(s"spark.hadoop.$k", v) }
     val spark = b.getOrCreate()
@@ -107,6 +103,7 @@ object Sessions {
     * configuration. `FileContext` filesystems are built per use, so
     * streaming checkpoints started after this call get it; Hadoop's
     * `FileSystem` cache keeps any `file:` instance created before it.
+    * Installs the as-of strategy and the SQL functions a session lacks.
     */
   def tune(spark: SparkSession): SparkSession = {
     sqlConfs.foreach { case (k, v) =>

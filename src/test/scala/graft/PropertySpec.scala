@@ -7,7 +7,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.etl.Transformations
-import graft.ops.{Dedup, Similarity}
+import graft.ops.{Dedup, Graphs, Similarity}
 
 /** Property-based tests (SURVEY.md §5.2): the clean-transform invariants
   * against an independent Scala-side oracle on generated rows, the
@@ -139,6 +139,78 @@ class PropertySpec extends SparkTestBase {
         .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
       val want = ids.sorted.zipWithIndex.map { case (v, i) => (v, (i + 1).toLong) }
       assert(got.toSeq == want, s"seed $seed diverged")
+    }
+  }
+
+  test("the min-plus relaxation loops match union-find and Dijkstra on adversarial edge lists") {
+    import spark.implicits._
+    // four components over disjoint, scattered id blocks, with duplicate
+    // pairs, reversed duplicates at a different weight, self-pairs (one
+    // of them a vertex no other edge touches), in shuffled order
+    def edgeList(seed: Long): Seq[(Long, Long, Long)] = {
+      val rng = new scala.util.Random(seed)
+      val drawn = Seq.fill(24) {
+        val c = rng.nextInt(4)
+        def v = c * 1000L + rng.nextInt(9) * 37L
+        (v, v, 1L + rng.nextInt(6))
+      }
+      val dups = drawn.take(6)
+      val reversed = drawn.slice(6, 12).map { case (a, b, _) => (b, a, 1L + rng.nextInt(6)) }
+      val selfPairs = Seq((drawn(0)._1, drawn(0)._1, 3L), (9999L, 9999L, 2L))
+      rng.shuffle(drawn ++ dups ++ reversed ++ selfPairs)
+    }
+    // union by min root keeps every root its component's min id
+    def components(es: Seq[(Long, Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      es.foreach { case (a, b, _) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      parent.keys.map(x => x -> find(x)).toMap
+    }
+    def dijkstra(es: Seq[(Long, Long, Long)], src: Long): Map[Long, Long] = {
+      val adj = es.flatMap { case (a, b, w) => Seq(a -> (b, w), b -> (a, w)) }
+        .groupMap(_._1)(_._2)
+      val dist = scala.collection.mutable.Map(src -> 0L)
+      val queue = scala.collection.mutable.PriorityQueue((0L, src))(
+        Ordering.by[(Long, Long), Long](-_._1))
+      while (queue.nonEmpty) {
+        val (d, x) = queue.dequeue()
+        if (d == dist(x)) adj.getOrElse(x, Nil).foreach { case (y, w) =>
+          if (dist.get(y).forall(d + w < _)) { dist(y) = d + w; queue.enqueue((d + w, y)) }
+        }
+      }
+      dist.toMap
+    }
+    for (seed <- Seq(0L, 1L, 2L, 3L)) {
+      val es = if (seed == 0L) Seq.empty else edgeList(seed)
+      val pairs = es.map { case (a, b, _) => (a, b) }.toDF("doc_a", "doc_b")
+      val wanted = components(es)
+      for ((name, cc) <- Seq("duplicateClusters" -> Dedup.duplicateClusters _,
+          "duplicateClustersFast" -> ((p: org.apache.spark.sql.DataFrame) =>
+            Dedup.duplicateClustersFast(p)))) {
+        val got = cc(pairs).collect().map(r => r.getLong(0) -> r.getLong(1))
+        assert(got.length == wanted.size && got.toMap == wanted, s"$name, seed $seed")
+      }
+      val edges = es.toDF("u", "v", "w")
+      val source = es.headOption.fold(7L)(_._1)
+      val sp = dijkstra(es, source)
+      val gotSp = Graphs.sssp(edges, source).collect()
+        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1))))
+      assert(gotSp.length == wanted.size &&
+        gotSp.toMap == wanted.keys.map(x => x -> sp.get(x)).toMap, s"sssp, seed $seed")
+      val seeds = (es.take(2).map(_._2) :+ 424242L).distinct
+      val gotCl = Graphs.closenessCentrality(edges.select("u", "v"), seeds).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.isNullAt(3))).toMap
+      val wantCl = seeds.map { s =>
+        val d = dijkstra(es.map { case (a, b, _) => (a, b, 1L) }, s)
+        s -> (d.size.toLong, d.values.sum, d.values.sum == 0L)
+      }.toMap
+      assert(gotCl == wantCl, s"closenessCentrality, seed $seed")
     }
   }
 

@@ -142,4 +142,71 @@ class QueriesSmokeSpec extends SparkTestBase {
     assert(unrolled.contains("least(t.l, coalesce(nb.ml, t.l), coalesce(jp.l, t.l))"))
     assert(it.loop.head.contains("least(t.l, coalesce(nb.ml, t.l), coalesce(jp.l, t.l))"))
   }
+
+  test("COVERAGE_matrix.json covers every registry gate, no more, no less (r13 task 6)") {
+    // the machine-readable scale-evidence matrix (generated by
+    // tools/gen_coverage_matrix.py) must track the registry: a new gate
+    // without a matrix entry fails here, forcing regeneration against a
+    // correctness artifact that actually covers it.
+    val txt = java.nio.file.Files.readString(
+      java.nio.file.Path.of("COVERAGE_matrix.json"))
+    val registry = graft.SparkEntry.queries.keySet
+    registry.foreach { k =>
+      assert(txt.contains(s""""$k": {"""),
+        s"gate $k missing from COVERAGE_matrix.json — rerun tools/gen_coverage_matrix.py")
+    }
+    val count = """"_gate_count": (\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toInt)
+    assert(count.contains(registry.size),
+      s"matrix _gate_count $count != registry ${registry.size} — stale matrix")
+    // every entry carries the three audit fields (indent=1 layout)
+    for (field <- Seq(""""oracle":""", """"bench":""", """"decade":"""))
+      assert(txt.contains(field), s"matrix entries lost the $field field")
+  }
+
+  test("fixtures carry no exact-gap pair (q_sessions_stream boundary asymmetry, ADVICE r13)") {
+    // Spark's session_window MERGES two events exactly `gap` apart;
+    // the islands oracle and the fmgs sessionizer (strict <, pinned
+    // r13) SPLIT them. q_sessions_stream gates against the islands
+    // oracle, so its validity rests on the fixture invariant checked
+    // here: no same-user consecutive pair sits exactly 6 h apart.
+    // ScaleUp replicas inherit the invariant (user ids are strided per
+    // copy — no new same-user pair crosses replicas), so the base
+    // fixtures are the whole domain.
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, lag, unix_micros}
+    val gapUs = 6L * 3600 * 1000000
+    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
+      val dir = s"/root/testdata/$sf"
+      if (new java.io.File(s"$dir/events.parquet").exists()) {
+        val ev = graft.sources.Tables.events(spark, dir)
+        val w = Window.partitionBy("user_id").orderBy("ts")
+        val exact = ev
+          .withColumn("_prev", lag(unix_micros(col("ts")), 1).over(w))
+          .filter(unix_micros(col("ts")) - col("_prev") === gapUs)
+          .count()
+        assert(exact == 0,
+          s"$sf carries $exact exact-gap pair(s) — q_sessions_stream's " +
+            "oracle is not valid on this fixture (see oracle entry note)")
+      }
+    }
+  }
+
+  test("Bench floors file round-trips and tolerates absence/garbage (r13 task 7)") {
+    // BENCH_floors.json is load-bearing now (slow-dump triggers compare
+    // against it; published figures come from it) — pin the read/write
+    // pair and the failure mode: a missing or corrupt file must mean
+    // "no floors" (no dumps, merge starts fresh), never a crash that
+    // takes the bench run down with it.
+    val dir = java.nio.file.Path.of(tmpDir("floors"))
+    val p = s"$dir/floors.json"
+    val floors = Map("q_a" -> 1.234, "q_b" -> 0.007, "write" -> 6.208)
+    graft.Bench.writeFloors(p, floors)
+    val back = graft.Bench.readFloors(p)
+    floors.foreach { case (k, v) =>
+      assert(math.abs(back(k) - v) < 5e-4, s"$k: ${back.get(k)} vs $v")
+    }
+    assert(graft.Bench.readFloors(s"$dir/absent.json").isEmpty)
+    java.nio.file.Files.writeString(java.nio.file.Path.of(p), "not json at all")
+    assert(!graft.Bench.readFloors(p).contains("q_a"))
+  }
 }

@@ -16,6 +16,11 @@ trait SparkTestBase extends AnyFunSuite {
   val Sf0001 = "/root/testdata/sf0.001"
   val FixtureCsv = "src/test/resources/taxi_fixture.csv"
 
+  /** A deterministic LCG stream, so property-style tests reproduce
+    * without scalacheck. */
+  def lcg(seed: Long): Iterator[Long] =
+    Iterator.iterate(seed)(s => s * 6364136223846793005L + 1442695040888963407L).drop(1)
+
   private val madeDirs = scala.collection.mutable.ArrayBuffer.empty[String]
 
   /** A fresh `graft_<name>*` dir under `java.io.tmpdir`, deleted with

@@ -65,4 +65,57 @@ class BehaviorSpec extends SparkTestBase {
       .as[(Long, Long, Long, Double)].collect().toSeq
     assert(got == Seq((1L, 1L, 2L, 4.0), (1L, 2L, 1L, 4.0), (2L, 1L, 1L, 8.0)))
   }
+
+  // ---- Behavior.attribution -----------------------------------------------
+
+  test("attribution: first/last/linear credit a converted journey") {
+    // user 1: view → click → buy (converted journey with 2 touches);
+    // user 2: click only (never converts → no credit at all)
+    val ev = Seq(
+      (1L, 1L, "view"), (1L, 2L, "click"), (1L, 3L, "buy"),
+      (2L, 4L, "click"),
+    ).map { case (u, i, t) =>
+      (u, java.sql.Timestamp.valueOf(f"2024-01-01 00:00:0$i"), i, t)
+    }.toDF("u", "ts", "id", "t")
+    val got = graft.ops.Behavior.attribution(ev, "u", "ts", "id", "t", "buy")
+      .collect().map(r => r.getString(0) ->
+        (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))).toMap
+    assert(got("view") == ((1L, 1L, 0L, 0.5)))   // first touch
+    assert(got("click") == ((1L, 0L, 1L, 0.5)))  // last touch
+    assert(!got.contains("buy"))
+  }
+
+  test("attribution: a second conversion starts a fresh journey") {
+    // view → buy → click → buy: journey 0 credits view fully,
+    // journey 1 credits click fully
+    val ev = Seq((1L, 1L, "view"), (1L, 2L, "buy"),
+        (1L, 3L, "click"), (1L, 4L, "buy"))
+      .map { case (u, i, t) =>
+        (u, java.sql.Timestamp.valueOf(f"2024-01-01 00:00:0$i"), i, t)
+      }.toDF("u", "ts", "id", "t")
+    val got = graft.ops.Behavior.attribution(ev, "u", "ts", "id", "t", "buy")
+      .collect().map(r => r.getString(0) ->
+        (r.getLong(2), r.getLong(3), r.getDouble(4))).toMap
+    assert(got("view") == ((1L, 1L, 1.0)))
+    assert(got("click") == ((1L, 1L, 1.0)))
+  }
+
+  test("attribution property: every credit flavor conserves the journey count") {
+    val draws = lcg(99L)
+    // 40 users × 12 events with random types; buys cut journeys
+    val types = Seq("view", "click", "signup", "buy")
+    val ev = (for (u <- 1L to 40L; i <- 1L to 12L) yield {
+      val t = types(math.floorMod(draws.next(), 4L).toInt)
+      (u, java.sql.Timestamp.valueOf(f"2024-01-01 00:${i}%02d:00"), u * 100 + i, t)
+    }).toDF("u", "ts", "id", "t")
+    val got = graft.ops.Behavior.attribution(ev, "u", "ts", "id", "t", "buy")
+      .collect()
+    val first = got.map(_.getLong(2)).sum
+    val last = got.map(_.getLong(3)).sum
+    val linear = got.map(_.getDouble(4)).sum
+    // first/last each assign exactly one credit per journey-with-touches;
+    // linear splits exactly one credit per journey (r6 rounding slack)
+    assert(first == last)
+    assert(math.abs(linear - first) < 0.01)
+  }
 }

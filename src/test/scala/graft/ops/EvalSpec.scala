@@ -1,5 +1,7 @@
 package graft.ops
 
+import org.apache.spark.sql.functions.lit
+
 import graft.SparkTestBase
 
 class EvalSpec extends SparkTestBase {
@@ -154,5 +156,132 @@ class EvalSpec extends SparkTestBase {
     ).toDF("grp", "tag")
     val got = DataQuality.fdAudit(df, Seq(Seq("grp") -> "tag")).collect()(0)
     assert(got.getLong(2) == 0L && got.getBoolean(4))
+  }
+
+  // ---- Ranking.rankEval ---------------------------------------------------
+
+  private def evalOne(rows: Seq[(Long, Long, Long)]) =
+    Ranking.rankEval(rows.toDF("qid", "rank", "rel"),
+        "qid", "rank", "rel", k = 10)
+      .collect().map(r => r.getLong(0) ->
+        (r.getLong(1), r.getLong(2), r.getDouble(4), r.getDouble(5))).toMap
+
+  test("rankEval: a perfectly ordered list scores NDCG 1 and MRR 1") {
+    val got = evalOne(Seq((1L, 1L, 3L), (1L, 2L, 2L), (1L, 3L, 1L)))
+    val (_, nRel, ndcg, mrr) = got(1L)
+    assert(nRel == 3L && ndcg == 1.0 && mrr == 1.0)
+  }
+
+  test("rankEval: no relevant candidate gives the 0-not-NULL verdict") {
+    val got = evalOne(Seq((1L, 1L, 0L), (1L, 2L, 0L)))
+    val (nRanked, nRel, ndcg, mrr) = got(1L)
+    assert(nRanked == 2L && nRel == 0L && ndcg == 0.0 && mrr == 0.0)
+  }
+
+  test("rankEval: MRR is the reciprocal of the first relevant rank") {
+    val got = evalOne(Seq((1L, 1L, 0L), (1L, 2L, 0L), (1L, 3L, 2L)))
+    assert(got(1L)._4 == 0.333333) // r6(1/3)
+    // inverted order scores strictly below 1
+    assert(got(1L)._3 > 0.0 && got(1L)._3 < 1.0)
+  }
+
+  test("rankEval: candidates beyond k are ignored") {
+    val inK = evalOne(Seq((1L, 1L, 1L), (1L, 2L, 0L)))
+    val withTail = evalOne(
+      Seq((1L, 1L, 1L), (1L, 2L, 0L)) ++ (11L to 20L).map(r => (1L, r, 3L)))
+    assert(inK(1L) == withTail(1L))
+  }
+
+  // ---- ModelEval.ipsEstimate ----------------------------------------------
+
+  test("ipsEstimate: uniform logs price a constant policy at its mean reward") {
+    // two actions, 50/50 logged, rewards 10 (A) and 2 (B); target
+    // policy always plays A → w = 2 on matched rows:
+    // IPS = (1/4)·Σ_matched 2·10 = 10; SNIPS = 40/4 = 10
+    val logs = Seq(("A", 10.0), ("A", 10.0), ("B", 2.0), ("B", 2.0))
+      .toDF("action", "reward")
+    val r = ModelEval.ipsEstimate(logs, "action", "reward", lit("A"))
+      .collect().head
+    assert(r.getLong(0) == 4L && r.getLong(1) == 2L)
+    assert(r.getDouble(2) == 10.0) // ips
+    assert(r.getDouble(3) == 10.0) // snips
+    assert(r.getDouble(4) == 4.0)  // matched mass = Σ w = 2·2
+  }
+
+  test("ipsEstimate: a policy the logs never matched scores 0 with NULL snips") {
+    val logs = Seq(("A", 1.0), ("B", 2.0)).toDF("action", "reward")
+    val r = ModelEval.ipsEstimate(logs, "action", "reward", lit("C"))
+      .collect().head
+    assert(r.getLong(1) == 0L && r.getDouble(2) == 0.0 && r.isNullAt(3))
+  }
+
+  // ---- ModelEval.classificationReport / averagePrecision ------------------
+
+  test("classificationReport: hand confusion matrix at a threshold") {
+    // scores 1..8 with y=1 on {3,6,7,8}: at t=5 (inclusive ≥), the
+    // predicted-positive set is {5,6,7,8} → tp=3 fp=1 fn=1 tn=3
+    val rows = Seq(
+      (1.0, 0L), (2.0, 0L), (3.0, 1L), (4.0, 0L),
+      (5.0, 0L), (6.0, 1L), (7.0, 1L), (8.0, 1L)).toDF("s", "y")
+    val r = ModelEval.classificationReport(rows, "s", "y", threshold = 5.0)
+      .collect().head
+    assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)) ==
+      ((3L, 1L, 1L, 3L)))
+    assert(r.getDouble(4) == 0.75) // precision 3/4
+    assert(r.getDouble(5) == 0.75) // recall 3/4
+    assert(r.getDouble(6) == 0.75) // f1 = 6/8
+    assert(r.getDouble(7) == 0.75) // accuracy 6/8
+  }
+
+  test("classificationReport: all-negative predictions report NULL precision") {
+    val rows = Seq((1.0, 1L), (2.0, 0L)).toDF("s", "y")
+    val r = ModelEval.classificationReport(rows, "s", "y", threshold = 9.0)
+      .collect().head
+    assert(r.isNullAt(4) && r.getDouble(5) == 0.0)
+  }
+
+  test("averagePrecision: a perfect ranking scores AP = 1") {
+    val rows = Seq((5.0, 1L), (4.0, 1L), (3.0, 0L), (2.0, 0L)).toDF("s", "y")
+    val r = ModelEval.averagePrecision(rows, "s", "y").collect().head
+    assert(r.getLong(0) == 2L && r.getLong(1) == 4L && r.getDouble(2) == 1.0)
+  }
+
+  test("averagePrecision: hand case with an interleaved ranking") {
+    // desc: y=1 (tp=1/1), y=0, y=1 (tp=2/3) → AP = (1/2)(1 + 2/3)
+    val rows = Seq((3.0, 1L), (2.0, 0L), (1.0, 1L)).toDF("s", "y")
+    val r = ModelEval.averagePrecision(rows, "s", "y").collect().head
+    assert(math.abs(r.getDouble(2) - (0.5 * (1.0 + 2.0 / 3.0))) < 1e-5)
+  }
+
+  test("averagePrecision: ties collapse to one grid point") {
+    // both positives share score 2 with one negative above: the grid
+    // point at s=2 has pred=3, tp=2 → AP = (2/2)·(2/3)
+    val rows = Seq((3.0, 0L), (2.0, 1L), (2.0, 1L)).toDF("s", "y")
+    val r = ModelEval.averagePrecision(rows, "s", "y").collect().head
+    assert(math.abs(r.getDouble(2) - 2.0 / 3.0) < 1e-5)
+  }
+
+  test("rankEval property: NDCG matches a brute-force Scala recompute") {
+    val draws = lcg(42L)
+    // 20 queries × 8 ranked candidates with random grades 0..3
+    val rows = for (q <- 1L to 20L; r <- 1L to 8L)
+      yield (q, r, math.floorMod(draws.next(), 4L))
+    val got = Ranking.rankEval(rows.toDF("qid", "rank", "rel"),
+        "qid", "rank", "rel", k = 10)
+      .collect().map(r => r.getLong(0) -> r.getDouble(4)).toMap
+    def r6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
+    rows.groupBy(_._1).foreach { case (q, rs) =>
+      val terms = rs.sortBy(_._2)
+        .map { case (_, rank, rel) =>
+          r6((math.pow(2.0, rel) - 1) / (math.log(rank + 1.0) / math.log(2.0)))
+        }
+      val ideal = rs.map(_._3).sortBy(-_).zipWithIndex
+        .map { case (rel, i) =>
+          r6((math.pow(2.0, rel) - 1) / (math.log(i + 2.0) / math.log(2.0)))
+        }
+      val (dcg, idcg) = (terms.sum, ideal.sum)
+      val want = if (idcg > 0) r6(r6(dcg) / r6(idcg)) else 0.0
+      assert(math.abs(got(q) - want) < 1e-9, s"qid $q: ${got(q)} vs $want")
+    }
   }
 }

@@ -138,4 +138,108 @@ class GraphsSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(viaOp.nonEmpty && viaOp.toSeq == viaJoin.toSeq)
   }
+
+  // ---- Graphs.modularity --------------------------------------------------
+
+  /** Two triangles {1,2,3} and {4,5,6} joined by the bridge 3-4. */
+  private def twoTriangles =
+    Seq((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L), (4L, 6L), (5L, 6L), (3L, 4L))
+      .toDF("u", "v")
+
+  test("modularity: two bridged triangles under the natural partition") {
+    val labels = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 4L), (6L, 4L))
+      .toDF("x", "community")
+    val got = Graphs.modularity(twoTriangles, labels).collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getDouble(4))).toMap
+    // m = 7; each community: 3 internal edges, degree mass 7
+    // dq = 3/7 − (7/14)² = 0.17857142… → r6 0.178571
+    assert(got(1L) == ((3L, 3L, 7L, 0.178571)))
+    assert(got(4L) == ((3L, 3L, 7L, 0.178571)))
+  }
+
+  test("modularity: the all-in-one partition scores exactly zero") {
+    val labels = (1L to 6L).map(x => (x, 0L)).toDF("x", "community")
+    val rows = Graphs.modularity(twoTriangles, labels).collect()
+    assert(rows.length == 1)
+    // L_c = m and deg_c = 2m → dq = 1 − 1 = 0
+    assert(rows.head.getDouble(4) == 0.0)
+  }
+
+  test("modularity: singleton partition is never positive") {
+    val labels = (1L to 6L).map(x => (x, x)).toDF("x", "community")
+    val rows = Graphs.modularity(twoTriangles, labels).collect()
+    assert(rows.length == 6)
+    assert(rows.forall(r => r.getLong(2) == 0L)) // no internal edges
+    assert(rows.map(_.getDouble(4)).sum < 0.0)
+  }
+
+  // ---- Graphs.adamicAdar --------------------------------------------------
+
+  test("adamicAdar: scores distance-2 non-edges, skips edges and hubs") {
+    // path 1-2-3 plus 3-4: (1,3) and (2,4) are distance-2 non-edges
+    // through centers of degree 2; (1,2) is an edge → excluded
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("u", "v")
+    val got = Graphs.adamicAdar(edges, maxNeighborDeg = 256, topK = 10)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) ->
+        (r.getLong(2), r.getDouble(3))).toMap
+    def r6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
+    val w = r6(1.0 / math.log(2.0))
+    assert(got.keySet == Set((1L, 3L), (2L, 4L)))
+    assert(got((1L, 3L)) == ((1L, r6(w))))
+    // a cap below 2 is a contract error (deg-1 centers form no wedges)
+    intercept[IllegalArgumentException] {
+      Graphs.adamicAdar(edges, maxNeighborDeg = 1, topK = 10)
+    }
+  }
+
+  test("adamicAdar: hub centers above the cap contribute no wedges") {
+    // star center 9 (deg 4) is over cap 3, so ITS wedges — e.g.
+    // (3,4), (1,3) — vanish; surviving pairs route only through the
+    // deg-2 centers: (1,2) via 5, and (5,9) via 1 and 2
+    val edges = Seq((9L, 1L), (9L, 2L), (9L, 3L), (9L, 4L),
+        (5L, 1L), (5L, 2L)).toDF("u", "v")
+    val got = Graphs.adamicAdar(edges, maxNeighborDeg = 3, topK = 10)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(got.keySet == Set((1L, 2L), (5L, 9L)))
+    assert(got((5L, 9L)) == 2L) // shared centers 1 AND 2
+    // without the cap the hub's wedges appear too
+    val uncapped = Graphs.adamicAdar(edges, maxNeighborDeg = 256, topK = 20)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(uncapped.contains((3L, 4L)) && uncapped.contains((1L, 3L)))
+  }
+
+  test("adamicAdar: shared neighbors accumulate") {
+    // 1 and 2 share centers 3 and 4 (deg 2 each): cn = 2, aa = 2/ln 2
+    val edges = Seq((1L, 3L), (2L, 3L), (1L, 4L), (2L, 4L)).toDF("u", "v")
+    val top = Graphs.adamicAdar(edges, maxNeighborDeg = 256, topK = 1)
+      .collect().head
+    assert((top.getLong(0), top.getLong(1), top.getLong(2)) == ((1L, 2L, 2L)))
+    assert(math.abs(top.getDouble(3) - 2.0 / math.log(2.0)) < 1e-5)
+  }
+
+  test("modularity property: dq sums stay in [-1, 1] and improve with structure") {
+    val draws = lcg(7L)
+    // random graph on 30 vertices, ~80 edges, plus a random partition
+    val edges = (1 to 80).map { _ =>
+      val u = math.floorMod(draws.next(), 30L)
+      val v = math.floorMod(draws.next(), 30L)
+      (math.min(u, v), math.max(u, v))
+    }.filter(e => e._1 != e._2).distinct.toDF("u", "v")
+    val rand = (0L to 29L).map(x => (x, math.floorMod(x * 2654435761L, 3L)))
+      .toDF("x", "community")
+    val qRand = Graphs.modularity(edges, rand)
+      .collect().map(_.getDouble(4)).sum
+    assert(qRand >= -1.0 && qRand <= 1.0)
+    // the trivial all-in-one partition is exactly 0; a random partition
+    // of a structureless graph should not beat a perfect one on a
+    // genuinely clustered graph
+    val clustered = (for (c <- 0L to 2L; i <- 0L until 10L; j <- (i + 1) until 10L)
+      yield (c * 10 + i, c * 10 + j)).toDF("u", "v")
+    val perfect = (0L to 29L).map(x => (x, x / 10L)).toDF("x", "community")
+    val qPerfect = Graphs.modularity(clustered, perfect)
+      .collect().map(_.getDouble(4)).sum
+    assert(qPerfect > 0.6 && qPerfect <= 1.0) // 3 equal cliques → Q = 2/3
+    assert(qPerfect > qRand)
+  }
 }

@@ -742,4 +742,49 @@ class MiningSpec extends SparkTestBase {
     assert(e.getMessage.contains("4096"))
     assert(Stats.bootstrapMeanCI(df, "id", "x", b = 8).count() == 1)
   }
+
+  // ---- Stats.mutualInformation --------------------------------------------
+
+  test("mutualInformation: independent columns carry zero nats") {
+    import spark.implicits._
+    val rows = for (x <- Seq("a", "b"); y <- Seq(1, 2); _ <- 1 to 5)
+      yield (x, y)
+    val got = Stats.mutualInformation(rows.toDF("x", "y"), "x", "y").collect()
+    assert(got.length == 4)
+    assert(got.forall(_.getDouble(4) == 0.0)) // mi
+  }
+
+  test("mutualInformation: a deterministic copy carries H(X) = ln 2 nats") {
+    import spark.implicits._
+    val rows = Seq(("a", 1), ("a", 1), ("b", 2), ("b", 2)).toDF("x", "y")
+    val got = Stats.mutualInformation(rows, "x", "y").collect()
+    assert(got.forall(r => math.abs(r.getDouble(4) - math.log(2.0)) < 1e-5))
+  }
+
+  test("bootstrapMeanCI (fused fold) is bit-identical to the explode spelling on real events") {
+    val ev = graft.sources.Tables.events(spark, Sf0001)
+    val a = Stats.bootstrapMeanCI(ev, "event_id", "value", b = 16).collect()
+    val b = Stats.bootstrapMeanCIExplode(ev, "event_id", "value", b = 16).collect()
+    assert(a.length == 1 && b.length == 1)
+    assert(a.head == b.head, s"${a.head} vs ${b.head}")
+  }
+
+  test("bootstrapMeanCI fused fold matches explode on null ids, null values, negatives, multi-partition") {
+    import spark.implicits._
+    val rng = new scala.util.Random(1441)
+    val rows: Seq[(Option[String], Option[Double])] =
+      Seq((None, Some(3.5)), (Some("dup"), Some(-2.25)), (Some("dup"), Some(-2.25)),
+        (Some("x|y"), Some(0.0)), (Some("z"), None)) ++
+        Seq.tabulate(97)(i => (Some(s"id$i"), Some(rng.nextDouble() * 200 - 100)))
+    val df = rows.toDF("id", "x").repartition(7)
+    val a = Stats.bootstrapMeanCI(df, "id", "x", b = 8, salt = "s14").collect()
+    val b = Stats.bootstrapMeanCIExplode(
+      df.coalesce(1), "id", "x", b = 8, salt = "s14").collect()
+    assert(a.length == 1 && a.head == b.head, s"${a.headOption} vs ${b.headOption}")
+    // empty input: both spellings produce the same empty-CI row shape
+    val empty = rows.toDF("id", "x").filter(lit(false))
+    val ae = Stats.bootstrapMeanCI(empty, "id", "x", b = 8).collect()
+    val be = Stats.bootstrapMeanCIExplode(empty, "id", "x", b = 8).collect()
+    assert(ae.length == be.length && ae.headOption == be.headOption)
+  }
 }

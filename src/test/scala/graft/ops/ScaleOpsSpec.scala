@@ -485,4 +485,28 @@ class ScaleOpsSpec extends SparkTestBase {
     val scans = "Scan parquet".r.findAllIn(p).length
     assert(scans == 1, s"expected one lineitem scan, got $scans:\n$p")
   }
+
+  test("SqDistExpr is bit-identical to the HOF fold, null/length/empty semantics included") {
+    import spark.implicits._
+    val emb = spark.read.parquet(s"$Sf0001/embeddings.parquet")
+      .select(transform(col("embedding"), _.cast("double")).as("v"))
+    val pairs = emb.limit(50).crossJoin(
+      emb.limit(50).select(col("v").as("w")))
+    val native = pairs.select(Clustering.sqDist(col("v"), col("w"))).collect()
+    val hof = pairs.select(Clustering.sqDistHof(col("v"), col("w"))).collect()
+    assert(native.length == hof.length && native.length == 2500)
+    native.zip(hof).foreach { case (a, b) => assert(a == b, s"$a vs $b") }
+    // edge semantics: length mismatch -> null (zip_with pads with
+    // nulls), any null element -> null, both empty -> the 0.0 seed
+    val edges = Seq(
+      (Seq[Option[Double]](Some(1.0), Some(2.0)), Seq[Option[Double]](Some(1.5))),
+      (Seq[Option[Double]](Some(1.0), None), Seq[Option[Double]](Some(1.0), Some(2.0))),
+      (Seq[Option[Double]](), Seq[Option[Double]]()),
+      (Seq[Option[Double]](Some(-3.25)), Seq[Option[Double]](Some(4.75))),
+    ).toDF("v", "w")
+    val en = edges.select(Clustering.sqDist(col("v"), col("w"))).collect()
+    val eh = edges.select(Clustering.sqDistHof(col("v"), col("w"))).collect()
+    en.zip(eh).foreach { case (a, b) => assert(a == b, s"$a vs $b") }
+    assert(en(0).isNullAt(0) && en(1).isNullAt(0) && en(2).getDouble(0) == 0.0)
+  }
 }

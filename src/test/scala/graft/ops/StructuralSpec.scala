@@ -268,4 +268,104 @@ class StructuralSpec extends SparkTestBase {
     assert(p(0).getDouble(2) == 1.0 && p(0).getDouble(3) == 1.5)
     assert(p(1).getDouble(2) == 3.0 && p(1).getDouble(3) == 3.5)
   }
+
+  // ---- Privacy.noisyCounts ------------------------------------------------
+
+  test("noisyCounts: replayable, epsilon-scaled, and never the true count") {
+    val rows = (1 to 1000).map(i => (s"k${i % 4}", i)).toDF("k", "v")
+    val e1 = Privacy.noisyCounts(rows, Seq("k"), epsilon = 1.0)
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val e1b = Privacy.noisyCounts(rows, Seq("k"), epsilon = 1.0)
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(e1 == e1b) // same salt → identical release
+    // noise is nonzero but Laplace(1)-plausible (|noise| < 15 ≈ 15b)
+    assert(e1.values.forall(v => math.abs(v - 250.0) > 1e-9))
+    assert(e1.values.forall(v => math.abs(v - 250.0) < 15.0))
+    // epsilon 2 halves the scale: same u draw → exactly half the noise
+    val e2 = Privacy.noisyCounts(rows, Seq("k"), epsilon = 2.0)
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    e1.foreach { case (k, v) =>
+      assert(math.abs((e2(k) - 250.0) * 2.0 - (v - 250.0)) < 1e-4)
+    }
+    // a different salt is a different release
+    val es = Privacy.noisyCounts(rows, Seq("k"), epsilon = 1.0, salt = "dp2")
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(es != e1)
+  }
+
+  // ---- LinAlg.gramCov / scale6 ----------------------------------------------
+  // The fused gramCov fold and its scale6 product rounding must equal the
+  // explode spelling and Spark's double -> DECIMAL(25,6) cast bit for bit:
+  // those equalities keep the q_gram gate's hash.
+
+  test("gramCov (fused fold) is bit-identical to the explode spelling on real embeddings") {
+    val emb = spark.read.parquet(s"$Sf0001/embeddings.parquet")
+    val a = LinAlg.gramCov(emb, "embedding").collect()
+    val b = LinAlg.gramCovExplode(emb, "embedding").collect()
+    assert(a.length == b.length && a.length > 0)
+    a.zip(b).foreach { case (x, y) => assert(x == y, s"cell diff: $x vs $y") }
+  }
+
+  test("gramCov handles ragged, null-element, empty and null vectors like the explode spelling") {
+    import spark.implicits._
+    val df = Seq(
+      Some(Seq(Some(1.5f), Some(-2.25f), Some(0.125f))),
+      Some(Seq(Some(0.1f), None, Some(3.75f))), // null element
+      Some(Seq(Some(2.0f))), // ragged short row
+      Some(Seq.empty[Option[Float]]), // empty vector
+      None, // null vector
+      Some(Seq(Some(-0.3f), Some(0.7f), Some(1.1f), Some(9.9f))), // ragged long row
+    ).toDF("embedding")
+    val a = LinAlg.gramCov(df, "embedding").collect()
+    val b = LinAlg.gramCovExplode(df, "embedding").collect()
+    assert(a.length == b.length && a.nonEmpty)
+    a.zip(b).foreach { case (x, y) => assert(x == y, s"cell diff: $x vs $y") }
+  }
+
+  test("gramCov merges multi-partition partials exactly") {
+    import spark.implicits._
+    val rng = new scala.util.Random(14)
+    val rows = Seq.fill(257)(Seq.fill(5)(rng.nextFloat() * 20f - 10f))
+    val df8 = rows.toDF("embedding").repartition(8)
+    val df1 = rows.toDF("embedding").coalesce(1)
+    val a = LinAlg.gramCov(df8, "embedding").collect()
+    val b = LinAlg.gramCovExplode(df1, "embedding").collect()
+    assert(a.length == 15)
+    a.zip(b).foreach { case (x, y) => assert(x == y, s"cell diff: $x vs $y") }
+  }
+
+  test("scale6 replicates Spark's double -> DECIMAL(25,6) cast, boundaries included") {
+    import spark.implicits._
+    val rng = new scala.util.Random(1414)
+    // random magnitudes across the product domain, plus hand-picked
+    // boundary shapes: exact .5 units at 6 dp (where shortest-repr
+    // HALF_UP must round up), negatives, huge/tiny values, and the
+    // float-product grid the gate actually feeds in
+    val adversarial = Seq(0.0000005, -0.0000005, 1.0000005, 2.5e-7,
+      123.4567895, -123.4567895, 0.1 + 0.2, 1e9 + 0.5e-6, -1e9,
+      4.9e-10, -4.9e-10, 8.6250004999999995, 97.015625)
+    val floats = Seq.fill(500)((rng.nextFloat() * 20f - 10f).toDouble *
+      (rng.nextFloat() * 20f - 10f).toDouble)
+    val wide = Seq.fill(500)(rng.nextDouble() * math.pow(10, rng.nextInt(12) - 6) *
+      (if (rng.nextBoolean()) 1 else -1))
+    val xs = (adversarial ++ floats ++ wide).distinct
+    val viaCast = xs.toDF("x")
+      .select(col("x"), (col("x").cast("decimal(25,6)") * lit(1000000))
+        .cast("long").as("scaled"))
+      .collect().map(r => r.getDouble(0) -> r.getLong(1)).toMap
+    xs.foreach { x =>
+      assert(LinAlg.scale6(x) == viaCast(x),
+        s"scale6($x) = ${LinAlg.scale6(x)} but Spark cast gives ${viaCast(x)}")
+    }
+  }
+
+  test("Det.dsumScaled6 over pre-scaled longs equals Det.dsum over the raw terms") {
+    import spark.implicits._
+    val rng = new scala.util.Random(99)
+    val xs = Seq.fill(1000)(rng.nextDouble() * 2000 - 1000)
+    val viaDsum = xs.toDF("x").agg(graft.queries.Det.dsum(col("x"))).head.getDouble(0)
+    val viaScaled = xs.map(LinAlg.scale6).toDF("s")
+      .agg(graft.queries.Det.dsumScaled6(col("s"))).head.getDouble(0)
+    assert(viaDsum == viaScaled, s"$viaDsum vs $viaScaled")
+  }
 }

@@ -207,4 +207,45 @@ class TextPrepSpec extends SparkTestBase {
       "source", "text", topK = 10).collect().head
     assert(math.abs(flat.getDouble(2)) <= 1e-6)
   }
+
+  // ---- TextPrep.removeDuplicateChunks -------------------------------------
+
+  test("removeDuplicateChunks: shared chunks drop, order is preserved") {
+    val docs = Seq(
+      (1L, "a b c d"),        // [a b] shared with doc 2 → "c d" survives
+      (2L, "a b x y"),
+      (3L, "p q r s"),        // untouched
+      (4L, "k1 k2 a b k3 k4"), // interior removal keeps flank order
+      (5L, "a b z z"),
+    ).toDF("doc_id", "text")
+    val got = TextPrep.removeDuplicateChunks(docs, "doc_id", "text",
+        chunkSize = 2, minDf = 2)
+      .collect().map(r => r.getLong(0) ->
+        (r.getString(1), r.getLong(2), r.getLong(3), r.getDouble(4))).toMap
+    assert(got(1L) == (("c d", 2L, 1L, 0.5)))
+    assert(got(3L) == (("p q r s", 2L, 0L, 0.0)))
+    assert(got(4L) == (("k1 k2 k3 k4", 3L, 1L, 0.333333)))
+    assert(got(5L) == (("z z", 2L, 1L, 0.5)))
+  }
+
+  test("removeDuplicateChunks: an empty-text doc survives as one unique chunk") {
+    // "" tokenizes to one empty token → ONE chunk with df = 1 (kept);
+    // both engines agree (string_split('', ' ') = ['']), and the doc
+    // must stay in the cleaned corpus either way
+    val docs = Seq((1L, ""), (2L, "a b"), (3L, "a b")).toDF("doc_id", "text")
+    val got = TextPrep.removeDuplicateChunks(docs, "doc_id", "text",
+        chunkSize = 2, minDf = 2)
+      .collect().map(r => r.getLong(0) ->
+        (r.getString(1), r.getLong(2), r.getLong(3), r.getDouble(4))).toMap
+    assert(got(1L) == (("", 1L, 0L, 0.0)))
+    assert(got(2L) == (("", 1L, 1L, 1.0)))
+  }
+
+  test("removeDuplicateChunks: a fully boilerplate doc empties cleanly") {
+    val docs = Seq((1L, "a b"), (2L, "a b"), (3L, "a b")).toDF("doc_id", "text")
+    val got = TextPrep.removeDuplicateChunks(docs, "doc_id", "text",
+        chunkSize = 2, minDf = 2)
+      .collect().map(r => (r.getString(1), r.getLong(3), r.getDouble(4)))
+    assert(got.forall(_ == (("", 1L, 1.0))))
+  }
 }

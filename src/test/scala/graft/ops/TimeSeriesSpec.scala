@@ -115,4 +115,28 @@ class TimeSeriesSpec extends SparkTestBase {
     // and it lands within the band of the exact union (600 distinct)
     assert(math.abs(merged.getDouble(3) - 600.0) / 600.0 < 0.635)
   }
+
+  // ---- TimeSeries.seasonalDecompose --------------------------------------
+
+  test("seasonalDecompose: a pure weekly signal leaves zero residual") {
+    // 21 days, one event per day, value = dow pattern (period sums are
+    // constant, so every full 7-day moving average equals the mean)
+    val pattern = Seq(10.0, 20.0, 30.0, 40.0, 30.0, 20.0, 10.0)
+    val rows = (0 until 21).map { i =>
+      (java.sql.Timestamp.valueOf(f"2024-01-${1 + i}%02d 12:00:00"),
+        pattern(i % 7))
+    }.toDF("ts", "value")
+    val got = TimeSeries.seasonalDecompose(rows, "ts", "value")
+      .orderBy("d").collect()
+    assert(got.length == 21)
+    // first/last 3 days: no full window → NULL trend and resid
+    assert(got.take(3).forall(_.isNullAt(2)))
+    assert(got.takeRight(3).forall(_.isNullAt(2)))
+    val mid = got.drop(3).dropRight(3)
+    assert(mid.forall(r => math.abs(r.getDouble(2) - 160.0 / 7) < 1e-6))
+    assert(mid.forall(r => math.abs(r.getDouble(4)) < 1e-5)) // resid ~ 0
+    // seasonal components cancel across one period
+    val season = mid.take(7).map(_.getDouble(3)).sum
+    assert(math.abs(season) < 1e-4)
+  }
 }
