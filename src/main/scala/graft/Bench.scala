@@ -198,20 +198,13 @@ object Bench {
     // isolated → 63.7 s in-context). Clearing runs OUTSIDE the timers:
     // each timed number is the query against a clean block manager,
     // which is what its isolated/SCALE.md number measures.
-    def clearCaches(): Unit = {
-      // The sweep SPARES live shared-stage blocks (r11, VERDICT r10
-      // item 2): the memoized cluster chain is computed once per
-      // (session, dir) — the production contract — so its consumers
-      // time only their own survivor stage; the chain's full cost is
-      // still represented in the bench by the un-memoized
-      // q_dedup_clusters gate. The memo's localCheckpoint storage is
-      // not CacheManager-tracked, so clearCache() can't orphan it.
-      val spare = graft.queries.ExtQueries.sharedStageIds
-      spark.catalog.clearCache() // Dataset-level cached plans
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!spare(id)) rdd.unpersist(blocking = false)
-      } // checkpoint generations
-    }
+    //
+    // The sweep SPARES live shared-stage blocks (r11, VERDICT r10 item
+    // 2): the memoized cluster chain is computed once per (session,
+    // dir) — the production contract — so its consumers time only their
+    // own survivor stage; the chain's full cost is still represented in
+    // the bench by the un-memoized q_dedup_clusters gate. Both are
+    // `SparkEntry.clearGateCaches`, which Verify runs per gate too.
 
     // SPARK_GRAFT_BENCH_QUERIES: comma-separated query names — skip the
     // staged ETL slice + GBT and time just those queries (steady-state,
@@ -226,11 +219,11 @@ object Bench {
         .foreach { case (name, fn) =>
           try fn(spark, sfDir).count()
           catch { case scala.util.control.NonFatal(_) => () }
-          clearCaches()
+          SparkEntry.clearGateCaches(spark)
           val (gc0, jit0) = (gcMs(), jitMs())
           val (cg0, cgMs0) = (codegenCompiles(), codegenMs())
           timed(name)(fn(spark, sfDir).count())
-          clearCaches()
+          SparkEntry.clearGateCaches(spark)
           soloStats(name) = s"""{"gc_ms":${gcMs() - gc0},""" +
             s""""jit_ms":${jitMs() - jit0},""" +
             s""""codegen_compiles":${codegenCompiles() - cg0},""" +
@@ -454,12 +447,12 @@ object Bench {
         // the timed run starts from a clean block manager (the warm-up
         // is for JIT/codegen state, not cache warmth — op-internal
         // caches rebuilt by the timed run are part of its honest cost)
-        clearCaches()
+        SparkEntry.clearGateCaches(spark)
         val st0 = cpuStat()
         val (gc0, jit0) = (gcMs(), jitMs())
         val (cg0, cgMs0) = (codegenCompiles(), codegenMs())
         timed(name)(fn(spark, sfDir).count())
-        clearCaches()
+        SparkEntry.clearGateCaches(spark)
         if (!errors.contains(name) && times(name) > repeatThreshold) {
           val runs = mutable.ArrayBuffer(times(name))
           for (_ <- 1 to 2) {
@@ -468,7 +461,7 @@ object Bench {
               fn(spark, sfDir).count()
               runs += (System.nanoTime() - t0) / 1e9
             } catch { case scala.util.control.NonFatal(_) => () }
-            clearCaches()
+            SparkEntry.clearGateCaches(spark)
           }
           val steal = stealPct(st0, cpuStat())
           val (gcD, jitD) = (gcMs() - gc0, jitMs() - jit0)

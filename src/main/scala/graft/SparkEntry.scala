@@ -54,4 +54,20 @@ object SparkEntry {
     */
   def iterativeOracles: Map[String, IterOracle] =
     gates.collect { case (k, Gate(_, _, Some(it))) => k -> it }
+
+  /** The per-gate cache sweep of [[Verify]] and [[Bench]]: drop every
+    * cached plan and every persisted RDD (iterative operators leave
+    * result-backing checkpoint blocks, and the ContextCleaner reaps
+    * them far slower than 200+ gates make them), except the live
+    * shared-stage memo blocks, which are computed once per (session,
+    * dir) — the production contract ([[ExtQueries.sharedStageIds]]).
+    * The memo's localCheckpoint storage is not CacheManager-tracked,
+    * so `clearCache()` cannot orphan it. */
+  def clearGateCaches(spark: SparkSession): Unit = {
+    val spare = ExtQueries.sharedStageIds
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!spare(id)) rdd.unpersist(blocking = false)
+    }
+  }
 }

@@ -52,18 +52,7 @@ object Verify {
         Seq(msg.take(500)).toDF("_builder_error")
           .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
-      // per-query hygiene: iterative ops leave result-backing checkpoint
-      // blocks; across 200+ queries in one session those accumulate
-      // faster than the ContextCleaner reaps them. Live shared-stage
-      // memo blocks are spared (computed once per dir, the production
-      // contract — Bench.clearCaches has the same discipline); their
-      // localCheckpoint storage is not CacheManager-tracked, so
-      // clearCache() cannot orphan the memo.
-      val spare = graft.queries.ExtQueries.sharedStageIds
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!spare(id)) rdd.unpersist(blocking = false)
-      }
+      SparkEntry.clearGateCaches(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

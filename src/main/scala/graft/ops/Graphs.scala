@@ -3,10 +3,13 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Distributed graph primitives over edge lists. One min-plus kernel
-  * ([[undirected]] edges, a [[relax]] round, the [[reach]] witness)
-  * runs [[sssp]], [[closenessCentrality]] and the connected components
-  * of [[Dedup]] (labels are distances over weight-0 edges).
+/** Distributed graph primitives over edge lists. Every loop over an
+  * undirected graph takes both directions of its edges from
+  * [[undirected]], which also owns whether that list is stored: the
+  * PageRank family ([[pageRankOn]]), [[kCore]], [[labelPropagation]]
+  * and the min-plus kernel (a [[relax]] round, the [[reach]] witness)
+  * behind [[sssp]], [[closenessCentrality]] and the connected
+  * components of [[Dedup]] (labels are distances over weight-0 edges).
   *
   * Scale shape: triangle counting uses the degree-ordered wedge join —
   * every edge is directed from its lower-(degree, id) endpoint to the
@@ -130,24 +133,26 @@ object Graphs {
       edges: DataFrame,
       damping: Double = 0.85,
       iters: Int = 3): DataFrame =
-    pageRankOn(edges.select(col("u"), col("v"), lit(1L).as("w")),
-      damping, iters)(uniformTerms(damping))
+    pageRankOn(edges, lit(1L), damping, iters)(uniformTerms(damping))
 
-  /** Uniform start and teleport: `(x, 1/n, (1−d)/n)` over `n` vertices. */
+  /** Uniform start and teleport: adds `r0 = 1/n` and `t = (1−d)/n`
+    * over `n` vertices. */
   private def uniformTerms(damping: Double)(verts: DataFrame): DataFrame = {
     val n = verts.agg(count(lit(1)).as("n"))
-    verts.crossJoin(broadcast(n)).select(col("x"),
-      (lit(1.0) / col("n")).as("r0"), (lit(1 - damping) / col("n")).as("t"))
+    verts.crossJoin(broadcast(n))
+      .withColumn("r0", lit(1.0) / col("n"))
+      .withColumn("t", lit(1 - damping) / col("n")).drop("n")
   }
 
   /** The one PageRank loop behind [[pageRank]], [[pageRankWeighted]]
     * and [[pageRankPersonalized]]: `iters` rounds over an undirected
-    * weighted edge list `(u, v, w)`, treated as a symmetric directed
-    * graph. `terms` maps the vertex frame `(x)` to `(x, r0, t)`, each
-    * vertex's initial rank and teleport term; a round sets
-    * `r = t + d·m`, where `m` is the in-mass and each vertex splits its
-    * rank among its out-edges in proportion to weight (`r·w / Σw`; at
-    * w = 1 that is exactly `r / outdeg`).
+    * edge list `(u, v)` weighted by `w` (an edge column or a constant),
+    * treated as a symmetric directed graph. `terms` adds `r0` and `t`,
+    * each vertex's initial rank and teleport term, to the vertex frame
+    * `(x, wd)`; a round sets `r = t + d·m`, where `m` is the
+    * in-mass and each vertex splits its rank among its out-edges in
+    * proportion to weight (`r·w / Σw`; at w = 1 that is exactly
+    * `r / outdeg`).
     *
     * Determinism discipline (same as [[Clustering.kmeans]]): each
     * contribution is one double product and division; the per-target
@@ -157,38 +162,34 @@ object Graphs {
     * Scala doubles into the oracle SQL, so e.g. 1−0.85 (which is NOT
     * the double 0.15) agrees bit-for-bit cross-engine.
     */
-  private def pageRankOn(edges: DataFrame, damping: Double, iters: Int)(
-      terms: DataFrame => DataFrame): DataFrame = {
+  private def pageRankOn(edges: DataFrame, w: Column, damping: Double,
+      iters: Int)(terms: DataFrame => DataFrame): DataFrame = {
     import graft.util.Lineage
-    // the symmetrized edge list materializes ONCE, eagerly: it feeds
-    // three derivations (degrees+outgoing, the vertex set, the count),
-    // and the caller's edge plan is often itself an expensive self-join
-    // (the co-purchase graph) that must not run once per derivation —
-    // measured 24 s → 8 s at sf0.1 on the co-occurrence input
-    val eGen = Lineage.checkpoint(
-      edges.select(col("u"), col("v"), col("w").cast("long"))
-        .unionAll(edges.select(col("v").as("u"), col("u").as("v"),
-          col("w").cast("long"))))
-    val directed = eGen.df
-    val wdeg = directed.groupBy("u").agg(sum(col("w")).as("wd"))
-    // CACHE the loop-invariant frames, lazily. A fully uncached
-    // iteration tree re-evaluates the edge input (often itself an
-    // expensive self-join, e.g. the co-purchase graph) at every
-    // generation level — iteration i's plan embeds iterations 1..i−1
-    // whole, so edge-derivation cost grows with iters². The cache
-    // populates during the caller's ONE action (iteration 1's stages
-    // compute the blocks; later iterations' stages read them), so no
-    // eager driver-side jobs are added — profiled 3.2× faster than
-    // eagerly localCheckpoint-ing each generation (which pays a
-    // scheduler round-trip + block write + codegen break per round).
-    // Both caches are explicitly unpersisted on loop exit, after the
-    // final generation materializes.
-    val outgoing = directed.join(wdeg, "u").cache()
-    val verts = terms(directed.select(col("u").as("x")).distinct()).cache()
+    // [[undirected]] stores the edge list (the caller's plan is often
+    // an expensive self-join, e.g. the co-purchase graph, that must not
+    // run once per round), and the rounds read it directly: the vertex
+    // frame and every rank generation carry each vertex's weighted
+    // degree `wd`, so no second edge-sized frame (edges joined to
+    // degrees) is stored, and only the vertex frame's build and the
+    // rounds scan the list.
+    val directed = undirected(edges, "u", "v", Some(w.cast("long")))
+    // CACHE the loop-invariant vertex frame, lazily. A fully uncached
+    // iteration tree re-evaluates it at every generation level —
+    // iteration i's plan embeds iterations 1..i−1 whole, so its cost
+    // grows with iters². The cache populates during the caller's ONE
+    // action (iteration 1's stages compute the blocks; later
+    // iterations' stages read them), so no eager driver-side jobs are
+    // added — profiled 3.2× faster than eagerly localCheckpoint-ing
+    // each generation (which pays a scheduler round-trip + block
+    // write + codegen break per round). The vertex cache and the edge
+    // list are explicitly unpersisted on loop exit, after the final
+    // generation materializes.
+    val verts = terms(directed.groupBy(col("u").as("x"))
+      .agg(sum(col("w")).as("wd"))).cache()
     val (ranks, gen) = Lineage.unrolled(
-        verts.select(col("x"), col("r0").as("r")), iters) { ranks =>
+        verts.select(col("x"), col("wd"), col("r0").as("r")), iters) { ranks =>
       val sums = ranks
-        .join(outgoing, col("x") === col("u"))
+        .join(directed, col("x") === col("u"))
         .select(col("v").as("x"),
           (col("r") * col("w") / col("wd")).as("cr"))
         .groupBy("x")
@@ -196,7 +197,7 @@ object Graphs {
       // left join: general graphs have rank-sink vertices with no
       // in-edges (symmetric ones don't, but the operator shouldn't care)
       verts.join(sums, Seq("x"), "left")
-        .select(col("x"),
+        .select(col("x"), col("wd"),
           (col("t") + lit(damping) * coalesce(col("m"), lit(0.0))).as("r"))
     }
     // loop-exit hygiene (round-9 discipline): materialize the final
@@ -204,11 +205,10 @@ object Graphs {
     // Returning the lazy frame instead would either leak the loop
     // caches for the session lifetime or — if the caller unpersisted
     // them — silently recompute an iters-deep uncached tree.
-    val out = Lineage.checkpoint(ranks)
+    val out = Lineage.checkpoint(ranks.select(col("x"), col("r")))
     gen.foreach(Lineage.free)
-    Lineage.free(eGen)
-    outgoing.unpersist(blocking = false)
     verts.unpersist(blocking = false)
+    directed.unpersist(blocking = false)
     out.df
   }
 
@@ -278,28 +278,26 @@ object Graphs {
     // Each edge decrements each endpoint at most once (its other
     // endpoint is removed exactly once), so running degrees equal the
     // induced-subgraph degrees at every round.
-    val sym = edges.select(col("u").as("x"), col("v").as("y"))
-      .unionAll(edges.select(col("v").as("x"), col("u").as("y")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val verts = sym.select(col("x")).distinct()
+    val sym = undirected(edges, "u", "v")
+    val verts = sym.select(col("u").as("x")).distinct()
     // The settle check counts the new generation's sub-k frontier and
     // CACHES it: the next peel reads that same frontier plan, so its
     // planner sees the real (small) size and broadcasts it instead of
     // re-shuffling the edge list every round (sf0.1: 20 vs 65 MB
     // shuffled). Frontiers are disjoint (a vertex is peeled once), so
     // the caches total at most |V| ids until they are dropped at exit.
-    def frontier(deg: DataFrame) = deg.filter(col("d") < k).select(col("x").as("y"))
+    def frontier(deg: DataFrame) = deg.filter(col("d") < k).select(col("x").as("v"))
     val counted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def settled(deg: DataFrame): Boolean = {
       counted += frontier(deg).cache()
       counted.last.count() == 0
     }
-    val deg0 = sym.groupBy("x").agg(count(lit(1)).as("d"))
+    val deg0 = sym.groupBy(col("u").as("x")).agg(count(lit(1)).as("d"))
     settled(deg0) // round 1's frontier, counted and cached like the rest
     val (Seq(deg), _) = graft.util.Lineage.fixpoint(s"kCore(k=$k)",
         Seq(deg0), maxRounds) { s =>
-      val loss = sym.join(frontier(s.head), "y")
-        .groupBy("x").agg(count(lit(1)).as("lost"))
+      val loss = sym.join(frontier(s.head), "v")
+        .groupBy(col("u").as("x")).agg(count(lit(1)).as("lost"))
       s.head.filter(col("d") >= k)
         .join(loss, Seq("x"), "left")
         .select(col("x"), (col("d") - coalesce(col("lost"), lit(0L))).as("d"))
@@ -385,12 +383,24 @@ object Graphs {
   }
 
   /** Both directions of every `(a, b)` edge as `(u, v)` (plus `w`, if
-    * given), lazily persisted: `inline` emits the two copies from ONE
-    * evaluation of the upstream (a union of two selects runs it twice),
-    * and the first round's job materializes them. The caller
-    * unpersists. Lazy persist rather than an eager checkpoint: the
-    * checkpoint's extra job made q_sssp and q_closeness slower
-    * (DECISIONS #45). */
+    * given): the one edge list of every loop over an undirected graph
+    * ([[pageRankOn]], [[kCore]], [[labelPropagation]] and the min-plus
+    * loops), and the one place that decides whether it is stored.
+    * `inline` emits the two copies from ONE evaluation of the upstream
+    * (a union of two selects runs it twice).
+    *
+    * Storage rule: the list is lazily persisted (MEMORY_AND_DISK), so
+    * the first round's job materializes it and the caller unpersists it
+    * after its loop. Lazy persist rather than an eager checkpoint: the
+    * checkpoint's extra job runs the upstream once more, which made
+    * q_sssp and q_closeness slower (DECISIONS #45). The exception is an
+    * `edges` that is already a generation (checkpoint-backed, like
+    * qModularity's shared edge list): the view over the caller's blocks
+    * comes back unpersisted, because storing the list a second time at
+    * 2× width is what pushed storage into eviction churn at 100× scale
+    * (SCALE.md §10g) — re-reading the caller's blocks per round is
+    * strictly cheaper. The caller's unpersist is then a no-op.
+    */
   private[ops] def undirected(
       edges: DataFrame,
       a: String,
@@ -398,8 +408,9 @@ object Graphs {
       w: Option[Column] = None): DataFrame = {
     def arc(from: String, to: String) =
       struct(Seq(col(from).as("u"), col(to).as("v")) ++ w.map(_.as("w")): _*)
-    edges.select(inline(array(arc(a, b), arc(b, a))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val both = edges.select(inline(array(arc(a, b), arc(b, a))))
+    if (graft.util.Lineage.isGeneration(edges)) both
+    else both.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
   /** One min-plus round over [[undirected]] edges: each `(keys…, x)` of
@@ -502,7 +513,7 @@ object Graphs {
       edges: DataFrame,
       damping: Double = 0.85,
       iters: Int = 3): DataFrame =
-    pageRankOn(edges, damping, iters)(uniformTerms(damping))
+    pageRankOn(edges, col("w"), damping, iters)(uniformTerms(damping))
 
   /** DuckDB spelling of [[pageRankWeighted]] — unrolled like
     * [[pageRankOracleSql]] with weighted degrees. `finalSelect`
@@ -548,25 +559,19 @@ object Graphs {
     * per-vertex argmax — all partial-aggregable / key-local; the
     * argmax is max(struct(count, −label)), never a window.
     *
-    * The symmetrized list is cached so an arbitrary caller plan (e.g.
-    * a co-occurrence self-join) evaluates once, not once per round —
-    * unless `edges` is already a generation (checkpoint-backed, like
-    * qModularity's shared edge list): caching would store the edge
-    * list a second time at 2× width, and at 100× scale the duplicate is
-    * what pushes storage into eviction churn (SCALE.md §10g) —
-    * re-reading the caller's blocks per round is strictly cheaper.
+    * The symmetrized list comes from [[undirected]], so an arbitrary
+    * caller plan (e.g. a co-occurrence self-join) evaluates once, not
+    * once per round.
     */
   def labelPropagation(edges: DataFrame, rounds: Int = 4): DataFrame = {
     import graft.util.Lineage
-    val sym0 = edges.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(edges.select(col("v").as("src"), col("u").as("dst")))
-    val sym = if (Lineage.isGeneration(edges)) sym0 else sym0.cache()
+    val sym = undirected(edges, "u", "v")
     val (labels, gen) = Lineage.unrolled(
-        sym.select(col("src").as("x")).distinct()
+        sym.select(col("u").as("x")).distinct()
           .select(col("x"), col("x").as("lbl")), rounds) { labels =>
       sym
-        .join(labels.withColumnRenamed("x", "src"), "src")
-        .groupBy(col("dst").as("x"), col("lbl"))
+        .join(labels.withColumnRenamed("x", "u"), "u")
+        .groupBy(col("v").as("x"), col("lbl"))
         .agg(count(lit(1)).as("cnt"))
         .groupBy("x")
         .agg(max(struct(col("cnt"), (-col("lbl")).as("nl"))).as("m"))
@@ -622,9 +627,8 @@ object Graphs {
       s"personalized PageRank seed ${repeated.head} is given twice")
     val tele = when(col("x").isin(seeds: _*), lit(1.0 / seeds.size))
       .otherwise(lit(0.0))
-    pageRankOn(edges.select(col("u"), col("v"), lit(1L).as("w")),
-      damping, iters)(_.select(col("x"), tele.as("r0"),
-        (lit(1 - damping) * tele).as("t")))
+    pageRankOn(edges, lit(1L), damping, iters)(
+      _.withColumn("r0", tele).withColumn("t", lit(1 - damping) * tele))
   }
 
   /** DuckDB spelling of [[pageRankPersonalized]] — the
@@ -742,8 +746,7 @@ object Graphs {
     * (side, vertex, score) result.
     */
   def hitsOracleSql(edgesSql: String, iters: Int): String = {
-    def ds(x: String) = s"CAST(CAST(sum(CAST($x AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE)"
-    val r6 = graft.queries.Oracle.r6 _
+    import graft.queries.Oracle.{dsumRaw => ds, r6}
     val steps = (1 to iters).map { i =>
       s"ar$i AS MATERIALIZED (SELECT e.dst AS x, ${ds(s"h${i - 1}.h")} AS raw " +
         s"FROM e JOIN h${i - 1} ON h${i - 1}.x = e.src GROUP BY e.dst), " +

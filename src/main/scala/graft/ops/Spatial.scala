@@ -392,14 +392,18 @@ object Spatial {
     val px = col(xCol)
     val py = col(yCol)
     val tagged = polygons.map { p =>
-      val crossings = p.edges.map { case (x1, y1, x2, y2) =>
-        when(
-          (lit(y1) > py) =!= (lit(y2) > py),
-          when(px < lit(x1) +
-            (lit(x2) - lit(x1)) * (py - lit(y1)) / (lit(y2) - lit(y1)),
-            lit(1L)).otherwise(lit(0L)))
-          .otherwise(lit(0L))
-      }.reduce(_ + _)
+      // a horizontal edge (y1 == y2) never straddles the ray, so its term
+      // is always 0 and is left out; the fold keeps a ring of only
+      // horizontal edges at 0 crossings
+      val crossings = p.edges.filter { case (_, y1, _, y2) => y1 != y2 }
+        .map { case (x1, y1, x2, y2) =>
+          when(
+            (lit(y1) > py) =!= (lit(y2) > py),
+            when(px < lit(x1) +
+              (lit(x2) - lit(x1)) * (py - lit(y1)) / (lit(y2) - lit(y1)),
+              lit(1L)).otherwise(lit(0L)))
+            .otherwise(lit(0L))
+        }.foldLeft(lit(0L))(_ + _)
       val (bx1, by1, bx2, by2) = p.bbox
       (when(px >= bx1 && px <= bx2 && py >= by1 && py <= by2,
         crossings % 2 === 1).otherwise(lit(false))).as(s"in_${p.id}")

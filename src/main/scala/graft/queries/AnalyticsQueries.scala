@@ -125,11 +125,6 @@ object AnalyticsQueries {
         Tables.events(s, dir), "event_type", "value", pLo = 0.05, pHi = 0.95)
       .orderBy("event_type")
 
-  private def coPurchaseEdgesSql: String =
-    "SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v " +
-      "FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey " +
-      "AND a.l_partkey < b.l_partkey"
-
   val gates: Map[String, Gate] = Gate.registry(
     "q_skew_audit" -> Gate(qSkewAudit _,
       "WITH l AS (SELECT l_orderkey, CAST(count(*) AS BIGINT) AS n_left " +
@@ -313,7 +308,7 @@ object AnalyticsQueries {
         "(SELECT unnest([a, b, c]) AS vertex FROM tri) " +
         "GROUP BY vertex ORDER BY vertex"),
     "q_pagerank" -> Gate(qPageRank _, Graphs.pageRankOracleSql(
-      coPurchaseEdgesSql, damping = 0.85, iters = 3,
+      Oracle.coPurchaseEdges, damping = 0.85, iters = 3,
       finalSelect = "SELECT x AS vertex, " + Oracle.r6("r * 1000.0") +
         " AS rank_k FROM r3 ORDER BY vertex")),
   )

@@ -93,6 +93,22 @@ object Oracle {
   // int128→double cast double-rounds past 2^53 scaled units
   def davg(x: String): String =
     r6(s"CAST(CAST(sum(CAST($x AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE) / count(*)")
-  def dsum(x: String): String =
-    r6(s"CAST(CAST(sum(CAST($x AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE)")
+  /** [[dsum]] before its r6 rounding. */
+  def dsumRaw(x: String): String =
+    s"CAST(CAST(sum(CAST($x AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE)"
+  def dsum(x: String): String = r6(dsumRaw(x))
+  /** Cosine between two list columns: sequential double dot product and
+    * norms, one final division — the fold order of
+    * [[graft.functions.CosineSim]] and Spark's `aggregate`. */
+  def cos(a: String, b: String): String =
+    s"list_sum(list_transform(range(len($a)), i -> $a[i+1]::DOUBLE * $b[i+1]::DOUBLE)) / " +
+      s"(sqrt(list_sum(list_transform($a, x -> x::DOUBLE * x::DOUBLE))) * " +
+      s"sqrt(list_sum(list_transform($b, x -> x::DOUBLE * x::DOUBLE))))"
+  /** The co-purchase graph of `lineitem`: distinct part pairs (u < v)
+    * bought in one order, the oracle of [[graft.ops.Graphs.coOccurrenceEdges]]
+    * over (l_orderkey, l_partkey). */
+  val coPurchaseEdges: String =
+    "SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v " +
+      "FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey " +
+      "AND a.l_partkey < b.l_partkey"
 }

@@ -109,9 +109,6 @@ object DriftQueries {
 
   private val ln2 = "0.6931471805599453"
 
-  private def dsumT(x: String): String =
-    s"CAST(CAST(sum(CAST($x AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE)"
-
   val gates: Map[String, Gate] = Gate.registry(
     "q_kl_drift" -> Gate(qKlDrift _,
       "WITH tok AS (SELECT source AS g, unnest(string_split(text, ' ')) AS w " +
@@ -129,9 +126,9 @@ object DriftQueries {
         "CAST(c_w AS DOUBLE) / T AS q " +
         "FROM gw JOIN gt USING (g) JOIN wt USING (w), tt)) " +
         "SELECT g AS source, max(t_g) AS n_tokens, " +
-        O.r6(dsumT("kl_t")) + " AS kl, " +
-        O.r6(s"(${dsumT("a_t")} + ${dsumT("b_t")} + " +
-          s"$ln2 * (1.0 - ${dsumT("q_t")})) / 2.0") + " AS js " +
+        O.dsum("kl_t") + " AS kl, " +
+        O.r6(s"(${O.dsumRaw("a_t")} + ${O.dsumRaw("b_t")} + " +
+          s"$ln2 * (1.0 - ${O.dsumRaw("q_t")})) / 2.0") + " AS js " +
         "FROM terms GROUP BY 1 ORDER BY source"),
     "q_chi2" -> Gate(qChi2 _,
       "WITH cells AS (SELECT lang, source, count(*) AS obs " +
@@ -178,7 +175,7 @@ object DriftQueries {
         " AS h_t FROM wc JOIN dn USING (doc_id)) " +
         "SELECT doc_id, max(n) AS n_tokens, max(d) AS n_types, " +
         O.r6("CAST(max(d) AS DOUBLE) / max(n)") + " AS ttr, " +
-        O.r6(dsumT("h_t")) + " AS entropy " +
+        O.dsum("h_t") + " AS entropy " +
         "FROM terms GROUP BY 1 ORDER BY doc_id"),
     // ECDF over the distinct-value grid; gaps r6-rounded before the
     // max, at_value = min value among r6-equal maxima (total order)
@@ -219,7 +216,7 @@ object DriftQueries {
       "WITH dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) " +
         "AS DOUBLE) AS dl FROM documents), " +
         "stats AS (SELECT count(*) AS _N, " +
-        s"${dsumT("dl")} / count(*) AS avgdl FROM dl), " +
+        s"${O.dsumRaw("dl")} / count(*) AS avgdl FROM dl), " +
         "tf AS (SELECT doc_id, w AS t, count(*) AS tf FROM " +
         "(SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents) " +
         "WHERE w IN ('hash', 'join', 'scan') GROUP BY 1, 2), " +
@@ -229,7 +226,7 @@ object DriftQueries {
           "tf * (1.2 + 1.0) / " +
           "(tf + 1.2 * (1.0 - 0.75 + 0.75 * dl / avgdl))") + " AS s " +
         "FROM tf JOIN dfq USING (t) JOIN dl USING (doc_id), stats) " +
-        "SELECT doc_id, " + O.r6(dsumT("s")) + " AS score FROM terms " +
+        "SELECT doc_id, " + O.dsum("s") + " AS score FROM terms " +
         "GROUP BY 1 ORDER BY score DESC, doc_id LIMIT 20"),
     // inverted-index respelling (r12, VERDICT r11 task 2; §10n
     // precedent): the former `s a, s b` row×row spelling spilled

@@ -173,9 +173,6 @@ object EvalQueries {
       s"GROUP BY ${lhs.mkString(", ")})"
   }
 
-  private def dsumT(x: String): String =
-    s"CAST(CAST(sum(CAST($x AS DECIMAL(25,6))) AS VARCHAR) AS DOUBLE)"
-
   val gates: Map[String, Gate] = Gate.registry(
     // pair-counting AUC over the distinct-score grid; the oracle's
     // prefix sum is the plain global window (single-threaded SQL may),
@@ -201,14 +198,14 @@ object EvalQueries {
         s"AS p, $posCase AS y FROM events), " +
         "g AS (SELECT least(floor(p * 10)::BIGINT, 9) AS bin, " +
         "count(*)::BIGINT AS n, " +
-        O.r6(s"${dsumT(O.r6("p"))} / count(*)") + " AS avg_p, " +
+        O.r6(s"${O.dsumRaw(O.r6("p"))} / count(*)") + " AS avg_p, " +
         O.r6("CAST(sum(y) AS DOUBLE) / count(*)") + " AS pos_rate " +
         "FROM r GROUP BY 1), " +
         "g2 AS (SELECT bin, n, avg_p, pos_rate, " +
         O.r6("abs(avg_p - pos_rate)") + " AS gap FROM g), " +
         "t AS (SELECT CAST(sum(n) AS BIGINT) AS tot FROM g2), " +
         "e AS (SELECT " +
-        O.r6(dsumT(O.r6("n * gap / tot"))) + " AS ece FROM g2, t) " +
+        O.dsum(O.r6("n * gap / tot")) + " AS ece FROM g2, t) " +
         "SELECT bin, n, avg_p, pos_rate, gap, ece FROM g2, e ORDER BY bin"),
     // both scorers replayed, both rank windows, the full-outer merge,
     // and the reciprocal fold — the q_bm25 CTE chain at LIMIT 50 plus
@@ -217,7 +214,7 @@ object EvalQueries {
       "WITH dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) " +
         "AS DOUBLE) AS dl FROM documents), " +
         "stats AS (SELECT count(*) AS _N, " +
-        s"${dsumT("dl")} / count(*) AS avgdl FROM dl), " +
+        s"${O.dsumRaw("dl")} / count(*) AS avgdl FROM dl), " +
         "tf AS (SELECT doc_id, w AS t, count(*) AS tf FROM " +
         "(SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents) " +
         "WHERE w IN ('hash', 'join', 'scan') GROUP BY 1, 2), " +
@@ -227,7 +224,7 @@ object EvalQueries {
           "tf * (1.2 + 1.0) / " +
           "(tf + 1.2 * (1.0 - 0.75 + 0.75 * dl / avgdl))") + " AS s " +
         "FROM tf JOIN dfq USING (t) JOIN dl USING (doc_id), stats), " +
-        "lex AS (SELECT doc_id, " + O.r6(dsumT("s")) + " AS score " +
+        "lex AS (SELECT doc_id, " + O.dsum("s") + " AS score " +
         "FROM terms GROUP BY 1 ORDER BY score DESC, doc_id LIMIT 50), " +
         "ra AS (SELECT doc_id, row_number() OVER " +
         "(ORDER BY score DESC, doc_id)::BIGINT AS rank_lex FROM lex), " +
@@ -265,11 +262,7 @@ object EvalQueries {
       convType = "purchase")),
     "q_kcore" -> Gate(qKcore _,
       "SELECT x AS vertex, in_core, core_degree FROM (" +
-        Graphs.kCoreOracleSql(
-          "SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v " +
-            "FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey " +
-            "AND a.l_partkey < b.l_partkey",
-          k = 75, rounds = 12) +
+        Graphs.kCoreOracleSql(O.coPurchaseEdges, k = 75, rounds = 12) +
         ") ORDER BY vertex"),
     "q_fd" -> Gate(qFd _,
       Seq(

@@ -155,9 +155,9 @@ object ExtQueries {
     scala.collection.concurrent.TrieMap
       .empty[(String, String), graft.util.Lineage.Gen]
 
-  /** RDD ids backing LIVE shared-stage memo entries. Hygiene sweeps
-    * (Bench.clearCaches, Verify's per-query loop) spare exactly these
-    * ids, so the memo survives across the three consumer gates the way
+  /** RDD ids backing LIVE shared-stage memo entries. The per-gate
+    * hygiene sweep ([[graft.SparkEntry.clearGateCaches]]) spares exactly
+    * these ids, so the memo survives across the three consumer gates the way
     * production survives across pipeline stages — the cluster chain is
     * computed once per (session, dir), not once per consumer (r10's
     * sweep invalidated it every query; the three survivor gates each
@@ -1496,14 +1496,6 @@ object ExtQueries {
       "SELECT doc_id, list_transform(vec, x -> CASE WHEN nrm > 0 " +
       "THEN x / nrm ELSE 0.0 END) AS embedding FROM n"
 
-  /** DuckDB cosine between two list<float> cols, double left-fold (same
-    * order as Spark's `aggregate`).
-    */
-  private def cosSql(a: String, b: String): String =
-    s"list_sum(list_transform(range(len($a)), i -> $a[i+1]::DOUBLE * $b[i+1]::DOUBLE)) / " +
-      s"(sqrt(list_sum(list_transform($a, x -> x::DOUBLE * x::DOUBLE))) * " +
-      s"sqrt(list_sum(list_transform($b, x -> x::DOUBLE * x::DOUBLE))))"
-
   /** DuckDB random-hyperplane bucket id, mirroring Similarity.lshBucket. */
   private def bucketSql(v: String, nBits: Int): String =
     (0 until nBits).map { j =>
@@ -1515,7 +1507,7 @@ object ExtQueries {
 
   val gates: Map[String, Gate] = Gate.registry(
     // same md5-sign matrix, same sequential signed fold (list_sum is
-    // the cosSql-proven in-order sum), same √k scale, r6 both sides
+    // the O.cos-proven in-order sum), same √k scale, r6 both sides
     "q_rand_proj" -> Gate(qRandProj _,
       "WITH pr AS (SELECT vec_id, j, " +
         "list_sum(list_transform(range(len(embedding)), i -> " +
@@ -1829,13 +1821,13 @@ object ExtQueries {
     "q_ann_recall" -> Gate(qAnnRecall _,
       "WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 5), " +
         "c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings), " +
-        s"s AS (SELECT qid, cid, ${O.r6(cosSql("qe", "ce"))} AS score " +
+        s"s AS (SELECT qid, cid, ${O.r6(O.cos("qe", "ce"))} AS score " +
         "FROM q JOIN c ON qid != cid), " +
         "r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rnk FROM s), " +
         "e AS (SELECT qid, cid FROM r WHERE rnk <= 10), " +
         s"qb AS (SELECT qid, qe, ${bucketSql("qe", 4)} AS bucket FROM q), " +
         s"cb AS (SELECT cid, ce, ${bucketSql("ce", 4)} AS bucket FROM c), " +
-        s"sa AS (SELECT qid, cid, ${O.r6(cosSql("qe", "ce"))} AS score " +
+        s"sa AS (SELECT qid, cid, ${O.r6(O.cos("qe", "ce"))} AS score " +
         "FROM qb JOIN cb USING (bucket) WHERE qid != cid), " +
         "ra AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rnk FROM sa), " +
         "a AS (SELECT qid, cid, 1 AS _hit FROM ra WHERE rnk <= 10) " +
@@ -1847,7 +1839,7 @@ object ExtQueries {
     "q_sim_topk" -> Gate(qSimTopk _,
       "WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 5), " +
         "c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings), " +
-        s"s AS (SELECT qid, cid, ${O.r6(cosSql("qe", "ce"))} AS score " +
+        s"s AS (SELECT qid, cid, ${O.r6(O.cos("qe", "ce"))} AS score " +
         "FROM q JOIN c ON qid != cid), " +
         "r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rnk FROM s) " +
         "SELECT qid, cid, score, rnk::INT AS rank FROM r WHERE rnk <= 10 " +
@@ -1857,13 +1849,13 @@ object ExtQueries {
     "q_ann_recall_trunc" -> Gate(qAnnRecallTrunc _,
       "WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 5), " +
         "c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings), " +
-        s"s AS (SELECT qid, cid, ${O.r6(cosSql("qe", "ce"))} AS score " +
+        s"s AS (SELECT qid, cid, ${O.r6(O.cos("qe", "ce"))} AS score " +
         "FROM q JOIN c ON qid != cid), " +
         "r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rnk FROM s), " +
         "e AS (SELECT qid, cid FROM r WHERE rnk <= 10), " +
         "qt AS (SELECT qid, qe[1:16] AS qe FROM q), " +
         "ct AS (SELECT cid, ce[1:16] AS ce FROM c), " +
-        s"sa AS (SELECT qid, cid, ${O.r6(cosSql("qe", "ce"))} AS score " +
+        s"sa AS (SELECT qid, cid, ${O.r6(O.cos("qe", "ce"))} AS score " +
         "FROM qt JOIN ct ON qid != cid), " +
         "ra AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rnk FROM sa), " +
         "a AS (SELECT qid, cid, 1 AS _hit FROM ra WHERE rnk <= 10) " +
@@ -1877,7 +1869,7 @@ object ExtQueries {
         "FROM embeddings WHERE vec_id < 5), " +
         s"c AS (SELECT vec_id AS cid, embedding AS ce, ${bucketSql("embedding", 4)} AS bucket " +
         "FROM embeddings), " +
-        s"s AS (SELECT qid, cid, ${O.r6(cosSql("qe", "ce"))} AS score " +
+        s"s AS (SELECT qid, cid, ${O.r6(O.cos("qe", "ce"))} AS score " +
         "FROM q JOIN c USING (bucket) WHERE qid != cid), " +
         "r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rnk FROM s) " +
         "SELECT qid, cid, score, rnk::INT AS rank FROM r WHERE rnk <= 10 " +
@@ -1885,7 +1877,7 @@ object ExtQueries {
     "q_dedup_embed" -> Gate(qDedupEmbed _,
       s"WITH e AS (SELECT vec_id, embedding AS v, ${bucketSql("embedding", 4)} AS bucket " +
         "FROM embeddings), " +
-        s"p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, ${cosSql("a.v", "b.v")} AS c " +
+        s"p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, ${O.cos("a.v", "b.v")} AS c " +
         "FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id) " +
         s"SELECT id_a, id_b, ${O.r6("c")} AS cos FROM p WHERE c >= 0.35 " +
         "ORDER BY id_a, id_b"),
@@ -1897,20 +1889,20 @@ object ExtQueries {
         "FROM embeddings WHERE vec_id % 64 = 0), " +
         "cand AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings), " +
         "q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 5), " +
-        s"ca0 AS (SELECT cid, centroid_id, ${O.r6(cosSql("ce", "cv"))} AS cs " +
+        s"ca0 AS (SELECT cid, centroid_id, ${O.r6(O.cos("ce", "cv"))} AS cs " +
         "FROM cand CROSS JOIN cen), " +
         "ca AS (SELECT cid, centroid_id FROM (SELECT *, row_number() OVER " +
         "(PARTITION BY cid ORDER BY cs DESC, centroid_id) AS rn FROM ca0) WHERE rn = 1), " +
-        s"qa0 AS (SELECT qid, centroid_id, ${O.r6(cosSql("qe", "cv"))} AS cs " +
+        s"qa0 AS (SELECT qid, centroid_id, ${O.r6(O.cos("qe", "cv"))} AS cs " +
         "FROM q CROSS JOIN cen), " +
         "qa AS (SELECT qid, centroid_id FROM (SELECT *, row_number() OVER " +
         "(PARTITION BY qid ORDER BY cs DESC, centroid_id) AS rn FROM qa0) WHERE rn <= 2), " +
-        s"sa AS (SELECT qid, cid, ${O.r6(cosSql("qe", "ce"))} AS score " +
+        s"sa AS (SELECT qid, cid, ${O.r6(O.cos("qe", "ce"))} AS score " +
         "FROM qa JOIN ca USING (centroid_id) JOIN q USING (qid) JOIN cand USING (cid) " +
         "WHERE qid != cid), " +
         "ra AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rnk FROM sa), " +
         "a AS (SELECT qid, cid, 1 AS _hit FROM ra WHERE rnk <= 10), " +
-        s"s AS (SELECT qid, cid, ${O.r6(cosSql("qe", "ce"))} AS score " +
+        s"s AS (SELECT qid, cid, ${O.r6(O.cos("qe", "ce"))} AS score " +
         "FROM q JOIN cand ON qid != cid), " +
         "r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rnk FROM s), " +
         "e AS (SELECT qid, cid FROM r WHERE rnk <= 10) " +
@@ -1924,15 +1916,15 @@ object ExtQueries {
         "FROM embeddings WHERE vec_id % 64 = 0), " +
         "cand AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings), " +
         "q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 5), " +
-        s"ca0 AS (SELECT cid, centroid_id, ${O.r6(cosSql("ce", "cv"))} AS cs " +
+        s"ca0 AS (SELECT cid, centroid_id, ${O.r6(O.cos("ce", "cv"))} AS cs " +
         "FROM cand CROSS JOIN cen), " +
         "ca AS (SELECT cid, centroid_id FROM (SELECT *, row_number() OVER " +
         "(PARTITION BY cid ORDER BY cs DESC, centroid_id) AS rn FROM ca0) WHERE rn = 1), " +
-        s"qa0 AS (SELECT qid, centroid_id, ${O.r6(cosSql("qe", "cv"))} AS cs " +
+        s"qa0 AS (SELECT qid, centroid_id, ${O.r6(O.cos("qe", "cv"))} AS cs " +
         "FROM q CROSS JOIN cen), " +
         "qa AS (SELECT qid, centroid_id FROM (SELECT *, row_number() OVER " +
         "(PARTITION BY qid ORDER BY cs DESC, centroid_id) AS rn FROM qa0) WHERE rn <= 2), " +
-        s"s AS (SELECT qid, cid, ${O.r6(cosSql("qe", "ce"))} AS score " +
+        s"s AS (SELECT qid, cid, ${O.r6(O.cos("qe", "ce"))} AS score " +
         "FROM qa JOIN ca USING (centroid_id) JOIN q USING (qid) JOIN cand USING (cid) " +
         "WHERE qid != cid), " +
         "r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rnk FROM s) " +
@@ -1945,7 +1937,7 @@ object ExtQueries {
         "(VALUES (0), (1), (2), (4), (8)) m(m)), " +
         s"c AS (SELECT vec_id AS cid, embedding AS ce, ${bucketSql("embedding", 4)} AS bucket " +
         "FROM embeddings), " +
-        s"s AS (SELECT qid, cid, ${O.r6(cosSql("qe", "ce"))} AS score " +
+        s"s AS (SELECT qid, cid, ${O.r6(O.cos("qe", "ce"))} AS score " +
         "FROM q JOIN c USING (bucket) WHERE qid != cid), " +
         "r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rnk FROM s) " +
         "SELECT qid, cid, score, rnk::INT AS rank FROM r WHERE rnk <= 10 " +
@@ -1953,7 +1945,7 @@ object ExtQueries {
     "q_sim_topk_agg" -> Gate(qSimTopkAgg _,
       "WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 5), " +
         "c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings), " +
-        s"s AS (SELECT qid, cid, ${O.r6(cosSql("qe", "ce"))} AS score " +
+        s"s AS (SELECT qid, cid, ${O.r6(O.cos("qe", "ce"))} AS score " +
         "FROM q JOIN c ON qid != cid), " +
         "r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rnk FROM s) " +
         "SELECT qid, cid, score, rnk::INT AS rank FROM r WHERE rnk <= 10 " +
@@ -1981,7 +1973,7 @@ object ExtQueries {
         "THEN 1 ELSE 0 END))::BIGINT AS hd FROM q CROSS JOIN embeddings), " +
         "c AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY hd, cid) " +
         "AS hrnk FROM s), " +
-        s"r AS (SELECT qid, cid, ${O.r6(cosSql("qe", "ce"))} AS score " +
+        s"r AS (SELECT qid, cid, ${O.r6(O.cos("qe", "ce"))} AS score " +
         "FROM c WHERE hrnk <= 50), " +
         "rr AS (SELECT *, row_number() OVER (PARTITION BY qid " +
         "ORDER BY score DESC, cid) AS rank FROM r) " +
@@ -2283,7 +2275,7 @@ object ExtQueries {
         "f AS (SELECT doc_id, list_transform(embedding, x -> x::FLOAT) AS fe FROM e), " +
         "q AS (SELECT doc_id AS qid, fe AS qe FROM f WHERE doc_id < 5), " +
         "c AS (SELECT doc_id AS cid, fe AS ce FROM f), " +
-        s"s AS (SELECT qid, cid, ${O.r6(cosSql("qe", "ce"))} AS score " +
+        s"s AS (SELECT qid, cid, ${O.r6(O.cos("qe", "ce"))} AS score " +
         "FROM q JOIN c ON qid != cid), " +
         "r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rnk FROM s) " +
         "SELECT qid, cid, score, rnk::INT AS rank FROM r WHERE rnk <= 5 " +

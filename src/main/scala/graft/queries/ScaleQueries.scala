@@ -243,14 +243,6 @@ object ScaleQueries {
       .orderBy("qid", "rank")
   }
 
-  /** DuckDB cosine over double lists — the [[graft.functions.CosineSim]]
-    * fold's spelling (sequential dot and norms, one final division).
-    */
-  private def cosSql(a: String, b: String): String =
-    s"list_sum(list_transform(range(len($a)), i -> $a[i+1]::DOUBLE * $b[i+1]::DOUBLE)) / " +
-      s"(sqrt(list_sum(list_transform($a, x -> x::DOUBLE * x::DOUBLE))) * " +
-      s"sqrt(list_sum(list_transform($b, x -> x::DOUBLE * x::DOUBLE))))"
-
   val gates: Map[String, Gate] = Gate.registry(
     // the TRUE columns are the contract (see qCompress scaladoc): the
     // oracle independently computes raw_bytes and asserts the
@@ -266,7 +258,7 @@ object ScaleQueries {
       ", av AS (SELECT a.vec_id, a.cluster, v FROM a JOIN vecs USING (vec_id)), " +
         "p AS (SELECT x.vec_id AS ia, y.vec_id AS ib FROM av x JOIN av y " +
         "ON x.cluster = y.cluster AND x.vec_id < y.vec_id " +
-        s"WHERE ${cosSql("x.v", "y.v")} >= 0.35) " +
+        s"WHERE ${O.cos("x.v", "y.v")} >= 0.35) " +
         "SELECT vec_id, cluster FROM a " +
         "WHERE vec_id NOT IN (SELECT ib FROM p) ORDER BY vec_id")),
     "q_hof" -> Gate(qHof _,

@@ -71,11 +71,6 @@ object SignalQueries {
       Tables.table(s, dir, "lineitem"), "l_extendedprice",
       numPartitions = 8)
 
-  private def coPurchaseEdgesSql: String =
-    "SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v " +
-      "FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey " +
-      "AND a.l_partkey < b.l_partkey"
-
   val gates: Map[String, Gate] = Gate.registry(
     "q_ewma" -> Gate(qEwma _, TimeSeries.ewmaLastOracleSql(
       "SELECT user_id, ts, event_id AS id, value FROM events",
@@ -88,7 +83,7 @@ object SignalQueries {
     "q_decompose" -> Gate(qDecompose _, TimeSeries.seasonalDecomposeOracleSql(
       "events", "ts", "value")),
     "q_closeness" -> Gate(qCloseness _, Graphs.closenessOracleSql(
-      coPurchaseEdgesSql, seeds = Seq(0L, 1L, 2L, 3L, 4L), rounds = 8)),
+      Oracle.coPurchaseEdges, seeds = Seq(0L, 1L, 2L, 3L, 4L), rounds = 8)),
     "q_range_plan" -> Gate(qRangePlan _, Quantiles.rangePartitionPlanOracleSql(
       "lineitem", "l_extendedprice", numPartitions = 8)),
   )

@@ -226,11 +226,6 @@ object StructuralQueries {
       .orderBy("polygon")
   }
 
-  private def coPurchaseEdgesSql: String =
-    "SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v " +
-      "FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey " +
-      "AND a.l_partkey < b.l_partkey"
-
   /** DuckDB spelling of [[TextAnalysis.textRankEdges]]: list_zip of the
     * token list against its own tail gives the adjacent pairs.
     */
@@ -265,7 +260,7 @@ object StructuralQueries {
   val gates: Map[String, Gate] = Gate.registry(
     "q_sssp" -> Gate(qSssp _, "SELECT x AS vertex, dist FROM (" +
       Graphs.ssspOracleSql(
-        s"SELECT u, v, 1 + (u + v) % 5 AS w FROM ($coPurchaseEdgesSql)",
+        s"SELECT u, v, 1 + (u + v) % 5 AS w FROM (${O.coPurchaseEdges})",
         source = 0L, rounds = 10) +
       ") ORDER BY vertex"),
     "q_hits" -> Gate(qHits _, Graphs.hitsOracleSql(
@@ -305,17 +300,17 @@ object StructuralQueries {
         "count(DISTINCT (event_type, day, hr))::BIGINT AS n_groups_kept, " +
         O.dsum("value") + " AS value_sum FROM kept"),
     "q_lpa" -> Gate(qLpa _, "SELECT x AS vertex, community FROM (" +
-      Graphs.labelPropagationOracleSql(coPurchaseEdgesSql, rounds = 4) +
+      Graphs.labelPropagationOracleSql(O.coPurchaseEdges, rounds = 4) +
       ") ORDER BY vertex"),
     "q_modularity" -> Gate(qModularity _, Graphs.modularityOracleSql(
-      coPurchaseEdgesSql,
-      Graphs.labelPropagationOracleSql(coPurchaseEdgesSql, rounds = 4))),
+      O.coPurchaseEdges,
+      Graphs.labelPropagationOracleSql(O.coPurchaseEdges, rounds = 4))),
     "q_adamic" -> Gate(qAdamic _, Graphs.adamicAdarAdaptiveOracleSql(
-      coPurchaseEdgesSql, capQuantile = 0.99, topK = 50)),
+      O.coPurchaseEdges, capQuantile = 0.99, topK = 50)),
     "q_dp_counts" -> Gate(qDpCounts _, Privacy.noisyCountsOracleSql(
       "events", "event_type", epsilon = 1.0) + " ORDER BY event_type"),
     "q_ppr" -> Gate(qPpr _, Graphs.pagerankPersonalizedOracleSql(
-      coPurchaseEdgesSql, seeds = Seq(0L, 1L, 2L), damping = 0.85, iters = 3,
+      O.coPurchaseEdges, seeds = Seq(0L, 1L, 2L), damping = 0.85, iters = 3,
       finalSelect = "SELECT x AS vertex, " + O.r6("r * 1000.0") +
         " AS rank_k FROM r3 ORDER BY vertex")),
     "q_quantile_dist" -> Gate(qQuantileDist _, graft.ops.Quantiles.exactQuantilesOracleSql(

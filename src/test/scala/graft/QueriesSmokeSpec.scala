@@ -16,8 +16,8 @@ package graft
   * block manager AND the shared-stage memo together — unpersisting a
   * memoized frame without dropping the memo entry would leave a
   * lineage-truncated zombie whose next read throws
-  * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (round-9 lesson, Bench.clearCaches
-  * pairs them the same way).
+  * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (round-9 lesson;
+  * SparkEntry.clearGateCaches pairs them the same way).
   */
 class QueriesSmokeSpec extends SparkTestBase {
 

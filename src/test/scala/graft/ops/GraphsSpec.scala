@@ -1,8 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.storage.StorageLevel
 
 import graft.SparkTestBase
+import graft.util.Lineage
 
 class GraphsSpec extends SparkTestBase {
   import spark.implicits._
@@ -78,23 +81,59 @@ class GraphsSpec extends SparkTestBase {
     assert(Graphs.degreeCapAtQuantile(star, 0.95) == 9L)
   }
 
-  test("labelPropagation(cacheEdges = false) matches the cached path") {
-    // cacheEdges is gone: the "uncached path" is now an edge frame that
-    // is already a generation, the cached path the raw frame
+  test("undirected: a plain edge list is stored, a generation is read in place") {
+    val edges = Seq((1L, 2L), (2L, 3L)).toDF("u", "v")
+    val plain = Graphs.undirected(edges, "u", "v")
+    assert(plain.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    val both = Set((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L))
+    assert(plain.as[(Long, Long)].collect().toSet == both)
+    plain.unpersist(blocking = true)
+    val gen = Lineage.checkpoint(edges)
+    val onGen = Graphs.undirected(gen.df, "u", "v")
+    assert(onGen.storageLevel == StorageLevel.NONE)
+    assert(onGen.as[(Long, Long)].collect().toSet == both)
+    Lineage.free(gen)
+  }
+
+  test("graph loops read a generation input in place, bit for bit") {
     // an edge frame that is already a generation (qModularity's shared
-    // edge list) is read in place: same rounds, same argmax rule,
-    // bit-identical labels — only the storage behavior differs
+    // edge list) is not stored a second time: every loop returns the
+    // plain input's result and adds only its result's generation
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (1L, 3L),
       (5L, 6L), (6L, 7L)).toDF("u", "v")
-    val raw = Graphs.labelPropagation(edges, rounds = 3)
-    val gen = graft.util.Lineage.checkpoint(edges)
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val onGen = Graphs.labelPropagation(gen.df, rounds = 3)
-    // only the returned label generation is new: no cached edge list
-    val added = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
-    assert(added.size == 1, s"${added.size} RDDs persisted, expected the labels only")
-    assert(raw.exceptAll(onGen).isEmpty && onGen.exceptAll(raw).isEmpty)
-    graft.util.Lineage.free(gen)
+      .withColumn("w", (col("u") + col("v")) % 3 + 1)
+    val loops: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "labelPropagation" -> (Graphs.labelPropagation(_, rounds = 3)),
+      "pageRank" -> (Graphs.pageRank(_, iters = 3)),
+      "pageRankWeighted" -> (Graphs.pageRankWeighted(_, iters = 3)),
+      "kCore" -> (Graphs.kCore(_, k = 2)))
+    val gen = Lineage.checkpoint(edges)
+    loops.foreach { case (name, loop) =>
+      val raw = loop(edges).collect().map(_.toString).sorted.toSeq
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val onGen = loop(gen.df)
+      val added = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+      assert(added.size == 1, s"$name: ${added.size} RDDs persisted, expected the result only")
+      assert(onGen.collect().map(_.toString).sorted.toSeq == raw, name)
+    }
+    Lineage.free(gen)
+  }
+
+  test("pageRank: leaves at most 1 persisted RDD behind") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val g = Seq((1L, 2L), (2L, 3L), (3L, 4L), (2L, 4L)).toDF("u", "v")
+    assert(Graphs.pageRank(g, iters = 3).count() == 4)
+    val residue = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(residue.size <= 1, s"${residue.size} persisted RDDs left behind")
+  }
+
+  test("kCore: leaves at most 1 persisted RDD behind") {
+    // the edge list and every counted frontier are dropped at exit
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val g = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L)).toDF("u", "v")
+    assert(Graphs.kCore(g, k = 2).filter("in_core").count() == 3)
+    val residue = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(residue.size <= 1, s"${residue.size} persisted RDDs left behind")
   }
 
   test("adamicAdarAdaptive == adamicAdar at the derived cap") {

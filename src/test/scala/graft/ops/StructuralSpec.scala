@@ -261,6 +261,33 @@ class StructuralSpec extends SparkTestBase {
       -74.08 -> true, -74.5 -> false))
   }
 
+  test("pointInPolygons: horizontal edges add no crossing term, verdicts unchanged") {
+    // an axis-aligned rectangle: its two horizontal edges never straddle
+    // the ray, so the verdict sums 2 crossing terms (one division each)
+    val rect = Spatial.Polygon("rect",
+      Seq((0.0, 0.0), (4.0, 0.0), (4.0, 2.0), (0.0, 2.0)))
+    // points on a horizontal edge's y, on each vertex, inside, outside
+    val pts = Seq((1.0, 0.0), (1.0, 2.0), (0.0, 0.0), (4.0, 0.0),
+      (4.0, 2.0), (0.0, 2.0), (2.0, 1.0), (5.0, 1.0))
+    val tagged = Spatial.pointInPolygons(pts.toDF("lon", "lat"), "lon", "lat",
+      Seq(rect))
+    val divisions = tagged.queryExecution.analyzed.expressions
+      .flatMap(_.collect { case d: org.apache.spark.sql.catalyst.expressions.Divide => d })
+    assert(divisions.size == 2)
+    // the even-odd rule over all four edges, strict > as the engine's
+    def evenOdd(x: Double, y: Double): Boolean =
+      rect.edges.count { case (x1, y1, x2, y2) =>
+        (y1 > y) != (y2 > y) && x < x1 + (x2 - x1) * (y - y1) / (y2 - y1)
+      } % 2 == 1
+    val got = tagged.collect().map(r => (r.getDouble(0), r.getDouble(1)) -> r.getBoolean(2)).toMap
+    assert(got == pts.map(p => p -> evenOdd(p._1, p._2)).toMap)
+    assert(got((1.0, 0.0)) && !got((1.0, 2.0)) && !got((5.0, 1.0)))
+    // a ring of only horizontal edges has no crossing term at all
+    val flat = Spatial.Polygon("flat", Seq((0.0, 1.0), (2.0, 1.0), (4.0, 1.0)))
+    assert(Spatial.pointInPolygons(pts.toDF("lon", "lat"), "lon", "lat", Seq(flat))
+      .collect().forall(!_.getBoolean(2)))
+  }
+
   test("project: unrolled dot products against literal components") {
     val p = LinAlg.project(vecs, "embedding",
         Seq(Array(1.0, 0.0), Array(0.5, 0.5)))
